@@ -25,7 +25,7 @@ from email_address_parser_spark import oracles as _oracles
 from email_address_parser_spark.operators.blocking import candidate_pairs
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
 from email_address_parser_spark.operators.scoring import match_edges, score_pairs
-from email_address_parser_spark.pipeline import cluster_mentions
+from email_address_parser_spark.pipeline import cluster_mentions, resolve
 from email_address_parser_spark.sources.testdata import (
     MENTIONS_EXPECTED_CTE,
     derive_transcripts,
@@ -63,12 +63,9 @@ def entry(spark: SparkSession) -> DataFrame:
     return queries()["er_mentions_by_domain"](spark, "/root/testdata/sf0.001")
 
 
-def _queries_impl() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # NOTE: this literal keeps the *thematic* grouping (ER core, metrics,
-    # relational, events, docs, dedup, ANN, PPRL, ...).  The driver-facing
-    # `queries()` wrapper at the bottom of the file re-orders it per
-    # `_DRIVER_CHECK_ORDER` so the driver's finite CORRECTNESS window
-    # rotates onto the least-recently-checked queries each round.
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # thematic grouping: ER core, metrics, relational, events, docs, dedup,
+    # ANN, PPRL, ...
     return {
         # --- entity resolution core (F1-F11) -------------------------------
         "er_mentions": lambda spark, sf: _mentions(spark, sf).select(*MENTION_COLS),
@@ -106,6 +103,11 @@ def _queries_impl() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 candidate_pairs(m, hot_threshold=1 << 40)
             )))
         )(_mentions(spark, sf)),
+        # the production chain (salted, collapsed — what the benches time),
+        # certified against the same oracle as the unsalted er_clusters
+        "er_resolve_clusters": lambda spark, sf: resolve(_mentions(spark, sf))[
+            "clusters"
+        ],
         # Display/round-trip invariant (SURVEY §1.4 / email_address.rs:312-316):
         # for every valid mention the verbatim captures re-concatenate to the
         # exact input slice — proves no trimming/unquoting/case-folding leaks
@@ -2579,7 +2581,7 @@ def _phonetic_blocks_oracle() -> str:
     )
 
 
-def _oracle_sql_impl() -> dict[str, str]:
+def oracle_sql() -> dict[str, str]:
     return {
         "er_mentions": MENTIONS_EXPECTED_CTE
         + "SELECT conv_id, turn_idx, mention_idx, raw, local_part, domain,"
@@ -2605,6 +2607,8 @@ def _oracle_sql_impl() -> dict[str, str]:
                 email = raw AS email_eq_raw
              FROM mentions_expected WHERE valid_lax""",
         "er_clusters": _ORACLE_CLUSTERS + "SELECT email, cluster_id FROM clusters",
+        "er_resolve_clusters": _ORACLE_CLUSTERS
+        + "SELECT email, cluster_id FROM clusters",
         # incremental == full recompute: the oracle IS the full-corpus clustering
         "er_incremental": _ORACLE_CLUSTERS + "SELECT email, cluster_id FROM clusters",
         "er_incremental_fold": _ORACLE_CLUSTERS
@@ -4078,76 +4082,3 @@ def _oracle_sql_impl() -> dict[str, str]:
                 ord(substr(text, CAST((i - 1) * 16 + 1 AS INT), 1)) AS frame_code
             FROM f""",
     }
-
-
-# ---------------------------------------------------------------------------
-# driver check-window rotation
-# ---------------------------------------------------------------------------
-# The driver's per-round CORRECTNESS check covers a finite prefix of the
-# `queries()` dict (~50 entries in round 4, growing ~7/round).  With 92
-# registered queries, a fixed registry order would leave the same tail
-# permanently outside the driver's window.  Policy (round 5+): order the
-# registry by *least-recently driver-checked first* — queries never seen in
-# any CORRECTNESS_r*.json lead, then those last checked longest ago, then the
-# most recently checked.  The order below was derived from
-# CORRECTNESS_r01..r04.json (17 never-checked, 25 last checked in r3, 50
-# checked in r4, keeping each group's original thematic order).  Every key
-# must appear in BOTH `_queries_impl()` and `_oracle_sql_impl()`; the
-# wrappers assert full coverage so a future query added to one literal but
-# not the rotation list is still served (appended at the end) rather than
-# silently dropped.
-_DRIVER_CHECK_ORDER = [
-    # -- new in round 5 (never checked anywhere) ---------------------------
-    "er_trained_match_f1",
-    "er_phonetic_pairs",
-    "er_phonetic_blocks",
-    # -- never driver-checked through round 4 (judge-verified only) --------
-    "events_quantiles", "events_pivot", "events_props_stats", "events_funnel",
-    "events_retention", "doc_repetition", "doc_tfidf_topk", "doc_collocations",
-    "dedup_semantic", "doc_curation", "doc_sample_weighted",
-    "doc_sample_stratified", "er_metablocking", "er_fs_weights",
-    "er_fs_match_f1", "er_snm_pairs", "er_domain_aliases",
-    # -- last driver-checked in round 3 ------------------------------------
-    "doc_token_counts", "doc_quality", "doc_lang_id", "doc_fingerprints",
-    "dedup_exact", "dedup_ngram_jaccard", "dedup_minhash", "dedup_simhash",
-    "ann_topk", "ann_topk_lsh", "ann_topk_ivf", "ann_topk_ivf_incr",
-    "emb_near_dup", "mm_features", "mm_metadata", "mm_frames", "doc_splits",
-    "doc_packing", "doc_redact", "doc_decontam", "dedup_keep_best",
-    "dedup_keep_best_lsh", "dedup_keep_best_incr", "er_blocking_metrics",
-    "domain_kmv",
-    # -- driver-checked in round 4 (most recent) ---------------------------
-    "er_mentions", "er_mentions_by_domain", "er_candidate_pairs",
-    "er_pair_features", "er_edges", "er_hard_negatives", "er_clusters",
-    "er_roundtrip", "er_cluster_sizes", "er_match_f1", "er_threshold_sweep",
-    "er_mention_provenance", "er_block_skew", "er_entity_activity",
-    "er_bcubed", "er_comention", "er_channel_contribution",
-    "er_golden_record", "er_cluster_density", "er_golden_record_incr",
-    "er_incremental", "er_incremental_fold", "er_forget",
-    "er_threshold_clusters", "er_merge_tree", "er_constrained_split",
-    "er_must_link_merge", "er_best_match_clusters", "er_ari", "er_muc",
-    "er_collective_clusters", "er_pprl_pairs", "er_pprl_match_f1",
-    "er_pprl_blocking_metrics", "er_pprl_e2e_f1", "er_pprl_sweep",
-    "er_pprl_anonymity", "er_clustering_compare", "er_pprl_index_incr",
-    "er_clusters_diff_golden", "er_membership_history", "q1_pricing_summary",
-    "q3_shipping_priority", "top_order_per_customer", "region_customer_rollup",
-    "orders_without_lineitem", "events_daily", "events_sessions",
-    "events_last_touch", "events_rolling",
-]
-
-
-def _rotate(d):
-    # a stale name here (renamed/deleted query) would silently defeat the
-    # least-recently-checked policy — fail loudly instead
-    missing = [k for k in _DRIVER_CHECK_ORDER if k not in d]
-    assert not missing, f"_DRIVER_CHECK_ORDER names unknown queries: {missing}"
-    out = {k: d[k] for k in _DRIVER_CHECK_ORDER}
-    out.update({k: v for k, v in d.items() if k not in out})
-    return out
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _rotate(_queries_impl())
-
-
-def oracle_sql() -> dict[str, str]:
-    return _rotate(_oracle_sql_impl())

@@ -27,21 +27,13 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from email_address_parser_spark.operators.blocking import (
     candidate_pairs,
-    exact_match_edges,
     uniq_valid_mentions,
 )
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
-from email_address_parser_spark.operators.scoring import match_edges, score_pairs
-from email_address_parser_spark.pipeline import cluster_mentions_collapsed
+from email_address_parser_spark.operators.scoring import score_pairs
+from email_address_parser_spark.pipeline import HOT_THRESHOLD, TARGET_BLOCK, resolve
 from email_address_parser_spark.session import build_session
 from email_address_parser_spark.sources.testdata import derive_transcripts
-
-# bounded blocks: small salted buckets keep the pair space linear in corpus
-# size while the dotless-local salt keeps all true-match pairs co-bucketed
-# (identity variants share a bucket at ANY size; typo recall rides the LSH
-# channel, so the block size is purely a cost knob)
-HOT_THRESHOLD = 200
-TARGET_BLOCK = 64
 
 
 def _force(df) -> int:
@@ -122,25 +114,12 @@ def main() -> None:
         _force(score_pairs(pairs))
 
     def q_pipeline():
-        # the optimized production chain: shared distinct-email table,
-        # exact-canonical collapse before the quadratic stages, star edges
-        # bypassing the scorer, CC only over the rep fuzzy graph
-        uniq = uniq_valid_mentions(mentions_c).persist()
-        pairs = candidate_pairs(
-            mentions_c,
-            hot_threshold=HOT_THRESHOLD,
-            target_block_size=TARGET_BLOCK,
-            collapse_exact=True,
-            dedupe=False,
-            uniq=uniq,
-        )
-        fuzzy = match_edges(score_pairs(pairs))
-        _force(
-            cluster_mentions_collapsed(
-                mentions_c, fuzzy, exact_match_edges(mentions_c, uniq=uniq), nodes=uniq
-            )
-        )
-        uniq.unpersist()
+        # the production chain (pipeline.resolve): shared distinct-email
+        # table, exact-canonical collapse before the quadratic stages, star
+        # edges bypassing the scorer, CC only over the rep fuzzy graph
+        chain = resolve(mentions_c)
+        _force(chain["clusters"])
+        chain["uniq"].unpersist()
 
     def q_q1():
         from __spark_entry__ import queries

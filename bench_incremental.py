@@ -44,23 +44,15 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from email_address_parser_spark.operators.blocking import (
-    candidate_pairs,
-    exact_match_edges,
-    uniq_valid_mentions,
-)
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
 from email_address_parser_spark.operators.incremental import (
     build_incremental_state,
     fold_batch,
 )
-from email_address_parser_spark.operators.scoring import match_edges, score_pairs
-from email_address_parser_spark.pipeline import cluster_mentions_collapsed
+from email_address_parser_spark.pipeline import HOT_THRESHOLD, TARGET_BLOCK, resolve
 from email_address_parser_spark.session import build_session
 from email_address_parser_spark.sources.testdata import derive_transcripts
 
-HOT_THRESHOLD = 200
-TARGET_BLOCK = 64
 REPS = 3
 # corpus replication factor (disjoint identity spaces — see
 # sources.testdata.replicate_transcripts) and batch denominator: 1/D of
@@ -76,20 +68,8 @@ def _force(df) -> None:
 
 
 def _full_collapsed_clusters(mentions):
-    """bench.py's optimized er_pipeline chain (collapse + star edges)."""
-    uniq = uniq_valid_mentions(mentions).persist()
-    pairs = candidate_pairs(
-        mentions,
-        hot_threshold=HOT_THRESHOLD,
-        target_block_size=TARGET_BLOCK,
-        collapse_exact=True,
-        dedupe=False,
-        uniq=uniq,
-    )
-    fuzzy = match_edges(score_pairs(pairs))
-    return cluster_mentions_collapsed(
-        mentions, fuzzy, exact_match_edges(mentions, uniq=uniq), nodes=uniq
-    )
+    """bench.py's er_pipeline chain (pipeline.resolve)."""
+    return resolve(mentions)["clusters"]
 
 
 def main() -> None:

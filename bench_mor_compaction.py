@@ -36,6 +36,8 @@ from email_address_parser_spark.operators.incremental import (
     build_incremental_state,
     fold_batch,
 )
+from email_address_parser_spark.pipeline import HOT_THRESHOLD as HOT
+from email_address_parser_spark.pipeline import TARGET_BLOCK as TB
 from email_address_parser_spark.session import build_session
 from email_address_parser_spark.sources.testdata import derive_transcripts
 from email_address_parser_spark.streaming.incremental_stream import (
@@ -44,7 +46,6 @@ from email_address_parser_spark.streaming.incremental_stream import (
     write_state_mor,
 )
 
-HOT, TB = 200, 64
 EPOCHS = [0, 2, 4, 8]
 REPS = 2
 DEN = 40  # each mini-fold and the timed fold use 1/DEN of conversations

@@ -199,6 +199,13 @@ def email_minhash_bands_udf(emails_: pd.Series) -> pd.Series:
     return pd.Series(list(minhash_band_sigs(sigs)))
 
 
+# Bucket caps of the capped channels: an LSH bucket (channels 2/4) or a
+# cross-domain dotless-local block (channel 3) with more emails than this is
+# non-discriminative and dropped whole (see candidate_pairs)
+LSH_MAX_BUCKET = 50
+LOCAL_MAX_BLOCK = 50
+
+
 # --- exact-domain salted blocking ----------------------------------------------
 
 
@@ -247,15 +254,26 @@ def with_salted_domain_block(
 # --- candidate pairs -------------------------------------------------------------
 
 
+def _valid_per_email(mentions: DataFrame, *cols: str) -> DataFrame:
+    """One row per distinct valid email carrying `cols`.
+
+    An explicit groupBy rather than dropDuplicates(["email"]): the canonical
+    columns are functions of the email, so first() is exact, and unlike the
+    subset dedup the result composes with exceptAll/intersectAll (Spark 4.1
+    fails those with INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND). Same physical
+    plan as the dedup: one exchange on email."""
+    return (
+        mentions.where(F.col("valid_lax"))
+        .groupBy("email")
+        .agg(*[F.first(c).alias(c) for c in cols])
+    )
+
+
 def _unique_mentions(mentions: DataFrame) -> DataFrame:
     """Entity resolution operates on distinct valid mention strings, not
     occurrences: dedupe first so pair generation is quadratic in DISTINCT
     emails per block, not in raw mention count."""
-    return (
-        mentions.where(F.col("valid_lax"))
-        .select("email", "local_canon", "domain_canon")
-        .dropDuplicates(["email"])
-    )
+    return _valid_per_email(mentions, "local_canon", "domain_canon")
 
 
 def uniq_valid_mentions(mentions: DataFrame) -> DataFrame:
@@ -264,11 +282,7 @@ def uniq_valid_mentions(mentions: DataFrame) -> DataFrame:
     reps, star edges, and the cluster node set all derive from it with
     shuffles over |distinct emails| rows instead of re-scanning and
     re-deduplicating the full mention stream per stage."""
-    return (
-        mentions.where(F.col("valid_lax"))
-        .select("email", "local_canon", "domain_canon", "match_key")
-        .dropDuplicates(["email"])
-    )
+    return _valid_per_email(mentions, "local_canon", "domain_canon", "match_key")
 
 
 def match_key_representatives(mentions: DataFrame, uniq: DataFrame = None) -> DataFrame:
@@ -323,59 +337,16 @@ _PAIR_COLS = [
 ]
 
 
-def _cap_buckets(
-    df: DataFrame,
-    keys: list,
-    cap: int,
-    via_window: bool,
-    prune_uniform: list = (),
-) -> DataFrame:
+def _cap_buckets(df: DataFrame, keys: list, cap: int) -> DataFrame:
     """Drop every row whose bucket (group on `keys`) holds more than `cap`
     rows — the over-populous-key purge shared by the LSH and exact-local
-    channels. Two plan shapes, identical output:
-
-      * groupBy + join-back (via_window=False): an agg shuffle producing the
-        sizes dim, then an equi-join of the exploded table against it. Three
-        exchanges counting the downstream self-join's.
-      * window count (via_window=True): ONE hash exchange on `keys`, a
-        per-partition sort, count(*) over the frame, filter. The window's
-        output partitioning is exactly the downstream self-join's join key
-        partitioning, so the SMJ reuses the exchange instead of re-shuffling
-        both sides.
-
-    prune_uniform (round 5): additionally drop every bucket in which ANY of
-    the named columns is constant (min == max over the bucket). Useful when
-    the downstream self-join carries a `!=` predicate on that column: a
-    uniform bucket cannot produce a single surviving pair, yet it is exactly
-    where join fan-out concentrates (identity-variant clusters share all
-    band signatures). Output-set-neutral, so pair oracles are untouched,
-    and the min/max aggregates ride the SAME window exchange — no new
-    shuffle. SHIPPED OFF everywhere: the sf0.1 interleaved A/B on the full
-    pairs chain read pruned 11.0/14.2 s vs unpruned 10.3/11.3 s — at this
-    corpus the 80% raw-join-row reduction (915,904 → 181,717 surviving,
-    measured) is cheaper to discard post-join than to pre-filter, because
-    the extra window passes touch every exploded row while the capped
-    join's fan-out is already bounded at cap²/2 per bucket. Revisit for
-    corpora with cap-sized uniform buckets on most keys."""
-    prune_uniform = list(prune_uniform)
-    if not via_window:
-        aggs = [F.count(F.lit(1)).alias("_bn")] + [
-            (F.min(c) == F.max(c)).alias(f"_u_{c}") for c in prune_uniform
-        ]
-        sizes = df.groupBy(*keys).agg(*aggs)
-        keep = F.col("_bn") <= cap
-        for c in prune_uniform:
-            keep = keep & ~F.col(f"_u_{c}")
-        return df.join(
-            sizes.where(keep).select(*keys), keys
-        )
-    w = Window.partitionBy(*keys)
-    out = df.withColumn("_bn", F.count(F.lit(1)).over(w))
-    keep = F.col("_bn") <= cap
-    for c in prune_uniform:
-        out = out.withColumn(f"_u_{c}", F.min(c).over(w) == F.max(c).over(w))
-        keep = keep & ~F.col(f"_u_{c}")
-    return out.where(keep).drop("_bn", *[f"_u_{c}" for c in prune_uniform])
+    channels. A window count: ONE hash exchange on `keys`, a per-partition
+    sort, count(*) over the frame, filter. The window's output partitioning
+    is exactly the downstream self-join's join key partitioning, so the SMJ
+    reuses the exchange instead of re-shuffling both sides (BENCH/BASELINE.md,
+    "Round-4 bucket-cap plan shape: window count vs groupBy + join-back")."""
+    out = df.withColumn("_bn", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+    return out.where(F.col("_bn") <= cap).drop("_bn")
 
 
 def candidate_pairs(
@@ -383,16 +354,14 @@ def candidate_pairs(
     hot_threshold: int = 10_000,
     target_block_size: int = 5_000,
     use_lsh: bool = True,
-    lsh_max_bucket: int = 50,
+    lsh_max_bucket: int = LSH_MAX_BUCKET,
     collapse_exact: bool = False,
     dedupe: bool = True,
     uniq: DataFrame = None,
     materialize: bool = True,
     use_cross_domain: bool = True,
-    local_max_block: int = 50,
+    local_max_block: int = LOCAL_MAX_BLOCK,
     use_email_lsh: bool = True,
-    eager: bool = False,
-    cap_via_window: bool = True,
 ) -> DataFrame:
     """→ (email_a, email_b, local_canon_a/b, domain_canon_a/b), each unordered
     pair once. Union of the four disjoint channels (module docstring): salted
@@ -469,14 +438,6 @@ def candidate_pairs(
             )
     if materialize:
         blocked = blocked.persist()
-        if eager:
-            # Populate the cache BEFORE the multi-channel query references it:
-            # AQE submits the leaf exchange stages of all four channels
-            # concurrently at query start, and a stage that begins while the
-            # cache is still cold recomputes the whole dim subtree (distinct +
-            # hot-domain agg + banding UDFs) instead of waiting for a sibling
-            # to fill it. One tiny count()-job here serializes that work once.
-            blocked.count()
 
     # The self-join carries all pair columns through its exchange: measured
     # at replicated scale (x32 corpus, 1.7M distinct emails), generating
@@ -547,9 +508,7 @@ def candidate_pairs(
         # few. LSH pairs only gate the scorer; restricting to same canonical
         # domain keeps the channel to hard same-domain candidates (identity
         # variants never change the domain).
-        bounded = _cap_buckets(
-            with_bands, ["band_idx", "band_sig"], lsh_max_bucket, cap_via_window
-        )
+        bounded = _cap_buckets(with_bands, ["band_idx", "band_sig"], lsh_max_bucket)
         lsh_pairs = self_join(
             bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
         )
@@ -562,9 +521,7 @@ def candidate_pairs(
         # channel 3 — cross-domain exact-local block. Block sizes are counted
         # over the whole dim (not per domain): a local shared by >cap emails
         # is non-discriminative wherever it appears.
-        bounded_local = _cap_buckets(
-            blocked, ["_dotless"], local_max_block, cap_via_window
-        )
+        bounded_local = _cap_buckets(blocked, ["_dotless"], local_max_block)
         xd_pairs = self_join(
             bounded_local.select(
                 "_dotless", "email", "local_canon", "domain_canon"
@@ -587,10 +544,7 @@ def candidate_pairs(
                 F.posexplode(F.col("email_bands")).alias("band_idx", "band_sig"),
             )
             ebounded = _cap_buckets(
-                with_ebands,
-                ["band_idx", "band_sig"],
-                lsh_max_bucket,
-                cap_via_window,
+                with_ebands, ["band_idx", "band_sig"], lsh_max_bucket
             )
             email_lsh_pairs = self_join(
                 ebounded,

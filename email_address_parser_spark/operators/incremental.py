@@ -70,6 +70,8 @@ from pyspark.sql import functions as F
 
 from .blocking import (
     EMAIL_N_BANDS,
+    LOCAL_MAX_BLOCK,
+    LSH_MAX_BUCKET,
     email_minhash_bands_udf,
     minhash_bands_udf,
     uniq_valid_mentions,
@@ -79,43 +81,22 @@ from .cc import connected_components
 from .extract import extract_mentions, with_canonical
 from .scoring import DEFAULT_THRESHOLD, match_edges, score_pairs
 
-# How fold-internal fan-out frames are pinned. Each pinned frame is
-# referenced by many downstream subtrees; persist() caches EXECUTION but
-# every reference still embeds the frame's full LOGICAL subtree, so the
-# fold delta's plan grows multiplicatively with fan-out depth — measured
-# here (BENCH/profiles/profile_fold_floor.py): a 92 MB plan string, with
-# Catalyst re-analysis as the fold's floor. A LAZY localCheckpoint
-# truncates lineage to a LogicalRDD at first materialization, so each
-# subtree is analyzed and optimized exactly once.
-#
-# The trade is regime-dependent and BOTH regimes are measured
-# (BENCH/profiles/ab_fold_plan.py, same-session alternating A/B, sf0.1):
-#   * shipped config (hot_threshold=200, target_block=64; tiny salted
-#     blocks, planning-dominated): checkpoint 15.6 s vs persist 46.4 s
-#   * big-block config (hot=10k, block=5k; pair-heavy,
-#     execution-dominated): persist 56.8 s vs checkpoint 133.7 s —
-#     LogicalRDDs row-cache large frames and hide them from cache
-#     substitution, which costs more than the planning it saves
-# Default = "checkpoint" (the shipped config and the steady-state chained
-# fold, where plan depth compounds per fold); fold_batch(pin_mode=...) is
-# the per-call override for big-block deployments.
-LINEAGE_PIN_MODE = "checkpoint"
+_BAND_KEY = ["band_idx", "band_sig"]
 
 
-def _make_pin(mode: Optional[str] = None, sink: Optional[list] = None):
-    def pin(df: DataFrame) -> DataFrame:
-        if (mode or LINEAGE_PIN_MODE) == "persist":
-            out = df.persist()
-        else:
-            out = df.localCheckpoint(eager=False)
-        if sink is not None:
-            sink.append(out)
-        return out
-
-    return pin
-
-
-_pin = _make_pin()
+def _pin(df: DataFrame) -> DataFrame:
+    """Pin a fold-internal fan-out frame with a LAZY localCheckpoint. Each
+    pinned frame is referenced by many downstream subtrees; persist() caches
+    EXECUTION but every reference still embeds the frame's full LOGICAL
+    subtree, so the fold delta's plan grows multiplicatively with fan-out
+    depth (a 92 MB plan string, with Catalyst re-analysis as the fold's
+    floor). The checkpoint truncates lineage to a LogicalRDD at first
+    materialization, so each subtree is analyzed and optimized exactly once:
+    15.6 s vs 46.4 s for persist at the production blocking config
+    (BENCH/BASELINE.md, "Round-4 fold lineage pinning: lazy localCheckpoint
+    vs persist"). The same section measures the opposite winner at a
+    big-block config (hot=10k, block=5k), which no shipped caller runs."""
+    return df.localCheckpoint(eager=False)
 
 
 def with_minhash_bands(df: DataFrame, local_col: str = "local_canon") -> DataFrame:
@@ -202,11 +183,6 @@ def incremental_candidate_pairs(
     updated_dim: DataFrame,
     hot_threshold: int = 10_000,
     target_block_size: int = 5_000,
-    use_lsh: bool = True,
-    lsh_max_bucket: int = 50,
-    use_cross_domain: bool = True,
-    local_max_block: int = 50,
-    use_email_lsh: bool = True,
 ) -> DataFrame:
     """Candidate pairs touching >= 1 new email, over the flagged union dim
     (`_is_new` boolean column). Channel structure mirrors
@@ -223,97 +199,83 @@ def incremental_candidate_pairs(
         ["block_key"],
     )
 
-    if use_lsh:
-        # use persisted band signatures when the dim carries them (the
-        # incremental state path — signatures are append-only per email);
-        # fall back to the UDF for plain dims
-        band_col = (
-            F.col("band_sigs")
-            if "band_sigs" in blocked.columns
-            else minhash_bands_udf(F.col("local_canon"))
-        )
-        with_bands = blocked.select(
-            "email",
-            "local_canon",
-            "domain_canon",
-            "block_key",
-            "_is_new",
-            F.posexplode(band_col).alias("band_idx", "band_sig"),
-        )
-        # bucket sizes are computed over the UNION dim so cap decisions match
-        # what a full recompute over the grown corpus would make
-        bucket_sizes = with_bands.groupBy("band_idx", "band_sig").agg(
-            F.count(F.lit(1)).alias("_bn")
-        )
-        # persist: referenced three times by _restricted_pairs (see above)
-        bounded = with_bands.join(
-            bucket_sizes.where(F.col("_bn") <= lsh_max_bucket),
-            ["band_idx", "band_sig"],
-        ).persist()
-        lsh_pairs = _restricted_pairs(
-            bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
-        ).dropDuplicates(["email_a", "email_b"])
-        pairs = pairs.unionByName(lsh_pairs)
+    # use persisted band signatures when the dim carries them (the
+    # incremental state path — signatures are append-only per email); fall
+    # back to the UDF for plain dims
+    band_col = (
+        F.col("band_sigs")
+        if "band_sigs" in blocked.columns
+        else minhash_bands_udf(F.col("local_canon"))
+    )
+    with_bands = blocked.select(
+        "email",
+        "local_canon",
+        "domain_canon",
+        "block_key",
+        "_is_new",
+        F.posexplode(band_col).alias("band_idx", "band_sig"),
+    )
+    # bucket sizes are computed over the UNION dim so cap decisions match
+    # what a full recompute over the grown corpus would make
+    bucket_sizes = with_bands.groupBy(*_BAND_KEY).agg(F.count(F.lit(1)).alias("_bn"))
+    # persist: referenced three times by _restricted_pairs (see above)
+    bounded = with_bands.join(
+        bucket_sizes.where(F.col("_bn") <= LSH_MAX_BUCKET), _BAND_KEY
+    ).persist()
+    lsh_pairs = _restricted_pairs(
+        bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
+    ).dropDuplicates(["email_a", "email_b"])
+    pairs = pairs.unionByName(lsh_pairs)
 
-    if use_cross_domain:
-        # channel 3 — cross-domain exact-local: block sizes over the UNION
-        # dim so cap decisions match a full recompute over the grown corpus
-        dotted = blocked.withColumn("_dl", _dotless()).persist()
-        local_sizes = dotted.groupBy("_dl").agg(F.count(F.lit(1)).alias("_ln"))
-        bounded_local = dotted.join(
-            local_sizes.where(F.col("_ln") <= local_max_block), ["_dl"]
-        )
-        xd_pairs = _restricted_pairs(
-            bounded_local.select(
-                "_dl", "email", "local_canon", "domain_canon", "_is_new"
-            ),
-            ["_dl"],
-            cross_domain=True,
-        )
-        pairs = pairs.unionByName(xd_pairs)
+    # channel 3 — cross-domain exact-local: block sizes over the UNION dim
+    # so cap decisions match a full recompute over the grown corpus
+    dotted = blocked.withColumn("_dl", _dotless()).persist()
+    local_sizes = dotted.groupBy("_dl").agg(F.count(F.lit(1)).alias("_ln"))
+    bounded_local = dotted.join(
+        local_sizes.where(F.col("_ln") <= LOCAL_MAX_BLOCK), ["_dl"]
+    )
+    xd_pairs = _restricted_pairs(
+        bounded_local.select("_dl", "email", "local_canon", "domain_canon", "_is_new"),
+        ["_dl"],
+        cross_domain=True,
+    )
+    pairs = pairs.unionByName(xd_pairs)
 
-        if use_email_lsh:
-            # channel 4 — cross-domain cross-local full-email LSH; persisted
-            # email_bands when the dim carries them (state path)
-            eband_col = (
-                F.col("email_bands")
-                if "email_bands" in blocked.columns
-                else email_minhash_bands_udf(
-                    F.concat(
-                        F.col("local_canon"), F.lit("@"), F.col("domain_canon")
-                    )
-                )
-            )
-            with_ebands = dotted.select(
-                "email",
-                "local_canon",
-                "domain_canon",
-                "_dl",
-                "_is_new",
-                F.posexplode(eband_col).alias("band_idx", "band_sig"),
-            # stale-state reconciliation: a dim state written before the
-            # EMAIL_N_BANDS=4 cut carries 8-element arrays, but the reduced
-            # banding is a PREFIX of the old one (same permutations, same
-            # fold), so keeping band_idx < EMAIL_N_BANDS makes old state
-            # byte-identical to freshly-encoded rows — no version flag, no
-            # re-encode, and mixed old/new dims can never pair on a band
-            # the 4-band contract (and the DuckDB replay) doesn't have
-            ).where(F.col("band_idx") < F.lit(EMAIL_N_BANDS))
-            ebucket_sizes = with_ebands.groupBy("band_idx", "band_sig").agg(
-                F.count(F.lit(1)).alias("_bn")
-            )
-            ebounded = with_ebands.join(
-                ebucket_sizes.where(F.col("_bn") <= lsh_max_bucket),
-                ["band_idx", "band_sig"],
-            ).persist()
-            email_lsh_pairs = _restricted_pairs(
-                ebounded,
-                ["band_idx", "band_sig"],
-                cross_domain=True,
-                diff_local=True,
-            ).dropDuplicates(["email_a", "email_b"])
-            pairs = pairs.unionByName(email_lsh_pairs)
-    return pairs
+    # channel 4 — cross-domain cross-local full-email LSH; persisted
+    # email_bands when the dim carries them (state path)
+    eband_col = (
+        F.col("email_bands")
+        if "email_bands" in blocked.columns
+        else email_minhash_bands_udf(
+            F.concat(F.col("local_canon"), F.lit("@"), F.col("domain_canon"))
+        )
+    )
+    with_ebands = dotted.select(
+        "email",
+        "local_canon",
+        "domain_canon",
+        "_dl",
+        "_is_new",
+        F.posexplode(eband_col).alias("band_idx", "band_sig"),
+    # stale-state reconciliation: a dim state written before the
+    # EMAIL_N_BANDS=4 cut carries 8-element arrays, but the reduced banding
+    # is a PREFIX of the old one (same permutations, same fold), so keeping
+    # band_idx < EMAIL_N_BANDS makes old state byte-identical to
+    # freshly-encoded rows — no version flag, no re-encode, and mixed
+    # old/new dims can never pair on a band the 4-band contract (and the
+    # DuckDB replay) doesn't have
+    ).where(F.col("band_idx") < F.lit(EMAIL_N_BANDS))
+    ebucket_sizes = with_ebands.groupBy(*_BAND_KEY).agg(F.count(F.lit(1)).alias("_bn"))
+    ebounded = with_ebands.join(
+        ebucket_sizes.where(F.col("_bn") <= LSH_MAX_BUCKET), _BAND_KEY
+    ).persist()
+    email_lsh_pairs = _restricted_pairs(
+        ebounded,
+        _BAND_KEY,
+        cross_domain=True,
+        diff_local=True,
+    ).dropDuplicates(["email_a", "email_b"])
+    return pairs.unionByName(email_lsh_pairs)
 
 
 def _assign_components(rewritten: DataFrame) -> DataFrame:
@@ -351,6 +313,26 @@ def _assign_components(rewritten: DataFrame) -> DataFrame:
     return connected_components(rewritten)
 
 
+def _rep_aggs() -> list:
+    """Per-match_key representative: the min email with its own
+    local_canon and band signatures (blocking.match_key_representatives)."""
+    return [
+        F.min("email").alias("email"),
+        F.min_by("local_canon", "email").alias("local_canon"),
+        F.min_by("band_sigs", "email").alias("band_sigs"),
+        F.min_by("email_bands", "email").alias("email_bands"),
+    ]
+
+
+def _band_counts(df: DataFrame, col: str, alias: str = "_bn") -> DataFrame:
+    """Row count per LSH (band_idx, band_sig) bucket of array column `col`."""
+    return (
+        df.select(F.posexplode(col).alias("band_idx", "band_sig"))
+        .groupBy(*_BAND_KEY)
+        .agg(F.count(F.lit(1)).alias(alias))
+    )
+
+
 def incremental_cluster_update(
     spark: SparkSession,
     new_transcripts: DataFrame,
@@ -358,14 +340,9 @@ def incremental_cluster_update(
     prev_uniq: DataFrame,
     hot_threshold: int = 10_000,
     target_block_size: int = 5_000,
-    use_lsh: bool = True,
-    lsh_max_bucket: int = 50,
     threshold: float = DEFAULT_THRESHOLD,
     new_mentions: Optional[DataFrame] = None,
     collapse_exact: bool = False,
-    use_cross_domain: bool = True,
-    local_max_block: int = 50,
-    use_email_lsh: bool = True,
 ) -> Dict[str, DataFrame]:
     """Fold `new_transcripts` into (`prev_clusters`, `prev_uniq`).
 
@@ -395,42 +372,23 @@ def incremental_cluster_update(
     if new_mentions is None:
         new_mentions = with_canonical(extract_mentions(new_transcripts))
     batch_uniq = uniq_valid_mentions(new_mentions)
-    if use_lsh and "band_sigs" not in prev_uniq.columns:
+    if "band_sigs" not in prev_uniq.columns:
         # fallback for callers whose state predates signature persistence:
         # re-band the whole prev dim once (prod keeps band_sigs in state so
         # the UDF only ever runs over the batch)
         prev_uniq = with_minhash_bands(prev_uniq)
-    want_ebands = use_cross_domain and use_email_lsh
-    if want_ebands and "email_bands" not in prev_uniq.columns:
+    if "email_bands" not in prev_uniq.columns:
         prev_uniq = with_email_bands(prev_uniq)
-    new_uniq = batch_uniq.join(
-        prev_uniq.select("email"), "email", "left_anti"
-    )
-    if use_lsh:
-        new_uniq = with_minhash_bands(new_uniq)
-    if want_ebands:
-        new_uniq = with_email_bands(new_uniq)
-    new_uniq = new_uniq.persist()
+    new_uniq = batch_uniq.join(prev_uniq.select("email"), "email", "left_anti")
+    new_uniq = with_email_bands(with_minhash_bands(new_uniq)).persist()
     updated_uniq = prev_uniq.unionByName(new_uniq)
-    dim_cols = (
-        ["email", "local_canon", "domain_canon"]
-        + (["band_sigs"] if use_lsh else [])
-        + (["email_bands"] if want_ebands else [])
-    )
+    dim_cols = ["email", "local_canon", "domain_canon", "band_sigs", "email_bands"]
 
     if collapse_exact:
         # --- guaranteed within-key merges: star edges, no scorer ----------
         # per-key roots/reps over the union dim (O(|distinct keys|) groupBy;
         # prod maintains this dim incrementally alongside prev_uniq)
-        rep_aggs = [
-            F.min("email").alias("email"),
-            F.min_by("local_canon", "email").alias("local_canon"),
-        ]
-        if use_lsh:
-            rep_aggs.append(F.min_by("band_sigs", "email").alias("band_sigs"))
-        if want_ebands:
-            rep_aggs.append(F.min_by("email_bands", "email").alias("email_bands"))
-        rep_rows = updated_uniq.groupBy("match_key", "domain_canon").agg(*rep_aggs)
+        rep_rows = updated_uniq.groupBy("match_key", "domain_canon").agg(*_rep_aggs())
         batch_keys = new_uniq.select("match_key").distinct()
         # anchor = the key's PREV root when the key already exists (so new
         # variants attach to the existing component even when a new email
@@ -468,14 +426,7 @@ def incremental_cluster_update(
             )
         )
         fuzzy_pairs = incremental_candidate_pairs(
-            rep_dim,
-            hot_threshold=hot_threshold,
-            target_block_size=target_block_size,
-            use_lsh=use_lsh,
-            lsh_max_bucket=lsh_max_bucket,
-            use_cross_domain=use_cross_domain,
-            local_max_block=local_max_block,
-            use_email_lsh=use_email_lsh,
+            rep_dim, hot_threshold=hot_threshold, target_block_size=target_block_size
         )
         edges = (
             # batch-sized pair set: the rebalance stage barrier costs
@@ -490,14 +441,7 @@ def incremental_cluster_update(
         ).unionByName(new_uniq.select(*dim_cols).withColumn("_is_new", F.lit(True)))
 
         pairs = incremental_candidate_pairs(
-            updated_dim,
-            hot_threshold=hot_threshold,
-            target_block_size=target_block_size,
-            use_lsh=use_lsh,
-            lsh_max_bucket=lsh_max_bucket,
-            use_cross_domain=use_cross_domain,
-            local_max_block=local_max_block,
-            use_email_lsh=use_email_lsh,
+            updated_dim, hot_threshold=hot_threshold, target_block_size=target_block_size
         )
         # batch-sized pair set: skip the rebalance stage (fold floor)
         edges = match_edges(
@@ -574,16 +518,11 @@ def build_incremental_state(
     transcripts: DataFrame,
     hot_threshold: int = 10_000,
     target_block_size: int = 5_000,
-    use_lsh: bool = True,
-    lsh_max_bucket: int = 50,
     threshold: float = DEFAULT_THRESHOLD,
-    use_cross_domain: bool = True,
-    local_max_block: int = 50,
-    use_email_lsh: bool = True,
     mentions: Optional[DataFrame] = None,
 ) -> Dict[str, DataFrame]:
-    """One-time bootstrap of the fold state from a corpus (the batch
-    collapsed pipeline plus the derived dims `fold_batch` maintains).
+    """One-time bootstrap of the fold state from a corpus (the production
+    chain `pipeline.resolve` plus the derived dims `fold_batch` maintains).
     `mentions` overrides the transcript extraction (the same seam as
     fold_batch's `new_mentions`) — the G58 erasure tests rebuild
     from-scratch state over a mention set with one identity removed, which
@@ -604,84 +543,69 @@ def build_incremental_state(
     In prod every table is an Iceberg table bucketed by its join key; a fold
     then co-locates against state with partition-pruned scans instead of
     shuffles."""
-    from .blocking import candidate_pairs, exact_match_edges
-    from ..pipeline import cluster_mentions_collapsed
+    from ..pipeline import resolve
 
-    want_ebands = use_cross_domain and use_email_lsh
     if mentions is None:
         mentions = with_canonical(extract_mentions(transcripts))
-    uniq = uniq_valid_mentions(mentions)
-    if use_lsh:
-        uniq = with_minhash_bands(uniq)
-    if want_ebands:
-        uniq = with_email_bands(uniq)
     # persist the expensive subtrees: 7 state tables + the pairs chain all
     # hang off uniq/reps, and a caller materializes each table separately —
     # without the persist every materialization re-runs extraction + banding
     # (measured: bootstrap 31.8 s → the extraction UDF dominating, sf0.01)
-    uniq = uniq.persist()
-    rep_aggs = [
-        F.min("email").alias("email"),
-        F.min_by("local_canon", "email").alias("local_canon"),
-    ]
-    if use_lsh:
-        rep_aggs.append(F.min_by("band_sigs", "email").alias("band_sigs"))
-    if want_ebands:
-        rep_aggs.append(F.min_by("email_bands", "email").alias("email_bands"))
-    reps = uniq.groupBy("match_key", "domain_canon").agg(*rep_aggs).persist()
-    domain_counts = reps.groupBy("domain_canon").agg(
-        F.count(F.lit(1)).alias("_dom_n")
-    )
-    bucket_counts = (
-        reps.select(F.posexplode("band_sigs").alias("band_idx", "band_sig"))
-        .groupBy("band_idx", "band_sig")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        if use_lsh
-        else None
-    )
-    local_counts = (
-        reps.groupBy(_dotless().alias("_dl")).agg(F.count(F.lit(1)).alias("_ln"))
-        if use_cross_domain
-        else None
-    )
-    ebucket_counts = (
-        reps.select(F.posexplode("email_bands").alias("band_idx", "band_sig"))
-        .groupBy("band_idx", "band_sig")
-        .agg(F.count(F.lit(1)).alias("_bn"))
-        if want_ebands
-        else None
-    )
-    pairs = candidate_pairs(
+    uniq = with_email_bands(with_minhash_bands(uniq_valid_mentions(mentions))).persist()
+    reps = uniq.groupBy("match_key", "domain_canon").agg(*_rep_aggs()).persist()
+    clusters = resolve(
         mentions,
+        uniq.select("email", "local_canon", "domain_canon", "match_key"),
         hot_threshold=hot_threshold,
         target_block_size=target_block_size,
-        use_lsh=use_lsh,
-        lsh_max_bucket=lsh_max_bucket,
-        collapse_exact=True,
-        dedupe=False,
-        uniq=uniq.select("email", "local_canon", "domain_canon", "match_key"),
-        use_cross_domain=use_cross_domain,
-        local_max_block=local_max_block,
-        use_email_lsh=use_email_lsh,
-    )
-    fuzzy = match_edges(score_pairs(pairs), threshold)
-    clusters = cluster_mentions_collapsed(
-        mentions,
-        fuzzy,
-        exact_match_edges(mentions, uniq=uniq.select("email", "match_key")),
-        nodes=uniq,
-    ).persist()  # fold_batch references clusters several times (quotient
-    # contraction, untouched passthrough, delta) — each ref would otherwise
-    # re-run the whole bootstrap clustering chain
+        threshold=threshold,
+    )["clusters"].persist()  # fold_batch references clusters several times
+    # (quotient contraction, untouched passthrough, delta) — each ref would
+    # otherwise re-run the whole bootstrap clustering chain
     return {
         "uniq": uniq,
         "reps": reps,
-        "domain_counts": domain_counts,
-        "bucket_counts": bucket_counts,
-        "local_counts": local_counts,
-        "ebucket_counts": ebucket_counts,
+        "domain_counts": reps.groupBy("domain_canon").agg(
+            F.count(F.lit(1)).alias("_dom_n")
+        ),
+        "bucket_counts": _band_counts(reps, "band_sigs"),
+        "local_counts": reps.groupBy(_dotless().alias("_dl")).agg(
+            F.count(F.lit(1)).alias("_ln")
+        ),
+        "ebucket_counts": _band_counts(reps, "email_bands"),
         "clusters": clusters,
     }
+
+
+def _bucket_updates(
+    counts: DataFrame, prev_slice: DataFrame, merged_reps: DataFrame, col: str
+) -> DataFrame:
+    """Merged LSH bucket counts for every bucket a fold touches: the state
+    count minus the replaced reps' bands plus the merged reps' bands."""
+    removed = _band_counts(prev_slice, col, "_rm")
+    added = _band_counts(merged_reps, col, "_ad")
+    touched = removed.select(*_BAND_KEY).union(added.select(*_BAND_KEY)).distinct()
+    return (
+        counts.join(F.broadcast(touched), _BAND_KEY, "left_semi")
+        .join(removed, _BAND_KEY, "outer")
+        .join(added, _BAND_KEY, "outer")
+        .select(
+            "band_idx",
+            "band_sig",
+            (
+                F.coalesce(F.col("_bn"), F.lit(0))
+                - F.coalesce(F.col("_rm"), F.lit(0))
+                + F.coalesce(F.col("_ad"), F.lit(0))
+            ).alias("_bn"),
+        )
+    )
+
+
+def _upsert(table: DataFrame, updates: DataFrame, keys: list) -> DataFrame:
+    """`table` with the rows keyed in `updates` replaced by `updates`."""
+    return table.join(
+        F.broadcast(updates.select(*keys)), keys, "left_anti"
+    ).unionByName(updates)
 
 
 def fold_batch(
@@ -690,15 +614,8 @@ def fold_batch(
     state: Dict[str, DataFrame],
     hot_threshold: int = 10_000,
     target_block_size: int = 5_000,
-    use_lsh: bool = True,
-    lsh_max_bucket: int = 50,
     threshold: float = DEFAULT_THRESHOLD,
     new_mentions: Optional[DataFrame] = None,
-    use_cross_domain: bool = True,
-    local_max_block: int = 50,
-    use_email_lsh: bool = True,
-    pin_mode: Optional[str] = None,
-    pin_sink: Optional[list] = None,
 ) -> Dict[str, DataFrame]:
     """Fold one batch into `state` touching only the batch and its affected
     neighborhood — the web-scale shape of G24:
@@ -720,58 +637,38 @@ def fold_batch(
     collapsed batch chain over the union corpus, under the same
     no-blocking-transition proviso as `incremental_cluster_update` — pinned
     by tests/test_incremental.py (single and chained folds)."""
-    _fb_pin = _make_pin(pin_mode, pin_sink)
     if new_mentions is None:
         new_mentions = with_canonical(extract_mentions(new_transcripts))
-    want_ebands = use_cross_domain and use_email_lsh
-    batch_uniq = uniq_valid_mentions(new_mentions)
-    if use_lsh:
-        batch_uniq = with_minhash_bands(batch_uniq)
-    if want_ebands:
-        batch_uniq = with_email_bands(batch_uniq)
+    batch_uniq = with_email_bands(with_minhash_bands(uniq_valid_mentions(new_mentions)))
     # prod: state.uniq is bucketed by email -> co-located anti-join.
-    # every fan-out frame below is pinned (lazy localCheckpoint by default —
-    # see the module-level LINEAGE_PIN_MODE note for the measured rationale)
+    # every fan-out frame below is pinned (lazy localCheckpoint — see _pin
+    # for the measured rationale)
     new_uniq = batch_uniq.join(
         state["uniq"].select("email"), "email", "left_anti"
-    ).transform(_fb_pin)
+    ).transform(_pin)
 
     batch_keys = new_uniq.select("match_key").distinct()
     batch_domains = new_uniq.select("domain_canon").distinct()
 
     # --- affected reps: min-merge of the state slice with the batch --------
-    # prune the slice to THIS fold's channel config: a state built with more
-    # channels than the fold uses (e.g. email_bands present, use_email_lsh
-    # False) must not leak its extra columns into the merge
-    rep_cols = (
-        ["match_key", "domain_canon", "email", "local_canon"]
-        + (["band_sigs"] if use_lsh else [])
-        + (["email_bands"] if want_ebands else [])
-    )
     # NOT persisted although referenced once per channel: the reps scan is a
     # 120k-row parquet read here and a pruned co-located scan in prod, while
     # a cache write costs a full materialization pass on this
     # memory-bandwidth-bound box (measured round 4: persist() made the fold
     # ~10% SLOWER, 45-46 s -> 50-55 s best-of-3)
-    state_reps = state["reps"].select(*rep_cols)
+    state_reps = state["reps"].select(
+        "match_key", "domain_canon", "email", "local_canon", "band_sigs", "email_bands"
+    )
     prev_slice = state_reps.join(
         F.broadcast(batch_keys), "match_key", "left_semi"
-    ).transform(_fb_pin)
-    rep_aggs = [
-        F.min("email").alias("email"),
-        F.min_by("local_canon", "email").alias("local_canon"),
-    ]
-    if use_lsh:
-        rep_aggs.append(F.min_by("band_sigs", "email").alias("band_sigs"))
-    if want_ebands:
-        rep_aggs.append(F.min_by("email_bands", "email").alias("email_bands"))
+    ).transform(_pin)
     merged_reps = (
         prev_slice.unionByName(
             new_uniq.select(*prev_slice.columns)
         )
         .groupBy("match_key", "domain_canon")
-        .agg(*rep_aggs)
-        .transform(_fb_pin)
+        .agg(*_rep_aggs())
+        .transform(_pin)
     )
 
     # --- star edges: new variants anchor to the key's prev root ------------
@@ -817,7 +714,7 @@ def fold_batch(
             (F.coalesce(F.col("_dom_n"), F.lit(0))
              + F.coalesce(F.col("_delta"), F.lit(0))).alias("_dom_n"),
         )
-    ).transform(_fb_pin)
+    ).transform(_pin)
 
     # --- partner slice: state reps in the batch's domains -------------------
     partners = (
@@ -832,214 +729,155 @@ def fold_batch(
     )
     blocked = with_salted_domain_block(
         fold_dim, hot_threshold, target_block_size, sizes=touched_counts
-    ).transform(_fb_pin)
+    ).transform(_pin)
     pairs = _restricted_pairs(
         blocked.select("block_key", "email", "local_canon", "domain_canon", "_is_new"),
         ["block_key"],
     )
 
-    bucket_updates = None
-    if use_lsh:
-        # --- bucket counts: remove replaced reps' bands, add merged reps' --
-        removed = prev_slice.select(
-            F.posexplode("band_sigs").alias("band_idx", "band_sig")
-        ).groupBy("band_idx", "band_sig").agg(F.count(F.lit(1)).alias("_rm"))
-        added = merged_reps.select(
-            F.posexplode("band_sigs").alias("band_idx", "band_sig")
-        ).groupBy("band_idx", "band_sig").agg(F.count(F.lit(1)).alias("_ad"))
-        touched_buckets = (
-            removed.select("band_idx", "band_sig")
-            .union(added.select("band_idx", "band_sig"))
-            .distinct()
-        )
-        bucket_updates = (
-            state["bucket_counts"]
-            .join(F.broadcast(touched_buckets), ["band_idx", "band_sig"], "left_semi")
-            .join(removed, ["band_idx", "band_sig"], "outer")
-            .join(added, ["band_idx", "band_sig"], "outer")
-            .select(
-                "band_idx",
-                "band_sig",
-                (
-                    F.coalesce(F.col("_bn"), F.lit(0))
-                    - F.coalesce(F.col("_rm"), F.lit(0))
-                    + F.coalesce(F.col("_ad"), F.lit(0))
-                ).alias("_bn"),
-            )
-        ).transform(_fb_pin)
-        new_bands = merged_reps.select(
+    # --- channel 2: bucket counts remove replaced reps' bands, add merged
+    # reps' --------------------------------------------------------------------
+    bucket_updates = _bucket_updates(
+        state["bucket_counts"], prev_slice, merged_reps, "band_sigs"
+    ).transform(_pin)
+    new_bands = merged_reps.select(
+        "email", "local_canon", "domain_canon",
+        F.lit(True).alias("_is_new"),
+        F.posexplode("band_sigs").alias("band_idx", "band_sig"),
+    )
+    partner_bands = (
+        partners.select(
             "email", "local_canon", "domain_canon",
-            F.lit(True).alias("_is_new"),
+            F.lit(False).alias("_is_new"),
             F.posexplode("band_sigs").alias("band_idx", "band_sig"),
         )
-        partner_bands = (
-            partners.select(
-                "email", "local_canon", "domain_canon",
-                F.lit(False).alias("_is_new"),
-                F.posexplode("band_sigs").alias("band_idx", "band_sig"),
-            )
-            .join(
-                F.broadcast(new_bands.select("band_idx", "band_sig").distinct()),
-                ["band_idx", "band_sig"],
-                "left_semi",
-            )
+        .join(
+            F.broadcast(new_bands.select(*_BAND_KEY).distinct()),
+            _BAND_KEY,
+            "left_semi",
         )
-        # persist: _restricted_pairs references this subtree three times
-        # (new-key probe + both self-join sides) and Spark has no
-        # compile-time exchange reuse across repeated non-cached refs
-        bounded = (
-            new_bands.unionByName(partner_bands)
-            .join(
-                F.broadcast(bucket_updates.where(F.col("_bn") <= lsh_max_bucket)),
-                ["band_idx", "band_sig"],
-            )
-            .join(
-                blocked.select("email", "block_key"), "email"
-            )
-            .transform(_fb_pin)
+    )
+    # pinned: _restricted_pairs references this subtree three times
+    # (new-key probe + both self-join sides) and Spark has no compile-time
+    # exchange reuse across repeated non-cached refs
+    bounded = (
+        new_bands.unionByName(partner_bands)
+        .join(
+            F.broadcast(bucket_updates.where(F.col("_bn") <= LSH_MAX_BUCKET)),
+            _BAND_KEY,
         )
-        lsh_pairs = _restricted_pairs(
-            bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
-        ).dropDuplicates(["email_a", "email_b"])
-        pairs = pairs.unionByName(lsh_pairs)
+        .join(
+            blocked.select("email", "block_key"), "email"
+        )
+        .transform(_pin)
+    )
+    lsh_pairs = _restricted_pairs(
+        bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
+    ).dropDuplicates(["email_a", "email_b"])
+    pairs = pairs.unionByName(lsh_pairs)
 
-    local_updates = None
-    ebucket_updates = None
-    if use_cross_domain:
-        # --- channel 3: cross-domain exact-local. Counts merged from state
-        # (a rep's dotless local never changes — all members of a match_key
-        # share it — so the delta is purely the batch's NEW keys) -----------
-        batch_dls = new_uniq.select(_dotless().alias("_dl")).distinct()
-        new_key_dls = (
-            merged_reps.join(
-                F.broadcast(prev_slice.select("match_key")), "match_key", "left_anti"
-            )
-            .groupBy(_dotless().alias("_dl"))
-            .agg(F.count(F.lit(1)).alias("_delta"))
+    # --- channel 3: cross-domain exact-local. Counts merged from state (a
+    # rep's dotless local never changes — all members of a match_key share
+    # it — so the delta is purely the batch's NEW keys) ---------------------
+    batch_dls = new_uniq.select(_dotless().alias("_dl")).distinct()
+    new_key_dls = (
+        merged_reps.join(
+            F.broadcast(prev_slice.select("match_key")), "match_key", "left_anti"
         )
-        local_updates = (
-            state["local_counts"]
-            .join(F.broadcast(batch_dls), "_dl", "left_semi")
-            .join(new_key_dls, "_dl", "outer")
-            .select(
-                "_dl",
-                (
-                    F.coalesce(F.col("_ln"), F.lit(0))
-                    + F.coalesce(F.col("_delta"), F.lit(0))
-                ).alias("_ln"),
-            )
-        ).transform(_fb_pin)
-        # partner slice: state reps sharing a batch dotless local (prod: the
-        # reps table's dotless secondary partition prunes this scan)
-        xd_partners = (
-            state_reps
-            .withColumn("_dl", _dotless())
-            .join(F.broadcast(batch_dls), "_dl", "left_semi")
-            .join(F.broadcast(batch_keys), "match_key", "left_anti")
+        .groupBy(_dotless().alias("_dl"))
+        .agg(F.count(F.lit(1)).alias("_delta"))
+    )
+    local_updates = (
+        state["local_counts"]
+        .join(F.broadcast(batch_dls), "_dl", "left_semi")
+        .join(new_key_dls, "_dl", "outer")
+        .select(
+            "_dl",
+            (
+                F.coalesce(F.col("_ln"), F.lit(0))
+                + F.coalesce(F.col("_delta"), F.lit(0))
+            ).alias("_ln"),
         )
-        xd_cols = ["_dl", "email", "local_canon", "domain_canon", "_is_new"]
-        xd_dim = (
-            xd_partners.withColumn("_is_new", F.lit(False)).select(*xd_cols)
-            .unionByName(
-                merged_reps.withColumn("_dl", _dotless())
-                .withColumn("_is_new", F.lit(True))
-                .select(*xd_cols)
-            )
+    ).transform(_pin)
+    # partner slice: state reps sharing a batch dotless local (prod: the
+    # reps table's dotless secondary partition prunes this scan)
+    xd_partners = (
+        state_reps
+        .withColumn("_dl", _dotless())
+        .join(F.broadcast(batch_dls), "_dl", "left_semi")
+        .join(F.broadcast(batch_keys), "match_key", "left_anti")
+    )
+    xd_cols = ["_dl", "email", "local_canon", "domain_canon", "_is_new"]
+    xd_dim = (
+        xd_partners.withColumn("_is_new", F.lit(False)).select(*xd_cols)
+        .unionByName(
+            merged_reps.withColumn("_dl", _dotless())
+            .withColumn("_is_new", F.lit(True))
+            .select(*xd_cols)
         )
-        xd_bounded = xd_dim.join(
-            F.broadcast(local_updates.where(F.col("_ln") <= local_max_block)),
-            ["_dl"],
-        )
-        xd_pairs = _restricted_pairs(xd_bounded, ["_dl"], cross_domain=True)
-        pairs = pairs.unionByName(xd_pairs)
+    )
+    xd_bounded = xd_dim.join(
+        F.broadcast(local_updates.where(F.col("_ln") <= LOCAL_MAX_BLOCK)),
+        ["_dl"],
+    )
+    xd_pairs = _restricted_pairs(xd_bounded, ["_dl"], cross_domain=True)
+    pairs = pairs.unionByName(xd_pairs)
 
-        if use_email_lsh:
-            # --- channel 4: cross-domain full-email LSH; bucket counts
-            # merged exactly like the local-LSH bucket_counts ----------------
-            removed_e = prev_slice.select(
-                F.posexplode("email_bands").alias("band_idx", "band_sig")
-            ).groupBy("band_idx", "band_sig").agg(F.count(F.lit(1)).alias("_rm"))
-            added_e = merged_reps.select(
-                F.posexplode("email_bands").alias("band_idx", "band_sig")
-            ).groupBy("band_idx", "band_sig").agg(F.count(F.lit(1)).alias("_ad"))
-            touched_ebuckets = (
-                removed_e.select("band_idx", "band_sig")
-                .union(added_e.select("band_idx", "band_sig"))
-                .distinct()
-            )
-            ebucket_updates = (
-                state["ebucket_counts"]
-                .join(
-                    F.broadcast(touched_ebuckets),
-                    ["band_idx", "band_sig"],
-                    "left_semi",
-                )
-                .join(removed_e, ["band_idx", "band_sig"], "outer")
-                .join(added_e, ["band_idx", "band_sig"], "outer")
-                .select(
-                    "band_idx",
-                    "band_sig",
-                    (
-                        F.coalesce(F.col("_bn"), F.lit(0))
-                        - F.coalesce(F.col("_rm"), F.lit(0))
-                        + F.coalesce(F.col("_ad"), F.lit(0))
-                    ).alias("_bn"),
-                )
-            ).transform(_fb_pin)
-            e_cols = [
-                "email", "local_canon", "domain_canon", "_dl", "_is_new",
-                "band_idx", "band_sig",
-            ]
-            new_ebands = (
-                merged_reps.withColumn("_dl", _dotless())
-                .withColumn("_is_new", F.lit(True))
-                .select(
-                    "email", "local_canon", "domain_canon", "_dl", "_is_new",
-                    F.posexplode("email_bands").alias("band_idx", "band_sig"),
-                )
-            )
-            partner_ebands = (
-                state_reps
-                .join(F.broadcast(batch_keys), "match_key", "left_anti")
-                .withColumn("_dl", _dotless())
-                .withColumn("_is_new", F.lit(False))
-                .select(
-                    "email", "local_canon", "domain_canon", "_dl", "_is_new",
-                    F.posexplode("email_bands").alias("band_idx", "band_sig"),
-                )
-                .join(
-                    F.broadcast(
-                        new_ebands.select("band_idx", "band_sig").distinct()
-                    ),
-                    ["band_idx", "band_sig"],
-                    "left_semi",
-                )
-            )
-            # persist: _restricted_pairs references this three times
-            ebounded = (
-                new_ebands.select(*e_cols)
-                .unionByName(partner_ebands.select(*e_cols))
-                .join(
-                    F.broadcast(
-                        ebucket_updates.where(F.col("_bn") <= lsh_max_bucket)
-                    ),
-                    ["band_idx", "band_sig"],
-                )
-                .transform(_fb_pin)
-            )
-            e_pairs = _restricted_pairs(
-                ebounded,
-                ["band_idx", "band_sig"],
-                cross_domain=True,
-                diff_local=True,
-            ).dropDuplicates(["email_a", "email_b"])
-            pairs = pairs.unionByName(e_pairs)
+    # --- channel 4: cross-domain full-email LSH; bucket counts merged
+    # exactly like the local-LSH bucket_counts --------------------------------
+    ebucket_updates = _bucket_updates(
+        state["ebucket_counts"], prev_slice, merged_reps, "email_bands"
+    ).transform(_pin)
+    e_cols = [
+        "email", "local_canon", "domain_canon", "_dl", "_is_new",
+        "band_idx", "band_sig",
+    ]
+    new_ebands = (
+        merged_reps.withColumn("_dl", _dotless())
+        .withColumn("_is_new", F.lit(True))
+        .select(
+            "email", "local_canon", "domain_canon", "_dl", "_is_new",
+            F.posexplode("email_bands").alias("band_idx", "band_sig"),
+        )
+    )
+    partner_ebands = (
+        state_reps
+        .join(F.broadcast(batch_keys), "match_key", "left_anti")
+        .withColumn("_dl", _dotless())
+        .withColumn("_is_new", F.lit(False))
+        .select(
+            "email", "local_canon", "domain_canon", "_dl", "_is_new",
+            F.posexplode("email_bands").alias("band_idx", "band_sig"),
+        )
+        .join(
+            F.broadcast(new_ebands.select(*_BAND_KEY).distinct()),
+            _BAND_KEY,
+            "left_semi",
+        )
+    )
+    # pinned: _restricted_pairs references this three times
+    ebounded = (
+        new_ebands.select(*e_cols)
+        .unionByName(partner_ebands.select(*e_cols))
+        .join(
+            F.broadcast(ebucket_updates.where(F.col("_bn") <= LSH_MAX_BUCKET)),
+            _BAND_KEY,
+        )
+        .transform(_pin)
+    )
+    e_pairs = _restricted_pairs(
+        ebounded,
+        _BAND_KEY,
+        cross_domain=True,
+        diff_local=True,
+    ).dropDuplicates(["email_a", "email_b"])
+    pairs = pairs.unionByName(e_pairs)
 
     edges = (
         # batch-sized pair set: skip the rebalance stage (fold floor)
         match_edges(score_pairs(pairs, rebalance=False), threshold)
         .unionByName(star_edges)
-        .transform(_fb_pin)
+        .transform(_pin)
     )
 
     # --- quotient contraction + assignment (shared with v1 semantics) ------
@@ -1082,8 +920,8 @@ def fold_batch(
     clusters_view = untouched.unionByName(delta)
 
     new_state = {
-        # pruned views: the updated state reflects THIS fold's channel
-        # config even when the prior state carried more columns
+        # column-pruned: a state table read back from storage may carry
+        # bookkeeping columns the fold does not maintain
         "uniq": state["uniq"].select(*new_uniq.columns).unionByName(new_uniq),
         "reps": state_reps
         .join(F.broadcast(batch_keys), "match_key", "left_anti")
@@ -1091,35 +929,9 @@ def fold_batch(
         "domain_counts": state["domain_counts"]
         .join(F.broadcast(batch_domains), "domain_canon", "left_anti")
         .unionByName(touched_counts),
-        "bucket_counts": (
-            state["bucket_counts"]
-            .join(
-                F.broadcast(bucket_updates.select("band_idx", "band_sig")),
-                ["band_idx", "band_sig"],
-                "left_anti",
-            )
-            .unionByName(bucket_updates)
-            if use_lsh
-            else None
-        ),
-        "local_counts": (
-            state["local_counts"]
-            .join(F.broadcast(local_updates.select("_dl")), "_dl", "left_anti")
-            .unionByName(local_updates)
-            if use_cross_domain
-            else None
-        ),
-        "ebucket_counts": (
-            state["ebucket_counts"]
-            .join(
-                F.broadcast(ebucket_updates.select("band_idx", "band_sig")),
-                ["band_idx", "band_sig"],
-                "left_anti",
-            )
-            .unionByName(ebucket_updates)
-            if want_ebands
-            else None
-        ),
+        "bucket_counts": _upsert(state["bucket_counts"], bucket_updates, _BAND_KEY),
+        "local_counts": _upsert(state["local_counts"], local_updates, ["_dl"]),
+        "ebucket_counts": _upsert(state["ebucket_counts"], ebucket_updates, _BAND_KEY),
         "clusters": clusters_view,
     }
     # batch-sized per-table update frames — what a merge-on-read state store

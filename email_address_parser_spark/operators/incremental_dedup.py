@@ -44,7 +44,7 @@ its writes are batch-sized MERGEs.
 
 from __future__ import annotations
 
-from typing import Dict, Optional
+from typing import Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -53,7 +53,7 @@ from pyspark.sql.window import Window
 from ..functions.text_analysis import normalized_text, with_quality
 from .cc import connected_components
 from .dedup import _word_bigrams, _word_minhash_bands, dedup_keep_best
-from .incremental import _make_pin
+from .incremental import _pin
 
 DEDUP_STATE_TABLES = ("bands", "grams", "meta", "clusters")
 
@@ -159,7 +159,6 @@ def fold_docs(
     id_col: str = "doc_id",
     threshold: float = 0.2,
     max_bucket: int = 64,
-    pin_mode: Optional[str] = None,
 ) -> Dict[str, DataFrame]:
     """Fold one document batch into `state`; returns {"delta", "clusters",
     "state", "updates"} where `delta` is the batch-sized set of new/changed
@@ -169,23 +168,21 @@ def fold_docs(
     appends per fold (streaming.incremental_stream.write_state_mor).
     Re-applying an already-folded batch is a no-op (ids drain through the
     anti-join) — the restart-safety contract."""
-    _fd_pin = _make_pin(pin_mode)
     batch = _batch_tables(new_docs, text_col, id_col)
     # restart safety: drop docs already in state (id is the dedupe key)
     # _pin (lazy localCheckpoint, not persist): each batch frame is
     # referenced by several downstream subtrees and each embeds the
     # gram/shingle kernel — checkpointing truncates the lineage so Catalyst
     # analyzes the kernel subtree once (the measured fold floor in the ER
-    # fold was plan re-optimization, same shape here; see incremental.py's
-    # LINEAGE_PIN_MODE note)
+    # fold was plan re-optimization, same shape here; see incremental._pin)
     new_ids = (
         batch["meta"].select("id").join(
             state["meta"].select("id"), "id", "left_anti"
-        ).transform(_fd_pin)
+        ).transform(_pin)
     )
-    b_bands = batch["bands"].join(new_ids, "id", "left_semi").transform(_fd_pin)
-    b_grams = batch["grams"].join(new_ids, "id", "left_semi").transform(_fd_pin)
-    b_meta = batch["meta"].join(new_ids, "id", "left_semi").transform(_fd_pin)
+    b_bands = batch["bands"].join(new_ids, "id", "left_semi").transform(_pin)
+    b_grams = batch["grams"].join(new_ids, "id", "left_semi").transform(_pin)
+    b_meta = batch["meta"].join(new_ids, "id", "left_semi").transform(_pin)
 
     cand = _new_incident_pairs(state["bands"], b_bands, max_bucket)
 

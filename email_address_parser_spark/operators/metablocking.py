@@ -89,9 +89,11 @@ def metablock_pairs(
     # block purging via window count: ONE hash exchange on `key` whose
     # output partitioning IS the CBS self-join's key partitioning, so the
     # SMJ reuses it instead of re-shuffling both sides (the same plan shape
-    # bench_cap_window_ab.py measured for the candidate channels; pinned
-    # here by bench_metablock_ab.py — 9.19 → 2.58 s at sf0.1 with the edge
-    # pin below, identical 106,534-row output). A single key group fits one
+    # measured for the candidate channels in BENCH/BASELINE.md, "Round-4
+    # bucket-cap plan shape: window count vs groupBy + join-back"; for this
+    # operator see "Round-4 meta-blocking plan: window purge + pinned edge
+    # frame" — 9.19 → 2.58 s at sf0.1 with the edge pin below, identical
+    # 106,534-row output). A single key group fits one
     # task because purging is the point: over-cap groups are filtered, and
     # the pre-filter sort of a pathological key spills rather than OOMs.
     w = Window.partitionBy("key")

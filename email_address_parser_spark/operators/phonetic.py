@@ -100,7 +100,7 @@ def phonetic_pairs(
     keyed = uniq.select(
         "email", phonetic_key(F.col(local_col)).alias("pkey")
     ).where(F.col("pkey") != "")
-    bounded = _cap_buckets(keyed, ["pkey"], max_block, via_window=True)
+    bounded = _cap_buckets(keyed, ["pkey"], max_block)
     a = bounded.select(F.col("email").alias("email_a"), "pkey")
     b = bounded.select(F.col("email").alias("email_b"), "pkey")
     return (

@@ -331,11 +331,12 @@ def match_edges(scored: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> Data
     """F10: threshold filter → edges(src, dst, score). Deduplicates AFTER
     the threshold: when candidate generation skipped its pair-level
     dropDuplicates (blocking.candidate_pairs(dedupe=False)), the duplicate
-    candidates score identically and this far smaller shuffle removes them."""
+    candidates score identically and this far smaller shuffle removes them.
+    A groupBy rather than dropDuplicates(["src", "dst"]), so the edges
+    compose with exceptAll/intersectAll (the subset dedup does not on
+    Spark 4.1)."""
     return (
         scored.where(F.col("score") >= F.lit(threshold))
-        .select(
-            F.col("email_a").alias("src"), F.col("email_b").alias("dst"), "score"
-        )
-        .dropDuplicates(["src", "dst"])
+        .groupBy(F.col("email_a").alias("src"), F.col("email_b").alias("dst"))
+        .agg(F.max("score").alias("score"))
     )

@@ -1,52 +1,61 @@
-"""End-to-end identity-resolution pipeline with per-stage checkpoint/resume.
+"""The identity-resolution chain, with per-stage checkpoint/resume.
 
-Stage graph (north_rule):
+`resolve(mentions)` is the ONE definition of the production chain; every
+shipped caller (the pipeline job, the benches, the SQL views, the
+incremental bootstrap) builds clusters through it. Its stages, in order:
 
-  transcripts ─F2/F3→ mentions ─F5→ canonical ─F6/F7/F8→ pairs ─F9/F10→ edges
-      ─F11→ clusters
+  uniq      distinct valid emails (`blocking.uniq_valid_mentions`), persisted
+  stars     exact-canonical star edges inside each match_key
+            (`blocking.exact_match_edges`) — guaranteed matches, never scored
+  pairs     candidate pairs over one representative per match_key
+            (`blocking.candidate_pairs(collapse_exact=True, dedupe=False)`)
+  scored    Jaro-Winkler/Levenshtein features + score (`scoring.score_pairs`)
+  fuzzy     thresholded rep↔rep match edges (`scoring.match_edges`)
+  clusters  connected components over `fuzzy`, members inheriting their
+            root's cluster (`cluster_mentions_collapsed`)
 
-Each stage writes a parquet checkpoint table plus a _MANIFEST.json carrying
-row counts and a per-partition lineage histogram (spark_partition_id counts)
-— the driver-side resume rule is "stage table exists ⇒ skip recompute", the
-sandbox analog of resuming from an Iceberg snapshot (prod would swap
-`parquet` for `format('iceberg')` and manifests for snapshot metadata; the
-stage topology and resume logic are unchanged).
+Production blocking constants: HOT_THRESHOLD = 200 (a domain with more
+representatives is salted) and TARGET_BLOCK = 64 (salted bucket size).
+
+`run_pipeline` is the checkpointed `resolve`: transcripts ─extract→ mentions,
+then each stage above writes a parquet table plus a _MANIFEST.json carrying
+row counts and a per-partition lineage histogram. The resume rule is "stage
+table exists with this config's fingerprint ⇒ skip recompute", the sandbox
+analog of resuming from an Iceberg snapshot (prod would swap `parquet` for
+`format('iceberg')` and manifests for snapshot metadata; the stage topology
+and resume logic are unchanged).
 """
 
 from __future__ import annotations
 
 import json
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
-from typing import Dict, Optional
+from typing import Callable, Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.blocking import candidate_pairs, exact_match_edges
+from .operators.blocking import candidate_pairs, exact_match_edges, uniq_valid_mentions
 from .operators.cc import connected_components
 from .operators.extract import extract_mentions, with_canonical
 from .operators.scoring import DEFAULT_THRESHOLD, match_edges, score_pairs
+
+# bounded blocks: small salted buckets keep the pair space linear in corpus
+# size while the dotless-local salt keeps all true-match pairs co-bucketed
+# (identity variants share a bucket at ANY size; typo recall rides the LSH
+# channel, so the block size is purely a cost knob)
+HOT_THRESHOLD = 200
+TARGET_BLOCK = 64
 
 
 @dataclass
 class PipelineConfig:
     checkpoint_dir: Optional[str] = None
-    threshold: float = DEFAULT_THRESHOLD
-    hot_threshold: int = 10_000
-    target_block_size: int = 5_000
-    use_lsh: bool = True
     resume: bool = True
-    stage_partitions: Dict[str, int] = field(default_factory=dict)
-    # scale switches (see blocking.candidate_pairs): collapse exact-canonical
-    # duplicates to one representative before the quadratic stages, and defer
-    # pair dedup to the (much smaller) edge set
-    collapse_exact: bool = False
-    dedupe_pairs: bool = True
-    # cross-domain candidate channels (blocking.py channels 3/4)
-    use_cross_domain: bool = True
-    local_max_block: int = 50
-    use_email_lsh: bool = True
+    threshold: float = DEFAULT_THRESHOLD
+    hot_threshold: int = HOT_THRESHOLD
+    target_block_size: int = TARGET_BLOCK
 
 
 class CheckpointManager:
@@ -56,7 +65,7 @@ class CheckpointManager:
     `fingerprint` identifies the plan-affecting configuration: a stage whose
     manifest carries a DIFFERENT fingerprint is treated as absent and
     recomputed, so re-running against the same checkpoint_dir with a changed
-    threshold/blocking/collapse config never silently reuses stale tables
+    threshold/blocking config never silently reuses stale tables
     (round-1 ADVICE)."""
 
     def __init__(
@@ -176,8 +185,8 @@ def _kernel_token() -> str:
 
 def config_fingerprint(cfg: "PipelineConfig") -> str:
     """Stable digest of the PipelineConfig fields that change stage CONTENT
-    (checkpoint_dir/resume/stage_partitions only affect placement, not
-    values, and are excluded), plus a kernel/code version token so kernel
+    (checkpoint_dir/resume only affect placement, not values, and are
+    excluded), plus a kernel/code version token so kernel
     changes invalidate stale checkpoints even with an identical config."""
     import hashlib
 
@@ -187,16 +196,58 @@ def config_fingerprint(cfg: "PipelineConfig") -> str:
             "threshold": cfg.threshold,
             "hot_threshold": cfg.hot_threshold,
             "target_block_size": cfg.target_block_size,
-            "use_lsh": cfg.use_lsh,
-            "collapse_exact": cfg.collapse_exact,
-            "dedupe_pairs": cfg.dedupe_pairs,
-            "use_cross_domain": cfg.use_cross_domain,
-            "local_max_block": cfg.local_max_block,
-            "use_email_lsh": cfg.use_email_lsh,
         },
         sort_keys=True,
     )
     return hashlib.md5(payload.encode()).hexdigest()
+
+
+def resolve(
+    mentions: DataFrame,
+    uniq: Optional[DataFrame] = None,
+    *,
+    hot_threshold: int = HOT_THRESHOLD,
+    target_block_size: int = TARGET_BLOCK,
+    threshold: float = DEFAULT_THRESHOLD,
+    stage: Optional[Callable[[str, Callable[[], DataFrame]], DataFrame]] = None,
+) -> Dict[str, DataFrame]:
+    """The production chain over canonicalized `mentions` → the named stages
+    {uniq, stars, pairs, scored, fuzzy, clusters} (module docstring).
+
+    `uniq` supplies an already-built distinct-email table (it must carry
+    email, local_canon, domain_canon, match_key); otherwise it is derived
+    and persisted — reps, star edges and the cluster node set all key off
+    it. `stage(name, compute)` wraps every stage it builds: the default runs
+    `compute()`, `run_pipeline` passes `CheckpointManager.stage`."""
+    stage = stage or (lambda name, compute: compute())
+    if uniq is None:
+        uniq = stage("uniq", lambda: uniq_valid_mentions(mentions).persist())
+    stars = stage("stars", lambda: exact_match_edges(mentions, uniq=uniq))
+    pairs = stage(
+        "pairs",
+        lambda: candidate_pairs(
+            mentions,
+            hot_threshold=hot_threshold,
+            target_block_size=target_block_size,
+            collapse_exact=True,
+            dedupe=False,
+            uniq=uniq,
+        ),
+    )
+    scored = stage("scored", lambda: score_pairs(pairs))
+    fuzzy = stage("fuzzy", lambda: match_edges(scored, threshold))
+    clusters = stage(
+        "clusters",
+        lambda: cluster_mentions_collapsed(mentions, fuzzy, stars, nodes=uniq),
+    )
+    return {
+        "uniq": uniq,
+        "stars": stars,
+        "pairs": pairs,
+        "scored": scored,
+        "fuzzy": fuzzy,
+        "clusters": clusters,
+    }
 
 
 def run_pipeline(
@@ -204,49 +255,24 @@ def run_pipeline(
     transcripts: DataFrame,
     config: Optional[PipelineConfig] = None,
 ) -> Dict[str, DataFrame]:
+    """Checkpointed `resolve` over raw transcripts: {mentions} plus every
+    `resolve` stage, each loaded from or written to `checkpoint_dir`."""
     cfg = config or PipelineConfig()
     ckpt = CheckpointManager(
         spark, cfg.checkpoint_dir, cfg.resume, fingerprint=config_fingerprint(cfg)
     )
-
     mentions = ckpt.stage(
         "mentions", lambda: with_canonical(extract_mentions(transcripts))
     )
-    pairs = ckpt.stage(
-        "pairs",
-        lambda: candidate_pairs(
+    return {
+        "mentions": mentions,
+        **resolve(
             mentions,
             hot_threshold=cfg.hot_threshold,
             target_block_size=cfg.target_block_size,
-            use_lsh=cfg.use_lsh,
-            collapse_exact=cfg.collapse_exact,
-            dedupe=cfg.dedupe_pairs,
-            use_cross_domain=cfg.use_cross_domain,
-            local_max_block=cfg.local_max_block,
-            use_email_lsh=cfg.use_email_lsh,
+            threshold=cfg.threshold,
+            stage=ckpt.stage,
         ),
-    )
-    scored = ckpt.stage("scored", lambda: score_pairs(pairs))
-    edges = ckpt.stage("edges", lambda: match_edges(scored, cfg.threshold))
-
-    if cfg.collapse_exact:
-        # within-key guaranteed matches never entered the scorer; their star
-        # edges skip the CC loop entirely (members inherit the root cluster)
-        stars = ckpt.stage("star_edges", lambda: exact_match_edges(mentions))
-        clusters = ckpt.stage(
-            "clusters", lambda: cluster_mentions_collapsed(mentions, edges, stars)
-        )
-        edges_out = edges.unionByName(stars)
-    else:
-        clusters = ckpt.stage("clusters", lambda: cluster_mentions(mentions, edges))
-        edges_out = edges
-
-    return {
-        "mentions": mentions,
-        "pairs": pairs,
-        "scored": scored,
-        "edges": edges_out,
-        "clusters": clusters,
     }
 
 

@@ -46,7 +46,7 @@ def register_er_views(
                        (sha2('sid:'||email), public 'clk{j}:' salts):
                        fine for tests, NOT private against anyone who can
                        read this code. Deployments must pass a key.
-      er_clusters    — (optional, runs the full pipeline) email → cluster_id
+      er_clusters    — (optional, runs pipeline.resolve) email → cluster_id
     """
     register_views(spark, sf_dir, tables=TABLES)
     transcripts = derive_transcripts(spark, sf_dir)
@@ -55,7 +55,14 @@ def register_er_views(
     mentions.createOrReplaceTempView("er_mentions")
     uniq = uniq_valid_mentions(mentions)
     uniq.createOrReplaceTempView("er_uniq")
-    exact_match_edges(mentions, uniq=uniq).createOrReplaceTempView("er_star_edges")
+    if with_clusters:
+        from .pipeline import resolve
+
+        chain = resolve(mentions, uniq)
+        stars = chain["stars"]
+    else:
+        stars = exact_match_edges(mentions, uniq=uniq)
+    stars.createOrReplaceTempView("er_star_edges")
     from pyspark.sql import functions as F
 
     from .operators.pprl import clk_encode, clk_masks, with_dotless
@@ -79,18 +86,7 @@ def register_er_views(
         "er_clk_masks",
     ]
     if with_clusters:
-        from .operators.blocking import candidate_pairs
-        from .operators.scoring import match_edges, score_pairs
-        from .pipeline import cluster_mentions_collapsed
-
-        pairs = candidate_pairs(
-            mentions, hot_threshold=200, target_block_size=64,
-            collapse_exact=True, dedupe=False, uniq=uniq,
-        )
-        fuzzy = match_edges(score_pairs(pairs))
-        clusters = cluster_mentions_collapsed(
-            mentions, fuzzy, exact_match_edges(mentions, uniq=uniq), nodes=uniq
-        )
+        clusters = chain["clusters"]
         clusters.createOrReplaceTempView("er_clusters")
         views.append("er_clusters")
 
@@ -121,7 +117,7 @@ def register_er_views(
 
         cluster_merge_tree(
             clusters.select("email", "cluster_id"),
-            fuzzy.unionByName(exact_match_edges(mentions, uniq=uniq)),
+            chain["fuzzy"].unionByName(stars),
         ).createOrReplaceTempView("er_merge_tree")
         views.append("er_merge_tree")
     return views

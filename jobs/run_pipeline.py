@@ -11,8 +11,8 @@ The north-rule deployment shape:
         --checkpoint-dir <stage store> --output <clusters table>
 
 Reads the transcripts table (input_hint schema: conv_id, turn_idx, role,
-text, tool, ts), runs extract → parse → block → score → cluster with
-per-stage checkpoints (resume = rerun the same command; completed stages are
+text, tool, ts), runs extract → parse, then the production chain
+(`pipeline.resolve`: block → score → cluster) with per-stage checkpoints (resume = rerun the same command; completed stages are
 skipped from their manifests), writes clusters + a run manifest.
 
 In the sandbox the same command runs against local[N] and the driver
@@ -30,25 +30,29 @@ from pathlib import Path
 
 
 def main(argv=None) -> int:
+    # imports deferred until after spark-submit has set up the python path
+    # from --py-files
+    from email_address_parser_spark.operators.scoring import DEFAULT_THRESHOLD
+    from email_address_parser_spark.pipeline import (
+        HOT_THRESHOLD,
+        TARGET_BLOCK,
+        PipelineConfig,
+        run_pipeline,
+    )
+    from email_address_parser_spark.session import build_session
+    from email_address_parser_spark.sources.testdata import derive_transcripts
+
     p = argparse.ArgumentParser(description=__doc__)
     src = p.add_mutually_exclusive_group(required=True)
     src.add_argument("--input", help="transcripts parquet path (input_hint schema)")
     src.add_argument("--sf-dir", help="driver testdata dir; transcripts are derived")
     p.add_argument("--output", required=True, help="clusters output parquet path")
     p.add_argument("--checkpoint-dir", default=None)
-    p.add_argument("--threshold", type=float, default=0.90)
-    p.add_argument("--hot-threshold", type=int, default=10_000)
-    p.add_argument("--target-block-size", type=int, default=5_000)
-    p.add_argument("--no-collapse-exact", action="store_true",
-                   help="disable the exact-canonical collapse (debug/oracle parity)")
+    p.add_argument("--threshold", type=float, default=DEFAULT_THRESHOLD)
+    p.add_argument("--hot-threshold", type=int, default=HOT_THRESHOLD)
+    p.add_argument("--target-block-size", type=int, default=TARGET_BLOCK)
     p.add_argument("--no-resume", action="store_true")
     args = p.parse_args(argv)
-
-    # imports deferred until after spark-submit has set up the python path
-    # from --py-files
-    from email_address_parser_spark.pipeline import PipelineConfig, run_pipeline
-    from email_address_parser_spark.session import build_session
-    from email_address_parser_spark.sources.testdata import derive_transcripts
 
     from pyspark.sql import SparkSession
 
@@ -62,12 +66,10 @@ def main(argv=None) -> int:
 
     cfg = PipelineConfig(
         checkpoint_dir=args.checkpoint_dir,
+        resume=not args.no_resume,
         threshold=args.threshold,
         hot_threshold=args.hot_threshold,
         target_block_size=args.target_block_size,
-        collapse_exact=not args.no_collapse_exact,
-        dedupe_pairs=args.no_collapse_exact,
-        resume=not args.no_resume,
     )
     out = run_pipeline(spark, transcripts, cfg)
     out["clusters"].write.mode("overwrite").parquet(args.output)
@@ -79,8 +81,7 @@ def main(argv=None) -> int:
         "n_clusters": clusters.select("cluster_id").distinct().count(),
         "elapsed_sec": round(time.time() - t0, 2),
         "config": {k: getattr(cfg, k) for k in (
-            "threshold", "hot_threshold", "target_block_size",
-            "collapse_exact", "dedupe_pairs", "resume")},
+            "threshold", "hot_threshold", "target_block_size", "resume")},
     }
     Path(args.output + "_RUN_MANIFEST.json").write_text(json.dumps(manifest, indent=2))
     print(json.dumps(manifest))

@@ -23,26 +23,14 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from email_address_parser_spark.operators.blocking import (
-    candidate_pairs,
-    exact_match_edges,
-    uniq_valid_mentions,
-)
+from email_address_parser_spark.operators.blocking import uniq_valid_mentions
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
-from email_address_parser_spark.operators.scoring import match_edges, score_pairs
-from email_address_parser_spark.pipeline import cluster_mentions_collapsed
+from email_address_parser_spark.pipeline import resolve
 from email_address_parser_spark.session import build_session
 from email_address_parser_spark.sources.testdata import (
     derive_transcripts,
     replicate_transcripts,
 )
-
-# bounded quadratic cost per block: the dotless-local salt keeps every true
-# identity-variant pair co-bucketed at ANY block size, and typo-pairs ride
-# the (unsalted, domain-restricted) LSH channel — so small blocks trade no
-# recall for a ~4x smaller pair space than the default 250
-HOT_THRESHOLD = 200
-TARGET_BLOCK = 32
 
 
 def main() -> None:
@@ -86,16 +74,7 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     warm_input = transcripts.where(F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(50)) == 0)
-    warm = with_canonical(extract_mentions(warm_input))
-    warm_edges = match_edges(
-        score_pairs(
-            candidate_pairs(
-                warm, hot_threshold=200, target_block_size=64,
-                collapse_exact=True, dedupe=False,
-            )
-        )
-    )
-    cluster_mentions_collapsed(warm, warm_edges, exact_match_edges(warm)).write.format(
+    resolve(with_canonical(extract_mentions(warm_input)))["clusters"].write.format(
         "noop"
     ).mode("overwrite").save()
     stages["warmup"] = round(time.perf_counter() - t0, 2)
@@ -111,21 +90,10 @@ def main() -> None:
     stages["extract_dedup"] = round(time.perf_counter() - t0, 2)
 
     t_pipeline0 = time.perf_counter()
-    # exact-canonical duplicates collapse to one representative before the
-    # quadratic stages; their guaranteed-match star edges bypass the scorer
-    pairs = candidate_pairs(
-        mentions,
-        hot_threshold=HOT_THRESHOLD,
-        target_block_size=TARGET_BLOCK,
-        collapse_exact=True,
-        dedupe=False,
-        uniq=uniq,
-    )
-    fuzzy = match_edges(score_pairs(pairs))
-    clusters = cluster_mentions_collapsed(
-        mentions, fuzzy, exact_match_edges(mentions, uniq=uniq), nodes=uniq
-    )
-    n_clusters = clusters.count()
+    # the production chain (pipeline.resolve): exact-canonical duplicates
+    # collapse to one representative before the quadratic stages; their
+    # guaranteed-match star edges bypass the scorer
+    n_clusters = resolve(mentions, uniq)["clusters"].count()
     stages["block_score_cluster"] = round(time.perf_counter() - t_pipeline0, 2)
 
     total = stages["extract_dedup"] + stages["block_score_cluster"]

@@ -23,7 +23,10 @@ import datetime
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from email_address_parser_spark.pipeline import PipelineConfig, run_pipeline
+from email_address_parser_spark.operators.blocking import candidate_pairs
+from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
+from email_address_parser_spark.operators.scoring import match_edges, score_pairs
+from email_address_parser_spark.pipeline import cluster_mentions, resolve
 
 _ALPHA = "abcdefghij"
 _TS = datetime.datetime(2026, 1, 1)
@@ -79,21 +82,15 @@ def _clusters_both(spark, entities):
         schema="conv_id string, turn_idx int, role string, text string,"
         " tool string, ts timestamp",
     )
-    full = {
-        r.email: r.cluster_id
-        for r in run_pipeline(spark, sdf, PipelineConfig(hot_threshold=1 << 30))[
-            "clusters"
-        ].collect()
-    }
+    mentions = with_canonical(extract_mentions(sdf))
+    reference = cluster_mentions(
+        mentions,
+        match_edges(score_pairs(candidate_pairs(mentions, hot_threshold=1 << 30))),
+    )
+    full = {r.email: r.cluster_id for r in reference.collect()}
     coll = {
         r.email: r.cluster_id
-        for r in run_pipeline(
-            spark,
-            sdf,
-            PipelineConfig(
-                hot_threshold=1 << 30, collapse_exact=True, dedupe_pairs=False
-            ),
-        )["clusters"].collect()
+        for r in resolve(mentions, hot_threshold=1 << 30)["clusters"].collect()
     }
     return full, coll
 

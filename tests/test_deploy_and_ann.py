@@ -63,7 +63,7 @@ def test_checkpoint_manifest_counters(spark, tmp_path):
     m = json.loads((ck / "mentions_MANIFEST.json").read_text())
     assert m["counters"]["n_valid_lax"] >= m["counters"]["n_valid_strict"] > 0
     assert sum(m["partitions"].values()) == m["rows"]
-    e = json.loads((ck / "edges_MANIFEST.json").read_text())
+    e = json.loads((ck / "fuzzy_MANIFEST.json").read_text())
     assert "counters" in e
 
 

@@ -210,22 +210,11 @@ def test_incremental_known_email_reappearing_changes_nothing(spark, corpus_df):
 
 
 def _full_collapsed(mentions, hot_threshold, target_block_size=5_000):
-    from email_address_parser_spark.operators.blocking import exact_match_edges
-    from email_address_parser_spark.pipeline import cluster_mentions_collapsed
+    from email_address_parser_spark.pipeline import resolve
 
-    uniq = uniq_valid_mentions(mentions)
-    pairs = candidate_pairs(
-        mentions,
-        hot_threshold=hot_threshold,
-        target_block_size=target_block_size,
-        collapse_exact=True,
-        dedupe=False,
-        uniq=uniq,
-    )
-    fuzzy = match_edges(score_pairs(pairs))
-    return cluster_mentions_collapsed(
-        mentions, fuzzy, exact_match_edges(mentions, uniq=uniq), nodes=uniq
-    )
+    return resolve(
+        mentions, hot_threshold=hot_threshold, target_block_size=target_block_size
+    )["clusters"]
 
 
 def test_incremental_collapsed_equals_batch_collapsed(spark, corpus_df):
@@ -392,12 +381,10 @@ def test_stale_fullwidth_email_bands_state_reconciles_to_prefix(spark):
     email_expr = F.concat(F.col("local_canon"), F.lit("@"), F.col("domain_canon"))
     stale = dim.withColumn("email_bands", minhash_bands_udf(email_expr))  # 8 bands
     fresh = with_email_bands(dim)                                        # 4 bands
-    kw = dict(hot_threshold=1 << 40, use_lsh=False, use_cross_domain=True)
-
     def pairset(d):
         return {
             (r["email_a"], r["email_b"])
-            for r in incremental_candidate_pairs(d, **kw).collect()
+            for r in incremental_candidate_pairs(d, hot_threshold=1 << 40).collect()
         }
 
     assert pairset(stale) == pairset(fresh)

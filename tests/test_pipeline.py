@@ -5,10 +5,11 @@ from __future__ import annotations
 import json
 
 import duckdb
+import pandas as pd
 import pytest
 
 from email_address_parser_spark.operators.scoring import jaro_winkler_similarity
-from email_address_parser_spark.pipeline import PipelineConfig, run_pipeline
+from email_address_parser_spark.pipeline import PipelineConfig, resolve, run_pipeline
 from email_address_parser_spark.synth import synthesize
 
 
@@ -42,14 +43,17 @@ def test_jaro_winkler_matches_duckdb():
 
 def test_pairwise_f1(results, corpus):
     """BASELINE.json acceptance: F1 >= 0.99 on labeled pairs at the same
-    blocking key (exact lowercased domain)."""
+    blocking key (exact lowercased domain). A pair is predicted a match when
+    both emails land in one cluster: the collapsed chain scores only
+    representative pairs, so within-key matches never appear in `scored`."""
     out, _ = results
-    scored = out["scored"]
-    predicted = set()
-    for r in scored.itertuples():
-        if r.score >= 0.90:
-            predicted.add((r.email_a, r.email_b))
-            predicted.add((r.email_b, r.email_a))
+    cluster_of = dict(zip(out["clusters"]["email"], out["clusters"]["cluster_id"]))
+    predicted = {
+        (a, b)
+        for a in cluster_of
+        for b in cluster_of
+        if a != b and cluster_of[a] == cluster_of[b]
+    }
 
     tp = fp = fn = 0
     for r in corpus.labeled_pairs.itertuples():
@@ -70,7 +74,7 @@ def test_pairwise_f1(results, corpus):
 def test_clusters_match_union_find_oracle(results):
     """Spark large-star/small-star == plain union-find on the same edges."""
     out, _ = results
-    edges = out["edges"]
+    edges = pd.concat([out["fuzzy"], out["stars"]])
     clusters = out["clusters"]
 
     parent = {}
@@ -150,3 +154,24 @@ def test_checkpoint_invalidated_on_config_change(spark, results):
     )
     rerun = run_pipeline(spark, sdf, cfg)
     assert rerun["clusters"].count() == 0  # stale tables were not reused
+
+
+def test_resolve_stages_compose_with_set_operations(spark, corpus):
+    """Every frame resolve() returns survives exceptAll/intersectAll (Spark
+    4.1 raises INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on subset-dropDuplicates
+    output there), and uniq keeps exactly one row per email."""
+    from email_address_parser_spark.operators.extract import (
+        extract_mentions,
+        with_canonical,
+    )
+
+    mentions = with_canonical(extract_mentions(spark.createDataFrame(corpus.transcripts)))
+    chain = resolve(mentions, hot_threshold=50, target_block_size=40)
+    assert set(chain) == {"uniq", "stars", "pairs", "scored", "fuzzy", "clusters"}
+    for name, df in chain.items():
+        n = df.count()
+        head = df.limit(3)
+        assert df.exceptAll(head).count() == n - min(n, 3), name
+        assert df.intersectAll(head).count() == min(n, 3), name
+    uniq = chain["uniq"]
+    assert uniq.count() == uniq.select("email").distinct().count() > 0

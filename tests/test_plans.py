@@ -421,7 +421,8 @@ def test_metablocking_partial_agg_no_cross_product(spark):
     # the purge is a window COUNT over the block key, not a sizes-dim
     # aggregate + join-back: the window's hash exchange on `key` is exactly
     # the CBS self-join's key partitioning, so the SMJ must reuse it (the
-    # −72% plan, bench_metablock_ab.py). The full tree is only visible with
+    # −72% plan, BENCH/BASELINE.md "Round-4 meta-blocking plan: window purge
+    # + pinned edge frame"). The full tree is only visible with
     # the edge checkpoint off (a localCheckpoint truncates EXPLAIN at an
     # RDD scan); semantics are identical.
     from email_address_parser_spark.operators.blocking import uniq_valid_mentions

@@ -159,17 +159,11 @@ def test_streaming_cluster_maintenance_matches_batch(spark, tmp_path):
     persisted clustering equals the batch collapsed chain over the whole
     corpus (salting active), and a second drain of the same stream from a
     fresh checkpoint is a no-op (replay idempotency)."""
-    from email_address_parser_spark.operators.blocking import (
-        candidate_pairs,
-        exact_match_edges,
-        uniq_valid_mentions,
-    )
     from email_address_parser_spark.operators.extract import (
         extract_mentions,
         with_canonical,
     )
-    from email_address_parser_spark.operators.scoring import match_edges, score_pairs
-    from email_address_parser_spark.pipeline import cluster_mentions_collapsed
+    from email_address_parser_spark.pipeline import resolve
     from email_address_parser_spark.streaming.extract_stream import (
         read_transcript_stream,
     )
@@ -202,18 +196,7 @@ def test_streaming_cluster_maintenance_matches_batch(spark, tmp_path):
     )
     q.awaitTermination()
 
-    m = with_canonical(extract_mentions(df))
-    uniq = uniq_valid_mentions(m)
-    full = cluster_mentions_collapsed(
-        m,
-        match_edges(score_pairs(candidate_pairs(
-            m, collapse_exact=True, dedupe=False,
-            uniq=uniq.select("email", "local_canon", "domain_canon", "match_key"),
-            **fold_kwargs,
-        ))),
-        exact_match_edges(m, uniq=uniq.select("email", "match_key")),
-        nodes=uniq,
-    )
+    full = resolve(with_canonical(extract_mentions(df)), **fold_kwargs)["clusters"]
     got = {
         (r["email"], r["cluster_id"])
         for r in read_state(spark, state_dir)["clusters"].collect()
