@@ -169,14 +169,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # with G40 survivorship; only touched clusters recompute)
         "er_golden_record_incr": _er_golden_record_incr,
         # batch-incremental cluster maintenance: fold the held-out 20% of
-        # conversations into clusters built from the other 80%; the oracle is
-        # the FULL-corpus clustering, so a triple-match proves the
-        # incremental path equals a from-scratch recompute
-        "er_incremental": _er_incremental,
-        # v2 state-maintained fold: every derived dim (reps, domain counts,
-        # LSH bucket counts) is merged from persisted state instead of
-        # re-aggregated, and the fold emits a delta; same full-recompute
-        # oracle certifies fold == from-scratch clustering
+        # conversations into state bootstrapped from the other 80%. Every
+        # derived dim (reps, domain counts, LSH bucket counts) is merged
+        # from persisted state instead of re-aggregated, and the fold emits
+        # a delta; the oracle is the FULL-corpus clustering, so a
+        # triple-match proves fold == from-scratch clustering
         "er_incremental_fold": _er_incremental_fold,
         "er_forget": _er_forget,
         "er_threshold_clusters": _er_threshold_clusters,
@@ -314,9 +311,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_fs_match_f1": _er_fs_match_f1,
         # G46: frozen-2-iteration IRLS trained scorer, weights + held-in F1
         "er_trained_match_f1": _er_trained_match_f1,
-        # G72: phonetic (Soundex-family) blocking, the fourth classic family
-        "er_phonetic_pairs": _er_phonetic_pairs,
-        "er_phonetic_blocks": _er_phonetic_blocks,
         # G57: sorted-neighborhood blocking — distributed exact global rank
         # + explode/equi-join window pairs (the third classic blocking
         # family next to key blocking and LSH)
@@ -718,44 +712,6 @@ def _er_trained_match_f1(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-def _er_phonetic_pairs(spark: SparkSession, sf: str) -> DataFrame:
-    """G72: phonetic (Soundex-family) blocking — the fourth classic
-    blocking strategy (operators/phonetic.py): house soundex key over the
-    dotless-insensitive local, capped same-key self-join, cross-domain by
-    design. The oracle replays the IDENTICAL regexp chain (generated from
-    the same _STEPS table) so key parity is by construction.
-
-    On THIS corpus the result is 0 rows, and that is the operator working
-    correctly: every synthetic local is phonetically degenerate (all
-    `Customer#...` → one C235 block of all 6,240 distinct emails —
-    er_phonetic_blocks shows it), and the over-cap purge rightly refuses
-    to emit a 19M-pair junk block. Realistic-name behavior (jon/john,
-    smith/smyth collide; caps bound blocks) is pinned by
-    tests/test_phonetic.py including a corpus-scale Spark↔DuckDB key
-    parity check."""
-    from email_address_parser_spark.operators.blocking import uniq_valid_mentions
-    from email_address_parser_spark.operators.phonetic import phonetic_pairs
-
-    return phonetic_pairs(uniq_valid_mentions(_mentions(spark, sf)))
-
-
-def _er_phonetic_blocks(spark: SparkSession, sf: str) -> DataFrame:
-    """G72 companion audit: the phonetic block census (pkey, n_emails) the
-    blocking-quality reviewer reads BEFORE enabling the channel — here it
-    shows the single corpus-wide degenerate block that explains
-    er_phonetic_pairs' empty (capped) output."""
-    from email_address_parser_spark.operators.blocking import uniq_valid_mentions
-    from email_address_parser_spark.operators.phonetic import phonetic_key
-
-    uniq = uniq_valid_mentions(_mentions(spark, sf))
-    return (
-        uniq.select(phonetic_key(F.col("local_canon")).alias("pkey"))
-        .where(F.col("pkey") != "")
-        .groupBy("pkey")
-        .agg(F.count(F.lit(1)).alias("n_emails"))
-    )
-
-
 def _er_domain_aliases(spark: SparkSession, sf: str) -> DataFrame:
     """G55: corpus-learned domain alias map (operators/aliases.py) — typo'd
     domains resolved to their most-populous near-spelling neighbor. The
@@ -866,46 +822,15 @@ def _er_comention(spark: SparkSession, sf: str) -> DataFrame:
     return comention_edges(_mentions(spark, sf))
 
 
-def _er_incremental(spark: SparkSession, sf: str) -> DataFrame:
-    """Batch-incremental cluster maintenance (operators/incremental.py):
-    cluster the ~80% of conversations whose conv_id hashes below the split
-    point with the batch pipeline, then fold the remaining ~20% in with
-    `incremental_cluster_update` — which extracts/blocks/scores ONLY pairs
-    touching a genuinely new email and re-runs CC only on the affected
-    subgraph. The oracle is the FULL-corpus match-key clustering (same SQL
-    as er_clusters), so the triple-match certifies incremental == full
-    recompute, the operator's contract."""
-    from email_address_parser_spark.operators.blocking import uniq_valid_mentions
-    from email_address_parser_spark.operators.incremental import (
-        incremental_cluster_update,
-    )
-
-    t = derive_transcripts(spark, sf)
-    is_prev = F.pmod(F.xxhash64("conv_id"), F.lit(5)) < 4
-    prev_m = _mentions_of(t.where(is_prev))
-    prev_clusters = cluster_mentions(
-        prev_m,
-        match_edges(score_pairs(candidate_pairs(prev_m, hot_threshold=1 << 40))),
-    )
-    out = incremental_cluster_update(
-        spark,
-        t.where(~is_prev),
-        prev_clusters,
-        uniq_valid_mentions(prev_m),
-        hot_threshold=1 << 40,
-    )
-    return out["clusters"]
-
-
 def _er_incremental_fold(spark: SparkSession, sf: str) -> DataFrame:
-    """v2 of G24 (operators/incremental.py `fold_batch`): bootstrap the fold
-    state (uniq + reps + domain_counts + bucket_counts + clusters) from the
-    ~80% split, then fold the ~20% batch in. Unlike v1
-    (`incremental_cluster_update`), every derived statistic is min-/count-
-    merged from state rather than re-aggregated over the corpus dim, and the
-    fold's native output is a DELTA of assignments; here we return the full
-    updated view so the SAME full-corpus clustering oracle as er_clusters /
-    er_incremental certifies fold == from-scratch recompute."""
+    """G24 batch-incremental cluster maintenance (operators/incremental.py
+    `fold_batch`): bootstrap the fold state (uniq + reps + domain_counts +
+    bucket_counts + clusters) from the ~80% split, then fold the ~20% batch
+    in. Every derived statistic is min-/count-merged from state rather than
+    re-aggregated over the corpus dim, and the fold's native output is a
+    DELTA of assignments; here we return the full updated view so the SAME
+    full-corpus clustering oracle as er_clusters certifies fold ==
+    from-scratch recompute."""
     from email_address_parser_spark.operators.incremental import (
         build_incremental_state,
         fold_batch,
@@ -1565,7 +1490,7 @@ def _er_forget(spark: SparkSession, sf: str) -> DataFrame:
 def _er_membership_history(spark: SparkSession, sf: str) -> DataFrame:
     """G43 (operators/history.py): SCD2 membership timeline across two
     epochs. Epoch 0 clusters the EVEN turns of every conversation and
-    snapshots it; epoch 1 folds the odd turns in with the G24 v2 state fold
+    snapshots it; epoch 1 folds the odd turns in with the G24 state fold
     and folds the updated assignments into the history. The turn split (a
     predicate DuckDB replays exactly, unlike xxhash64) is what makes
     closures reachable: identities are conversation-local here, so only a
@@ -1597,10 +1522,11 @@ def _er_membership_history(spark: SparkSession, sf: str) -> DataFrame:
 
 def _er_golden_record_incr(spark: SparkSession, sf: str) -> DataFrame:
     """G42 (operators/incremental_golden.py): bootstrap golden records from
-    the ~80% split, fold the ~20% batch — the cluster fold (G24 v2) and the
-    survivorship fold compose, recomputing only touched clusters. The oracle
-    is the SAME full-corpus survivorship SQL as er_golden_record, so the
-    triple-match certifies fold == from-scratch golden records."""
+    the ~80% split, fold the ~20% batch — the cluster fold (G24
+    `fold_batch`) and the survivorship fold compose, recomputing only
+    touched clusters. The oracle is the SAME full-corpus survivorship SQL
+    as er_golden_record, so the triple-match certifies fold == from-scratch
+    golden records."""
     from email_address_parser_spark.operators.incremental import (
         build_incremental_state,
         fold_batch,
@@ -2538,49 +2464,6 @@ def _redact_oracle() -> str:
     return _oracles.doc_redact_oracle(EMAIL_TOKEN_RE, IPV4_RE, PHONE_RE)
 
 
-def _phonetic_key_cte() -> str:
-    """Shared prefix of the two G72 oracles: distinct locals → house
-    phonetic key (generated from phonetic._STEPS — one source of truth)."""
-    from email_address_parser_spark.operators.phonetic import phonetic_key_sql
-
-    return (
-        MENTIONS_EXPECTED_CTE
-        + f""",
-        pu AS (
-            SELECT DISTINCT email, local_canon
-            FROM mentions_expected WHERE valid_lax
-        ),
-        pk AS (
-            SELECT email, {phonetic_key_sql('local_canon')} AS pkey FROM pu
-        )"""
-    )
-
-
-def _phonetic_pairs_oracle(max_block: int = 50) -> str:
-    # max_block must track phonetic_pairs' default (the Spark query uses it)
-    return (
-        _phonetic_key_cte()
-        + f""",
-        pkx AS (SELECT * FROM pk WHERE pkey <> ''),
-        psz AS (SELECT pkey, count(*) AS n FROM pkx GROUP BY pkey),
-        pbd AS (
-            SELECT pkx.* FROM pkx JOIN psz USING (pkey)
-            WHERE n <= {max_block}
-        )
-        SELECT a.email AS email_a, b.email AS email_b, a.pkey AS pkey
-        FROM pbd a JOIN pbd b ON a.pkey = b.pkey AND a.email < b.email"""
-    )
-
-
-def _phonetic_blocks_oracle() -> str:
-    return (
-        _phonetic_key_cte()
-        + """
-        SELECT pkey, CAST(count(*) AS BIGINT) AS n_emails
-        FROM pk WHERE pkey <> '' GROUP BY pkey"""
-    )
-
-
 def oracle_sql() -> dict[str, str]:
     return {
         "er_mentions": MENTIONS_EXPECTED_CTE
@@ -2610,7 +2493,6 @@ def oracle_sql() -> dict[str, str]:
         "er_resolve_clusters": _ORACLE_CLUSTERS
         + "SELECT email, cluster_id FROM clusters",
         # incremental == full recompute: the oracle IS the full-corpus clustering
-        "er_incremental": _ORACLE_CLUSTERS + "SELECT email, cluster_id FROM clusters",
         "er_incremental_fold": _ORACLE_CLUSTERS
         + "SELECT email, cluster_id FROM clusters",
         # erasure == exactly the target's component removed, nothing else
@@ -3377,10 +3259,6 @@ def oracle_sql() -> dict[str, str]:
         # 5×5 Newton solves via generated Cramer determinants
         "er_trained_match_f1": _ORACLE_PAIRS
         + _oracles.trained_match_f1_oracle(),
-        # G72 phonetic-blocking replay: the key SQL is generated from the
-        # SAME step table as the Catalyst expression (phonetic.py)
-        "er_phonetic_pairs": _phonetic_pairs_oracle(),
-        "er_phonetic_blocks": _phonetic_blocks_oracle(),
         # G55 domain-alias replay: domain dim + distinct 4-gram block join
         # (purged at 10000), strict population orientation, levenshtein<=2,
         # per-alias winner by (n_canon DESC, canonical ASC)

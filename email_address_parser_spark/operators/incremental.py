@@ -1,59 +1,59 @@
 """Batch-incremental cluster maintenance — fold new transcripts into an
 existing clustering without reprocessing the corpus.
 
-At 10^12 turns, re-running the full ER pipeline for every new day of
+At 10^12 turns, re-running the full ER chain for every new day of
 transcripts rescans the entire history to re-derive clusters that are
-99.99% unchanged. `incremental_cluster_update` folds ONE new batch into an
-existing clustering with cost proportional to |new batch| + |affected
-neighborhood|:
+99.99% unchanged. `build_incremental_state` bootstraps the fold state once
+from a corpus (the production chain `pipeline.resolve` plus the derived
+dims the fold maintains); `fold_batch` then folds ONE new batch into that
+state with cost proportional to |new batch| + |affected neighborhood|:
 
-  1. extract/canonicalize ONLY the new batch — the historical corpus is
-     never rescanned; its distinct-email dim (`prev_uniq`) is the persisted
-     state, exactly the table `pipeline.py` already checkpoints per stage
-     (in prod: the mentions/uniq Iceberg snapshot);
-  2. re-block the union dim (an O(|distinct emails|) aggregate + join over
-     the tiny dim, NOT the corpus) and generate only pairs touching >= 1
-     genuinely new email. Old<->old pairs are never regenerated — their
-     match verdicts are already folded into `prev_clusters`. LSH band
-     signatures are pure functions of the email, so they ride the dim state
-     (append-only: `with_minhash_bands`) and the signature UDF only ever
-     runs over the batch; the pair self-join's b side is semi-restricted to
-     key values containing a new row, so untouched blocks never enter the
-     join shuffle;
-  3. score only those pairs (same Arrow-batch JW/Levenshtein kernels as the
+  1. extract/canonicalize ONLY the new batch and anti-join it against
+     `state.uniq` — the historical corpus is never rescanned, and an email
+     already in state is never re-blocked. LSH band signatures are pure
+     functions of the email, so they ride the dim state (append-only) and
+     the signature UDFs only ever run over the batch;
+  2. min-merge the batch into the touched match-key representatives and
+     anchor every new variant to its key's PREVIOUS root with an unscored
+     star edge (the collapsed chain's within-key merge);
+  3. block only pairs touching >= 1 new representative, over the same four
+     disjoint channels as `blocking.candidate_pairs`. Every cap and salting
+     statistic (domain counts, LSH bucket counts, dotless-local counts) is
+     READ from state and count-merged with the batch, never re-aggregated
+     over the corpus dim; partners come from `state.reps` pruned to the
+     batch's domains, buckets and locals;
+  4. score only those pairs (same Arrow-batch JW/Levenshtein kernels as the
      batch path) and threshold to edges;
-  4. contract old clusters to their roots (quotient graph): every OLD edge
+  5. contract old clusters to their roots (quotient graph): every OLD edge
      endpoint is rewritten to its prev cluster_id before the CC loop, so the
      loop's node set is {affected roots} ∪ {edge-incident new emails} — old
      members never enter an iteration shuffle, yet transitive merges across
      old clusters still happen (contraction preserves connectivity, and
      min-over-roots == min-over-members because a root IS its cluster's min
      email). Members inherit the root's new label with one post-loop join;
-  5. pass every untouched cluster through unchanged (anti-join on the
-     affected cluster-id set — a semi/anti pair on the clusters table, the
-     only full-state shuffle, and it is keyed by the already-partitioned
-     cluster table).
+  6. emit a DELTA of assignments (changed or new emails) plus batch-sized
+     per-table update frames; untouched clusters pass through unchanged.
 
-Equivalence contract (asserted by tests/test_incremental.py): with the same
-blocking/scoring config and no data-driven blocking transition between runs
-(no domain crossing `hot_threshold`, no LSH bucket crossing the cap — both
-monotone corpus-growth events), the output is row-identical to
-`pipeline.cluster_mentions` over the full corpus:
+Equivalence contract (asserted by tests/test_incremental.py, certified by
+the `er_incremental_fold` oracle): with the same hot_threshold,
+target_block_size and threshold, and no data-driven blocking transition
+between runs (no domain crossing `hot_threshold`, no LSH bucket or dotless
+block crossing its cap — all monotone corpus-growth events), the folded
+clustering is row-identical to `pipeline.resolve` over the union corpus:
 
   * old components enter the loop as depth-1 stars, so their transitive
     closure is preserved;
-  * a new email's edge set under union-dim blocking is exactly the edge set
-    the full run would give it (blocking keys are pure functions of the
-    email string plus union-dim statistics);
-  * old<->old edges add nothing — their closure IS `prev_clusters`.
+  * a new representative's edge set under count-merged blocking is exactly
+    the edge set the full run would give it (blocking keys are pure
+    functions of the email string plus union-dim statistics);
+  * old<->old edges add nothing — their closure IS `state.clusters`.
 
 When a blocking transition DOES occur, the full path only ever REMOVES
-candidate pairs (salt splits, bucket-cap evictions); the incremental path
-never unmerges, so its clusters are the closure of a superset of the full
-path's edges. Match-key recall is unaffected either way: same-key variants
-share the dotless-local salt hash, hence the block, under every salting
-state (`blocking.with_salted_domain_block`), which is what the BASELINE
-F1 >= 0.99 acceptance keys on.
+candidate pairs (salt splits, bucket-cap evictions); the fold never
+unmerges, so its clusters are the closure of a superset of the full path's
+edges. Match-key recall is unaffected either way: same-key variants join
+their key's root by a star edge, which bypasses blocking entirely, and that
+is what the BASELINE F1 >= 0.99 acceptance keys on.
 
 Reference tie-in: the per-address semantics (what counts as the same
 identity) remain the Rust crate's parse/canonicalize contract
@@ -65,11 +65,10 @@ from __future__ import annotations
 
 from typing import Dict, Optional
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .blocking import (
-    EMAIL_N_BANDS,
     LOCAL_MAX_BLOCK,
     LSH_MAX_BUCKET,
     email_minhash_bands_udf,
@@ -179,105 +178,6 @@ def _restricted_pairs(
     )
 
 
-def incremental_candidate_pairs(
-    updated_dim: DataFrame,
-    hot_threshold: int = 10_000,
-    target_block_size: int = 5_000,
-) -> DataFrame:
-    """Candidate pairs touching >= 1 new email, over the flagged union dim
-    (`_is_new` boolean column). Channel structure mirrors
-    `blocking.candidate_pairs` — exact salted-block, same-domain cross-block
-    local-LSH, cross-domain exact-local, cross-domain full-email LSH — with
-    the same pairwise-disjointness predicates, so no full-pair dedup shuffle
-    runs here either."""
-    blocked = with_salted_domain_block(
-        updated_dim, hot_threshold, target_block_size
-    ).persist()
-
-    pairs = _restricted_pairs(
-        blocked.select("block_key", "email", "local_canon", "domain_canon", "_is_new"),
-        ["block_key"],
-    )
-
-    # use persisted band signatures when the dim carries them (the
-    # incremental state path — signatures are append-only per email); fall
-    # back to the UDF for plain dims
-    band_col = (
-        F.col("band_sigs")
-        if "band_sigs" in blocked.columns
-        else minhash_bands_udf(F.col("local_canon"))
-    )
-    with_bands = blocked.select(
-        "email",
-        "local_canon",
-        "domain_canon",
-        "block_key",
-        "_is_new",
-        F.posexplode(band_col).alias("band_idx", "band_sig"),
-    )
-    # bucket sizes are computed over the UNION dim so cap decisions match
-    # what a full recompute over the grown corpus would make
-    bucket_sizes = with_bands.groupBy(*_BAND_KEY).agg(F.count(F.lit(1)).alias("_bn"))
-    # persist: referenced three times by _restricted_pairs (see above)
-    bounded = with_bands.join(
-        bucket_sizes.where(F.col("_bn") <= LSH_MAX_BUCKET), _BAND_KEY
-    ).persist()
-    lsh_pairs = _restricted_pairs(
-        bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
-    ).dropDuplicates(["email_a", "email_b"])
-    pairs = pairs.unionByName(lsh_pairs)
-
-    # channel 3 — cross-domain exact-local: block sizes over the UNION dim
-    # so cap decisions match a full recompute over the grown corpus
-    dotted = blocked.withColumn("_dl", _dotless()).persist()
-    local_sizes = dotted.groupBy("_dl").agg(F.count(F.lit(1)).alias("_ln"))
-    bounded_local = dotted.join(
-        local_sizes.where(F.col("_ln") <= LOCAL_MAX_BLOCK), ["_dl"]
-    )
-    xd_pairs = _restricted_pairs(
-        bounded_local.select("_dl", "email", "local_canon", "domain_canon", "_is_new"),
-        ["_dl"],
-        cross_domain=True,
-    )
-    pairs = pairs.unionByName(xd_pairs)
-
-    # channel 4 — cross-domain cross-local full-email LSH; persisted
-    # email_bands when the dim carries them (state path)
-    eband_col = (
-        F.col("email_bands")
-        if "email_bands" in blocked.columns
-        else email_minhash_bands_udf(
-            F.concat(F.col("local_canon"), F.lit("@"), F.col("domain_canon"))
-        )
-    )
-    with_ebands = dotted.select(
-        "email",
-        "local_canon",
-        "domain_canon",
-        "_dl",
-        "_is_new",
-        F.posexplode(eband_col).alias("band_idx", "band_sig"),
-    # stale-state reconciliation: a dim state written before the
-    # EMAIL_N_BANDS=4 cut carries 8-element arrays, but the reduced banding
-    # is a PREFIX of the old one (same permutations, same fold), so keeping
-    # band_idx < EMAIL_N_BANDS makes old state byte-identical to
-    # freshly-encoded rows — no version flag, no re-encode, and mixed
-    # old/new dims can never pair on a band the 4-band contract (and the
-    # DuckDB replay) doesn't have
-    ).where(F.col("band_idx") < F.lit(EMAIL_N_BANDS))
-    ebucket_sizes = with_ebands.groupBy(*_BAND_KEY).agg(F.count(F.lit(1)).alias("_bn"))
-    ebounded = with_ebands.join(
-        ebucket_sizes.where(F.col("_bn") <= LSH_MAX_BUCKET), _BAND_KEY
-    ).persist()
-    email_lsh_pairs = _restricted_pairs(
-        ebounded,
-        _BAND_KEY,
-        cross_domain=True,
-        diff_local=True,
-    ).dropDuplicates(["email_a", "email_b"])
-    return pairs.unionByName(email_lsh_pairs)
-
-
 def _assign_components(rewritten: DataFrame) -> DataFrame:
     """(src, dst) quotient edges → (email, cluster_id = component min).
 
@@ -332,180 +232,6 @@ def _band_counts(df: DataFrame, col: str, alias: str = "_bn") -> DataFrame:
         .agg(F.count(F.lit(1)).alias(alias))
     )
 
-
-def incremental_cluster_update(
-    spark: SparkSession,
-    new_transcripts: DataFrame,
-    prev_clusters: DataFrame,
-    prev_uniq: DataFrame,
-    hot_threshold: int = 10_000,
-    target_block_size: int = 5_000,
-    threshold: float = DEFAULT_THRESHOLD,
-    new_mentions: Optional[DataFrame] = None,
-    collapse_exact: bool = False,
-) -> Dict[str, DataFrame]:
-    """Fold `new_transcripts` into (`prev_clusters`, `prev_uniq`).
-
-    prev_clusters: (email, cluster_id) — output of a prior
-        `pipeline.cluster_mentions` / this function (cluster_id = min email
-        of the component; every distinct valid email has a row).
-    prev_uniq: (email, local_canon, domain_canon, match_key) — the distinct
-        valid-email dim of everything already clustered
-        (`blocking.uniq_valid_mentions`; pipeline checkpoints it).
-
-    collapse_exact mirrors the batch pipeline's scale switch: within-key
-    merges become unscored star edges (a new variant connects straight to
-    its match-key root) and the pairwise scorer sees one REPRESENTATIVE per
-    key, restricted to keys the batch touched — so scorer work is
-    proportional to |new keys|, not |new variants| × block width. Same
-    approximation contract as pipeline.cluster_mentions_collapsed, with one
-    incremental addendum: fuzzy verdicts between two untouched keys are
-    inherited from prev_clusters rather than rescored (a key whose rep
-    changed is rescored; its old rep's folded-in edges are never unmerged).
-
-    Returns {"clusters", "uniq", "edges"}:
-      clusters — the full updated assignment (old + new emails);
-      uniq     — the updated dim (state for the next batch);
-      edges    — the new-incident match edges found this batch (audit /
-                 lineage; the old edge set is never rematerialized).
-    """
-    if new_mentions is None:
-        new_mentions = with_canonical(extract_mentions(new_transcripts))
-    batch_uniq = uniq_valid_mentions(new_mentions)
-    if "band_sigs" not in prev_uniq.columns:
-        # fallback for callers whose state predates signature persistence:
-        # re-band the whole prev dim once (prod keeps band_sigs in state so
-        # the UDF only ever runs over the batch)
-        prev_uniq = with_minhash_bands(prev_uniq)
-    if "email_bands" not in prev_uniq.columns:
-        prev_uniq = with_email_bands(prev_uniq)
-    new_uniq = batch_uniq.join(prev_uniq.select("email"), "email", "left_anti")
-    new_uniq = with_email_bands(with_minhash_bands(new_uniq)).persist()
-    updated_uniq = prev_uniq.unionByName(new_uniq)
-    dim_cols = ["email", "local_canon", "domain_canon", "band_sigs", "email_bands"]
-
-    if collapse_exact:
-        # --- guaranteed within-key merges: star edges, no scorer ----------
-        # per-key roots/reps over the union dim (O(|distinct keys|) groupBy;
-        # prod maintains this dim incrementally alongside prev_uniq)
-        rep_rows = updated_uniq.groupBy("match_key", "domain_canon").agg(*_rep_aggs())
-        batch_keys = new_uniq.select("match_key").distinct()
-        # anchor = the key's PREV root when the key already exists (so new
-        # variants attach to the existing component even when a new email
-        # becomes the key minimum), else the min new email of the key
-        prev_roots = (
-            prev_uniq.join(batch_keys, "match_key", "semi")
-            .groupBy("match_key")
-            .agg(F.min("email").alias("_prev_root"))
-        )
-        new_roots = new_uniq.groupBy("match_key").agg(
-            F.min("email").alias("_new_root")
-        )
-        anchors = new_roots.join(prev_roots, "match_key", "left").select(
-            "match_key",
-            F.coalesce("_prev_root", "_new_root").alias("_root"),
-        )
-        star_edges = (
-            new_uniq.select("email", "match_key")
-            .join(anchors, "match_key")
-            .where(F.col("email") != F.col("_root"))
-            .select(
-                F.col("_root").alias("src"),
-                F.col("email").alias("dst"),
-                F.lit(1.0).alias("score"),
-            )
-        )
-        # --- fuzzy channel: rep-level pairs touching >= 1 batch key -------
-        rep_dim = (
-            rep_rows.join(
-                batch_keys.withColumn("_b", F.lit(True)), "match_key", "left"
-            )
-            .select(
-                *dim_cols,
-                F.coalesce(F.col("_b"), F.lit(False)).alias("_is_new"),
-            )
-        )
-        fuzzy_pairs = incremental_candidate_pairs(
-            rep_dim, hot_threshold=hot_threshold, target_block_size=target_block_size
-        )
-        edges = (
-            # batch-sized pair set: the rebalance stage barrier costs
-            # more than the tiny-batch memo loss it buys (fold floor)
-            match_edges(score_pairs(fuzzy_pairs, rebalance=False), threshold)
-            .unionByName(star_edges)
-            .persist()
-        )
-    else:
-        updated_dim = (
-            prev_uniq.select(*dim_cols).withColumn("_is_new", F.lit(False))
-        ).unionByName(new_uniq.select(*dim_cols).withColumn("_is_new", F.lit(True)))
-
-        pairs = incremental_candidate_pairs(
-            updated_dim, hot_threshold=hot_threshold, target_block_size=target_block_size
-        )
-        # batch-sized pair set: skip the rebalance stage (fold floor)
-        edges = match_edges(
-            score_pairs(pairs, rebalance=False), threshold
-        ).persist()
-
-    # Quotient-graph contraction (exactness-preserving): rewrite each OLD
-    # endpoint to its prev cluster root before the CC loop, so the loop's
-    # node set is {affected roots} ∪ {edge-incident new emails} — old
-    # members never enter an iteration shuffle. Label correctness: roots
-    # are the min email of their member set and new emails are themselves,
-    # so min-over-quotient-nodes == min-over-underlying-emails, the same
-    # invariant the collapsed batch path relies on
-    # (pipeline.cluster_mentions_collapsed).
-    def _rewrite(col: str) -> Column:
-        return F.coalesce(F.col("_root"), F.col(col)).alias(f"{col}_q")
-
-    root_of = prev_clusters.select(
-        F.col("email").alias("_member"), F.col("cluster_id").alias("_root")
-    )
-    rewritten = (
-        edges.select("src", "dst")
-        .join(root_of, F.col("src") == F.col("_member"), "left")
-        .select(_rewrite("src"), "dst")
-        .join(root_of, F.col("dst") == F.col("_member"), "left")
-        .select(F.col("src_q").alias("src"), _rewrite("dst"))
-        .withColumnRenamed("dst_q", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    quotient_assign = _assign_components(rewritten)
-
-    # expand: every member of a relabeled old cluster inherits the root's
-    # new label (the root itself is a member, so it is covered too)
-    root_relabel = quotient_assign.select(
-        F.col("email").alias("cluster_id"), F.col("cluster_id").alias("_new")
-    )
-    member_assign = prev_clusters.join(root_relabel, "cluster_id").select(
-        "email", F.col("_new").alias("cluster_id")
-    )
-    new_assign = quotient_assign.join(
-        new_uniq.select("email"), "email", "semi"
-    )
-
-    untouched = prev_clusters.join(
-        root_relabel.select("cluster_id"), "cluster_id", "left_anti"
-    )
-    singletons = (
-        new_uniq.select("email")
-        .join(quotient_assign.select("email"), "email", "left_anti")
-        .select("email", F.col("email").alias("cluster_id"))
-    )
-    clusters = (
-        untouched.unionByName(member_assign)
-        .unionByName(new_assign)
-        .unionByName(singletons)
-    )
-    return {"clusters": clusters, "uniq": updated_uniq, "edges": edges}
-
-
-# ---------------------------------------------------------------------------
-# v2: fully state-maintained fold (delta-emitting, no O(dim) shuffle)
-# ---------------------------------------------------------------------------
 
 STATE_TABLES = (
     "uniq", "reps", "domain_counts", "bucket_counts",
@@ -633,10 +359,14 @@ def fold_batch(
         returned lazily; prod persists them with partition-level MERGE
         writes, so the per-fold write cost is also delta-sized.
 
-    Equivalence contract: identical clusters to `build_incremental_state`'s
-    collapsed batch chain over the union corpus, under the same
-    no-blocking-transition proviso as `incremental_cluster_update` — pinned
-    by tests/test_incremental.py (single and chained folds)."""
+    Equivalence contract: identical clusters to `pipeline.resolve` over the
+    union corpus at the same hot_threshold, target_block_size and
+    threshold, provided no blocking transition separates the bootstrap from
+    the fold: no domain crosses `hot_threshold` and no LSH bucket or
+    dotless-local block crosses its cap. Such a transition only removes
+    pairs from the full run, so the fold's clusters are then a coarsening
+    of it, never a split. Pinned by tests/test_incremental.py (single and
+    chained folds)."""
     if new_mentions is None:
         new_mentions = with_canonical(extract_mentions(new_transcripts))
     batch_uniq = with_email_bands(with_minhash_bands(uniq_valid_mentions(new_mentions)))
@@ -880,7 +610,7 @@ def fold_batch(
         .transform(_pin)
     )
 
-    # --- quotient contraction + assignment (shared with v1 semantics) ------
+    # --- quotient contraction + assignment (module docstring, step 5) ------
     root_of = state["clusters"].select(
         F.col("email").alias("_member"), F.col("cluster_id").alias("_root")
     )

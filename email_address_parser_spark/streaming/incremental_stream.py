@@ -130,8 +130,16 @@ def write_state_mor(
     bucket_keys: Dict[str, list] = STATE_BUCKET_KEYS,
 ) -> None:
     """Append one epoch of per-table UPDATE rows (mode='overwrite' writes a
-    fresh base at epoch 0 — the bootstrap / compaction path). Two phases, as
-    in write_state: materialize everything (batch-sized here), then write.
+    fresh base at epoch 0 — the bootstrap / compaction path).
+
+    Two phases that must not interleave: materialize EVERY table
+    (batch-sized here), then write. The tables share lazy subtrees that read
+    the CURRENT state directories (e.g. the new-email anti-join against
+    state.uniq feeds reps/bucket_counts/clusters too), so writing any
+    directory before every table is materialized would make later tables
+    re-evaluate against the already-updated state — the batch would drain
+    through the anti-join and the fold would silently no-op. localCheckpoint
+    is eager, so phase one pins all values first.
 
     merge_keys: per-table latest-wins key (absent = append-only);
     bucket_keys: layout key for append-only tables. The merge keys are
@@ -204,27 +212,6 @@ def _resolve_latest(
     )
     base = df.where(F.col("_epoch") == 0).drop("_epoch", "_b")
     return base.join(deltas, keys, "left_anti").unionByName(deltas)
-
-
-def write_state(
-    state: Dict[str, DataFrame], state_dir: str, tables=STATE_TABLES
-) -> None:
-    """Materialize EVERY state table, then persist (prod: Iceberg MERGE).
-
-    The two phases must not interleave: the tables share lazy subtrees that
-    read the CURRENT state directories (e.g. the new-email anti-join against
-    state.uniq feeds reps/bucket_counts/clusters too), so overwriting any
-    directory before every table is materialized would make later tables
-    re-evaluate against the already-updated state — the batch would drain
-    through the anti-join and the fold would silently no-op. localCheckpoint
-    is eager, so phase one pins all values first."""
-    materialized = {
-        name: state[name].localCheckpoint()
-        for name in tables
-        if state.get(name) is not None
-    }
-    for name, df in materialized.items():
-        df.write.mode("overwrite").parquet(f"{state_dir}/{name}")
 
 
 def read_state(
