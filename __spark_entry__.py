@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from email_address_parser_spark import oracles as _oracles
-from email_address_parser_spark.operators.blocking import candidate_pairs
+from email_address_parser_spark.operators.blocking import LOCAL_MAX_BLOCK, candidate_pairs
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
 from email_address_parser_spark.operators.scoring import match_edges, score_pairs
 from email_address_parser_spark.pipeline import cluster_mentions, resolve
@@ -42,10 +42,25 @@ def _mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_canonical(extract_mentions(derive_transcripts(spark, sf_dir)))
 
 
+# Salting off: no domain is hot, so every same-domain pair stays in one block
+# and the candidate set is the full one the oracles replay (salt hashes are
+# engine-specific; the salted production chain is er_resolve_clusters)
+_UNSALTED = 1 << 40
+
+
+def _ref_pairs(m: DataFrame) -> DataFrame:
+    """The unsalted reference candidate pairs of mentions `m`."""
+    return candidate_pairs(m, hot_threshold=_UNSALTED)
+
+
+def _ref_clusters(m: DataFrame) -> DataFrame:
+    """The unsalted reference clustering of mentions `m`: every distinct
+    email's cluster over the default-threshold match edges of _ref_pairs."""
+    return cluster_mentions(m, match_edges(score_pairs(_ref_pairs(m))))
+
+
 def _pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # unsalted here: the oracle needs the full same-domain pair set; the salted
-    # path is exercised by pytest + bench (salt hashes are engine-specific)
-    return candidate_pairs(_mentions(spark, sf_dir), hot_threshold=1 << 40)
+    return _ref_pairs(_mentions(spark, sf_dir))
 
 
 def _scored(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -98,11 +113,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .limit(500)
             .select("email_a", "email_b", "jw_local", "lev_local", "score")
         ),
-        "er_clusters": lambda spark, sf: (
-            lambda m: cluster_mentions(m, match_edges(score_pairs(
-                candidate_pairs(m, hot_threshold=1 << 40)
-            )))
-        )(_mentions(spark, sf)),
+        "er_clusters": lambda spark, sf: _ref_clusters(_mentions(spark, sf)),
         # the production chain (salted, collapsed — what the benches time),
         # certified against the same oracle as the unsalted er_clusters
         "er_resolve_clusters": lambda spark, sf: resolve(_mentions(spark, sf))[
@@ -126,11 +137,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 (F.col("email") == F.col("raw")).alias("email_eq_raw"),
             )
         ),
-        "er_cluster_sizes": lambda spark, sf: (
-            lambda m: cluster_mentions(m, match_edges(score_pairs(
-                candidate_pairs(m, hot_threshold=1 << 40)
-            )))
-        )(_mentions(spark, sf))
+        "er_cluster_sizes": lambda spark, sf: _ref_clusters(_mentions(spark, sf))
         .groupBy("cluster_id")
         .agg(F.count(F.lit(1)).alias("n_members")),
         # pairwise precision/recall/F1 of the match decision against the
@@ -338,7 +345,7 @@ def _er_match_f1(spark: SparkSession, sf: str) -> DataFrame:
     from email_address_parser_spark.sources.testdata import truth_labels
 
     m = _mentions(spark, sf)
-    scored = score_pairs(candidate_pairs(m, hot_threshold=1 << 40))
+    scored = score_pairs(_ref_pairs(m))
     uniq = truth_labels(spark, sf)
     j = (
         scored.join(
@@ -396,7 +403,7 @@ def _er_threshold_sweep(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     m = _mentions(spark, sf)
-    scored = score_pairs(candidate_pairs(m, hot_threshold=1 << 40))
+    scored = score_pairs(_ref_pairs(m))
     uniq = truth_labels(spark, sf)
     j = scored.join(
         uniq.select(F.col("email").alias("email_a"), F.col("match_key").alias("mk_a")),
@@ -546,9 +553,7 @@ def _er_entity_activity(spark: SparkSession, sf: str) -> DataFrame:
     m = with_canonical(
         extract_mentions(derive_transcripts(spark, sf), passthrough=("ts",))
     )
-    clusters = cluster_mentions(
-        m, match_edges(score_pairs(candidate_pairs(m, hot_threshold=1 << 40)))
-    )
+    clusters = _ref_clusters(m)
     return (
         m.where(F.col("valid_lax"))
         .select("email", "conv_id", F.date_format("ts", "yyyy-MM").alias("month"))
@@ -583,7 +588,7 @@ def _scored_labeled(spark: SparkSession, sf: str) -> DataFrame:
     from email_address_parser_spark.sources.testdata import truth_labels
 
     m = _mentions(spark, sf)
-    scored = score_pairs(candidate_pairs(m, hot_threshold=1 << 40))
+    scored = score_pairs(_ref_pairs(m))
     t = truth_labels(spark, sf)
     return scored.join(
         t.select(F.col("email").alias("email_a"), F.col("match_key").alias("mk_a")),
@@ -738,9 +743,7 @@ def _graded_systems(spark: SparkSession, sf: str):
 
     m = _mentions(spark, sf)
     truth = truth_labels(spark, sf)
-    engine = cluster_mentions(
-        m, match_edges(score_pairs(candidate_pairs(m, hot_threshold=1 << 40)))
-    )
+    engine = _ref_clusters(m)
     exactc = uniq_valid_mentions(m).select(
         "email",
         F.min("email")
@@ -838,8 +841,8 @@ def _er_incremental_fold(spark: SparkSession, sf: str) -> DataFrame:
 
     t = derive_transcripts(spark, sf)
     is_prev = F.pmod(F.xxhash64("conv_id"), F.lit(5)) < 4
-    state = build_incremental_state(spark, t.where(is_prev), hot_threshold=1 << 40)
-    out = fold_batch(spark, t.where(~is_prev), state, hot_threshold=1 << 40)
+    state = build_incremental_state(spark, t.where(is_prev), hot_threshold=_UNSALTED)
+    out = fold_batch(spark, t.where(~is_prev), state, hot_threshold=_UNSALTED)
     return out["clusters"].select("email", "cluster_id")
 
 
@@ -862,9 +865,7 @@ def _er_threshold_clusters(spark: SparkSession, sf: str) -> DataFrame:
     recursive min-root walk keyed by (threshold, node) — triple-match
     certifies every clustering in the ladder, not just the default cut."""
     m = _mentions(spark, sf)
-    scored = score_pairs(
-        candidate_pairs(m, hot_threshold=1 << 40)
-    ).localCheckpoint(eager=False)
+    scored = score_pairs(_ref_pairs(m)).localCheckpoint(eager=False)
     outs = []
     for t in (0.80, 0.85, 0.90, 0.95):
         edges = match_edges(scored, t)
@@ -913,9 +914,7 @@ def _er_constrained_split(spark: SparkSession, sf: str) -> DataFrame:
     from email_address_parser_spark.operators.repair import constrained_split
 
     m = _mentions(spark, sf)
-    scored = score_pairs(
-        candidate_pairs(m, hot_threshold=1 << 40)
-    ).localCheckpoint(eager=False)
+    scored = score_pairs(_ref_pairs(m)).localCheckpoint(eager=False)
     edges = match_edges(scored)
     clusters = cluster_mentions(m, edges).localCheckpoint(eager=False)
     cons = (
@@ -945,7 +944,7 @@ def _er_merge_tree(spark: SparkSession, sf: str) -> DataFrame:
     from email_address_parser_spark.operators.explain import cluster_merge_tree
 
     m = _mentions(spark, sf)
-    edges = match_edges(score_pairs(candidate_pairs(m, hot_threshold=1 << 40)))
+    edges = match_edges(score_pairs(_ref_pairs(m)))
     return cluster_merge_tree(cluster_mentions(m, edges), edges)
 
 
@@ -962,9 +961,7 @@ def _er_must_link_merge(spark: SparkSession, sf: str) -> DataFrame:
     from email_address_parser_spark.operators.repair import must_link_merge
 
     m = _mentions(spark, sf)
-    scored = score_pairs(
-        candidate_pairs(m, hot_threshold=1 << 40)
-    ).localCheckpoint(eager=False)
+    scored = score_pairs(_ref_pairs(m)).localCheckpoint(eager=False)
     clusters = cluster_mentions(m, match_edges(scored))
     cons = (
         scored.where((F.col("score") >= 0.70) & (F.col("score") < 0.90))
@@ -1056,9 +1053,7 @@ def _er_clustering_compare(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     m = _mentions(spark, sf)
-    scored = score_pairs(
-        candidate_pairs(m, hot_threshold=1 << 40)
-    ).localCheckpoint(eager=False)
+    scored = score_pairs(_ref_pairs(m)).localCheckpoint(eager=False)
     truth = truth_labels(spark, sf)
     engine = cluster_mentions(m, match_edges(scored))
     exactc = uniq_valid_mentions(m).select(
@@ -1118,9 +1113,7 @@ def _pprl_scored(spark: SparkSession, sf: str) -> DataFrame:
 
     m = _mentions(spark, sf)
     uniq = with_dotless(uniq_valid_mentions(m))
-    pairs = candidate_pairs(m, hot_threshold=1 << 40).select(
-        "email_a", "email_b"
-    )
+    pairs = _ref_pairs(m).select("email_a", "email_b")
     return clk_composite_pairs(pairs, uniq)
 
 
@@ -1481,7 +1474,7 @@ def _er_forget(spark: SparkSession, sf: str) -> DataFrame:
     )
 
     t = derive_transcripts(spark, sf)
-    state = build_incremental_state(spark, t, hot_threshold=1 << 40)
+    state = build_incremental_state(spark, t, hot_threshold=_UNSALTED)
     target = state["clusters"].agg(F.min("email").alias("email"))
     after = forget_apply(state, forget_payload(state, target))
     return after["clusters"].select("email", "cluster_id")
@@ -1511,11 +1504,11 @@ def _er_membership_history(spark: SparkSession, sf: str) -> DataFrame:
 
     t = derive_transcripts(spark, sf)
     is_prev = F.col("turn_idx") % 2 == 0
-    state = build_incremental_state(spark, t.where(is_prev), hot_threshold=1 << 40)
+    state = build_incremental_state(spark, t.where(is_prev), hot_threshold=_UNSALTED)
     h0 = snapshot_history(
         state["clusters"].select("email", "cluster_id"), 0
     )
-    out = fold_batch(spark, t.where(~is_prev), state, hot_threshold=1 << 40)
+    out = fold_batch(spark, t.where(~is_prev), state, hot_threshold=_UNSALTED)
     h1 = fold_history(h0, out["clusters"].select("email", "cluster_id"), 1)
     return h1["history"]
 
@@ -1538,12 +1531,12 @@ def _er_golden_record_incr(spark: SparkSession, sf: str) -> DataFrame:
 
     t = derive_transcripts(spark, sf)
     is_prev = F.pmod(F.xxhash64("conv_id"), F.lit(5)) < 4
-    state = build_incremental_state(spark, t.where(is_prev), hot_threshold=1 << 40)
+    state = build_incremental_state(spark, t.where(is_prev), hot_threshold=_UNSALTED)
     gstate = build_golden_state(_mentions_of(t.where(is_prev)), state["clusters"])
     new_mentions = _mentions_of(t.where(~is_prev))
     out = fold_batch(
         spark, t.where(~is_prev), state,
-        hot_threshold=1 << 40, new_mentions=new_mentions,
+        hot_threshold=_UNSALTED, new_mentions=new_mentions,
     )
     gout = fold_golden(
         spark, new_mentions, out["delta"], out["clusters"],
@@ -1621,9 +1614,7 @@ def _er_clusters_diff_golden(spark: SparkSession, sf: str) -> DataFrame:
     intersect. All three should be (0, 0, |distinct emails|) — the oracle
     asserts exactly that, so any clustering regression fails the hash gate."""
     m = _mentions(spark, sf)
-    engine = cluster_mentions(
-        m, match_edges(score_pairs(candidate_pairs(m, hot_threshold=1 << 40)))
-    )
+    engine = _ref_clusters(m)
     from email_address_parser_spark.sources.testdata import truth_labels
 
     uniq = truth_labels(spark, sf)
@@ -2178,7 +2169,7 @@ def _er_cluster_density(spark: SparkSession, sf: str) -> DataFrame:
     clusters. Edges attribute to their src endpoint's cluster (src and dst
     always co-cluster by construction: the edges DEFINE the clusters)."""
     m = _mentions(spark, sf)
-    scored = score_pairs(candidate_pairs(m, hot_threshold=1 << 40))
+    scored = score_pairs(_ref_pairs(m))
     # edges feed BOTH the clustering and the per-cluster edge stats; pin the
     # (pair-scoring-sized) subtree so it runs once (tfidf_topk pattern)
     edges = match_edges(scored).localCheckpoint(eager=False)
@@ -2237,9 +2228,7 @@ def _er_golden_record(spark: SparkSession, sf: str) -> DataFrame:
     from email_address_parser_spark.operators.survivorship import golden_records
 
     m = _mentions(spark, sf)
-    clusters = cluster_mentions(
-        m, match_edges(score_pairs(candidate_pairs(m, hot_threshold=1 << 40)))
-    )
+    clusters = _ref_clusters(m)
     return golden_records(m, clusters)
 
 
@@ -2247,13 +2236,14 @@ def _er_golden_record(spark: SparkSession, sf: str) -> DataFrame:
 # oracles (DuckDB SQL over the same parquet views)
 # ---------------------------------------------------------------------------
 
-# Candidate replay: channel 1 (unsalted exact-domain — channel 2 is empty by
-# construction when nothing is salted, pinned by test_unsalted_lsh_adds_nothing)
-# UNION ALL channel 3 (cross-domain exact dotless local, block-capped)
-# UNION ALL channel 4 (cross-domain cross-local full-email minhash LSH replay,
-# bucket-capped; oracles.email_lsh_pairs_cte re-computes the fixed-seed
-# signatures in pure SQL). Channels are disjoint (blocking.py docstring), so
-# UNION ALL introduces no duplicates.
+# Candidate replay of blocking.blocking_channels: `block` (unsalted
+# exact-domain — `local_lsh` is empty by construction when nothing is salted,
+# pinned by test_unsalted_lsh_adds_nothing) UNION ALL `xd_local` (cross-domain
+# exact dotless local, capped at LOCAL_MAX_BLOCK) UNION ALL `xd_email`
+# (cross-domain cross-local full-email minhash LSH replay, bucket-capped;
+# oracles.email_lsh_pairs_cte re-computes the fixed-seed signatures in pure
+# SQL). Channels are disjoint (blocking.py docstring), so UNION ALL introduces
+# no duplicates.
 _ORACLE_PAIRS = MENTIONS_EXPECTED_CTE + """,
 uniq AS (
     SELECT DISTINCT email, local_canon, domain_canon, match_key,
@@ -2262,7 +2252,7 @@ uniq AS (
     FROM mentions_expected WHERE valid_lax
 ),
 local_sizes AS (SELECT dotless, count(*) AS ln FROM uniq GROUP BY dotless),
-""" + _oracles.email_lsh_pairs_cte(max_bucket=50) + """,
+""" + _oracles.email_lsh_pairs_cte() + """,
 pairs AS (
     SELECT a.email AS email_a, b.email AS email_b,
            a.local_canon AS local_canon_a, b.local_canon AS local_canon_b,
@@ -2277,7 +2267,7 @@ pairs AS (
     JOIN uniq b ON a.dotless = b.dotless
        AND a.domain_canon <> b.domain_canon AND a.email < b.email
     JOIN local_sizes ls ON ls.dotless = a.dotless
-    WHERE ls.ln <= 50
+    WHERE ls.ln <= """ + str(LOCAL_MAX_BLOCK) + """
     UNION ALL
     SELECT x.email_a, x.email_b, a.local_canon, b.local_canon,
            a.domain_canon, b.domain_canon, a.match_key, b.match_key

@@ -2,35 +2,43 @@
 
 FOUR candidate channels, pairwise DISJOINT by construction (they stratify the
 pair space on two axes — same/different canonical domain × same/different
-dotless local or block — so their union needs no full-pair dedup shuffle):
+dotless local or block — so their union needs no full-pair dedup shuffle).
+`blocking_channels` returns them as named frames, `candidate_pairs` as their
+union:
 
-  1. exact-domain blocking, salted for hot-domain skew (F6). The salt hashes
-     the DOTLESS canonical local part, so every variant of one identity lands
-     in the same salt bucket (dot/quote/case/CFWS variants share the dotless
-     local) — the split is recall-preserving for true matches while breaking
-     a gmail.com-sized block into bounded pieces. Hot domains are detected
-     from data (block size > threshold) and broadcast back (small dim).
-  2. MinHash-LSH over character 3-gram shingles of the canonical local part
-     (F7): banded signatures, bucket-join, SAME domain, cross-block only.
-     Catches near-duplicate locals (typos) the salt split separated.
-     Hand-rolled (deterministic seeds) instead of pyspark.ml's MinHashLSH to
-     stay Arrow/DataFrame-native.
-  3. cross-domain exact-local blocking: pairs sharing the DOTLESS canonical
-     local across DIFFERENT canonical domains — the domain-typo channel
-     (jo.hn@gmial.com ↔ john@gmail.com). Deterministic recall for every
-     same-local domain edit; blocks keyed by the (highly selective) local,
-     capped at `local_max_block` because globally common locals (info@,
-     admin@) are non-discriminative across millions of domains and would
-     regenerate a quadratic pair set for entities that are not the same.
-  4. cross-domain full-email MinHash-LSH: banded signatures of
-     local_canon || '@' || domain_canon, restricted to pairs where BOTH the
-     domain and the dotless local differ — the residual channel for
-     simultaneous local + domain typos that neither 2 nor 3 can reach.
-     Bucket-capped like channel 2.
+  1. block     — exact-domain blocking, salted for hot-domain skew (F6). The
+                 salt hashes the DOTLESS canonical local part, so every variant
+                 of one identity lands in the same salt bucket (dot/quote/case/
+                 CFWS variants share the dotless local) — the split is
+                 recall-preserving for true matches while breaking a
+                 gmail.com-sized block into bounded pieces. Hot domains are
+                 detected from data (block size > threshold) and broadcast back
+                 (small dim).
+  2. local_lsh — MinHash-LSH over character 3-gram shingles of the canonical
+                 local part (F7): banded signatures, bucket-join, SAME domain,
+                 cross-block only. Catches near-duplicate locals (typos) the
+                 salt split separated. Hand-rolled (deterministic seeds) instead
+                 of pyspark.ml's MinHashLSH to stay Arrow/DataFrame-native.
+                 Buckets capped at LSH_MAX_BUCKET.
+  3. xd_local  — cross-domain exact-local blocking: pairs sharing the DOTLESS
+                 canonical local across DIFFERENT canonical domains — the
+                 domain-typo channel (jo.hn@gmial.com ↔ john@gmail.com).
+                 Deterministic recall for every same-local domain edit; blocks
+                 keyed by the (highly selective) local, capped at
+                 LOCAL_MAX_BLOCK because globally common locals (info@, admin@)
+                 are non-discriminative across millions of domains and would
+                 regenerate a quadratic pair set for entities that are not the
+                 same.
+  4. xd_email  — cross-domain full-email MinHash-LSH: banded signatures of
+                 local_canon || '@' || domain_canon, restricted to pairs where
+                 BOTH the domain and the dotless local differ — the residual
+                 channel for simultaneous local + domain typos that neither
+                 local_lsh nor xd_local can reach. Buckets capped at
+                 LSH_MAX_BUCKET.
 
-Channels 1/2 require equal domain_canon; 3/4 require different domain_canon;
-3 requires equal dotless local, 4 requires different — a partition, proven by
-tests/test_blocking_channels.py + test_cross_domain_channels.py.
+block/local_lsh require equal domain_canon, xd_local/xd_email different;
+xd_local requires equal dotless local, xd_email different — a partition,
+proven by tests/test_blocking_channels.py + test_cross_domain_channels.py.
 
 Pair generation (F8) is a self-join on the block key with an ordered-pair
 predicate (a < b) so each unordered pair appears exactly once.
@@ -38,9 +46,12 @@ predicate (a < b) so each unordered pair appears exactly once.
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Dict
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, LongType
@@ -173,7 +184,7 @@ def minhash_bands_udf(locals_: pd.Series) -> pd.Series:
     return pd.Series(list(bands))
 
 
-# Channel 4 (cross-domain full-email LSH) runs HALF-width: the residual
+# xd_email (cross-domain full-email LSH) runs HALF-width: the residual
 # channel for simultaneous local+domain typos needs far less collision
 # probability than the primary same-domain typo channel — and its per-band
 # costs (signature hashing on the dim, explode rows, cap-window size,
@@ -184,8 +195,8 @@ def minhash_bands_udf(locals_: pd.Series) -> pd.Series:
 # dotless local and ride channel 3), so PC = 1.0 is band-count-invariant
 # here; the 4-band floor keeps the residual recall surface real
 # (P[collide] = 1-(1-s^4)^4 ≈ 66% at gram-similarity 0.7) at half the
-# cost. The oracle replays the same prefix constants (EMAIL_N_BANDS is
-# threaded into oracles.email_lsh_pairs_cte).
+# cost. The oracle replays the same prefix constants
+# (oracles.email_lsh_pairs_cte reads EMAIL_N_BANDS).
 EMAIL_N_BANDS = 4
 
 
@@ -199,11 +210,19 @@ def email_minhash_bands_udf(emails_: pd.Series) -> pd.Series:
     return pd.Series(list(minhash_band_sigs(sigs)))
 
 
-# Bucket caps of the capped channels: an LSH bucket (channels 2/4) or a
-# cross-domain dotless-local block (channel 3) with more emails than this is
-# non-discriminative and dropped whole (see candidate_pairs)
+# Bucket caps of the capped channels: an LSH bucket (local_lsh, xd_email) or
+# a cross-domain dotless-local block (xd_local) with more emails than this is
+# non-discriminative and dropped whole. The incremental fold and the DuckDB
+# replay (oracles.email_lsh_pairs_cte, __spark_entry__._ORACLE_PAIRS) read
+# these same constants.
 LSH_MAX_BUCKET = 50
 LOCAL_MAX_BLOCK = 50
+
+
+def dotless_local() -> Column:
+    """The canonical local part with its dots removed: every dot variant of
+    one identity shares it (the salt input and the cross-domain block key)."""
+    return F.regexp_replace(F.col("local_canon"), r"\.", "")
 
 
 # --- exact-domain salted blocking ----------------------------------------------
@@ -224,7 +243,6 @@ def with_salted_domain_block(
     the incremental fold maintains them as state instead of re-aggregating
     the dim every batch; salting decisions are then identical to a full run
     over the same union corpus."""
-    dotless = F.regexp_replace(F.col("local_canon"), r"\.", "")
     if sizes is None:
         sizes = mentions.groupBy("domain_canon").agg(
             F.count(F.lit(1)).alias("_dom_n")
@@ -245,7 +263,7 @@ def with_salted_domain_block(
             F.concat(
                 F.col("domain_canon"),
                 F.lit("#"),
-                F.pmod(F.xxhash64(dotless), F.col("_n_salts")).cast("string"),
+                F.pmod(F.xxhash64(dotless_local()), F.col("_n_salts")).cast("string"),
             ),
         ).otherwise(F.col("domain_canon")),
     ).drop("_n_salts")
@@ -331,10 +349,7 @@ def exact_match_edges(mentions: DataFrame, uniq: DataFrame = None) -> DataFrame:
     )
 
 
-_PAIR_COLS = [
-    "email_a", "email_b", "local_canon_a", "local_canon_b",
-    "domain_canon_a", "domain_canon_b",
-]
+_BAND_KEY = ["band_idx", "band_sig"]
 
 
 def _cap_buckets(df: DataFrame, keys: list, cap: int) -> DataFrame:
@@ -349,95 +364,83 @@ def _cap_buckets(df: DataFrame, keys: list, cap: int) -> DataFrame:
     return out.where(F.col("_bn") <= cap).drop("_bn")
 
 
-def candidate_pairs(
+def channel_pair_filter(
+    cond: Column,
+    cross_block: bool = False,
+    cross_domain: bool = False,
+    diff_local: bool = False,
+) -> Column:
+    """`cond` (a predicate over self-join sides `a`/`b`) narrowed to one
+    channel's stratum (module docstring): a different block_key (local_lsh),
+    a different domain_canon (xd_local, xd_email), a different dotless local
+    `_dl` (xd_email). Shared by the batch channels and the incremental fold."""
+    if cross_block:
+        cond = cond & (F.col("a.block_key") != F.col("b.block_key"))
+    if cross_domain:
+        cond = cond & (F.col("a.domain_canon") != F.col("b.domain_canon"))
+    if diff_local:
+        cond = cond & (F.col("a._dl") != F.col("b._dl"))
+    return cond
+
+
+def blocking_channels(
     mentions: DataFrame,
-    hot_threshold: int = 10_000,
-    target_block_size: int = 5_000,
-    use_lsh: bool = True,
-    lsh_max_bucket: int = LSH_MAX_BUCKET,
+    hot_threshold: int,
+    target_block_size: int,
     collapse_exact: bool = False,
     dedupe: bool = True,
     uniq: DataFrame = None,
-    materialize: bool = True,
-    use_cross_domain: bool = True,
-    local_max_block: int = LOCAL_MAX_BLOCK,
-    use_email_lsh: bool = True,
-) -> DataFrame:
-    """→ (email_a, email_b, local_canon_a/b, domain_canon_a/b), each unordered
-    pair once. Union of the four disjoint channels (module docstring): salted
-    exact-domain, same-domain cross-block local-LSH, cross-domain exact-local
-    (use_cross_domain, capped at local_max_block), and cross-domain
-    full-email LSH (use_email_lsh, capped at lsh_max_bucket).
+) -> Dict[str, DataFrame]:
+    """The four disjoint candidate channels of the module docstring as named
+    frames, in order: `block`, `local_lsh`, `xd_local`, `xd_email`. Each is
+    (email_a, email_b, local_canon_a/b, domain_canon_a/b) with email_a <
+    email_b; `candidate_pairs` is their union.
 
-    Scale switches (both used by the headline pipeline/bench; the oracle
-    paths keep the defaults so the full pair set stays SQL-replayable):
-      * collapse_exact — run the quadratic stages over one representative
-        per match_key instead of every distinct email; pair with
-        exact_match_edges() for the within-key guaranteed matches.
-      * dedupe=False — skip the LSH-channel dropDuplicates shuffle; the
-        few duplicated candidates (LSH multi-band collisions) score
-        identically, and match_edges de-duplicates the far smaller edge
-        set instead.
+      * collapse_exact — block one representative per match_key instead of
+        every distinct email; pair with exact_match_edges() for the
+        within-key guaranteed matches.
+      * dedupe=False — skip the LSH-channel dropDuplicates shuffles; the few
+        duplicated candidates (LSH multi-band collisions) score
+        identically, and match_edges de-duplicates the far smaller edge set
+        instead.
+      * uniq — an already-built distinct-email table to block instead of
+        re-deriving it from `mentions`.
 
-    The channels are pairwise DISJOINT by construction, so no full-pair-set
-    dedup shuffle ever runs (round-3: this removed the single biggest
-    exchange in er_pairs_scored — the wide 2M-row dropDuplicates):
-      * every local-LSH pair shares domain_canon (join key), so in a non-hot
-        domain both sides carry block_key == domain_canon and the pair is
-        already generated by the exact channel;
-      * in a hot domain, a same-salt-bucket pair shares block_key and is
-        likewise an exact-channel pair;
-      * therefore the local-LSH channel keeps ONLY cross-block pairs
-        (block_key_a != block_key_b — the typo'd locals whose dotless
-        hashes landed in different salt buckets), which the exact channel
-        can never produce. Exact-channel pairs are unique outright (one
-        block_key per email ⇒ one join hit per pair);
-      * the two cross-domain channels require domain_canon_a !=
-        domain_canon_b (channels 1/2 require equality); the email-LSH
-        channel additionally requires the dotless locals to DIFFER, making
-        it disjoint from the exact-local channel. LSH multi-band duplicates
-        are removed within each (far smaller) channel when dedupe=True; the
-        exact-local channel is duplicate-free outright (single join key).
-
-    materialize (default True) persists the blocked distinct-email dim:
-    the plan references it five times (two exact-join sides, two LSH-join
-    sides, the bucket-size aggregate), and without a cache each reference
-    re-runs the distinct + hot-domain subtree — Spark's compile-time plan
-    shows zero ReusedExchange across them. The dim is O(|distinct emails|)
-    (tiny next to the pair set; the 100 TB pipeline checkpoints this very
-    table — pipeline.py persists uniq for the same reason), the cache entry
-    is keyed by logical plan so repeated identical calls share it, and
-    eviction is LRU. Measured same-session pinned A/B at sf0.1 ×3 runs:
-    old overlapping-channels plan best 15.1 s, disjoint+persist best 7.5 s
-    for the full score_pairs chain."""
+    Every channel reads one persisted blocked dim: without the cache each
+    of its references (two exact-join sides, the LSH and exact-local
+    channels' cap windows and join sides) re-runs the distinct +
+    hot-domain subtree — Spark's compile-time plan shows zero
+    ReusedExchange across them. The dim is O(|distinct emails|) (tiny next
+    to the pair set; pipeline.py persists uniq for the same reason), the
+    cache entry is keyed by logical plan so repeated identical calls share
+    it, and eviction is LRU. Measured same-session pinned A/B at sf0.1 ×3
+    runs: old overlapping-channels plan best 15.1 s, disjoint+persist best
+    7.5 s for the full score_pairs chain."""
     if collapse_exact:
         uniq = match_key_representatives(mentions, uniq=uniq)
     elif uniq is not None:
         uniq = uniq.select("email", "local_canon", "domain_canon")
     else:
         uniq = _unique_mentions(mentions)
-    blocked = with_salted_domain_block(uniq, hot_threshold, target_block_size)
-    if use_cross_domain:
-        # dotless local: the cross-domain block key (cheap Catalyst regexp,
-        # computed once on the persisted dim)
-        blocked = blocked.withColumn(
-            "_dotless", F.regexp_replace(F.col("local_canon"), r"\.", "")
+    blocked = (
+        with_salted_domain_block(uniq, hot_threshold, target_block_size)
+        # the cross-domain block key (cheap Catalyst regexp, computed once
+        # on the persisted dim)
+        .withColumn("_dl", dotless_local())
+        # full-email signatures ride the persisted dim: xd_email references
+        # them three times (bucket sizes + both join sides), and unlike the
+        # short-local banding of local_lsh the assembled address is ~2× the
+        # bytes — re-evaluating the UDF per reference measurably dominated
+        # the channel (sf0.01 A/B). Half-width banding (EMAIL_N_BANDS): see
+        # email_minhash_bands_udf.
+        .withColumn(
+            "email_bands",
+            email_minhash_bands_udf(
+                F.concat(F.col("local_canon"), F.lit("@"), F.col("domain_canon"))
+            ),
         )
-        if use_email_lsh and "email_bands" not in blocked.columns:
-            # full-email signatures ride the persisted dim: channel 4
-            # references them three times (bucket sizes + both join sides),
-            # and unlike the short-local banding of channel 2 the assembled
-            # address is ~2× the bytes — re-evaluating the UDF per reference
-            # measurably dominated the channel (sf0.01 A/B). Half-width
-            # banding (EMAIL_N_BANDS): see email_minhash_bands_udf.
-            blocked = blocked.withColumn(
-                "email_bands",
-                email_minhash_bands_udf(
-                    F.concat(F.col("local_canon"), F.lit("@"), F.col("domain_canon"))
-                ),
-            )
-    if materialize:
-        blocked = blocked.persist()
+        .persist()
+    )
 
     # The self-join carries all pair columns through its exchange: measured
     # at replicated scale (x32 corpus, 1.7M distinct emails), generating
@@ -446,25 +449,12 @@ def candidate_pairs(
     # attach joins are full sort-merge shuffles of the pair set, costing
     # more than the wider payload ever did. Exchange COUNT beats exchange
     # bytes.
-    def self_join(
-        df: DataFrame,
-        key: list,
-        cross_block: bool = False,
-        cross_domain: bool = False,
-        diff_local: bool = False,
-    ) -> DataFrame:
+    def self_join(df: DataFrame, key: list, **stratum) -> DataFrame:
         a = df.alias("a")
         b = df.alias("b")
-        cond = F.col("a.email") < F.col("b.email")
-        if cross_block:
-            cond = cond & (F.col("a.block_key") != F.col("b.block_key"))
-        if cross_domain:
-            cond = cond & (F.col("a.domain_canon") != F.col("b.domain_canon"))
-        if diff_local:
-            cond = cond & (F.col("a._dotless") != F.col("b._dotless"))
         return (
             a.join(b, on=key)
-            .where(cond)
+            .where(channel_pair_filter(F.col("a.email") < F.col("b.email"), **stratum))
             .select(
                 F.col("a.email").alias("email_a"),
                 F.col("b.email").alias("email_b"),
@@ -475,87 +465,110 @@ def candidate_pairs(
             )
         )
 
-    pairs = self_join(
-        blocked.select("block_key", "email", "local_canon", "domain_canon"),
-        ["block_key"],
+    def lsh_dedupe(pairs: DataFrame) -> DataFrame:
+        # only multi-band duplicates remain, and only within the channel
+        return pairs.dropDuplicates(["email_a", "email_b"]) if dedupe else pairs
+
+    # Frequent-bucket pruning: a bucket holding more than LSH_MAX_BUCKET
+    # emails is non-discriminative (e.g. a corpus whose locals share a long
+    # prefix makes most pairs band-collide) and would regenerate the full
+    # quadratic pair set; true near-duplicate groups are small. Standard
+    # LSH-at-scale practice; the exact-domain channel keeps full recall on
+    # the blocking key regardless.
+    #
+    # Shape note (measured at x32 corpus / 1.7M distinct emails): the
+    # tungsten sort-merge self-join beats a collect_list + HOF pair
+    # explosion ~3x here (per-row array/struct allocation dominates at
+    # email-corpus pair volumes), even though the self-join evaluates the
+    # banding UDF once per side — the vectorized numpy signature kernel is
+    # cheap enough that duplicating it costs far less than the HOF
+    # expansion. dedup.py keeps the single-eval HOF form for DOCUMENT
+    # corpora, where signatures (long texts) dominate and buckets are few.
+    # LSH pairs only gate the scorer; restricting to same canonical domain
+    # keeps the channel to hard same-domain candidates (identity variants
+    # never change the domain).
+    local_bands = blocked.select(
+        "email",
+        "local_canon",
+        "domain_canon",
+        "block_key",
+        F.posexplode(minhash_bands_udf(F.col("local_canon"))).alias(*_BAND_KEY),
     )
-
-    if use_lsh:
-        with_bands = blocked.select(
-            "email",
-            "local_canon",
-            "domain_canon",
-            "block_key",
-            F.posexplode(minhash_bands_udf(F.col("local_canon"))).alias(
-                "band_idx", "band_sig"
+    # xd_email: signatures over the canonical assembled address, bucket
+    # sizes counted over all emails in the bucket
+    email_bands = blocked.select(
+        "email",
+        "local_canon",
+        "domain_canon",
+        "_dl",
+        F.posexplode(F.col("email_bands")).alias(*_BAND_KEY),
+    )
+    return {
+        "block": self_join(
+            blocked.select("block_key", "email", "local_canon", "domain_canon"),
+            ["block_key"],
+        ),
+        "local_lsh": lsh_dedupe(
+            self_join(
+                _cap_buckets(local_bands, _BAND_KEY, LSH_MAX_BUCKET),
+                _BAND_KEY + ["domain_canon"],
+                cross_block=True,
+            )
+        ),
+        # block sizes are counted over the whole dim (not per domain): a
+        # local shared by more than LOCAL_MAX_BLOCK emails is
+        # non-discriminative wherever it appears
+        "xd_local": self_join(
+            _cap_buckets(blocked, ["_dl"], LOCAL_MAX_BLOCK).select(
+                "_dl", "email", "local_canon", "domain_canon"
             ),
-        )
-        # Frequent-bucket pruning: a bucket holding more than lsh_max_bucket
-        # emails is non-discriminative (e.g. a corpus whose locals share a long
-        # prefix makes most pairs band-collide) and would regenerate the full
-        # quadratic pair set; true near-duplicate groups are small. Standard
-        # LSH-at-scale practice; the exact-domain channel keeps full recall on
-        # the blocking key regardless.
-        #
-        # Shape note (measured at x32 corpus / 1.7M distinct emails): the
-        # tungsten sort-merge self-join beats a collect_list + HOF pair
-        # explosion ~3x here (per-row array/struct allocation dominates at
-        # email-corpus pair volumes), even though the self-join evaluates the
-        # banding UDF once per side — the vectorized numpy signature kernel
-        # is cheap enough that duplicating it costs far less than the HOF
-        # expansion. dedup.py keeps the single-eval HOF form for DOCUMENT
-        # corpora, where signatures (long texts) dominate and buckets are
-        # few. LSH pairs only gate the scorer; restricting to same canonical
-        # domain keeps the channel to hard same-domain candidates (identity
-        # variants never change the domain).
-        bounded = _cap_buckets(with_bands, ["band_idx", "band_sig"], lsh_max_bucket)
-        lsh_pairs = self_join(
-            bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
-        )
-        if dedupe:
-            # only multi-band duplicates remain, and only within this channel
-            lsh_pairs = lsh_pairs.dropDuplicates(["email_a", "email_b"])
-        pairs = pairs.unionByName(lsh_pairs)
-
-    if use_cross_domain:
-        # channel 3 — cross-domain exact-local block. Block sizes are counted
-        # over the whole dim (not per domain): a local shared by >cap emails
-        # is non-discriminative wherever it appears.
-        bounded_local = _cap_buckets(blocked, ["_dotless"], local_max_block)
-        xd_pairs = self_join(
-            bounded_local.select(
-                "_dotless", "email", "local_canon", "domain_canon"
-            ),
-            ["_dotless"],
+            ["_dl"],
             cross_domain=True,
-        )
-        pairs = pairs.unionByName(xd_pairs)
-
-        if use_email_lsh:
-            # channel 4 — cross-domain full-email LSH (different dotless
-            # locals only). Signatures over the canonical assembled address
-            # (precomputed on the persisted dim above); bucket sizes counted
-            # over all emails in the bucket.
-            with_ebands = blocked.select(
-                "email",
-                "local_canon",
-                "domain_canon",
-                "_dotless",
-                F.posexplode(F.col("email_bands")).alias("band_idx", "band_sig"),
-            )
-            ebounded = _cap_buckets(
-                with_ebands, ["band_idx", "band_sig"], lsh_max_bucket
-            )
-            email_lsh_pairs = self_join(
-                ebounded,
-                ["band_idx", "band_sig"],
+        ),
+        "xd_email": lsh_dedupe(
+            self_join(
+                _cap_buckets(email_bands, _BAND_KEY, LSH_MAX_BUCKET),
+                _BAND_KEY,
                 cross_domain=True,
                 diff_local=True,
             )
-            if dedupe:
-                email_lsh_pairs = email_lsh_pairs.dropDuplicates(
-                    ["email_a", "email_b"]
-                )
-            pairs = pairs.unionByName(email_lsh_pairs)
+        ),
+    }
 
-    return pairs
+
+def candidate_pairs(
+    mentions: DataFrame,
+    hot_threshold: int = 10_000,
+    target_block_size: int = 5_000,
+    collapse_exact: bool = False,
+    dedupe: bool = True,
+    uniq: DataFrame = None,
+) -> DataFrame:
+    """→ (email_a, email_b, local_canon_a/b, domain_canon_a/b), each unordered
+    pair once: the union of the four `blocking_channels` (same parameters).
+
+    The channels are pairwise DISJOINT by construction, so no full-pair-set
+    dedup shuffle ever runs (round-3: this removed the single biggest
+    exchange in er_pairs_scored — the wide 2M-row dropDuplicates):
+      * every local_lsh pair shares domain_canon (join key), so in a non-hot
+        domain both sides carry block_key == domain_canon and the pair is
+        already generated by the block channel;
+      * in a hot domain, a same-salt-bucket pair shares block_key and is
+        likewise a block-channel pair;
+      * therefore local_lsh keeps ONLY cross-block pairs (block_key_a !=
+        block_key_b — the typo'd locals whose dotless hashes landed in
+        different salt buckets), which the block channel can never produce.
+        Block-channel pairs are unique outright (one block_key per email ⇒
+        one join hit per pair);
+      * xd_local and xd_email require domain_canon_a != domain_canon_b
+        (block and local_lsh require equality); xd_email additionally
+        requires the dotless locals to DIFFER, making it disjoint from
+        xd_local. LSH multi-band duplicates are removed within each (far
+        smaller) channel when dedupe=True; xd_local is duplicate-free
+        outright (single join key)."""
+    return reduce(
+        DataFrame.unionByName,
+        blocking_channels(
+            mentions, hot_threshold, target_block_size, collapse_exact, dedupe, uniq
+        ).values(),
+    )

@@ -71,13 +71,14 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # solved on the driver instead of with the iterative loop. One star round is
 # 2 shuffles + a barrier of pure orchestration at any size, and convergence
 # needs several rounds. The bound is MEASURED, not argued
-# (bench_cc_threshold.py, avg-degree-2 random graphs — giant component +
-# fringe, the adversarial shape for both paths): the driver path wins at
-# every size up to 2^22 edges (best-of-2, 32 cores: 2.5 s vs 12.3 s at 2^18,
-# 35.4 s vs 47.4 s at 2^22, ratio falling 4.95→1.34), with the slope
-# projecting crossover at ~8-16M edges. 2^22 keeps a measured ≥1.3× margin;
-# on a real cluster the collect of ~2^22 string edges (~200 MB) adds a
-# network transfer a single-JVM box doesn't pay, which that margin covers.
+# (BENCH/BASELINE.md, "Adaptive connected components": avg-degree-2 random
+# graphs — giant component + fringe, the adversarial shape for both paths):
+# the driver path wins at every size up to 2^22 edges (best-of-2, 32 cores:
+# 2.5 s vs 12.3 s at 2^18, 35.4 s vs 47.4 s at 2^22, ratio falling
+# 4.95→1.34), with the slope projecting crossover at ~8-16M edges. 2^22
+# keeps a measured ≥1.3× margin; on a real cluster the collect of ~2^22
+# string edges (~200 MB) adds a network transfer a single-JVM box doesn't
+# pay, which that margin covers.
 # Same adaptive-threshold thinking as Spark's broadcast joins: the graphs
 # that reach CC after collapse/quotient contraction are proportional to
 # rep-level fuzzy matches (batch-sized on the incremental path), not to the

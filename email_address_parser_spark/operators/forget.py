@@ -56,6 +56,9 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .blocking import dotless_local
+
+
 def _null_like(df: DataFrame, keys: list) -> list:
     return [
         F.lit(None).cast(f.dataType).alias(f.name)
@@ -156,11 +159,9 @@ def forget_payload(
     else:
         payload["bucket_counts"] = None
     if state.get("local_counts") is not None:
-        from .incremental import _dotless
-
         _decrement(
             "local_counts",
-            doomed_reps.groupBy(_dotless().alias("_dl")).agg(
+            doomed_reps.groupBy(dotless_local().alias("_dl")).agg(
                 F.count(F.lit(1)).alias("_dec")
             ),
             ["_dl"],

@@ -69,8 +69,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .blocking import (
+    _BAND_KEY,
     LOCAL_MAX_BLOCK,
     LSH_MAX_BUCKET,
+    channel_pair_filter,
+    dotless_local,
     email_minhash_bands_udf,
     minhash_bands_udf,
     uniq_valid_mentions,
@@ -79,8 +82,6 @@ from .blocking import (
 from .cc import connected_components
 from .extract import extract_mentions, with_canonical
 from .scoring import DEFAULT_THRESHOLD, match_edges, score_pairs
-
-_BAND_KEY = ["band_idx", "band_sig"]
 
 
 def _pin(df: DataFrame) -> DataFrame:
@@ -122,10 +123,6 @@ def with_email_bands(df: DataFrame) -> DataFrame:
     )
 
 
-def _dotless(col: str = "local_canon") -> F.Column:
-    return F.regexp_replace(F.col(col), r"\.", "")
-
-
 def _restricted_pairs(
     blocked: DataFrame,
     key: list,
@@ -151,13 +148,12 @@ def _restricted_pairs(
     a = blocked.where(F.col("_is_new")).alias("a")
     b = blocked.alias("b")
     cond = (~F.col("b._is_new")) | (F.col("a.email") < F.col("b.email"))
-    cond = cond & (F.col("a.email") != F.col("b.email"))
-    if cross_block:
-        cond = cond & (F.col("a.block_key") != F.col("b.block_key"))
-    if cross_domain:
-        cond = cond & (F.col("a.domain_canon") != F.col("b.domain_canon"))
-    if diff_local:
-        cond = cond & (F.col("a._dl") != F.col("b._dl"))
+    cond = channel_pair_filter(
+        cond & (F.col("a.email") != F.col("b.email")),
+        cross_block=cross_block,
+        cross_domain=cross_domain,
+        diff_local=diff_local,
+    )
     a_first = F.col("a.email") < F.col("b.email")
 
     def pick(col: str, first: bool):
@@ -295,7 +291,7 @@ def build_incremental_state(
             F.count(F.lit(1)).alias("_dom_n")
         ),
         "bucket_counts": _band_counts(reps, "band_sigs"),
-        "local_counts": reps.groupBy(_dotless().alias("_dl")).agg(
+        "local_counts": reps.groupBy(dotless_local().alias("_dl")).agg(
             F.count(F.lit(1)).alias("_ln")
         ),
         "ebucket_counts": _band_counts(reps, "email_bands"),
@@ -509,12 +505,12 @@ def fold_batch(
     # --- channel 3: cross-domain exact-local. Counts merged from state (a
     # rep's dotless local never changes — all members of a match_key share
     # it — so the delta is purely the batch's NEW keys) ---------------------
-    batch_dls = new_uniq.select(_dotless().alias("_dl")).distinct()
+    batch_dls = new_uniq.select(dotless_local().alias("_dl")).distinct()
     new_key_dls = (
         merged_reps.join(
             F.broadcast(prev_slice.select("match_key")), "match_key", "left_anti"
         )
-        .groupBy(_dotless().alias("_dl"))
+        .groupBy(dotless_local().alias("_dl"))
         .agg(F.count(F.lit(1)).alias("_delta"))
     )
     local_updates = (
@@ -533,7 +529,7 @@ def fold_batch(
     # reps table's dotless secondary partition prunes this scan)
     xd_partners = (
         state_reps
-        .withColumn("_dl", _dotless())
+        .withColumn("_dl", dotless_local())
         .join(F.broadcast(batch_dls), "_dl", "left_semi")
         .join(F.broadcast(batch_keys), "match_key", "left_anti")
     )
@@ -541,7 +537,7 @@ def fold_batch(
     xd_dim = (
         xd_partners.withColumn("_is_new", F.lit(False)).select(*xd_cols)
         .unionByName(
-            merged_reps.withColumn("_dl", _dotless())
+            merged_reps.withColumn("_dl", dotless_local())
             .withColumn("_is_new", F.lit(True))
             .select(*xd_cols)
         )
@@ -563,7 +559,7 @@ def fold_batch(
         "band_idx", "band_sig",
     ]
     new_ebands = (
-        merged_reps.withColumn("_dl", _dotless())
+        merged_reps.withColumn("_dl", dotless_local())
         .withColumn("_is_new", F.lit(True))
         .select(
             "email", "local_canon", "domain_canon", "_dl", "_is_new",
@@ -573,7 +569,7 @@ def fold_batch(
     partner_ebands = (
         state_reps
         .join(F.broadcast(batch_keys), "match_key", "left_anti")
-        .withColumn("_dl", _dotless())
+        .withColumn("_dl", dotless_local())
         .withColumn("_is_new", F.lit(False))
         .select(
             "email", "local_canon", "domain_canon", "_dl", "_is_new",

@@ -23,7 +23,7 @@ the two sides cannot drift apart.
 
 from __future__ import annotations
 
-from .operators.blocking import minhash_oracle_sql_parts
+from .operators.blocking import EMAIL_N_BANDS, LSH_MAX_BUCKET, minhash_oracle_sql_parts
 from .operators.similarity import LSH_BITS, _PLANES
 
 # ---------------------------------------------------------------------------
@@ -101,25 +101,20 @@ verified AS (
 )"""
 
 
-def email_lsh_pairs_cte(max_bucket: int = 50, n_bands: int = None) -> str:
+def email_lsh_pairs_cte() -> str:
     """CTE chain (no WITH keyword) replaying the cross-domain full-email LSH
-    channel (blocking.candidate_pairs use_email_lsh) over a preceding `uniq`
-    CTE with columns (email, domain_canon, dotless, canon_email): the same
-    fixed-seed 3-gram minhash → affine permutations → banded fold → bucket cap
-    → cross-domain cross-local self-join, ending in
-    xd_lsh(email_a, email_b). Exact int64 arithmetic on both engines.
+    channel (blocking.blocking_channels()["xd_email"]) over a preceding
+    `uniq` CTE with columns (email, domain_canon, dotless, canon_email): the
+    same fixed-seed 3-gram minhash → affine permutations → banded fold →
+    bucket cap (LSH_MAX_BUCKET) → cross-domain cross-local self-join, ending
+    in xd_lsh(email_a, email_b). Exact int64 arithmetic on both engines.
 
-    n_bands defaults to blocking.EMAIL_N_BANDS — the channel's half-width
-    banding (a PREFIX of the permutation family, so the same constants
-    replay it)."""
-    from email_address_parser_spark.operators.blocking import EMAIL_N_BANDS
-
+    EMAIL_N_BANDS is the channel's half-width banding (a PREFIX of the
+    permutation family, so the same constants replay it)."""
     p = minhash_oracle_sql_parts()
     rpb = p["rows_per_band"]
-    nb = EMAIL_N_BANDS if n_bands is None else n_bands
-    ab_pairs = ", ".join(
-        f"[{a}, {b}]" for a, b in zip(p["a"][: nb * rpb], p["b"][: nb * rpb])
-    )
+    n = EMAIL_N_BANDS * rpb
+    ab_pairs = ", ".join(f"[{a}, {b}]" for a, b in zip(p["a"][:n], p["b"][:n]))
     P, M, C = p["p_gram"], p["m31"], p["band_mult"]
     return rf"""egh AS (
     SELECT email,
@@ -140,7 +135,7 @@ ebands AS (
         (((((((s[{rpb} * band_idx + 1] * {C} + s[{rpb} * band_idx + 2]) & {M})
             * {C} + s[{rpb} * band_idx + 3]) & {M}) * {C})
             + s[{rpb} * band_idx + 4]) & {M}) AS band_sig
-    FROM esig CROSS JOIN range(0, {nb}) AS t(band_idx)
+    FROM esig CROSS JOIN range(0, {EMAIL_N_BANDS}) AS t(band_idx)
 ),
 esizes AS (
     SELECT band_idx, band_sig, count(*) AS bn
@@ -150,7 +145,7 @@ ebounded AS (
     SELECT eb.email, eb.band_idx, eb.band_sig, u.domain_canon, u.dotless
     FROM ebands eb JOIN esizes USING (band_idx, band_sig)
     JOIN uniq u ON u.email = eb.email
-    WHERE bn <= {max_bucket}
+    WHERE bn <= {LSH_MAX_BUCKET}
 ),
 xd_lsh AS (
     SELECT DISTINCT a.email AS email_a, b.email AS email_b

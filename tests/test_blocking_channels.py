@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from email_address_parser_spark.operators.blocking import (
     _unique_mentions,
+    blocking_channels,
     candidate_pairs,
     minhash_bands_udf,
     with_salted_domain_block,
@@ -80,30 +81,26 @@ def test_salting_is_active(spark, mentions):
 
 
 def test_channels_are_disjoint(spark, mentions):
-    exact = candidate_pairs(
-        mentions, HOT, TGT, use_lsh=False, dedupe=False, materialize=False
-    )
-    both = candidate_pairs(mentions, HOT, TGT, dedupe=True, materialize=False)
-    lsh_only = _pairset(both) - _pairset(exact)
+    ch = blocking_channels(mentions, HOT, TGT)
+    lsh = _pairset(ch["local_lsh"])
     # the LSH channel contributed pairs (cross-block typo pairs exist) ...
-    assert lsh_only
-    # ... and the union has no duplicates without any full-set dedup
+    assert lsh
+    # ... none of which the exact channel generates, so the union has no
+    # duplicates without any full-set dedup
+    assert lsh.isdisjoint(_pairset(ch["block"]))
+    both = ch["block"].unionByName(ch["local_lsh"])
     assert both.count() == len(_pairset(both))
 
 
 def test_union_matches_old_full_dedup_formulation(spark, mentions):
-    new = candidate_pairs(mentions, HOT, TGT, dedupe=True, materialize=False)
+    new = candidate_pairs(mentions, HOT, TGT, dedupe=True)
     assert _pairset(new) == _pairset(_old_full_dedup_pairs(mentions))
 
 
 def test_unsalted_lsh_adds_nothing(spark, mentions):
     """With no hot domains every same-domain pair is exact-channel; the LSH
     channel must contribute zero pairs (the sf0.01 oracle relies on this)."""
-    exact = candidate_pairs(
-        mentions, 1 << 40, TGT, use_lsh=False, dedupe=False, materialize=False
-    )
-    both = candidate_pairs(mentions, 1 << 40, TGT, dedupe=True, materialize=False)
-    assert _pairset(both) == _pairset(exact)
+    assert blocking_channels(mentions, 1 << 40, TGT)["local_lsh"].count() == 0
 
 
 def test_salted_pair_completeness_is_total(spark):
@@ -127,7 +124,7 @@ def test_salted_pair_completeness_is_total(spark):
         for b in sorted(r.es)[i + 1 :]
     }
     assert true_pairs  # non-vacuous
-    cand = candidate_pairs(m, hot_threshold=3, target_block_size=1, materialize=False)
+    cand = candidate_pairs(m, hot_threshold=3, target_block_size=1)
     covered = _pairset(cand)
     assert true_pairs <= covered, sorted(true_pairs - covered)[:5]
 

@@ -99,7 +99,7 @@ def test_trained_scorer_separates_er_pairs(spark):
         rows, "email string, local_canon string, domain_canon string"
     ).withColumn("valid_lax", F.lit(True))
     feats = with_pair_features(
-        score_pairs(candidate_pairs(m, HOT, TGT, materialize=False))
+        score_pairs(candidate_pairs(m, HOT, TGT))
     )
     mk = F.udf(lambda e: truth[e])
     labeled = feats.withColumn(

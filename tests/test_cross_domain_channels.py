@@ -1,11 +1,11 @@
 """Invariants of the round-4 CROSS-DOMAIN candidate channels
-(operators/blocking.py channels 3 and 4): the four channels must stratify the
-pair space (same/different canonical domain × same/different dotless local or
-block), a domain-typo variant of one identity must become a candidate AND a
-match edge, globally-common locals must be capped out of channel 3, and the
-channel-4 full-email LSH replay must agree between Spark and the DuckDB CTE
-(`oracles.email_lsh_pairs_cte`) — the contract the sf0.01 driver gate runs at
-corpus scale."""
+(operators/blocking.py `xd_local` and `xd_email`): the four channels must
+stratify the pair space (same/different canonical domain × same/different
+dotless local or block), a domain-typo variant of one identity must become a
+candidate AND a match edge, globally-common locals must be capped out of
+`xd_local`, and the `xd_email` full-email LSH replay must agree between Spark
+and the DuckDB CTE (`oracles.email_lsh_pairs_cte`) — the contract the sf0.01
+driver gate runs at corpus scale."""
 
 from __future__ import annotations
 
@@ -15,6 +15,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from email_address_parser_spark.operators.blocking import (
+    LOCAL_MAX_BLOCK,
+    blocking_channels,
     candidate_pairs,
 )
 from email_address_parser_spark.operators.scoring import match_edges, score_pairs
@@ -53,7 +55,7 @@ def test_domain_typo_pair_is_candidate_and_match_edge(spark, typo_mentions):
     be reachable. Channel 3 (cross-domain exact dotless local) generates it,
     and the scorer's dom_edit feature — constant-zero before this channel
     existed — now discriminates: the true pair clears the 0.90 threshold."""
-    cand = candidate_pairs(typo_mentions, HOT, TGT, materialize=False)
+    cand = candidate_pairs(typo_mentions, HOT, TGT)
     got = _pairset(cand)
     assert ("jo.hn@gmial.com", "john@gmail.com") in got
     assert ("jo.hn@gmail.com", "jo.hn@gmial.com") in got
@@ -67,11 +69,11 @@ def test_domain_typo_pair_is_candidate_and_match_edge(spark, typo_mentions):
 
 
 def test_without_cross_domain_the_typo_is_unreachable(spark, typo_mentions):
-    """Regression pin for the old behaviour: with channels 3/4 off, every
-    candidate shares domain_canon and dom_edit is structurally zero."""
-    cand = candidate_pairs(
-        typo_mentions, HOT, TGT, materialize=False, use_cross_domain=False
-    )
+    """Regression pin for the old behaviour: the same-domain channels alone
+    (`block` ∪ `local_lsh`) never reach the typo pair — every candidate
+    shares domain_canon and dom_edit is structurally zero."""
+    ch = blocking_channels(typo_mentions, HOT, TGT)
+    cand = ch["block"].unionByName(ch["local_lsh"])
     feats = score_pairs(cand).select("dom_edit").distinct().collect()
     assert {r.dom_edit for r in feats} <= {0}
     assert ("jo.hn@gmial.com", "john@gmail.com") not in _pairset(cand)
@@ -79,41 +81,43 @@ def test_without_cross_domain_the_typo_is_unreachable(spark, typo_mentions):
 
 def test_channels_stratify_the_pair_space(spark, typo_mentions):
     """Pairwise disjointness: the union carries no duplicate pairs without
-    any full-pair-set dedup, and every pair sits in exactly the stratum its
-    channel predicate defines (1/2: same domain; 3: cross-domain same dotless
-    local; 4: cross-domain different dotless local)."""
-    cand = candidate_pairs(typo_mentions, HOT, TGT, materialize=False)
-    rows = cand.collect()
+    any full-pair-set dedup, and every row of each channel sits in the
+    stratum its predicate defines (block/local_lsh: same domain; xd_local:
+    cross-domain same dotless local; xd_email: cross-domain different
+    dotless local)."""
+    def same_dom(r):
+        return r.domain_canon_a == r.domain_canon_b
+
+    def same_local(r):
+        return r.local_canon_a.replace(".", "") == r.local_canon_b.replace(".", "")
+
+    stratum = {
+        "block": same_dom,
+        "local_lsh": same_dom,
+        "xd_local": lambda r: not same_dom(r) and same_local(r),
+        "xd_email": lambda r: not same_dom(r) and not same_local(r),
+    }
+    ch = blocking_channels(typo_mentions, HOT, TGT)
+    assert list(ch) == list(stratum)
+    for name, frame in ch.items():
+        for r in frame.collect():
+            assert stratum[name](r), (name, r)
+    rows = candidate_pairs(typo_mentions, HOT, TGT).collect()
     assert len(rows) == len({(r.email_a, r.email_b) for r in rows})
-    same_dom = candidate_pairs(
-        typo_mentions, HOT, TGT, materialize=False, use_cross_domain=False
-    )
-    xd_exact = candidate_pairs(
-        typo_mentions, HOT, TGT, materialize=False, use_email_lsh=False
-    )
-    for r in rows:
-        if r.domain_canon_a == r.domain_canon_b:
-            assert (r.email_a, r.email_b) in _pairset(same_dom)
-        else:
-            dotless_eq = r.local_canon_a.replace(".", "") == r.local_canon_b.replace(".", "")
-            in_ch3 = (r.email_a, r.email_b) in (_pairset(xd_exact) - _pairset(same_dom))
-            assert in_ch3 == dotless_eq
 
 
 def test_common_local_is_capped_out_of_channel_3(spark):
-    """info@<60 domains> is non-discriminative: above local_max_block the
-    exact-local channel contributes nothing (otherwise it would mint a
-    quadratic pair set linking 60 distinct organisations)."""
-    rows = [(f"info@org{i:03d}.example", "info", f"org{i:03d}.example") for i in range(60)]
-    m = _mentions(spark, rows)
-    capped = candidate_pairs(
-        m, HOT, TGT, materialize=False, use_email_lsh=False, local_max_block=50
-    )
-    assert capped.count() == 0
-    uncapped = candidate_pairs(
-        m, HOT, TGT, materialize=False, use_email_lsh=False, local_max_block=100
-    )
-    assert uncapped.count() == 60 * 59 // 2
+    """info@<n domains> is non-discriminative once n exceeds LOCAL_MAX_BLOCK:
+    `xd_local` then contributes nothing (otherwise it would mint a quadratic
+    pair set linking distinct organisations). A block of exactly the cap is
+    kept whole — the cap is inclusive."""
+    def xd_local(n):
+        rows = [(f"info@org{i:03d}.example", "info", f"org{i:03d}.example") for i in range(n)]
+        return blocking_channels(_mentions(spark, rows), HOT, TGT)["xd_local"].count()
+
+    n = LOCAL_MAX_BLOCK
+    assert xd_local(n) == n * (n - 1) // 2
+    assert xd_local(n + 1) == 0
 
 
 def test_email_lsh_reaches_simultaneous_local_and_domain_typo(spark):
@@ -124,11 +128,10 @@ def test_email_lsh_reaches_simultaneous_local_and_domain_typo(spark):
         ("alexander.hamilton@federalist.example.com", "alexander.hamilton", "federalist.example.com"),
         ("alexander.hamiltom@federalist.exemple.com", "alexander.hamiltom", "federalist.exemple.com"),
     ]
-    m = _mentions(spark, rows)
-    without = candidate_pairs(m, HOT, TGT, materialize=False, use_email_lsh=False)
-    assert without.count() == 0
-    with_lsh = candidate_pairs(m, HOT, TGT, materialize=False)
-    assert _pairset(with_lsh) == {
+    ch = blocking_channels(_mentions(spark, rows), HOT, TGT)
+    for name in ("block", "local_lsh", "xd_local"):
+        assert ch[name].count() == 0, name
+    assert _pairset(ch["xd_email"]) == {
         ("alexander.hamiltom@federalist.exemple.com",
          "alexander.hamilton@federalist.example.com")
     }
@@ -146,11 +149,7 @@ def test_email_lsh_spark_matches_duckdb_replay(spark):
     for i in range(12):
         local = base[:i] + base[i + 1:]  # one deletion each — high Jaccard
         rows.append((f"{local}@dom{i:02d}.example", local, f"dom{i:02d}.example"))
-    m = _mentions(spark, rows)
-    ch4 = candidate_pairs(m, HOT, TGT, materialize=False).exceptAll(
-        candidate_pairs(m, HOT, TGT, materialize=False, use_email_lsh=False)
-    )
-    got = _pairset(ch4)
+    got = _pairset(blocking_channels(_mentions(spark, rows), HOT, TGT)["xd_email"])
 
     uniq = pd.DataFrame(
         [
@@ -167,7 +166,7 @@ def test_email_lsh_spark_matches_duckdb_replay(spark):
     con.register("uniq_src", uniq)
     sql = (
         "WITH uniq AS (SELECT * FROM uniq_src),\n"
-        + oracles.email_lsh_pairs_cte(max_bucket=50)
+        + oracles.email_lsh_pairs_cte()
         + "\nSELECT email_a, email_b FROM xd_lsh"
     )
     want = {(a, b) for a, b in con.execute(sql).fetchall()}

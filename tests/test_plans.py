@@ -179,6 +179,24 @@ def test_candidate_pairs_no_dedup_above_union(spark):
         raise AssertionError(f"no Union in candidate_pairs plan:\n{plan}")
 
 
+def test_blocking_channels_read_one_persisted_dim(spark):
+    """All four channels read the ONE persisted blocked dim: the
+    candidate_pairs plan scans the cache once per self-join side of each
+    channel (block, local_lsh, xd_local, xd_email: 2 each). A channel that
+    re-derived the dim instead of reading it would drop the count."""
+    from email_address_parser_spark.operators.blocking import candidate_pairs
+    from email_address_parser_spark.operators.extract import (
+        extract_mentions,
+        with_canonical,
+    )
+    from email_address_parser_spark.plans import explain_str
+    from email_address_parser_spark.sources.testdata import derive_transcripts
+
+    mentions = with_canonical(extract_mentions(derive_transcripts(spark, SF_DIR)))
+    plan = explain_str(candidate_pairs(mentions, hot_threshold=5, target_block_size=2), "simple")
+    assert sum("InMemoryTableScan" in line for line in plan.splitlines()) == 8, plan
+
+
 def test_sessionize_and_rollup_share_one_exchange(spark):
     """session_stats must plan exactly ONE hashpartitioning exchange: the
     lag window, the running-sum window, and the session-level groupBy all
