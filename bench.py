@@ -120,6 +120,7 @@ def main() -> None:
         chain = resolve(mentions_c)
         _force(chain["clusters"])
         chain["uniq"].unpersist()
+        chain["dim"].unpersist()
 
     def q_q1():
         from __spark_entry__ import queries

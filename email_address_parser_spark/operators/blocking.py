@@ -3,8 +3,9 @@
 FOUR candidate channels, pairwise DISJOINT by construction (they stratify the
 pair space on two axes — same/different canonical domain × same/different
 dotless local or block — so their union needs no full-pair dedup shuffle).
-`blocking_channels` returns them as named frames, `candidate_pairs` as their
-union:
+All four read one persisted `blocked_dim` that carries the band signatures;
+`dim_channels` returns them as named frames, `union_channels` as their union
+(`blocking_channels`/`candidate_pairs` persist a dim of their own first):
 
   1. block     — exact-domain blocking, salted for hot-domain skew (F6). The
                  salt hashes the DOTLESS canonical local part, so every variant
@@ -210,6 +211,29 @@ def email_minhash_bands_udf(emails_: pd.Series) -> pd.Series:
     return pd.Series(list(minhash_band_sigs(sigs)))
 
 
+def with_minhash_bands(df: DataFrame) -> DataFrame:
+    """Add the LSH band signatures of a distinct-email frame (email,
+    local_canon, domain_canon): the one place the MinHash UDFs run.
+
+      band_sigs   — N_BANDS band keys of local_canon (local_lsh)
+      email_bands — EMAIL_N_BANDS band keys of the canonical assembled
+                    address local_canon || '@' || domain_canon (xd_email)
+
+    Both are pure functions of the email, so they are computed once per
+    distinct email and ride every table that carries it: the persisted
+    blocked dim (`blocked_dim`), and the fold state's `uniq`/`reps` and a
+    fold batch (incremental.py), where the UDFs then only ever see the
+    batch's new emails."""
+    return df.withColumn(
+        "band_sigs", minhash_bands_udf(F.col("local_canon"))
+    ).withColumn(
+        "email_bands",
+        email_minhash_bands_udf(
+            F.concat(F.col("local_canon"), F.lit("@"), F.col("domain_canon"))
+        ),
+    )
+
+
 # Bucket caps of the capped channels: an LSH bucket (local_lsh, xd_email) or
 # a cross-domain dotless-local block (xd_local) with more emails than this is
 # non-discriminative and dropped whole. The incremental fold and the DuckDB
@@ -219,10 +243,11 @@ LSH_MAX_BUCKET = 50
 LOCAL_MAX_BLOCK = 50
 
 
-def dotless_local() -> Column:
-    """The canonical local part with its dots removed: every dot variant of
-    one identity shares it (the salt input and the cross-domain block key)."""
-    return F.regexp_replace(F.col("local_canon"), r"\.", "")
+def dotless_local(col: str = "local_canon") -> Column:
+    """A canonical local part (`col`) with its dots removed: every dot
+    variant of one identity shares it (the salt input, the cross-domain
+    block key, and the scorer's JW/Levenshtein input)."""
+    return F.regexp_replace(F.col(col), r"\.", "")
 
 
 # --- exact-domain salted blocking ----------------------------------------------
@@ -383,64 +408,56 @@ def channel_pair_filter(
     return cond
 
 
-def blocking_channels(
+def blocked_dim(
     mentions: DataFrame,
     hot_threshold: int,
     target_block_size: int,
     collapse_exact: bool = False,
-    dedupe: bool = True,
     uniq: DataFrame = None,
-) -> Dict[str, DataFrame]:
-    """The four disjoint candidate channels of the module docstring as named
-    frames, in order: `block`, `local_lsh`, `xd_local`, `xd_email`. Each is
-    (email_a, email_b, local_canon_a/b, domain_canon_a/b) with email_a <
-    email_b; `candidate_pairs` is their union.
+) -> DataFrame:
+    """The distinct-email dim every channel reads: (email, local_canon,
+    domain_canon) plus `block_key` (salted exact-domain block), `_dl` (the
+    dotless local, the cross-domain block key) and the band signatures
+    `band_sigs`/`email_bands` (`with_minhash_bands`).
 
-      * collapse_exact — block one representative per match_key instead of
-        every distinct email; pair with exact_match_edges() for the
-        within-key guaranteed matches.
-      * dedupe=False — skip the LSH-channel dropDuplicates shuffles; the few
-        duplicated candidates (LSH multi-band collisions) score
-        identically, and match_edges de-duplicates the far smaller edge set
-        instead.
+      * collapse_exact — one representative per match_key instead of every
+        distinct email; pair with exact_match_edges() for the within-key
+        guaranteed matches.
       * uniq — an already-built distinct-email table to block instead of
         re-deriving it from `mentions`.
 
-    Every channel reads one persisted blocked dim: without the cache each
-    of its references (two exact-join sides, the LSH and exact-local
-    channels' cap windows and join sides) re-runs the distinct +
-    hot-domain subtree — Spark's compile-time plan shows zero
-    ReusedExchange across them. The dim is O(|distinct emails|) (tiny next
-    to the pair set; pipeline.py persists uniq for the same reason), the
-    cache entry is keyed by logical plan so repeated identical calls share
-    it, and eviction is LRU. Measured same-session pinned A/B at sf0.1 ×3
-    runs: old overlapping-channels plan best 15.1 s, disjoint+persist best
-    7.5 s for the full score_pairs chain."""
+    Lazy and unpersisted: `dim_channels` reads it eight times (both join
+    sides of each channel), so its reader persists it, and whoever
+    persists it owns the cache entry and releases it — `pipeline.resolve`
+    returns the dim it persists as its `dim` stage."""
     if collapse_exact:
         uniq = match_key_representatives(mentions, uniq=uniq)
     elif uniq is not None:
         uniq = uniq.select("email", "local_canon", "domain_canon")
     else:
         uniq = _unique_mentions(mentions)
-    blocked = (
+    return with_minhash_bands(
         with_salted_domain_block(uniq, hot_threshold, target_block_size)
-        # the cross-domain block key (cheap Catalyst regexp, computed once
-        # on the persisted dim)
         .withColumn("_dl", dotless_local())
-        # full-email signatures ride the persisted dim: xd_email references
-        # them three times (bucket sizes + both join sides), and unlike the
-        # short-local banding of local_lsh the assembled address is ~2× the
-        # bytes — re-evaluating the UDF per reference measurably dominated
-        # the channel (sf0.01 A/B). Half-width banding (EMAIL_N_BANDS): see
-        # email_minhash_bands_udf.
-        .withColumn(
-            "email_bands",
-            email_minhash_bands_udf(
-                F.concat(F.col("local_canon"), F.lit("@"), F.col("domain_canon"))
-            ),
-        )
-        .persist()
     )
+
+
+def dim_channels(dim: DataFrame, dedupe: bool = True) -> Dict[str, DataFrame]:
+    """The four disjoint candidate channels of the module docstring, read
+    from one `blocked_dim`, as named frames in order: `block`, `local_lsh`,
+    `xd_local`, `xd_email`. Each is (email_a, email_b, local_canon_a/b,
+    domain_canon_a/b) with email_a < email_b.
+
+    dedupe=False skips the LSH-channel dropDuplicates shuffles; the few
+    duplicated candidates (LSH multi-band collisions) score identically,
+    and match_edges de-duplicates the far smaller edge set instead.
+
+    `dim` should be persisted: without the cache each of its references
+    re-runs the distinct + hot-domain + banding subtree — Spark's
+    compile-time plan shows zero ReusedExchange across them. The dim is
+    O(|distinct emails|), tiny next to the pair set. Measured same-session
+    pinned A/B at sf0.1 ×3 runs: old overlapping-channels plan best
+    15.1 s, disjoint+persist best 7.5 s for the full score_pairs chain."""
 
     # The self-join carries all pair columns through its exchange: measured
     # at replicated scale (x32 corpus, 1.7M distinct emails), generating
@@ -479,24 +496,26 @@ def blocking_channels(
     # Shape note (measured at x32 corpus / 1.7M distinct emails): the
     # tungsten sort-merge self-join beats a collect_list + HOF pair
     # explosion ~3x here (per-row array/struct allocation dominates at
-    # email-corpus pair volumes), even though the self-join evaluates the
-    # banding UDF once per side — the vectorized numpy signature kernel is
-    # cheap enough that duplicating it costs far less than the HOF
-    # expansion. dedup.py keeps the single-eval HOF form for DOCUMENT
-    # corpora, where signatures (long texts) dominate and buckets are few.
-    # LSH pairs only gate the scorer; restricting to same canonical domain
-    # keeps the channel to hard same-domain candidates (identity variants
-    # never change the domain).
-    local_bands = blocked.select(
+    # email-corpus pair volumes). The band signatures ride the persisted
+    # dim, so both self-join sides (and the cap window) posexplode cached
+    # arrays and the banding UDF runs once per distinct email; evaluating
+    # it in this select instead ran it once per side, most of the
+    # channel's cost at sf0.01 (BENCH/BASELINE.md, "Band once, verify only
+    # what can match"). dedup.py keeps the single-eval
+    # HOF form for DOCUMENT corpora, where signatures (long texts) dominate
+    # and buckets are few. LSH pairs only gate the scorer; restricting to
+    # same canonical domain keeps the channel to hard same-domain
+    # candidates (identity variants never change the domain).
+    local_bands = dim.select(
         "email",
         "local_canon",
         "domain_canon",
         "block_key",
-        F.posexplode(minhash_bands_udf(F.col("local_canon"))).alias(*_BAND_KEY),
+        F.posexplode(F.col("band_sigs")).alias(*_BAND_KEY),
     )
     # xd_email: signatures over the canonical assembled address, bucket
     # sizes counted over all emails in the bucket
-    email_bands = blocked.select(
+    email_bands = dim.select(
         "email",
         "local_canon",
         "domain_canon",
@@ -505,7 +524,7 @@ def blocking_channels(
     )
     return {
         "block": self_join(
-            blocked.select("block_key", "email", "local_canon", "domain_canon"),
+            dim.select("block_key", "email", "local_canon", "domain_canon"),
             ["block_key"],
         ),
         "local_lsh": lsh_dedupe(
@@ -519,7 +538,7 @@ def blocking_channels(
         # local shared by more than LOCAL_MAX_BLOCK emails is
         # non-discriminative wherever it appears
         "xd_local": self_join(
-            _cap_buckets(blocked, ["_dl"], LOCAL_MAX_BLOCK).select(
+            _cap_buckets(dim, ["_dl"], LOCAL_MAX_BLOCK).select(
                 "_dl", "email", "local_canon", "domain_canon"
             ),
             ["_dl"],
@@ -536,6 +555,23 @@ def blocking_channels(
     }
 
 
+def blocking_channels(
+    mentions: DataFrame,
+    hot_threshold: int,
+    target_block_size: int,
+    collapse_exact: bool = False,
+    dedupe: bool = True,
+    uniq: DataFrame = None,
+) -> Dict[str, DataFrame]:
+    """`dim_channels` over a `blocked_dim` built (same parameters) and
+    persisted here. No handle to that dim is returned, so its cache entry
+    lives until the session's cache is cleared or LRU-evicts it; a caller
+    that must release it builds the dim itself, as `pipeline.resolve`
+    does."""
+    dim = blocked_dim(mentions, hot_threshold, target_block_size, collapse_exact, uniq)
+    return dim_channels(dim.persist(), dedupe)
+
+
 def candidate_pairs(
     mentions: DataFrame,
     hot_threshold: int = 10_000,
@@ -545,7 +581,17 @@ def candidate_pairs(
     uniq: DataFrame = None,
 ) -> DataFrame:
     """→ (email_a, email_b, local_canon_a/b, domain_canon_a/b), each unordered
-    pair once: the union of the four `blocking_channels` (same parameters).
+    pair once: `union_channels` of the four `blocking_channels` (same
+    parameters)."""
+    return union_channels(
+        blocking_channels(
+            mentions, hot_threshold, target_block_size, collapse_exact, dedupe, uniq
+        )
+    )
+
+
+def union_channels(channels: Dict[str, DataFrame]) -> DataFrame:
+    """The union of the `dim_channels` frames, each unordered pair once.
 
     The channels are pairwise DISJOINT by construction, so no full-pair-set
     dedup shuffle ever runs (round-3: this removed the single biggest
@@ -566,9 +612,4 @@ def candidate_pairs(
         xd_local. LSH multi-band duplicates are removed within each (far
         smaller) channel when dedupe=True; xd_local is duplicate-free
         outright (single join key)."""
-    return reduce(
-        DataFrame.unionByName,
-        blocking_channels(
-            mentions, hot_threshold, target_block_size, collapse_exact, dedupe, uniq
-        ).values(),
-    )
+    return reduce(DataFrame.unionByName, channels.values())

@@ -74,9 +74,8 @@ from .blocking import (
     LSH_MAX_BUCKET,
     channel_pair_filter,
     dotless_local,
-    email_minhash_bands_udf,
-    minhash_bands_udf,
     uniq_valid_mentions,
+    with_minhash_bands,
     with_salted_domain_block,
 )
 from .cc import connected_components
@@ -95,32 +94,15 @@ def _pin(df: DataFrame) -> DataFrame:
     15.6 s vs 46.4 s for persist at the production blocking config
     (BENCH/BASELINE.md, "Round-4 fold lineage pinning: lazy localCheckpoint
     vs persist"). The same section measures the opposite winner at a
-    big-block config (hot=10k, block=5k), which no shipped caller runs."""
+    big-block config (hot=10k, block=5k), which no shipped caller runs.
+
+    "Lazy" is only half true under AQE: localCheckpoint(eager=False) plans
+    the frame's RDD when it is called, and AQE plans by running the frame's
+    shuffle-map stages first — one Spark job at call time for a groupBy
+    frame, zero with AQE off (local[4], Spark 4.1). Each pin of a shuffled
+    frame therefore costs its map jobs up front, whether or not the pinned
+    frame is ever read."""
     return df.localCheckpoint(eager=False)
-
-
-def with_minhash_bands(df: DataFrame, local_col: str = "local_canon") -> DataFrame:
-    """Add `band_sigs: array<long>` — the LSH band keys of `local_col`.
-
-    Band signatures are a pure function of the string, so at scale they are
-    computed ONCE per distinct email and persisted with the dim state
-    (append-only across batches); the incremental path then runs the
-    signature UDF only over the batch's new emails instead of re-banding the
-    whole corpus dim every fold."""
-    return df.withColumn("band_sigs", minhash_bands_udf(F.col(local_col)))
-
-
-def with_email_bands(df: DataFrame) -> DataFrame:
-    """Add `email_bands: array<long>` — the half-width LSH band keys of the
-    assembled canonical address (cross-domain channel 4, EMAIL_N_BANDS).
-    Pure function of the email, so it rides the dim state exactly like
-    `band_sigs`."""
-    return df.withColumn(
-        "email_bands",
-        email_minhash_bands_udf(
-            F.concat(F.col("local_canon"), F.lit("@"), F.col("domain_canon"))
-        ),
-    )
 
 
 def _restricted_pairs(
@@ -273,7 +255,7 @@ def build_incremental_state(
     # hang off uniq/reps, and a caller materializes each table separately —
     # without the persist every materialization re-runs extraction + banding
     # (measured: bootstrap 31.8 s → the extraction UDF dominating, sf0.01)
-    uniq = with_email_bands(with_minhash_bands(uniq_valid_mentions(mentions))).persist()
+    uniq = with_minhash_bands(uniq_valid_mentions(mentions)).persist()
     reps = uniq.groupBy("match_key", "domain_canon").agg(*_rep_aggs()).persist()
     clusters = resolve(
         mentions,
@@ -365,7 +347,7 @@ def fold_batch(
     chained folds)."""
     if new_mentions is None:
         new_mentions = with_canonical(extract_mentions(new_transcripts))
-    batch_uniq = with_email_bands(with_minhash_bands(uniq_valid_mentions(new_mentions)))
+    batch_uniq = with_minhash_bands(uniq_valid_mentions(new_mentions))
     # prod: state.uniq is bucketed by email -> co-located anti-join.
     # every fan-out frame below is pinned (lazy localCheckpoint — see _pin
     # for the measured rationale)

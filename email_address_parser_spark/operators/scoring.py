@@ -16,17 +16,21 @@ Features per candidate pair (north_star feature list):
                     and this feature is what re-unites them)
 
 score = 0.35*jw + 0.20*(1 - lev_norm) + 0.25*dom_sim + 0.20*dotless_eq
-edges = pairs where score >= threshold (default 0.90).
+edges = pairs where score >= threshold (default 0.90), found through the
+        builtin upper bound score_bound() (jw = 1) first, so Jaro-Winkler
+        runs only on pairs that can still match (filter, then verify).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType
+
+from .blocking import dotless_local
 
 DEFAULT_THRESHOLD = 0.90
 
@@ -271,6 +275,42 @@ def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(jaro_winkler_batch(a, b), index=a.index, dtype="float64")
 
 
+# the feature columns score_pairs adds, which its score is built from
+_FEATURES = {"jw_local", "lev_local", "dom_edit", "dotless_eq"}
+
+
+def _weighted_score(jw: Column) -> Column:
+    """The match score of a `score_pairs` frame with `jw` as its
+    Jaro-Winkler term; every other term is a JVM builtin over the frame's
+    feature columns."""
+    max_local_len = F.greatest(
+        F.length(dotless_local("local_canon_a")),
+        F.length(dotless_local("local_canon_b")),
+        F.lit(1),
+    )
+    max_dom_len = F.greatest(
+        F.length("domain_canon_a"), F.length("domain_canon_b"), F.lit(1)
+    )
+    return F.round(
+        F.lit(0.35) * jw
+        + F.lit(0.20) * (F.lit(1.0) - F.col("lev_local") / max_local_len)
+        + F.lit(0.25) * (F.lit(1.0) - F.col("dom_edit") / max_dom_len)
+        + F.lit(0.20) * F.col("dotless_eq"),
+        6,
+    )
+
+
+def score_bound() -> Column:
+    """An upper bound on `score` that needs no Python: the score with JW at
+    its maximum 1. Exact as a filter: JW <= 1, floating-point products and
+    sums are monotone in each operand and the bound adds the same terms in
+    the same order, and round() is monotone, so score >= t implies
+    score_bound() >= t for every threshold t. The bound is rounded like the
+    score for that reason: a pair whose unrounded score sits just under t
+    but rounds up to it keeps a bound >= t."""
+    return _weighted_score(F.lit(1.0))
+
+
 def score_pairs(pairs: DataFrame, rebalance: bool = True) -> DataFrame:
     """Add feature + score columns to candidate pairs.
 
@@ -292,17 +332,22 @@ def score_pairs(pairs: DataFrame, rebalance: bool = True) -> DataFrame:
     against repartition(32)≈9.0 — the hint matches the magic number while
     staying size-adaptive at any corpus). Values are identical either way;
     callers scoring BATCH-sized pair sets in a fold hot loop can pass
-    False to save the stage barrier."""
+    False to save the stage barrier.
+
+    The rebalance only shapes a consumer that reads every scored row
+    (`resolve()["scored"]`, er_pairs_scored). A filter on `score` right
+    above this frame is pushed by Catalyst through the scorer's Project and
+    through the rebalance into every channel branch below the Union: the
+    UDF then runs inside the unbalanced join partitions on every candidate,
+    and once more above the rebalance for the projected `jw_local`.
+    match_edges therefore filters on the builtin `score_bound()`, which
+    lands in each branch's join condition, and thresholds `score` only
+    after its dedup aggregate, which Catalyst cannot push through: JW runs
+    once, above the rebalance, on the pairs that can still match."""
     if rebalance:
         pairs = pairs.hint("rebalance")
-    dotless_a = F.regexp_replace(F.col("local_canon_a"), r"\.", "")
-    dotless_b = F.regexp_replace(F.col("local_canon_b"), r"\.", "")
-    max_local_len = F.greatest(
-        F.length(dotless_a), F.length(dotless_b), F.lit(1)
-    )
-    max_dom_len = F.greatest(
-        F.length("domain_canon_a"), F.length("domain_canon_b"), F.lit(1)
-    )
+    dotless_a = dotless_local("local_canon_a")
+    dotless_b = dotless_local("local_canon_b")
     return (
         pairs.withColumn(
             "jw_local", jaro_winkler_udf(dotless_a, dotless_b)
@@ -314,29 +359,37 @@ def score_pairs(pairs: DataFrame, rebalance: bool = True) -> DataFrame:
             "dom_edit", F.levenshtein(F.col("domain_canon_a"), F.col("domain_canon_b"))
         )
         .withColumn("dotless_eq", (dotless_a == dotless_b).cast("double"))
-        .withColumn(
-            "score",
-            F.round(
-                F.lit(0.35) * F.col("jw_local")
-                + F.lit(0.20) * (F.lit(1.0) - F.col("lev_local") / max_local_len)
-                + F.lit(0.25) * (F.lit(1.0) - F.col("dom_edit") / max_dom_len)
-                + F.lit(0.20) * F.col("dotless_eq"),
-                6,
-            ),
-        )
+        .withColumn("score", _weighted_score(F.col("jw_local")))
     )
 
 
 def match_edges(scored: DataFrame, threshold: float = DEFAULT_THRESHOLD) -> DataFrame:
-    """F10: threshold filter → edges(src, dst, score). Deduplicates AFTER
-    the threshold: when candidate generation skipped its pair-level
-    dropDuplicates (blocking.candidate_pairs(dedupe=False)), the duplicate
-    candidates score identically and this far smaller shuffle removes them.
+    """F10: threshold filter → edges(src, dst, score), filter then verify:
+
+      1. on `score_pairs` output, keep pairs whose builtin `score_bound()`
+         reaches the threshold — exact, so no edge is lost, and Catalyst
+         pushes it into every channel's join condition below the
+         rebalance. A frame without the scorer's features (a score from
+         elsewhere) skips this step;
+      2. de-duplicate (src, dst) with max(score): when candidate
+         generation skipped its pair-level dropDuplicates
+         (blocking.candidate_pairs(dedupe=False)), the duplicate
+         candidates score identically and this far smaller shuffle
+         removes them;
+      3. keep groups whose max score reaches the threshold. That is
+         exactly the groups with a row at or above it, with the same max,
+         so it equals thresholding before the dedup — and Catalyst cannot
+         push a filter on an aggregate below it: the Jaro-Winkler UDF runs
+         once, above the rebalance, on the bound's survivors only
+         (score_pairs' docstring has the plan).
+
     A groupBy rather than dropDuplicates(["src", "dst"]), so the edges
     compose with exceptAll/intersectAll (the subset dedup does not on
     Spark 4.1)."""
+    if _FEATURES <= set(scored.columns):
+        scored = scored.where(score_bound() >= F.lit(threshold))
     return (
-        scored.where(F.col("score") >= F.lit(threshold))
-        .groupBy(F.col("email_a").alias("src"), F.col("email_b").alias("dst"))
+        scored.groupBy(F.col("email_a").alias("src"), F.col("email_b").alias("dst"))
         .agg(F.max("score").alias("score"))
+        .where(F.col("score") >= F.lit(threshold))
     )

@@ -7,8 +7,11 @@ incremental bootstrap) builds clusters through it. Its stages, in order:
   uniq      distinct valid emails (`blocking.uniq_valid_mentions`), persisted
   stars     exact-canonical star edges inside each match_key
             (`blocking.exact_match_edges`) — guaranteed matches, never scored
-  pairs     candidate pairs over one representative per match_key
-            (`blocking.candidate_pairs(collapse_exact=True, dedupe=False)`)
+  dim       one representative per match_key, salted, with its LSH band
+            signatures (`blocking.blocked_dim(collapse_exact=True)`),
+            persisted: every blocking channel reads it
+  pairs     the candidate pairs of the four channels over `dim`
+            (`blocking.dim_channels(dedupe=False)`)
   scored    Jaro-Winkler/Levenshtein features + score (`scoring.score_pairs`)
   fuzzy     thresholded rep↔rep match edges (`scoring.match_edges`)
   clusters  connected components over `fuzzy`, members inheriting their
@@ -18,8 +21,8 @@ Production blocking constants: HOT_THRESHOLD = 200 (a domain with more
 representatives is salted) and TARGET_BLOCK = 64 (salted bucket size).
 
 `run_pipeline` is the checkpointed `resolve`: transcripts ─extract→ mentions,
-then each stage above writes a parquet table plus a _MANIFEST.json carrying
-row counts and a per-partition lineage histogram. The resume rule is "stage
+then each stage above but `dim` writes a parquet table plus a _MANIFEST.json
+carrying row counts and a per-partition lineage histogram. The resume rule is "stage
 table exists with this config's fingerprint ⇒ skip recompute", the sandbox
 analog of resuming from an Iceberg snapshot (prod would swap `parquet` for
 `format('iceberg')` and manifests for snapshot metadata; the stage topology
@@ -36,7 +39,13 @@ from typing import Callable, Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.blocking import candidate_pairs, exact_match_edges, uniq_valid_mentions
+from .operators.blocking import (
+    blocked_dim,
+    dim_channels,
+    exact_match_edges,
+    union_channels,
+    uniq_valid_mentions,
+)
 from .operators.cc import connected_components
 from .operators.extract import extract_mentions, with_canonical
 from .operators.scoring import DEFAULT_THRESHOLD, match_edges, score_pairs
@@ -212,28 +221,27 @@ def resolve(
     stage: Optional[Callable[[str, Callable[[], DataFrame]], DataFrame]] = None,
 ) -> Dict[str, DataFrame]:
     """The production chain over canonicalized `mentions` → the named stages
-    {uniq, stars, pairs, scored, fuzzy, clusters} (module docstring).
+    {uniq, stars, dim, pairs, scored, fuzzy, clusters} (module docstring).
 
     `uniq` supplies an already-built distinct-email table (it must carry
     email, local_canon, domain_canon, match_key); otherwise it is derived
     and persisted — reps, star edges and the cluster node set all key off
-    it. `stage(name, compute)` wraps every stage it builds: the default runs
-    `compute()`, `run_pipeline` passes `CheckpointManager.stage`."""
+    it. `stage(name, compute)` wraps every stage it builds except `dim`
+    (an intermediate, never checkpointed): the default runs `compute()`,
+    `run_pipeline` passes `CheckpointManager.stage`.
+
+    The caller owns what this persists: once it is done with the returned
+    frames it releases `dim` (and `uniq`, when it passed none) with
+    `unpersist()`. A lazy consumer (a registered view, a driver query)
+    cannot, and leaves the entries to the session's cache eviction."""
     stage = stage or (lambda name, compute: compute())
     if uniq is None:
         uniq = stage("uniq", lambda: uniq_valid_mentions(mentions).persist())
     stars = stage("stars", lambda: exact_match_edges(mentions, uniq=uniq))
-    pairs = stage(
-        "pairs",
-        lambda: candidate_pairs(
-            mentions,
-            hot_threshold=hot_threshold,
-            target_block_size=target_block_size,
-            collapse_exact=True,
-            dedupe=False,
-            uniq=uniq,
-        ),
-    )
+    dim = blocked_dim(
+        mentions, hot_threshold, target_block_size, collapse_exact=True, uniq=uniq
+    ).persist()
+    pairs = stage("pairs", lambda: union_channels(dim_channels(dim, dedupe=False)))
     scored = stage("scored", lambda: score_pairs(pairs))
     fuzzy = stage("fuzzy", lambda: match_edges(scored, threshold))
     clusters = stage(
@@ -243,6 +251,7 @@ def resolve(
     return {
         "uniq": uniq,
         "stars": stars,
+        "dim": dim,
         "pairs": pairs,
         "scored": scored,
         "fuzzy": fuzzy,

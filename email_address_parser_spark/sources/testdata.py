@@ -76,7 +76,7 @@ def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
 TRANSCRIPTS_CTE = """
 WITH _base AS (
     SELECT o.o_orderkey, o.o_custkey, o.o_orderdate,
-           concat('customer.', lpad(CAST(c.c_custkey AS VARCHAR(32)), 9, '0')) AS local,
+           concat('customer.', lpad(CAST(c.c_custkey AS STRING), 9, '0')) AS local,
            concat(lower(c.c_mktsegment), '.example.com') AS domain,
            CAST(o.o_orderkey % 10 AS INT) AS variant
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
@@ -96,13 +96,13 @@ _men AS (
 ),
 transcripts AS (
     SELECT
-        concat('conv', lpad(CAST(o_custkey AS VARCHAR(32)), 6, '0')) AS conv_id,
+        concat('conv', lpad(CAST(o_custkey AS STRING), 6, '0')) AS conv_id,
         CAST(row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderkey) - 1 AS INT) AS turn_idx,
         CASE CAST(o_orderkey % 3 AS INT)
             WHEN 0 THEN 'user' WHEN 1 THEN 'assistant' ELSE 'tool' END AS role,
         concat('order update: contact ',
                CASE WHEN variant IN (7, 8) THEN concat('<', mention, '>') ELSE mention END,
-               ' re order ', CAST(o_orderkey AS VARCHAR(32))) AS text,
+               ' re order ', CAST(o_orderkey AS STRING)) AS text,
         CASE CAST(o_orderkey % 5 AS INT)
             WHEN 0 THEN 'send_email' WHEN 1 THEN 'crm_lookup' ELSE NULL END AS tool,
         o_orderdate AS ts,

@@ -74,9 +74,10 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     warm_input = transcripts.where(F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(50)) == 0)
-    resolve(with_canonical(extract_mentions(warm_input)))["clusters"].write.format(
-        "noop"
-    ).mode("overwrite").save()
+    warm = resolve(with_canonical(extract_mentions(warm_input)))
+    warm["clusters"].write.format("noop").mode("overwrite").save()
+    warm["uniq"].unpersist()
+    warm["dim"].unpersist()
     stages["warmup"] = round(time.perf_counter() - t0, 2)
 
     # The raw mention stream has exactly ONE consumer at scale — the
@@ -93,7 +94,9 @@ def main() -> None:
     # the production chain (pipeline.resolve): exact-canonical duplicates
     # collapse to one representative before the quadratic stages; their
     # guaranteed-match star edges bypass the scorer
-    n_clusters = resolve(mentions, uniq)["clusters"].count()
+    chain = resolve(mentions, uniq)
+    n_clusters = chain["clusters"].count()
+    chain["dim"].unpersist()
     stages["block_score_cluster"] = round(time.perf_counter() - t_pipeline0, 2)
 
     total = stages["extract_dedup"] + stages["block_score_cluster"]

@@ -112,3 +112,20 @@ def test_trained_scorer_separates_er_pairs(spark):
     neg = [r.prob for r in got if r.label == 0]
     assert pos and neg
     assert min(pos) > max(neg)  # trained scorer reproduces the separation
+
+
+def test_trained_weights_round_half_away_like_duckdb():
+    """er_trained_match_f1 rounds its weights to 4 decimals on the driver and
+    its oracle rounds them with DuckDB's round(); on a grid midpoint the two
+    must agree (np.round would give 0.0012 for 0.00125, DuckDB 0.0013)."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    values = [0.00125, -0.00125, 5e-05, -5e-05, 1.00015, 0.12345, -1.23455,
+              0.4999999999999999e-4, 0.3, 0.0]
+    got = entry._round_half_away(np.array(values), 4)
+    con = duckdb.connect()
+    want = [con.execute("SELECT round(?::DOUBLE, 4)", [v]).fetchone()[0] for v in values]
+    assert got.tolist() == want
+    assert got[0] == 0.0013 and got[1] == -0.0013

@@ -167,7 +167,7 @@ def test_resolve_stages_compose_with_set_operations(spark, corpus):
 
     mentions = with_canonical(extract_mentions(spark.createDataFrame(corpus.transcripts)))
     chain = resolve(mentions, hot_threshold=50, target_block_size=40)
-    assert set(chain) == {"uniq", "stars", "pairs", "scored", "fuzzy", "clusters"}
+    assert set(chain) == {"uniq", "stars", "dim", "pairs", "scored", "fuzzy", "clusters"}
     for name, df in chain.items():
         n = df.count()
         head = df.limit(3)
@@ -175,3 +175,43 @@ def test_resolve_stages_compose_with_set_operations(spark, corpus):
         assert df.intersectAll(head).count() == min(n, 3), name
     uniq = chain["uniq"]
     assert uniq.count() == uniq.select("email").distinct().count() > 0
+
+
+def test_resolve_caches_are_released_by_their_owner(spark, corpus):
+    """resolve() persists the blocked dim (and uniq, when it derives it) and
+    returns them; the caller releases them. Two resolve calls in one
+    session, each followed by the release, leave no cache entry behind —
+    the second call caches afresh instead of hitting the first call's."""
+    from pyspark import StorageLevel
+
+    from email_address_parser_spark.operators.extract import (
+        extract_mentions,
+        with_canonical,
+    )
+
+    mentions = with_canonical(extract_mentions(spark.createDataFrame(corpus.transcripts)))
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def cached_rdd(df) -> int:
+        """Id of the RDD holding `df`'s cache entry."""
+        entry = cache.lookupCachedData(df._jdf)
+        assert entry.isDefined()
+        return entry.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+
+    def persistent_rdds() -> set:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    seen = set()
+    for _ in range(2):
+        chain = resolve(mentions, hot_threshold=50, target_block_size=40)
+        assert chain["clusters"].count() > 0
+        rdds = {cached_rdd(chain["dim"]), cached_rdd(chain["uniq"])}
+        assert len(rdds) == 2 and rdds <= persistent_rdds() and not rdds & seen
+        seen |= rdds
+        chain["dim"].unpersist()
+        chain["uniq"].unpersist()
+        for name in ("dim", "uniq"):
+            assert not cache.lookupCachedData(chain[name]._jdf).isDefined(), name
+            assert chain[name].storageLevel == StorageLevel.NONE, name
+        assert not rdds & persistent_rdds()

@@ -197,6 +197,108 @@ def test_blocking_channels_read_one_persisted_dim(spark):
     assert sum("InMemoryTableScan" in line for line in plan.splitlines()) == 8, plan
 
 
+def _unwrap(plan):
+    return plan.inputPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+
+
+def _physical(df):
+    """The physical plan root before AQE re-planning. InMemoryTableScan is a
+    leaf of it: a cached frame's own plan hangs off the scan's relation."""
+    return _unwrap(df._jdf.queryExecution().executedPlan())
+
+
+def _children(node) -> list:
+    ch = node.children()
+    return [ch.apply(i) for i in range(ch.size())]
+
+
+def _nodes(node):
+    yield node
+    for child in _children(node):
+        yield from _nodes(child)
+
+
+def _describe(node) -> str:
+    return node.simpleString(10_000)
+
+
+def test_minhash_udfs_run_only_inside_the_cached_dim(spark):
+    """The band signatures ride the persisted blocked dim: outside the cache
+    the production pairs plan evaluates no MinHash UDF, and the dim's own
+    cached plan evaluates each signature kind exactly once."""
+    from email_address_parser_spark.operators.extract import (
+        extract_mentions,
+        with_canonical,
+    )
+    from email_address_parser_spark.pipeline import resolve
+    from email_address_parser_spark.sources.testdata import derive_transcripts
+
+    mentions = with_canonical(extract_mentions(derive_transcripts(spark, SF_DIR)))
+    chain = resolve(mentions)
+    nodes = list(_nodes(_physical(chain["pairs"])))
+    assert not [n for n in nodes if "minhash" in _describe(n)]
+    cached = {
+        n.relation().cachedPlan().toString(): _unwrap(n.relation().cachedPlan())
+        for n in nodes
+        if n.nodeName() == "InMemoryTableScan"
+    }
+    dims = [p for p in cached.values() if "band_sigs" in p.toString()]
+    assert len(dims) == 1, list(cached)
+    udfs = [
+        _describe(n)
+        for n in _nodes(dims[0])
+        if n.nodeName() == "ArrowEvalPython" and "minhash" in _describe(n)
+    ]
+    assert len(udfs) == 1, udfs
+    # one evaluation of each signature kind, local and email
+    assert udfs[0].count("minhash_bands_udf(") == 2, udfs
+    assert udfs[0].count("email_minhash_bands_udf(") == 1, udfs
+    chain["dim"].unpersist()
+    chain["uniq"].unpersist()
+
+
+# match_edges' score_bound(): the score with JW = 1, which Catalyst folds
+# to a leading literal 0.35 (the score itself reads 0.35 * <JW>)
+_BOUND = "round((((0.35 + (0.2 * "
+
+
+def _bounded(node) -> bool:
+    """Every path from `node` down to a leaf crosses a filter or join
+    condition on the score bound."""
+    if _BOUND in _describe(node):
+        return True
+    children = _children(node)
+    return bool(children) and all(_bounded(c) for c in children)
+
+
+def test_jaro_winkler_reads_only_bound_filtered_rows(spark):
+    """The JW UDF of the production edge plan only sees rows that passed
+    the builtin score bound: Catalyst pushes match_edges' bound filter
+    through the scorer's Project and the rebalance into each channel's
+    join condition, and the score threshold, applied after the dedup
+    aggregate, pulls no JW evaluation into the channel branches."""
+    from email_address_parser_spark.operators.extract import (
+        extract_mentions,
+        with_canonical,
+    )
+    from email_address_parser_spark.pipeline import resolve
+    from email_address_parser_spark.sources.testdata import derive_transcripts
+
+    mentions = with_canonical(extract_mentions(derive_transcripts(spark, SF_DIR)))
+    chain = resolve(mentions)
+    jw = [
+        n
+        for n in _nodes(_physical(chain["fuzzy"]))
+        if n.nodeName() == "ArrowEvalPython" and "jaro_winkler_udf" in _describe(n)
+    ]
+    assert len(jw) == 1, [_describe(n) for n in jw]
+    assert _bounded(jw[0]), _describe(jw[0])
+    # the scored stage itself is unfiltered: every candidate keeps its features
+    assert chain["scored"].count() == chain["pairs"].count()
+    chain["dim"].unpersist()
+    chain["uniq"].unpersist()
+
+
 def test_sessionize_and_rollup_share_one_exchange(spark):
     """session_stats must plan exactly ONE hashpartitioning exchange: the
     lag window, the running-sum window, and the session-level groupBy all
