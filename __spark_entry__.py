@@ -1476,9 +1476,9 @@ def _er_forget(spark: SparkSession, sf: str) -> DataFrame:
     The oracle is the full-corpus clustering SQL minus the target's
     component, so the triple-match certifies that forgetting removes exactly
     the identity's connected component and nothing else — the erasure
-    analog of the fold == from-scratch certifications. Disk-path equality
-    (MoR append + read_er_state == this in-memory apply) is pinned by
-    tests/test_forget.py."""
+    analog of the fold == from-scratch certifications. tests/test_forget.py
+    pins this apply, and a fold after it, row-identical to from-scratch
+    builds."""
     from email_address_parser_spark.operators.forget import (
         forget_apply,
         forget_payload,

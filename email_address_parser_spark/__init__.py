@@ -16,13 +16,11 @@ Public surface (see SURVEY.md §2 for the operator inventory):
   operators.sampling    — hash splits, sequence packing, KMV sketches
   operators.multimodal  — binary payload plumbing (mapInPandas, stubbed decode)
   functions.redact      — PII redaction (engine-portable regexes)
-  plans                 — physical-plan audit helpers (tests / ops)
   oracles               — DuckDB replay SQL for the engine-hash operators
-  streaming.extract_stream — Structured Streaming extraction + windowed rollups
+  streaming.incremental_stream — merge-on-read state storage for the folds
   pipeline              — checkpoint/resume orchestration + clustering
   session               — SparkSession factory (AQE/Arrow/UTC defaults)
   sources.testdata      — driver parquet loaders + transcripts derivation
-  synth                 — deterministic labeled transcript synthesizer
 """
 
 __version__ = "0.2.0"

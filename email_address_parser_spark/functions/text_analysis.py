@@ -8,8 +8,7 @@ replay it verbatim:
   * token counting       — whitespace tokens, word tokens, BPE-ish subtokens
   * quality scoring      — char-class ratios + stopword ratio + length prior
   * language ID          — marker-stopword counting (en/de/fr/es) + CJK chars
-  * fingerprinting       — md5 over whitespace-normalized text, plus a
-                           winnowing fingerprint (k-gram rolling hashes,
+  * fingerprinting       — winnowing fingerprint (k-gram rolling hashes,
                            window minima) for near-dup detection at scale
 
 Reference anchor: the reference repo is a string-processing kernel
@@ -110,11 +109,6 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     for k in order:
         out = out.withColumn(f"score_{k}", s[k])
     return out.withColumn("lang_pred", pred)
-
-
-def with_md5_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Exact-dup fingerprint: md5 of the normalized text."""
-    return df.withColumn("fp_md5", F.md5(normalized_text(F.col(text_col))))
 
 
 def _word_grams(toks: Column, n: int) -> Column:

@@ -39,18 +39,8 @@ _LAX_ANCHORED = re.compile(rf"\A{EMAIL_LAX_PATTERN}\Z")
 # way an address containing spaces/folds/comments survives tokenization) or a
 # whitespace-delimited token containing '@'. Length-capped to bound regex cost
 # on garbage (RFC 5322 line limit is 998; no VALID corpus address exceeds it).
-MAX_CANDIDATE_LEN = 998
 _ANGLE_RE = re.compile(r"<([^<>]{1,998})>")
 _TOKEN_RE = re.compile(r"[^\s<>]{1,998}")
-
-PARSE_RESULT_SCHEMA = StructType(
-    [
-        StructField("local_part", StringType()),
-        StructField("domain", StringType()),
-        StructField("valid_strict", BooleanType()),
-        StructField("valid_lax", BooleanType()),
-    ]
-)
 
 
 def parse_batch(values: pd.Series) -> pd.DataFrame:
@@ -110,44 +100,6 @@ def parse_batch(values: pd.Series) -> pd.DataFrame:
     )
 
 
-@pandas_udf(PARSE_RESULT_SCHEMA)
-def parse_email_udf(values: pd.Series) -> pd.DataFrame:
-    return parse_batch(values)
-
-
-def _deep_retry(v: pd.Series, ok: pd.Series, lax: bool) -> pd.Series:
-    """Apply the depth-128 grammar to residual misses with >= 2 '('."""
-    resid = ~ok.fillna(False).astype(bool) & v.notna()
-    if resid.any():
-        cand = v[resid & (v.str.count(r"\(") >= 2)]
-        if len(cand):
-            for ix, s in cand.items():
-                deep = deep_patterns(paren_depth_bound(s))
-                hit = deep.strict.fullmatch(s) is not None or (
-                    lax and deep.lax.fullmatch(s) is not None
-                )
-                if hit:
-                    ok.loc[ix] = True
-    return ok
-
-
-@pandas_udf(BooleanType())
-def is_valid_strict_udf(values: pd.Series) -> pd.Series:
-    v = values.astype("string")
-    ok = v.str.fullmatch(_STRICT_ANCHORED)
-    return _deep_retry(v, ok, lax=False).fillna(False).astype(bool)
-
-
-@pandas_udf(BooleanType())
-def is_valid_lax_udf(values: pd.Series) -> pd.Series:
-    v = values.astype("string")
-    ok = v.str.fullmatch(_STRICT_ANCHORED)
-    misses = ~ok.fillna(False) & v.notna()
-    if misses.any():
-        ok.loc[misses] = v[misses].str.fullmatch(_LAX_ANCHORED)
-    return _deep_retry(v, ok, lax=True).fillna(False).astype(bool)
-
-
 def extract_candidates(text: str) -> list:
     """Candidate mention substrings of one turn's text, in reading order.
 
@@ -176,13 +128,6 @@ def extract_candidates(text: str) -> list:
     return [c for _, c in out]
 
 
-@pandas_udf(ArrayType(StringType()))
-def extract_candidates_udf(texts: pd.Series) -> pd.Series:
-    # .map with a compiled-regex closure: the per-call work is regex finditer
-    # (C); there is no cheaper vectorized formulation of span arithmetic.
-    return texts.map(lambda t: extract_candidates(t) if isinstance(t, str) else [])
-
-
 MENTION_STRUCT = StructType(
     [
         StructField("raw", StringType()),
@@ -196,9 +141,9 @@ MENTION_STRUCT = StructType(
 
 @pandas_udf(ArrayType(MENTION_STRUCT))
 def extract_parse_udf(texts: pd.Series) -> pd.Series:
-    """Fused extract+parse: ONE Arrow boundary crossing per batch instead of
-    two (extract_candidates_udf → explode → parse_email_udf re-serializes
-    every candidate back into Python). The parse stays fully vectorized: all
+    """Fused extract+parse: ONE Arrow boundary crossing per batch, so no
+    candidate is re-serialized back into Python between extraction and
+    parsing. The parse stays fully vectorized: all
     candidates of the batch are flattened into a single Series, run through
     parse_batch once, then regrouped per turn."""
     cand_lists = [

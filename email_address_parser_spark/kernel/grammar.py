@@ -180,10 +180,6 @@ EMAIL_LAX_PATTERN = f"(?P<local>{LOCAL_PART_OBS})@(?P<domain>{DOMAIN_OBS})"
 # Arrow batches — mirrors the reference's precompile-once strategy (index.ts:52-53).
 EMAIL_STRICT_RE = re.compile(EMAIL_STRICT_PATTERN)
 EMAIL_LAX_RE = re.compile(EMAIL_LAX_PATTERN)
-LOCAL_PART_STRICT_RE = re.compile(LOCAL_PART_STRICT)
-LOCAL_PART_LAX_RE = re.compile(LOCAL_PART_OBS)
-DOMAIN_STRICT_RE = re.compile(DOMAIN_STRICT)
-DOMAIN_LAX_RE = re.compile(DOMAIN_OBS)
 
 
 # --- deep comment nesting (Rust parity beyond the corpus) ------------------------
@@ -253,7 +249,7 @@ class DeepPair:
     """Deep (strict, lax) patterns for one depth bucket, compiled lazily PER
     KIND: the lax grammar embeds the bucket's comment pattern at 15 sites vs
     the strict grammar's 4, so its compile costs ~4x — and strict-only
-    callers (is_valid_strict_udf, parse with is_lax=False) never need it.
+    callers (parse with is_lax=False) never need it.
     Indexable like the old tuple ([0]=strict, [1]=lax); indexing one kind
     does not compile the other."""
 
@@ -308,13 +304,3 @@ def maybe_deep_comment(value: str) -> bool:
     default COMMENT accepts requires at least two '(' in the input."""
     return value.count("(") >= 2
 
-
-def duckdb_email_regex(lax: bool = False) -> str:
-    """The same anchored grammar as an RE2-compatible pattern for DuckDB oracles.
-
-    RE2 (DuckDB's engine) does not support named groups with Python syntax nor
-    needs them; anchors are added because DuckDB's regexp_matches is unanchored.
-    """
-    pat = EMAIL_LAX_PATTERN if lax else EMAIL_STRICT_PATTERN
-    pat = pat.replace("(?P<local>", "(").replace("(?P<domain>", "(")
-    return f"^{pat}$"

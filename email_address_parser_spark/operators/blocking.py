@@ -155,12 +155,6 @@ def minhash_band_sigs(sigs: np.ndarray) -> np.ndarray:
     return out
 
 
-def minhash_signature(s: str) -> list:
-    """Scalar convenience wrapper (tests / exploration): one row through the
-    batch kernel."""
-    return minhash_signatures_batch([s if isinstance(s, str) else ""])[0].tolist()
-
-
 def minhash_oracle_sql_parts() -> dict:
     """The hash constants, formatted for embedding in DuckDB oracle SQL that
     replays the signature/band computation exactly (see __spark_entry__)."""

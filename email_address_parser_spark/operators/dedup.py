@@ -384,12 +384,6 @@ def simhash_batch(texts: list) -> np.ndarray:
     return out
 
 
-def simhash64(text: str) -> int:
-    """64-bit SimHash over word tokens (unweighted votes), as SIGNED int64
-    (two's complement — the Spark LongType representation)."""
-    return int(simhash_batch([text])[0])
-
-
 @pandas_udf(LongType())
 def simhash_udf(texts: pd.Series) -> pd.Series:
     return pd.Series(simhash_batch(list(texts)))

@@ -37,10 +37,10 @@ Everything is O(|identity|): the doomed set expands from the target
 emails through `clusters` (identity == connected component, so removing
 a whole component cannot affect any other component — the equivalence
 the er_forget oracle certifies), and every update frame derives from
-that set. Compaction (`compact_er_state`) APPLIES the ledger and
-tombstones while rewriting the base — Iceberg's rewrite-data-files
-maintenance — after which the ledger is empty and reads are
-filter-free.
+that set. `forget_apply` applies a payload to in-memory state — the path
+the er_forget driver query runs — with the read-side rules above: doomed
+emails leave `uniq` and `clusters`, doomed keys leave `reps`, and counts
+that reach zero are dropped.
 
 Exactness contract (tests/test_forget.py + the er_forget oracle): after
 `forget`, resolved state is row-identical to `build_incremental_state`
@@ -72,7 +72,7 @@ def forget_payload(
 ) -> Dict[str, DataFrame]:
     """Batch-sized update frames erasing the identities (clusters) that
     contain any target email. `state` is a RESOLVED state dict
-    (`build_incremental_state` output or `read_er_state`); `targets` is a
+    (e.g. `build_incremental_state` output); `targets` is a
     1-column (email) frame — an erasure request is a handful of subjects,
     so every frame here is broadcast-sized.
 
@@ -128,7 +128,7 @@ def forget_payload(
             return
         # updated rows for TOUCHED keys only (inner join against the
         # broadcast-sized decrement dim) — latest-wins replaces them; keys
-        # that reach zero are filtered at read time (read_er_state), making
+        # that reach zero are filtered when applied (forget_apply), making
         # resolved counts row-identical to a from-scratch build
         payload[table] = (
             cur.join(F.broadcast(dec), keys)
@@ -188,10 +188,10 @@ def forget_payload(
 def forget_apply(
     state: Dict[str, DataFrame], payload: Dict[str, DataFrame]
 ) -> Dict[str, DataFrame]:
-    """In-memory application of a forget payload to a resolved state dict —
-    the same table-by-table semantics the MoR write + `read_er_state` path
-    produces on disk (pinned equal by tests/test_forget.py), for callers
-    that hold state as DataFrames (the er_forget driver query)."""
+    """In-memory application of a forget payload to a resolved state dict,
+    for callers that hold state as DataFrames (the er_forget driver query).
+    tests/test_forget.py pins the result row-identical to a from-scratch
+    build over the reduced corpus."""
     demails = F.broadcast(payload["doomed"].select("email"))
     out = dict(state)
     out["uniq"] = state["uniq"].join(demails, "email", "left_anti")

@@ -10,9 +10,7 @@ clusters and G26 dedup state): a real ingestion pipeline never re-indexes
               derives the same deterministic sample, so queries against
               folded state replay the batch plan bit-for-bit);
   assigned  — (id, vec, norm, cell): every corpus vector with its quantizer
-              cell. Append-only; in prod an Iceberg table partitioned by
-              `cell`, so a fold writes only the cells its batch lands in and
-              a query's n_probe cell scan partition-prunes.
+              cell. Append-only: a fold adds only its batch's rows.
 
 A fold assigns ONLY the batch (per-row literal-quantizer argmax — the same
 zero-shuffle expression as the batch path, `similarity.py ivf_topk`) and
@@ -34,8 +32,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .similarity import cosine, with_norm
-
-IVF_STATE_TABLES = ("centroids", "assigned")
 
 
 def _literals_from_rows(rows) -> F.Column:
@@ -134,33 +130,6 @@ def fold_embeddings(
             "centroids": state["centroids"],
             "assigned": state["assigned"].unionByName(delta),
         },
-    }
-
-
-def write_ivf_state(state: Dict[str, DataFrame], state_dir: str) -> None:
-    """Bootstrap persistence: `assigned` is PARTITIONED BY CELL (the Iceberg
-    layout the module docstring promises — round-4: prove it in-sandbox).
-    Folds then append with `append_ivf_delta`, which writes files only under
-    the cells the batch actually lands in; nothing is ever rewritten, so the
-    per-fold write cost is O(batch) and a query's n_probe cell scan
-    partition-prunes on disk."""
-    state["centroids"].write.mode("overwrite").parquet(f"{state_dir}/centroids")
-    state["assigned"].write.mode("overwrite").partitionBy("cell").parquet(
-        f"{state_dir}/assigned"
-    )
-
-
-def append_ivf_delta(delta: DataFrame, state_dir: str) -> None:
-    """Append one fold's newly assigned vectors — touched-cell files only."""
-    delta.write.mode("append").partitionBy("cell").parquet(
-        f"{state_dir}/assigned"
-    )
-
-
-def read_ivf_state(spark: SparkSession, state_dir: str) -> Dict[str, DataFrame]:
-    return {
-        "centroids": spark.read.parquet(f"{state_dir}/centroids"),
-        "assigned": spark.read.parquet(f"{state_dir}/assigned"),
     }
 
 

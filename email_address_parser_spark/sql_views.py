@@ -99,9 +99,9 @@ def register_er_views(
 
         # G43: the SCD2 membership timeline. With only one epoch in view
         # this is the snapshot (every assignment open from epoch 0); a
-        # deployment folds per-epoch assignments via
-        # streaming_cluster_maintenance(history_dir=...) and registers the
-        # resolved state table here instead.
+        # deployment folds per-epoch assignments with
+        # operators/history.fold_history and registers that table here
+        # instead.
         from .operators.history import snapshot_history
 
         snapshot_history(

@@ -1,24 +1,10 @@
-"""Continuous identity-resolution ingestion: the G24 state-maintained fold
-(`operators/incremental.fold_batch`) as a Structured Streaming
-`foreachBatch` consumer.
+"""Merge-on-read (MoR) storage for the incremental folds' state
+(`operators/incremental.fold_batch`, the dedup and CLK folds): a state
+directory holds one parquet table per state table plus a small metadata
+file recording the current epoch and each table's merge key.
 
-This is the production shape of 10^12-turn maintenance: transcripts land on
-a stream (Kafka/Iceberg; file source in-sandbox), every micro-batch is
-folded into the persisted cluster state — extraction, banding, and scoring
-run over the micro-batch only; derived dims (key reps, domain counts, LSH
-bucket counts) are merged, never re-aggregated — and the updated state is
-committed back. Exactly-once comes from composing two mechanisms:
-
-  * the streaming checkpoint replays a micro-batch after a crash;
-  * the fold is idempotent under replay — already-folded emails drain
-    through the new-email anti-join (`tests/test_incremental.py::
-    test_fold_batch_refold_is_noop`) — so a replayed batch is a no-op.
-
-State storage is MERGE-ON-READ (round-4: "fold writes are batch-sized",
-proven in-sandbox rather than by reference to prod):
-
-  * a fold APPENDS only its update rows — each row stamped with a
-    monotonically increasing `_epoch` and a stable key bucket
+  * `write_state_mor` APPENDS one fold's update rows — each row stamped
+    with a monotonically increasing `_epoch` and a stable key bucket
     `_b = pmod(xxhash64(key), N)` — so per-fold write I/O is O(batch),
     never O(corpus). This is the parquet-dir analog of an Iceberg
     equality-delete MERGE: upserts land as new data files; nothing is
@@ -26,23 +12,26 @@ proven in-sandbox rather than by reference to prod):
     so partition-overwrite CANNOT be batch-sized — with batch ≫ #buckets
     every partition is touched; append + late merge is the only flat-write
     layout, and it is what merge-on-read Iceberg actually does.)
+    mode='overwrite' writes a fresh epoch-0 base instead (bootstrap).
   * `read_state` resolves LATEST-EPOCH-WINS per key lazily (update rows
     always carry the complete merged value for their key, so resolution is
-    one max_by per table). `uniq` is append-only — new emails only — and
-    needs no resolution at all.
+    one max_by per table). Append-only tables such as `uniq` — new emails
+    only — need no resolution at all.
   * `compact_state` is the Iceberg table-maintenance analog: rewrite each
     table resolved, at epoch 0, amortizing read amplification; run it every
-    K folds. The `_b` bucket column gives compaction (and prod file
-    skipping via parquet min-max stats / Iceberg hidden bucket
-    partitioning) a stable layout key. `_epoch`/`_b` ride as regular
-    columns rather than directory partitions because a partitionBy write of
-    an EMPTY table stores no schema — and an empty bootstrap is a supported
-    entry point.
+    K folds. The `_b` bucket column gives compaction (and file skipping via
+    parquet min-max stats / Iceberg hidden bucket partitioning) a stable
+    layout key. `_epoch`/`_b` ride as regular columns rather than directory
+    partitions because a partitionBy write of an EMPTY table stores no
+    schema — and an empty bootstrap is a supported entry point.
 
-`localCheckpoint` materializes every update BEFORE the first append so the
-lazy plans never read a directory they are appending to — and with MoR the
-materialized set is batch-sized, where the old full-rewrite path
-checkpointed O(corpus) tables every fold.
+A fold is idempotent under replay — already-folded emails drain through the
+new-email anti-join (`tests/test_incremental.py::
+test_fold_batch_refold_is_noop`) — so re-appending a batch's updates adds
+value-identical rows at a higher epoch, which latest-wins resolution
+absorbs. `localCheckpoint` materializes every update BEFORE the first
+append so the lazy plans never read a directory they are appending to, and
+the materialized set is batch-sized.
 """
 
 from __future__ import annotations
@@ -54,17 +43,7 @@ from typing import Dict
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.incremental import STATE_TABLES, build_incremental_state, fold_batch
-from ..operators.incremental_dedup import (
-    DEDUP_STATE_TABLES,
-    build_dedup_state,
-    fold_docs,
-)
-from ..operators.incremental_golden import (
-    MENTION_KEY,
-    build_golden_state,
-    fold_golden,
-)
+from ..operators.incremental import STATE_TABLES
 
 # merge keys per state table (latest-epoch row wins per key); `uniq` is
 # append-only and absent here on purpose
@@ -82,20 +61,6 @@ STATE_BUCKET_KEYS = {"uniq": ["email"]}
 # bands/grams/meta are append-only (batch rows only), clusters merges on id
 DEDUP_STATE_KEYS = {"clusters": ["id"]}
 DEDUP_BUCKET_KEYS = {"bands": ["id"], "grams": ["id"], "meta": ["id"]}
-# the G42 golden fold's state: the mention ledger is append-only (the
-# exactly-once anti-join key is the mention key; email is the prune/bucket
-# key); golden merges on cluster_id, with MERGED-AWAY ids appended as
-# all-null TOMBSTONE rows (the parquet-dir analog of an Iceberg equality
-# delete) that `read_golden_state` filters after latest-wins resolution
-GOLDEN_STATE_TABLES = ("men", "golden")
-GOLDEN_STATE_KEYS = {"golden": ["cluster_id"]}
-GOLDEN_BUCKET_KEYS = {"men": ["email"]}
-# the G43 membership-history fold's state: SCD2 rows merge on
-# (email, valid_from) — a fold's closure REPLACES the open row it closes
-# (same key, valid_to filled), opens insert fresh keys, so latest-wins
-# resolution IS the SCD2 update and the per-fold append stays batch-sized
-HISTORY_STATE_TABLES = ("history",)
-HISTORY_STATE_KEYS = {"history": ["email", "valid_from"]}
 N_STATE_BUCKETS = 32
 
 
@@ -109,10 +74,6 @@ def _read_meta(state_dir: str) -> dict:
             return json.load(fh)
     except (OSError, ValueError):
         return {"epoch": -1, "keys": {}}
-
-
-def _read_epoch(state_dir: str) -> int:
-    return int(_read_meta(state_dir).get("epoch", -1))
 
 
 def _write_meta(state_dir: str, epoch: int, keys: dict) -> None:
@@ -237,159 +198,6 @@ def read_state(
     }
 
 
-def read_er_state(
-    spark: SparkSession, state_dir: str, tables=STATE_TABLES
-) -> Dict[str, DataFrame]:
-    """`read_state` plus the G58 erasure conventions (operators/forget.py):
-
-      * all-null tombstones filtered from the keyed tables (clusters on
-        null cluster_id, reps on null email) after latest-wins resolution;
-      * count dims filtered to positive rows (a forget decrements counts;
-        zero == absent in a from-scratch build);
-      * the `deletes` equality-delete ledger applied to the append-only
-        `uniq` with SEQUENCE semantics: a uniq row survives iff it is newer
-        than every delete for its email (Iceberg's eq-delete rule), so a
-        post-erasure reappearance survives while pre-erasure rows stay
-        dead.
-
-    On a forget-free state dir every step is a no-op filter, so this is a
-    drop-in superset of `read_state` for the cluster-maintenance tables."""
-    out = read_state(spark, state_dir, tables)
-    if out.get("clusters") is not None:
-        out["clusters"] = out["clusters"].where(F.col("cluster_id").isNotNull())
-    if out.get("reps") is not None:
-        out["reps"] = out["reps"].where(F.col("email").isNotNull())
-    for name, cnt in (
-        ("domain_counts", "_dom_n"),
-        ("bucket_counts", "_bn"),
-        ("local_counts", "_ln"),
-        ("ebucket_counts", "_bn"),
-    ):
-        if out.get(name) is not None:
-            out[name] = out[name].where(F.col(cnt) > 0)
-    if "uniq" in tables and os.path.isdir(f"{state_dir}/deletes"):
-        raw = spark.read.parquet(f"{state_dir}/uniq")
-        dels = (
-            spark.read.parquet(f"{state_dir}/deletes")
-            .groupBy("email")
-            .agg(F.max("_epoch").alias("_del_epoch"))
-        )
-        out["uniq"] = (
-            raw.join(F.broadcast(dels), "email", "left")
-            .where(
-                F.col("_del_epoch").isNull()
-                | (F.col("_epoch") > F.col("_del_epoch"))
-            )
-            .drop("_del_epoch", "_epoch", "_b")
-        )
-    return out
-
-
-def _null_cols(df: DataFrame, keys: list) -> list:
-    return [
-        F.lit(None).cast(f.dataType).alias(f.name)
-        for f in df.schema.fields
-        if f.name not in keys
-    ]
-
-
-def forget_identities(
-    spark: SparkSession,
-    state_dir: str,
-    targets: DataFrame,
-    golden_dir: str = None,
-    history_dir: str = None,
-) -> DataFrame:
-    """Erase every identity (cluster) containing a target email from the
-    on-disk MoR state — ONE batch-sized append epoch per state dir carrying
-    the ledger rows, tombstones, and count decrements (operators/forget.py
-    has the mechanics). Idempotent: a re-forget finds no surviving cluster
-    rows for the targets, so every frame is empty. Returns the
-    (email, cluster_id) audit frame of what was erased — the erasure-log
-    record.
-
-    golden_dir / history_dir cascade the erasure through the co-maintained
-    states (GDPR erasure is ALL the subject's data, not just the live
-    view): the G42 golden record of each doomed cluster is tombstoned and
-    the mention LEDGER takes an eq-delete on the doomed emails; the G43
-    SCD2 history tombstones EVERY row (open and closed) the doomed emails
-    ever held. Write order is cascade-first, cluster-state LAST: the doomed
-    expansion needs live cluster rows, so a crash anywhere mid-cascade
-    leaves the targets still resolvable and a re-run re-appends
-    value-identical rows (latest-wins absorbs them) — the same
-    replay-idempotency argument as the folds. Ordering caveat shared with
-    any eq-delete store: run erasures only after the stream's checkpoint
-    frontier has passed the batches that carried the erased mentions, or a
-    crash-REPLAY of an older batch lawfully re-ingests them as new data."""
-    from ..operators.forget import forget_payload
-
-    payload = forget_payload(read_er_state(spark, state_dir), targets)
-    doomed = payload["doomed"]
-    if golden_dir:
-        golden = read_golden_state(spark, golden_dir)["golden"]
-        g_updates = {
-            "golden": doomed.select("cluster_id")
-            .distinct()
-            .select("cluster_id", *_null_cols(golden, ["cluster_id"])),
-            "deletes": doomed.select("email"),
-        }
-        write_state_mor(
-            g_updates,
-            golden_dir,
-            tables=("golden", "deletes"),
-            merge_keys=GOLDEN_STATE_KEYS,
-            bucket_keys={**GOLDEN_BUCKET_KEYS, "deletes": ["email"]},
-        )
-    if history_dir:
-        hist = read_history_state(spark, history_dir)["history"]
-        h_tomb = hist.join(
-            F.broadcast(doomed.select("email")), "email", "left_semi"
-        ).select(
-            "email",
-            F.lit(None).cast("string").alias("cluster_id"),
-            "valid_from",
-            F.lit(None).cast("long").alias("valid_to"),
-            F.lit(None).cast("boolean").alias("is_current"),
-        )
-        write_state_mor(
-            {"history": h_tomb},
-            history_dir,
-            tables=HISTORY_STATE_TABLES,
-            merge_keys=HISTORY_STATE_KEYS,
-            bucket_keys={},
-        )
-    updates = {
-        k: v for k, v in payload.items() if k != "doomed" and v is not None
-    }
-    write_state_mor(
-        updates,
-        state_dir,
-        tables=tuple(updates),
-        bucket_keys={**STATE_BUCKET_KEYS, "deletes": ["email"]},
-    )
-    return doomed
-
-
-def compact_er_state(
-    spark: SparkSession, state_dir: str, tables=STATE_TABLES
-) -> None:
-    """Compaction for a state dir that may carry erasures: rewrite the base
-    with the ledger/tombstones/zero-counts APPLIED (Iceberg's
-    rewrite-data-files + drop-stale-deletes maintenance), then drop the
-    ledger — post-compaction reads are filter-free and the forgotten rows
-    are physically gone from storage, which is what an erasure SLA
-    ultimately requires."""
-    import shutil
-
-    write_state_mor(
-        read_er_state(spark, state_dir, tables),
-        state_dir,
-        tables=tables,
-        mode="overwrite",
-    )
-    shutil.rmtree(f"{state_dir}/deletes", ignore_errors=True)
-
-
 def compact_state(
     spark: SparkSession,
     state_dir: str,
@@ -410,336 +218,4 @@ def compact_state(
         mode="overwrite",
         merge_keys=merge_keys,
         bucket_keys=bucket_keys,
-    )
-
-
-def compact_if_needed(
-    spark: SparkSession,
-    state_dir: str,
-    every_k_epochs: int = 8,
-    tables=STATE_TABLES,
-    merge_keys: Dict[str, list] = None,
-    bucket_keys: Dict[str, list] = STATE_BUCKET_KEYS,
-) -> bool:
-    """Compaction POLICY around compact_state: rewrite the base once
-    `every_k_epochs` folds have appended since the last base (the epoch
-    counter IS folds-since-compaction — overwrite resets it to 0). → True
-    iff a compaction ran.
-
-    The cadence knob is measured, not guessed (`bench_mor_compaction.py` /
-    BENCH/BASELINE.md): read amplification is a flat step as soon as ANY
-    delta exists and does not grow 2→8 epochs at sandbox scale, so the
-    policy amortizes the O(corpus) rewrite to O(corpus/K) per fold without
-    a mid-ladder cliff to dodge. Call it after each fold's commit — e.g.
-    from the foreachBatch in streaming_cluster_maintenance."""
-    if _read_epoch(state_dir) < int(every_k_epochs):
-        return False
-    compact_state(
-        spark, state_dir, tables=tables, merge_keys=merge_keys, bucket_keys=bucket_keys
-    )
-    return True
-
-
-def bootstrap_state(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    state_dir: str,
-    **fold_kwargs,
-) -> None:
-    """Initialize the state directory from a (possibly EMPTY) corpus — an
-    empty bootstrap makes the stream self-contained: the first micro-batch
-    folds into empty tables."""
-    write_state_mor(
-        build_incremental_state(spark, transcripts, **fold_kwargs),
-        state_dir,
-        mode="overwrite",
-    )
-
-
-def bootstrap_golden_state(
-    spark: SparkSession,
-    transcripts: DataFrame,
-    cluster_state: Dict[str, DataFrame],
-    golden_dir: str,
-) -> None:
-    """Epoch-0 base for the golden fold's MoR state, derived from the SAME
-    corpus/clustering the cluster state was bootstrapped from (an empty
-    corpus yields empty-but-typed tables, so a from-nothing stream works)."""
-    from ..operators.extract import extract_mentions, with_canonical
-
-    mentions = with_canonical(extract_mentions(transcripts))
-    write_state_mor(
-        build_golden_state(mentions, cluster_state["clusters"]),
-        golden_dir,
-        tables=GOLDEN_STATE_TABLES,
-        mode="overwrite",
-        merge_keys=GOLDEN_STATE_KEYS,
-        bucket_keys=GOLDEN_BUCKET_KEYS,
-    )
-
-
-def bootstrap_history_state(
-    spark: SparkSession,
-    cluster_state: Dict[str, DataFrame],
-    history_dir: str,
-) -> None:
-    """Epoch-0 base for the G43 SCD2 membership history: every bootstrap
-    assignment becomes an open row valid from 0 (empty clusters yield an
-    empty-but-typed table, so a from-nothing stream works)."""
-    from ..operators.history import snapshot_history
-
-    write_state_mor(
-        {"history": snapshot_history(cluster_state["clusters"], 0)},
-        history_dir,
-        tables=HISTORY_STATE_TABLES,
-        mode="overwrite",
-        merge_keys=HISTORY_STATE_KEYS,
-        bucket_keys={},
-    )
-
-
-def read_golden_state(spark: SparkSession, golden_dir: str) -> Dict[str, DataFrame]:
-    """Resolved golden state: latest-wins per cluster_id, then tombstones
-    (all-null aggregate rows appended for merged-away ids — and by G58
-    forgets) filtered out. A forget's eq-delete ledger applies to the
-    append-only mention ledger with the same sequence semantics as the
-    cluster state's uniq (read_er_state)."""
-    state = read_state(spark, golden_dir, tables=GOLDEN_STATE_TABLES)
-    state["golden"] = state["golden"].where(F.col("n_members").isNotNull())
-    if os.path.isdir(f"{golden_dir}/deletes"):
-        raw = spark.read.parquet(f"{golden_dir}/men")
-        dels = (
-            spark.read.parquet(f"{golden_dir}/deletes")
-            .groupBy("email")
-            .agg(F.max("_epoch").alias("_del_epoch"))
-        )
-        state["men"] = (
-            raw.join(F.broadcast(dels), "email", "left")
-            .where(
-                F.col("_del_epoch").isNull()
-                | (F.col("_epoch") > F.col("_del_epoch"))
-            )
-            .drop("_del_epoch", "_epoch", "_b")
-        )
-    return state
-
-
-def read_history_state(
-    spark: SparkSession, history_dir: str
-) -> Dict[str, DataFrame]:
-    """Resolved SCD2 history with G58 erasure tombstones (all-null value
-    rows per (email, valid_from)) filtered out after latest-wins
-    resolution. On a forget-free dir the filter is a no-op."""
-    state = read_state(spark, history_dir, tables=HISTORY_STATE_TABLES)
-    state["history"] = state["history"].where(F.col("cluster_id").isNotNull())
-    return state
-
-
-def compact_golden_state(spark: SparkSession, golden_dir: str) -> None:
-    """Rewrite the golden state's base with tombstones and the mention
-    ledger's eq-deletes APPLIED, then drop the ledger — the erased
-    mentions are physically gone from storage (erasure-SLA end state)."""
-    import shutil
-
-    write_state_mor(
-        read_golden_state(spark, golden_dir),
-        golden_dir,
-        tables=GOLDEN_STATE_TABLES,
-        mode="overwrite",
-        merge_keys=GOLDEN_STATE_KEYS,
-        bucket_keys=GOLDEN_BUCKET_KEYS,
-    )
-    shutil.rmtree(f"{golden_dir}/deletes", ignore_errors=True)
-
-
-def compact_history_state(spark: SparkSession, history_dir: str) -> None:
-    """Rewrite the SCD2 history base with erasure tombstones applied —
-    the forgotten rows are physically removed."""
-    write_state_mor(
-        read_history_state(spark, history_dir),
-        history_dir,
-        tables=HISTORY_STATE_TABLES,
-        mode="overwrite",
-        merge_keys=HISTORY_STATE_KEYS,
-        bucket_keys={},
-    )
-
-
-def _golden_tombstone_rows(upserts: DataFrame, tombstones: DataFrame) -> DataFrame:
-    """Tombstone ids as all-null golden rows in the upsert frame's schema."""
-    nulls = [
-        F.lit(None).cast(f.dataType).alias(f.name)
-        for f in upserts.schema.fields
-        if f.name != "cluster_id"
-    ]
-    return tombstones.select("cluster_id", *nulls)
-
-
-def streaming_cluster_maintenance(
-    transcript_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    compact_every: int = 0,
-    golden_dir: str = None,
-    history_dir: str = None,
-    **fold_kwargs,
-):
-    """writeStream query folding each transcript micro-batch into
-    `state_dir`. Returns the started StreamingQuery (availableNow trigger:
-    drain what exists, then stop — swap for a processingTime trigger in a
-    long-running deployment).
-
-    Per-batch state I/O is BATCH-SIZED: only `fold_batch`'s update frames
-    are appended (merge-on-read, module docstring). Crash-replay stays
-    exactly-once: a replayed batch's already-folded emails drain through the
-    new-email anti-join, so its appended updates are value-identical rows at
-    a higher epoch — latest-wins resolution makes the replay a no-op.
-
-    compact_every > 0 runs the measured compaction cadence inline: after a
-    fold commits, `compact_if_needed` rewrites the base once that many
-    epochs have accumulated (value-neutral — pinned by the cadence test).
-
-    golden_dir != None co-maintains the G42 golden-record state: the
-    survivorship fold (upserts for touched clusters, tombstones for
-    merged-away ids, ledger append) runs off the same micro-batch and its
-    batch-sized update frames are MATERIALIZED before either state dir is
-    appended — the golden fold's lazy plans read the pre-write cluster
-    state, so the write order can never feed a fold its own output. Replay
-    safety composes the same way: a replayed batch drains through the
-    mention-key anti-join, so its golden upserts are value-identical rows
-    at a higher epoch.
-
-    history_dir != None co-maintains the G43 SCD2 membership history off
-    the cluster fold's batch-sized assignment DELTA (emails absent from the
-    delta keep their rows — the property tests/test_history.py pins as
-    delta == full view). The fold's epoch is the history dir's own next
-    epoch, so a crash-replay that did not reach the history append re-folds
-    at the SAME epoch and produces byte-identical rows, while a replay
-    after a completed append drains to zero updates (re-fold no-op)."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        # erasure-aware read (drop-in superset of read_state): folds compose
-        # with G58 forgets — a forgotten email arriving in a later batch is
-        # NEW again, and decremented dims enter the count merges directly
-        state = read_er_state(spark, state_dir)
-        new_mentions = None
-        if golden_dir:
-            from ..operators.extract import extract_mentions, with_canonical
-
-            new_mentions = with_canonical(extract_mentions(batch_df))
-        out = fold_batch(
-            spark, batch_df, state, new_mentions=new_mentions, **fold_kwargs
-        )
-        g_updates = None
-        if golden_dir:
-            gout = fold_golden(
-                spark,
-                new_mentions,
-                out["delta"],
-                out["clusters"],
-                state["clusters"],
-                read_golden_state(spark, golden_dir),
-            )
-            # materialize the batch-sized golden updates BEFORE any append
-            g_updates = {
-                "men": gout["new_men"].localCheckpoint(),
-                "golden": gout["golden_upserts"]
-                .unionByName(
-                    _golden_tombstone_rows(
-                        gout["golden_upserts"], gout["golden_tombstones"]
-                    )
-                )
-                .localCheckpoint(),
-            }
-        h_updates = None
-        if history_dir:
-            from ..operators.history import fold_history
-
-            hist = read_history_state(spark, history_dir)
-            hout = fold_history(
-                hist["history"], out["delta"], _read_epoch(history_dir) + 1
-            )
-            h_updates = {"history": hout["updates"].localCheckpoint()}
-        write_state_mor(out["updates"], state_dir)
-        if g_updates is not None:
-            write_state_mor(
-                g_updates,
-                golden_dir,
-                tables=GOLDEN_STATE_TABLES,
-                merge_keys=GOLDEN_STATE_KEYS,
-                bucket_keys=GOLDEN_BUCKET_KEYS,
-            )
-        if h_updates is not None:
-            write_state_mor(
-                h_updates,
-                history_dir,
-                tables=HISTORY_STATE_TABLES,
-                merge_keys=HISTORY_STATE_KEYS,
-                bucket_keys={},
-            )
-        if compact_every:
-            compact_if_needed(spark, state_dir, every_k_epochs=compact_every)
-
-    return (
-        transcript_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def bootstrap_dedup_state(
-    spark: SparkSession,
-    docs: DataFrame,
-    state_dir: str,
-    **fold_kwargs,
-) -> None:
-    write_state_mor(
-        build_dedup_state(spark, docs, **fold_kwargs),
-        state_dir,
-        tables=DEDUP_STATE_TABLES,
-        mode="overwrite",
-        merge_keys=DEDUP_STATE_KEYS,
-        bucket_keys=DEDUP_BUCKET_KEYS,
-    )
-
-
-def streaming_dedup_maintenance(
-    doc_stream: DataFrame,
-    state_dir: str,
-    checkpoint_dir: str,
-    **fold_kwargs,
-):
-    """G26's fold as a foreachBatch consumer: each document micro-batch is
-    deduplicated against the persisted keep-best state and folded in — same
-    exactly-once composition (checkpoint replay × re-fold idempotency) and
-    same batch-sized merge-on-read state writes as
-    `streaming_cluster_maintenance`: bands/grams/meta append the batch's
-    rows, clusters appends latest-wins rows for touched ids only."""
-
-    def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        out = fold_docs(
-            spark,
-            batch_df,
-            read_state(
-                spark, state_dir,
-                tables=DEDUP_STATE_TABLES, merge_keys=DEDUP_STATE_KEYS,
-            ),
-            **fold_kwargs,
-        )
-        write_state_mor(
-            out["updates"],
-            state_dir,
-            tables=DEDUP_STATE_TABLES,
-            merge_keys=DEDUP_STATE_KEYS,
-            bucket_keys=DEDUP_BUCKET_KEYS,
-        )
-
-    return (
-        doc_stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

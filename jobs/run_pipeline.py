@@ -7,7 +7,7 @@ The north-rule deployment shape:
     spark-submit --master <cluster> \\
         --py-files dist/eaps.zip \\
         jobs/run_pipeline.py \\
-        --input  <transcripts parquet/iceberg path | testdata sf dir> \\
+        --input  <transcripts parquet path | testdata sf dir> \\
         --checkpoint-dir <stage store> --output <clusters table>
 
 Reads the transcripts table (input_hint schema: conv_id, turn_idx, role,

@@ -2,7 +2,7 @@
 
 The corpus files are stored as escaped Rust-string-literal fragments: the build
 script embeds each line verbatim into a Rust string literal
-(/root/reference/rust-lib/build.rs:77-84), so '\\"' means '"' and '\\\\' means
+(the reference's rust-lib/build.rs:77-84), so '\\"' means '"' and '\\\\' means
 '\\'. Decoder parity: npm-packages/regex/tests/email-regex.spec.ts:25-28.
 
 The isemail XML corpus encodes control characters as U+2400-block symbols,

@@ -35,22 +35,6 @@ def count_exchanges(df: DataFrame) -> int:
     )
 
 
-def assert_no_exchange_before(df: DataFrame, op_marker: str) -> None:
-    """Assert no shuffle Exchange appears in the plan text BEFORE the first
-    line containing op_marker (plan text is printed top-down from the output
-    operator, so 'before' = downstream of the marker — use with markers that
-    identify the consumer of the narrow stage)."""
-    plan = explain_str(df, "simple")
-    lines = plan.splitlines()
-    for line in lines:
-        if op_marker in line:
-            return
-        assert not (
-            "Exchange" in line and "BroadcastExchange" not in line
-        ), f"unexpected shuffle Exchange above {op_marker!r}:\n{plan}"
-    raise AssertionError(f"marker {op_marker!r} not found in plan:\n{plan}")
-
-
 def has_partial_window_group_limit(df: DataFrame) -> bool:
     """True when Spark planned a WindowGroupLimit in Partial mode below the
     exchange — the 'pre-top-k per partition' optimization for

@@ -10,7 +10,7 @@ from email_address_parser_spark.operators.blocking import candidate_pairs
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
 from email_address_parser_spark.operators.scoring import match_edges, score_pairs
 from email_address_parser_spark.pipeline import cluster_mentions, resolve
-from email_address_parser_spark.synth import synthesize
+from tests.synth import synthesize
 
 BLOCKING = dict(hot_threshold=50, target_block_size=40)
 

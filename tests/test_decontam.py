@@ -54,7 +54,7 @@ def test_decontam_benchmark_side_is_broadcast(spark):
     """The benchmark gram set must ride a BroadcastExchange: the corpus-side
     gram stream is never shuffled for the probe join — its only Exchange is
     the final groupBy(doc_id)."""
-    from email_address_parser_spark.plans import explain_str
+    from tests.plans import explain_str
 
     train = _df(spark, [(i, f"w{i} x y z q r s t u v") for i in range(50)])
     bench = _df(spark, [(999, "x y z q r s t u v w")])
@@ -67,7 +67,7 @@ def test_decontam_size_gate_falls_back_to_shuffled_join(spark):
     """Above the broadcast gate (a 10M-example benchmark's gram dim can
     exceed executor memory) the probe must run as a shuffled join, NOT a
     broadcast — same result either way."""
-    from email_address_parser_spark.plans import explain_str
+    from tests.plans import explain_str
 
     train = _df(spark, [(i, f"w{i} x y z q r s t u v") for i in range(20)])
     bench = _df(spark, [(999, "x y z q r s t u v w")])
@@ -82,7 +82,7 @@ def test_decontam_size_gate_falls_back_to_shuffled_join(spark):
 def test_decontam_gate_measures_when_unset(spark):
     """broadcast_grams=None measures the dim: a gate of 0 distinct grams
     forces the shuffled plan; the default (5M) keeps the broadcast."""
-    from email_address_parser_spark.plans import explain_str
+    from tests.plans import explain_str
 
     train = _df(spark, [(1, "a b c d e f g h i j")])
     bench = _df(spark, [(9, "c d e f g h i j k l")])

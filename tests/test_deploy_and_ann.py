@@ -1,5 +1,5 @@
-"""IVF ANN recall, iceberg adapter fallback, checkpoint counters, and the
-spark-submit job entry point."""
+"""IVF ANN recall, checkpoint counters, and the spark-submit job entry
+point."""
 
 from __future__ import annotations
 
@@ -38,23 +38,9 @@ def test_ivf_topk_recall_vs_brute_force(spark):
     assert len(exact & got) >= 3
 
 
-def test_iceberg_adapter_parquet_fallback(spark, tmp_path):
-    from email_address_parser_spark.sources.iceberg import (
-        iceberg_available,
-        read_table,
-        write_table,
-    )
-
-    assert not iceberg_available(spark)  # no catalog in the sandbox
-    df = spark.createDataFrame([Row(a=1), Row(a=2)])
-    path = str(tmp_path / "t")
-    write_table(df, path)
-    assert sorted(r.a for r in read_table(spark, path).collect()) == [1, 2]
-
-
 def test_checkpoint_manifest_counters(spark, tmp_path):
     from email_address_parser_spark.pipeline import PipelineConfig, run_pipeline
-    from email_address_parser_spark.synth import synthesize
+    from tests.synth import synthesize
 
     corpus = synthesize(n_convs=30, turns_per_conv=5, n_entities=10, seed=3)
     sdf = spark.createDataFrame(corpus.transcripts)

@@ -8,7 +8,7 @@ import pytest
 from email_address_parser_spark.functions.udfs import extract_candidates, parse_batch
 from email_address_parser_spark.kernel.parser import parse_email
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
-from email_address_parser_spark.synth import synthesize
+from tests.synth import synthesize
 
 
 def test_parse_batch_agrees_with_scalar_kernel():

@@ -1,17 +1,13 @@
-"""G58 right-to-be-forgotten contract (operators/forget.py +
-streaming/incremental_stream.py erasure-aware state IO).
+"""G58 right-to-be-forgotten contract (operators/forget.py).
 
 The exactness claim: forgetting an identity leaves state ROW-IDENTICAL to a
 from-scratch build over the corpus with that identity's mentions removed —
 for every table, not just clusters — and subsequent folds behave as if the
 identity had never existed (until its address lawfully reappears in new
-data, which re-creates it). On disk the erasure is one batch-sized append
-epoch; compaction physically removes the rows.
+data, which re-creates it).
 """
 
 from __future__ import annotations
-
-from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -26,20 +22,7 @@ from email_address_parser_spark.operators.incremental import (
     build_incremental_state,
     fold_batch,
 )
-from email_address_parser_spark.streaming.incremental_stream import (
-    bootstrap_golden_state,
-    bootstrap_history_state,
-    bootstrap_state,
-    compact_er_state,
-    compact_golden_state,
-    compact_history_state,
-    forget_identities,
-    read_er_state,
-    read_golden_state,
-    read_history_state,
-    write_state_mor,
-)
-from email_address_parser_spark.synth import synthesize
+from tests.synth import synthesize
 
 FOLD_KW = dict(hot_threshold=1 << 40, target_block_size=5_000)
 
@@ -91,57 +74,20 @@ def test_forget_apply_equals_from_scratch_everywhere(spark, corpus):
         ), table
 
 
-def test_disk_forget_is_batch_sized_append_and_idempotent(
-    spark, corpus, tmp_path
-):
-    prev_t, _ = corpus
-    state_dir = str(tmp_path / "state")
-    bootstrap_state(spark, prev_t, state_dir, **FOLD_KW)
-    base_files = {
-        t: {str(p) for p in (Path(state_dir) / t).rglob("*.parquet")}
-        for t in STATE_TABLES
-    }
-    before = read_er_state(spark, state_dir)
-    n_uniq_before = before["uniq"].count()
-    target = _target(before)
-
-    doomed = forget_identities(spark, state_dir, target).persist()
-    n_doomed = doomed.count()
-    assert 1 < n_doomed < n_uniq_before / 2  # batch-sized erasure surface
-
-    # pure append: every base file survives
-    for t in STATE_TABLES:
-        now = {str(p) for p in (Path(state_dir) / t).rglob("*.parquet")}
-        assert base_files[t] <= now
-    # ledger written and applied with sequence semantics
-    assert (Path(state_dir) / "deletes").is_dir()
-    after = read_er_state(spark, state_dir)
-    assert after["uniq"].count() == n_uniq_before - n_doomed
-    assert _rows(after["clusters"]) == _rows(
-        before["clusters"].join(doomed.select("email"), "email", "left_anti")
-    )
-    # the erased identity's reps/count contributions are gone
-    assert after["reps"].join(doomed.select("email"), "email").count() == 0
-
-    # idempotent: the targets no longer resolve to any cluster
-    again = forget_identities(spark, state_dir, target)
-    assert again.count() == 0
-
-
-def test_fold_after_forget_equals_from_scratch(spark, corpus, tmp_path):
+def test_fold_after_forget_equals_from_scratch(spark, corpus):
+    """forget_apply (the apply er_forget runs) then fold_batch equals a
+    from-scratch build over the reduced corpus plus the batch."""
     prev_t, new_t = corpus
-    state_dir = str(tmp_path / "state")
-    bootstrap_state(spark, prev_t, state_dir, **FOLD_KW)
-    state0 = read_er_state(spark, state_dir)
-    doomed = forget_identities(spark, state_dir, _target(state0)).persist()
+    prev_m = with_canonical(extract_mentions(prev_t)).persist()
+    state = build_incremental_state(spark, prev_t, mentions=prev_m, **FOLD_KW)
+    payload = forget_payload(state, _target(state))
+    doomed = payload["doomed"].persist()
 
-    out = fold_batch(spark, new_t, read_er_state(spark, state_dir), **FOLD_KW)
-    write_state_mor(out["updates"], state_dir)
+    out = fold_batch(spark, new_t, forget_apply(state, payload), **FOLD_KW)
 
     # from-scratch model: (prev mentions minus the erased identity) ∪ the
     # batch's mentions IN FULL — a forgotten address reappearing in new data
     # is new data and lawfully re-creates an identity
-    prev_m = with_canonical(extract_mentions(prev_t))
     new_m = with_canonical(extract_mentions(new_t))
     want = build_incremental_state(
         spark,
@@ -149,96 +95,17 @@ def test_fold_after_forget_equals_from_scratch(spark, corpus, tmp_path):
         mentions=_reduced_mentions(prev_m, doomed).unionByName(new_m),
         **FOLD_KW,
     )
-    got = read_er_state(spark, state_dir)
-    assert _rows(got["clusters"]) == _rows(want["clusters"])
+    cols = ["email", "cluster_id"]
+    assert _rows(out["clusters"], cols) == _rows(want["clusters"], cols)
     # reappeared doomed addresses (the synth entity pool spans the conv
     # split, so some always reappear) are clustered again post-fold
     reappeared = new_m.join(doomed.select("email"), "email").select("email")
     n_re = reappeared.distinct().count()
     assert n_re > 0
-    assert got["clusters"].join(reappeared, "email").select(
+    assert out["clusters"].join(reappeared, "email").select(
         "email"
     ).distinct().count() == n_re
-    # ...and each reappeared email has exactly ONE live uniq row (the
-    # post-erasure one: the eq-delete kills every older epoch)
-    live = got["uniq"].join(reappeared.distinct(), "email")
+    # ...and each reappeared email has exactly ONE uniq row: the forget
+    # removed the old one, so the fold's new-email anti-join re-adds it
+    live = out["state"]["uniq"].join(reappeared.distinct(), "email")
     assert live.count() == n_re
-
-
-def test_forget_cascades_to_golden_and_history(spark, corpus, tmp_path):
-    prev_t, _ = corpus
-    state_dir = str(tmp_path / "state")
-    golden_dir = str(tmp_path / "golden")
-    history_dir = str(tmp_path / "history")
-    bootstrap_state(spark, prev_t, state_dir, **FOLD_KW)
-    cstate = read_er_state(spark, state_dir)
-    bootstrap_golden_state(spark, prev_t, cstate, golden_dir)
-    bootstrap_history_state(spark, cstate, history_dir)
-    n_hist_before = read_history_state(spark, history_dir)["history"].count()
-
-    doomed = forget_identities(
-        spark,
-        state_dir,
-        _target(cstate),
-        golden_dir=golden_dir,
-        history_dir=history_dir,
-    ).persist()
-    n_doomed = doomed.count()
-    assert n_doomed > 1
-
-    # golden: the doomed clusters' records and ledger mentions are gone,
-    # and what remains equals from-scratch survivorship over the surviving
-    # clustering + the surviving mention ledger
-    from email_address_parser_spark.operators.survivorship import golden_records
-
-    g = read_golden_state(spark, golden_dir)
-    assert g["golden"].join(doomed.select("cluster_id"), "cluster_id").count() == 0
-    assert g["men"].join(doomed.select("email"), "email").count() == 0
-    mentions = with_canonical(extract_mentions(prev_t))
-    want_golden = golden_records(
-        _reduced_mentions(mentions, doomed),
-        read_er_state(spark, state_dir)["clusters"],
-    )
-    assert _rows(g["golden"], sorted(g["golden"].columns)) == _rows(
-        want_golden, sorted(want_golden.columns)
-    )
-
-    # history: every row (open AND closed) of the doomed emails is gone;
-    # everyone else's rows are untouched
-    h = read_history_state(spark, history_dir)["history"]
-    assert h.join(doomed.select("email"), "email").count() == 0
-    assert h.count() == n_hist_before - n_doomed
-
-    # compaction physically removes the erased rows in both dirs
-    compact_golden_state(spark, golden_dir)
-    compact_history_state(spark, history_dir)
-    assert not (Path(golden_dir) / "deletes").exists()
-    g2 = read_golden_state(spark, golden_dir)
-    assert _rows(g2["golden"], sorted(g2["golden"].columns)) == _rows(
-        want_golden, sorted(want_golden.columns)
-    )
-    for d, t in ((golden_dir, "men"), (history_dir, "history")):
-        raw = spark.read.parquet(f"{d}/{t}")
-        assert raw.join(doomed.select("email"), "email").count() == 0
-
-
-def test_compaction_applies_erasure_physically(spark, corpus, tmp_path):
-    prev_t, _ = corpus
-    state_dir = str(tmp_path / "state")
-    bootstrap_state(spark, prev_t, state_dir, **FOLD_KW)
-    forget_identities(
-        spark, state_dir, _target(read_er_state(spark, state_dir))
-    )
-    want = {
-        t: _rows(df, sorted(df.columns))
-        for t, df in read_er_state(spark, state_dir).items()
-    }
-
-    compact_er_state(spark, state_dir)
-    assert not (Path(state_dir) / "deletes").exists()
-    got = read_er_state(spark, state_dir)
-    for t in STATE_TABLES:
-        assert _rows(got[t], sorted(got[t].columns)) == want[t], t
-        # physically erased: raw rows == resolved rows (no dead versions)
-        raw = spark.read.parquet(f"{state_dir}/{t}").drop("_epoch", "_b")
-        assert raw.count() == got[t].count(), t

@@ -26,7 +26,7 @@ from email_address_parser_spark.operators.incremental import (
 )
 from email_address_parser_spark.operators.scoring import DEFAULT_THRESHOLD, score_pairs
 from email_address_parser_spark.pipeline import resolve
-from email_address_parser_spark.synth import synthesize
+from tests.synth import synthesize
 
 
 def _as_set(df):

@@ -18,7 +18,7 @@ from email_address_parser_spark.operators.incremental_golden import (
     fold_golden,
 )
 from email_address_parser_spark.operators.survivorship import golden_records
-from email_address_parser_spark.synth import synthesize
+from tests.synth import synthesize
 
 
 @pytest.fixture(scope="module")

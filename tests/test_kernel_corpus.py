@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import pytest
 
-from email_address_parser_spark.kernel.corpus import (
+from tests.corpus import (
     read_corpus_lines,
     read_isemail_corpus,
 )

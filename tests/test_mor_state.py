@@ -1,5 +1,4 @@
-"""Merge-on-read state-store contract (streaming/incremental_stream.py +
-operators/incremental_ann.py cell-partitioned layout).
+"""Merge-on-read state-store contract (streaming/incremental_stream.py).
 
 The round-4 claim under test: **fold writes are batch-sized**, proven on
 disk rather than by reference to prod Iceberg MERGE. Three properties:
@@ -11,10 +10,6 @@ disk rather than by reference to prod Iceberg MERGE. Three properties:
      full-view state exactly;
   3. `compact_state` preserves the resolved view while resetting the layout
      to a single epoch-0 base (read-amplification maintenance).
-
-Plus the G27 analog: the IVF `assigned` table is PARTITIONED BY CELL, so a
-fold's append writes files only under the cells its batch lands in and the
-resolved index answers top-k identically to the in-memory state.
 """
 
 from __future__ import annotations
@@ -33,12 +28,12 @@ from email_address_parser_spark.operators.incremental import (
 from email_address_parser_spark.streaming.incremental_stream import (
     DEDUP_BUCKET_KEYS,
     DEDUP_STATE_KEYS,
-    _read_epoch,
+    _read_meta,
     compact_state,
     read_state,
     write_state_mor,
 )
-from email_address_parser_spark.synth import synthesize
+from tests.synth import synthesize
 
 FOLD_KW = dict(hot_threshold=1 << 40, target_block_size=5_000)
 
@@ -100,7 +95,7 @@ def test_fold_append_is_batch_sized_and_resolves_exactly(spark, corpus, tmp_path
 
     # property 3: compaction preserves the view at a single epoch-0 base
     compact_state(spark, state_dir)
-    assert _read_epoch(state_dir) == 0
+    assert _read_meta(state_dir)["epoch"] == 0
     compacted = read_state(spark, state_dir)
     assert {
         (r["email"], r["cluster_id"]) for r in compacted["clusters"].collect()
@@ -171,99 +166,3 @@ def test_dedup_fold_mor_roundtrip(spark, tmp_path):
     # meta is append-only: appended rows == the batch's genuinely-new docs
     raw_meta = spark.read.parquet(f"{state_dir}/meta").count()
     assert raw_meta == 30 + update_counts["meta"]
-
-
-def test_ivf_state_partitioned_by_cell(spark, tmp_path):
-    """G27: `assigned` persists PARTITIONED BY CELL; a fold's append creates
-    files only under the cells its batch lands in, and top-k over the
-    re-read state equals top-k over the in-memory state."""
-    import numpy as np
-
-    from email_address_parser_spark.operators.incremental_ann import (
-        append_ivf_delta,
-        build_ivf_state,
-        fold_embeddings,
-        ivf_topk_from_state,
-        read_ivf_state,
-        write_ivf_state,
-    )
-
-    rng = np.random.RandomState(3)
-    vecs = rng.randn(60, 8).round(3)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(60)],
-        "vec_id long, embedding array<double>",
-    )
-    prev, batch = df.where("vec_id < 48"), df.where("vec_id >= 48")
-    state = build_ivf_state(spark, prev, n_centroids=4)
-    state_dir = str(tmp_path / "ivf")
-    write_ivf_state(state, state_dir)
-
-    def cells_on_disk():
-        return {
-            p.name
-            for p in (Path(state_dir) / "assigned").iterdir()
-            if p.name.startswith("cell=")
-        }
-
-    before_files = _snapshot(state_dir, "assigned")
-    out = fold_embeddings(spark, batch, read_ivf_state(spark, state_dir))
-    delta_cells = {
-        f"cell={r['cell']}" for r in out["delta"].select("cell").distinct().collect()
-    }
-    append_ivf_delta(out["delta"], state_dir)
-    after_files = _snapshot(state_dir, "assigned")
-    # pure append, and every new file sits under a cell the batch landed in
-    assert set(before_files) <= set(after_files)
-    new_files = set(after_files) - set(before_files)
-    assert new_files
-    assert all(f.split("/")[0] in delta_cells for f in new_files)
-    assert cells_on_disk() >= delta_cells
-
-    queries = [50, 55]
-    got = ivf_topk_from_state(
-        read_ivf_state(spark, state_dir), queries, k=5, n_probe=2
-    )
-    want = ivf_topk_from_state(out["state"], queries, k=5, n_probe=2)
-    assert sorted(map(tuple, got.collect())) == sorted(map(tuple, want.collect()))
-
-
-def test_compact_if_needed_cadence(spark, corpus, tmp_path):
-    """The policy wrapper fires exactly on the K-th append epoch, resets the
-    epoch counter to 0 (a fresh base), and the resolved state it rewrites is
-    row-identical to the pre-compaction resolved view."""
-    from email_address_parser_spark.streaming.incremental_stream import (
-        compact_if_needed,
-    )
-
-    prev_t, new_t = corpus
-    state_dir = str(tmp_path / "state")
-    write_state_mor(
-        build_incremental_state(spark, prev_t, **FOLD_KW),
-        state_dir,
-        mode="overwrite",
-    )
-    assert _read_epoch(state_dir) == 0
-    assert compact_if_needed(spark, state_dir, every_k_epochs=2) is False
-
-    halves = [
-        new_t.where(F.pmod(F.xxhash64("turn_idx"), F.lit(2)) == i) for i in (0, 1)
-    ]
-    for batch in halves:
-        out = fold_batch(spark, batch, read_state(spark, state_dir), **FOLD_KW)
-        write_state_mor(out["updates"], state_dir, mode="append")
-    assert _read_epoch(state_dir) == 2
-
-    before = {
-        t: sorted(map(tuple, read_state(spark, state_dir)[t].collect()))
-        for t in ("reps", "clusters")
-    }
-    assert compact_if_needed(spark, state_dir, every_k_epochs=2) is True
-    assert _read_epoch(state_dir) == 0
-    after = {
-        t: sorted(map(tuple, read_state(spark, state_dir)[t].collect()))
-        for t in ("reps", "clusters")
-    }
-    assert before == after
-    # freshly compacted: the policy is quiet again
-    assert compact_if_needed(spark, state_dir, every_k_epochs=2) is False

@@ -10,7 +10,7 @@ import pytest
 
 from email_address_parser_spark.operators.scoring import jaro_winkler_similarity
 from email_address_parser_spark.pipeline import PipelineConfig, resolve, run_pipeline
-from email_address_parser_spark.synth import synthesize
+from tests.synth import synthesize
 
 
 @pytest.fixture(scope="module")

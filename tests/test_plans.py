@@ -1,4 +1,4 @@
-"""Physical-plan shape tests (email_address_parser_spark.plans helpers).
+"""Physical-plan shape tests (tests/plans.py helpers).
 
 Results matching is not enough at 100 TB — these tests fail when a plan
 regression reintroduces a shuffle or drops a partial top-k, even if the rows
@@ -22,7 +22,7 @@ def test_brute_force_topk_has_partial_window_group_limit(spark):
     BELOW the exchange (SPARK-37099): the shuffle carries ~k rows per
     (partition, query) instead of the full |corpus| x |queries| product."""
     from email_address_parser_spark.operators.similarity import brute_force_topk
-    from email_address_parser_spark.plans import has_partial_window_group_limit
+    from tests.plans import has_partial_window_group_limit
 
     df = brute_force_topk(_emb(spark), list(range(4)), k=5)
     df.write.format("noop").mode("overwrite").save()  # finalize AQE plan
@@ -35,7 +35,7 @@ def test_ivf_corpus_side_has_no_shuffle(spark):
     Exchange (the round-1 crossJoin+window formulation shuffled the corpus
     x n_centroids — VERDICT.md 'What's wrong' #4)."""
     from email_address_parser_spark.operators.similarity import ivf_topk
-    from email_address_parser_spark.plans import explain_str
+    from tests.plans import explain_str
 
     df = ivf_topk(_emb(spark), list(range(4)), k=5, n_centroids=8, n_probe=2)
     plan = explain_str(df, "simple")
@@ -56,7 +56,7 @@ def test_media_metadata_scan_prunes_payload_readschema(spark, tmp_path):
         attach_image_payload,
         media_metadata,
     )
-    from email_address_parser_spark.plans import scan_read_schema
+    from tests.plans import scan_read_schema
 
     docs = spark.createDataFrame([Row(doc_id=1, text="prune me")])
     path = str(tmp_path / "media")
@@ -70,7 +70,7 @@ def test_q1_scan_prunes_and_pushes_filter(spark):
     columns and push the shipdate filter into the scan."""
     import __spark_entry__ as entry
 
-    from email_address_parser_spark.plans import explain_str, scan_read_schema
+    from tests.plans import explain_str, scan_read_schema
 
     df = entry.queries()["q1_pricing_summary"](spark, SF_DIR)
     cols = scan_read_schema(df)
@@ -89,7 +89,7 @@ def test_minhash_near_dup_single_signature_pass(spark):
     cannot reuse exchanges across pandas-UDF subtrees, so a bucket
     self-join would silently double the most expensive pass at 100 TB."""
     from email_address_parser_spark.operators.dedup import minhash_near_dup
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
     from email_address_parser_spark.sources.testdata import load_table
 
     df = minhash_near_dup(load_table(spark, SF_DIR, "documents"), threshold=0.2)
@@ -106,7 +106,7 @@ def test_pack_sequences_sharded_window_and_invariance(spark):
     from pyspark.sql import Row
 
     from email_address_parser_spark.operators.sampling import pack_sequences
-    from email_address_parser_spark.plans import explain_str
+    from tests.plans import explain_str
 
     docs = spark.createDataFrame(
         [Row(doc_id=i, source="s0", n_tokens=100 + i) for i in range(64)]
@@ -132,7 +132,7 @@ def test_kmv_sketch_two_level_and_invariance(spark):
     from pyspark.sql import Row
 
     from email_address_parser_spark.operators.sampling import kmv_sketch
-    from email_address_parser_spark.plans import explain_str
+    from tests.plans import explain_str
 
     rows = [
         Row(grp="g0", v=f"val{i}") for i in range(500)
@@ -163,7 +163,7 @@ def test_candidate_pairs_no_dedup_above_union(spark):
         extract_mentions,
         with_canonical,
     )
-    from email_address_parser_spark.plans import explain_str
+    from tests.plans import explain_str
     from email_address_parser_spark.sources.testdata import derive_transcripts
 
     mentions = with_canonical(extract_mentions(derive_transcripts(spark, SF_DIR)))
@@ -189,7 +189,7 @@ def test_blocking_channels_read_one_persisted_dim(spark):
         extract_mentions,
         with_canonical,
     )
-    from email_address_parser_spark.plans import explain_str
+    from tests.plans import explain_str
     from email_address_parser_spark.sources.testdata import derive_transcripts
 
     mentions = with_canonical(extract_mentions(derive_transcripts(spark, SF_DIR)))
@@ -305,7 +305,7 @@ def test_sessionize_and_rollup_share_one_exchange(spark):
     key on user_id, so Catalyst must reuse the same partitioning for all
     three (a second exchange means the rollup lost the co-partitioning)."""
     from email_address_parser_spark.operators.sessions import session_stats
-    from email_address_parser_spark.plans import count_exchanges
+    from tests.plans import count_exchanges
     from email_address_parser_spark.sources.testdata import load_table
 
     df = session_stats(load_table(spark, SF_DIR, "events"), gap_s=3600)
@@ -319,7 +319,7 @@ def test_asof_join_single_exchange_no_range_join(spark):
     from pyspark.sql import functions as F
 
     from email_address_parser_spark.operators.asof import asof_join
-    from email_address_parser_spark.plans import count_exchanges, explain_str
+    from tests.plans import count_exchanges, explain_str
     from email_address_parser_spark.sources.testdata import load_table
 
     ev = load_table(spark, SF_DIR, "events")
@@ -336,7 +336,7 @@ def test_stratified_sample_plans_window_group_limit(spark):
     """rank-then-filter per stratum must become WindowGroupLimit (a
     per-stratum top-n heap), not a full per-stratum sort + filter."""
     from email_address_parser_spark.operators.sampling import stratified_sample
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
     from email_address_parser_spark.sources.testdata import load_table
 
     df = stratified_sample(
@@ -352,7 +352,7 @@ def test_collocations_global_topk_plans_take_ordered(spark):
     sees the k survivors — never a single-partition sort of the full
     min_count-filtered bigram set."""
     from email_address_parser_spark.operators.ranking import collocations_topk
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
     from email_address_parser_spark.sources.testdata import load_documents
 
     df = collocations_topk(load_documents(spark, SF_DIR), k=10, min_count=2)
@@ -368,7 +368,7 @@ def test_funnel_stages_share_key_partitioning(spark):
     import re
 
     from email_address_parser_spark.operators.funnel import funnel
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
     from email_address_parser_spark.sources.testdata import load_table
 
     df = funnel(load_table(spark, SF_DIR, "events"))
@@ -389,7 +389,7 @@ def test_hard_negatives_plans_take_ordered(spark):
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     df = mod.queries()["er_hard_negatives"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
@@ -402,7 +402,7 @@ def test_comention_all_joins_are_equi_joins(spark):
     CartesianProduct / BroadcastNestedLoopJoin (which would be the full
     |emails|^2 cross product at corpus scale)."""
     from email_address_parser_spark.operators.comention import comention_edges
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     from pyspark.sql import functions as F
 
@@ -421,7 +421,7 @@ def test_bcubed_is_join_free_of_cross_products(spark):
     """G45: cells/size-dim joins are keyed equi-joins and the reduce is a
     single-row aggregate — no cross product may appear anywhere."""
     from email_address_parser_spark.operators.evaluation import bcubed
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     pred = spark.createDataFrame(
         [("a", "1"), ("b", "1"), ("c", "2")], "email string, cluster_id string"
@@ -452,7 +452,7 @@ def test_threshold_sweep_windows_run_over_bucket_dim(spark):
     via a PARTIAL aggregate below its exchange; the cumulative windows (and
     their single-partition exchange) may only ever see that bucket dim,
     never the scored pairs."""
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     df = _entry_mod().queries()["er_threshold_sweep"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
@@ -472,7 +472,7 @@ def test_mention_provenance_single_arrow_stage_partial_agg(spark):
     """er_mention_provenance: role/tool ride extract_mentions' passthrough —
     exactly ONE ArrowEvalPython (the fused extract+parse stage, no join back
     to transcripts) and a map-side partial agg on the 3x3 cell."""
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     df = _entry_mod().queries()["er_mention_provenance"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
@@ -485,7 +485,7 @@ def test_block_skew_plans_take_ordered_and_broadcast_total(spark):
     """er_block_skew: the top-20 must be TakeOrderedAndProject over the
     block dim (never a global sort), and the single-row total must join by
     broadcast (never a shuffled or nested-loop join of the block dim)."""
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     df = _entry_mod().queries()["er_block_skew"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
@@ -501,7 +501,7 @@ def test_block_skew_plans_take_ordered_and_broadcast_total(spark):
 def test_entity_activity_joins_are_equi_joins(spark):
     """er_entity_activity: mention stream x cluster assignment must be an
     email equi-join; no cross product anywhere in the timeline plan."""
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     df = _entry_mod().queries()["er_entity_activity"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
@@ -513,7 +513,7 @@ def test_fs_weights_partial_agg_and_broadcast_totals(spark):
     """er_fs_weights: the labeled pair stream must collapse map-side to the
     <=16 pattern cells (partial agg below the exchange), and the 1-row
     totals must ride a broadcast — never a shuffled join of the cells."""
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     df = _entry_mod().queries()["er_fs_weights"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
@@ -530,7 +530,7 @@ def test_metablocking_partial_agg_no_cross_product(spark):
     """er_metablocking: the CBS weight count must combine map-side before
     the pair exchange, and nothing in the plan may degenerate to a cross
     product (the key join is an equi-join on the block key)."""
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     df = _entry_mod().queries()["er_metablocking"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
@@ -571,7 +571,7 @@ def test_domain_aliases_runs_on_dim_only(spark):
     """er_domain_aliases: every join is an equi-join (gram block join +
     winner window) — no cross product of the domain dim, and the mention
     stream is touched exactly once (the uniq groupBy)."""
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     df = _entry_mod().queries()["er_domain_aliases"](spark, SF_DIR)
     df.write.format("noop").mode("overwrite").save()
@@ -590,7 +590,7 @@ def test_snm_rank_is_range_partitioned_not_single_partition(spark):
     from pyspark.sql import functions as F
 
     from email_address_parser_spark.operators.snm import with_global_rank
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
     from email_address_parser_spark.sources.testdata import load_table
 
     keyed = (
@@ -620,7 +620,7 @@ def test_best_match_edges_single_window_exchange(spark):
     pairs — ONE hash exchange on the node key and no groupBy-max join-back
     (which would cost two)."""
     from email_address_parser_spark.operators.bestmatch import best_match_edges
-    from email_address_parser_spark.plans import count_exchanges, executed_plan
+    from tests.plans import count_exchanges, executed_plan
 
     scored = spark.createDataFrame(
         [("a", "b", 0.9), ("b", "c", 0.8)], ["email_a", "email_b", "score"]
@@ -636,7 +636,7 @@ def test_clk_dice_pairs_no_generate_fanout(spark):
     must contain NO Generate (explode) node; intersecting is AND/popcount
     expressions, not a per-position row fan-out."""
     from email_address_parser_spark.operators.pprl import clk_dice_pairs
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     clk = spark.createDataFrame(
         [("a", 3), ("a", 70), ("b", 3), ("b", 130)], ["email", "pos"]
@@ -651,7 +651,7 @@ def test_must_link_remap_is_broadcast(spark):
     """G62: the quotient remap joins back to the corpus-sized cluster table
     as a broadcast probe — never a shuffled join on the big side."""
     from email_address_parser_spark.operators.repair import must_link_merge
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     clusters = spark.createDataFrame(
         [("a", "a"), ("b", "a"), ("c", "c")], ["email", "cluster_id"]
@@ -670,7 +670,7 @@ def test_clk_lsh_cap_is_window_not_join_back(spark):
     band-keyed exchange on each side, i.e. the self-join reuses it
     instead of re-shuffling."""
     from email_address_parser_spark.operators.pprl import clk_encode, clk_lsh_pairs
-    from email_address_parser_spark.plans import executed_plan
+    from tests.plans import executed_plan
 
     rec = spark.createDataFrame(
         [("a", "john"), ("b", "john"), ("c", "kate")], ["email", "dotless"]

@@ -215,7 +215,7 @@ def test_rolling_window_inclusive_bounds_and_peers(spark):
 
 def test_rolling_single_exchange(spark):
     from email_address_parser_spark.operators.rolling import rolling_agg
-    from email_address_parser_spark.plans import count_exchanges
+    from tests.plans import count_exchanges
     from email_address_parser_spark.sources.testdata import load_table
 
     df = rolling_agg(load_table(spark, "/root/testdata/sf0.001", "events"))

@@ -178,13 +178,21 @@ def test_minhash_near_dup_recall(spark):
 def test_simhash_near_dup(spark):
     """For max_hamming <= 3 the 4x16 banding is recall-COMPLETE (pigeonhole),
     so the Spark result must equal a brute-force all-pairs hamming filter."""
-    from email_address_parser_spark.operators.dedup import simhash64, simhash_near_dup
+    from email_address_parser_spark.operators.dedup import (
+        simhash_batch,
+        simhash_near_dup,
+    )
 
-    # deterministic kernel
-    assert simhash64("the quick fox") == simhash64("the quick fox")
+    # deterministic kernel: a text's signature does not depend on its batch
+    assert simhash_batch(["the quick fox"])[0] == simhash_batch(
+        ["a b c", "the quick fox"]
+    )[1]
     corpus = _dup_corpus(spark)
     rows = corpus.collect()
-    sigs = {r.doc_id: simhash64(r.text) for r in rows}
+    sigs = {
+        r.doc_id: int(sig)
+        for r, sig in zip(rows, simhash_batch([r.text for r in rows]))
+    }
     expected = {}
     ids = sorted(sigs)
     for i, a in enumerate(ids):
