@@ -25,7 +25,12 @@ from email_address_parser_spark import oracles as _oracles
 from email_address_parser_spark.operators.blocking import LOCAL_MAX_BLOCK, candidate_pairs
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
 from email_address_parser_spark.operators.scoring import match_edges, score_pairs
-from email_address_parser_spark.pipeline import cluster_mentions, resolve
+from email_address_parser_spark.pipeline import (
+    HOT_THRESHOLD,
+    TARGET_BLOCK,
+    cluster_mentions,
+    resolve,
+)
 from email_address_parser_spark.sources.testdata import (
     MENTIONS_EXPECTED_CTE,
     derive_transcripts,
@@ -176,11 +181,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # with G40 survivorship; only touched clusters recompute)
         "er_golden_record_incr": _er_golden_record_incr,
         # batch-incremental cluster maintenance: fold the held-out 20% of
-        # conversations into state bootstrapped from the other 80%. Every
-        # derived dim (reps, domain counts, LSH bucket counts) is merged
-        # from persisted state instead of re-aggregated, and the fold emits
-        # a delta; the oracle is the FULL-corpus clustering, so a
-        # triple-match proves fold == from-scratch clustering
+        # conversations into state bootstrapped from the other 80%, at the
+        # production blocking config. Key reps are merged from state, every
+        # blocking count is taken over the reps slice the fold reads, and
+        # the fold emits a delta; the oracle is the FULL-corpus clustering,
+        # so a triple-match proves fold == from-scratch clustering
         "er_incremental_fold": _er_incremental_fold,
         "er_forget": _er_forget,
         "er_threshold_clusters": _er_threshold_clusters,
@@ -841,13 +846,14 @@ def _er_comention(spark: SparkSession, sf: str) -> DataFrame:
 
 def _er_incremental_fold(spark: SparkSession, sf: str) -> DataFrame:
     """G24 batch-incremental cluster maintenance (operators/incremental.py
-    `fold_batch`): bootstrap the fold state (uniq + reps + domain_counts +
-    bucket_counts + clusters) from the ~80% split, then fold the ~20% batch
-    in. Every derived statistic is min-/count-merged from state rather than
-    re-aggregated over the corpus dim, and the fold's native output is a
-    DELTA of assignments; here we return the full updated view so the SAME
-    full-corpus clustering oracle as er_clusters certifies fold ==
-    from-scratch recompute."""
+    `fold_batch`) at the production blocking config (`HOT_THRESHOLD`/
+    `TARGET_BLOCK`, the config perfbench's `sf_fold` runs): bootstrap the
+    fold state (uniq + reps + clusters) from the ~80% split, then fold the
+    ~20% batch in. Key reps are min-merged from state, every blocking count
+    is taken over the reps slice the fold reads rather than over the corpus
+    dim, and the fold's native output is a DELTA of assignments; here we
+    return the full updated view so the SAME full-corpus clustering oracle
+    as er_clusters certifies fold == from-scratch recompute."""
     from email_address_parser_spark.operators.incremental import (
         build_incremental_state,
         fold_batch,
@@ -855,8 +861,9 @@ def _er_incremental_fold(spark: SparkSession, sf: str) -> DataFrame:
 
     t = derive_transcripts(spark, sf)
     is_prev = F.pmod(F.xxhash64("conv_id"), F.lit(5)) < 4
-    state = build_incremental_state(spark, t.where(is_prev), hot_threshold=_UNSALTED)
-    out = fold_batch(spark, t.where(~is_prev), state, hot_threshold=_UNSALTED)
+    kw = dict(hot_threshold=HOT_THRESHOLD, target_block_size=TARGET_BLOCK)
+    state = build_incremental_state(spark, t.where(is_prev), **kw)
+    out = fold_batch(spark, t.where(~is_prev), state, **kw)
     return out["clusters"].select("email", "cluster_id")
 
 
@@ -1469,10 +1476,10 @@ def _er_pprl_index_incr(spark: SparkSession, sf: str) -> DataFrame:
 def _er_forget(spark: SparkSession, sf: str) -> DataFrame:
     """G58 right-to-be-forgotten (operators/forget.py): erase the identity
     (whole resolved cluster) containing a target address from the maintained
-    ER state with batch-sized updates — eq-delete ledger for the append-only
-    uniq table, all-null tombstones for keyed tables, count decrements from
-    the doomed representatives. The target is the min clustered email
-    (deterministic, collect-free: it rides a broadcast 1-row aggregate).
+    ER state with batch-sized frames — the doomed emails leave `uniq` and
+    `clusters`, their match keys leave `reps`. The target is the min
+    clustered email (deterministic, collect-free: it rides a broadcast
+    1-row aggregate).
     The oracle is the full-corpus clustering SQL minus the target's
     component, so the triple-match certifies that forgetting removes exactly
     the identity's connected component and nothing else — the erasure

@@ -5,7 +5,7 @@ scratch (the nightly-rebuild alternative). Same session and blocking config
 as bench.py, best-of-N with the cache cleared between repetitions (the box
 is +/-30% noisy; see BENCH/BASELINE.md methodology).
 
-State (uniq + reps + domain_counts + bucket_counts + clusters) is written
+State (uniq + reps + clusters) is written
 to and re-read from parquet, like pipeline.CheckpointManager state in prod
 (Iceberg tables bucketed by their join keys there).
 

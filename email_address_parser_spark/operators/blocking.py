@@ -251,23 +251,19 @@ def with_salted_domain_block(
     mentions: DataFrame,
     hot_threshold: int = 10_000,
     target_block_size: int = 5_000,
-    sizes: DataFrame = None,
 ) -> DataFrame:
     """Add `block_key`: domain_canon, salted when the domain block exceeds
     hot_threshold rows. Salt = hash(dotless local) % n_salts, so variants of
     one identity always share a bucket. The hot-domain dim is tiny (only
     domains above threshold) and is broadcast.
 
-    `sizes` optionally supplies precomputed (domain_canon, _dom_n) counts —
-    the incremental fold maintains them as state instead of re-aggregating
-    the dim every batch; salting decisions are then identical to a full run
-    over the same union corpus."""
-    if sizes is None:
-        sizes = mentions.groupBy("domain_canon").agg(
-            F.count(F.lit(1)).alias("_dom_n")
-        )
+    The counts are taken over `mentions` itself, so a caller that blocks a
+    slice (the incremental fold) must hand in every row of each domain it
+    blocks; salting decisions are then identical to a full run."""
     sizes = (
-        sizes.where(F.col("_dom_n") > hot_threshold)
+        mentions.groupBy("domain_canon")
+        .agg(F.count(F.lit(1)).alias("_dom_n"))
+        .where(F.col("_dom_n") > hot_threshold)
         .withColumn(
             "_n_salts",
             F.ceil(F.col("_dom_n") / F.lit(target_block_size)).cast("int"),

@@ -17,11 +17,13 @@ state with cost proportional to |new batch| + |affected neighborhood|:
      anchor every new variant to its key's PREVIOUS root with an unscored
      star edge (the collapsed chain's within-key merge);
   3. block only pairs touching >= 1 new representative, over the same four
-     disjoint channels as `blocking.candidate_pairs`. Every cap and salting
-     statistic (domain counts, LSH bucket counts, dotless-local counts) is
-     READ from state and count-merged with the batch, never re-aggregated
-     over the corpus dim; partners come from `state.reps` pruned to the
-     batch's domains, buckets and locals;
+     disjoint channels as `blocking.candidate_pairs`. Partners come from
+     `state.reps` pruned to the batch's domains, LSH buckets and dotless
+     locals, so the pruned slice plus the merged reps holds every current
+     rep of each touched block: every cap and salting statistic (reps per
+     domain, per bucket, per dotless local) is counted over it by the batch
+     chain's own code (`with_salted_domain_block`, `blocking._cap_buckets`),
+     never re-aggregated over the corpus dim and never kept as state;
   4. score only those pairs (same Arrow-batch JW/Levenshtein kernels as the
      batch path) and threshold to edges;
   5. contract old clusters to their roots (quotient graph): every OLD edge
@@ -43,7 +45,7 @@ clustering is row-identical to `pipeline.resolve` over the union corpus:
 
   * old components enter the loop as depth-1 stars, so their transitive
     closure is preserved;
-  * a new representative's edge set under count-merged blocking is exactly
+  * a new representative's edge set under slice-counted blocking is exactly
     the edge set the full run would give it (blocking keys are pure
     functions of the email string plus union-dim statistics);
   * old<->old edges add nothing — their closure IS `state.clusters`.
@@ -72,6 +74,7 @@ from .blocking import (
     _BAND_KEY,
     LOCAL_MAX_BLOCK,
     LSH_MAX_BUCKET,
+    _cap_buckets,
     channel_pair_filter,
     dotless_local,
     uniq_valid_mentions,
@@ -202,19 +205,33 @@ def _rep_aggs() -> list:
     ]
 
 
-def _band_counts(df: DataFrame, col: str, alias: str = "_bn") -> DataFrame:
-    """Row count per LSH (band_idx, band_sig) bucket of array column `col`."""
-    return (
-        df.select(F.posexplode(col).alias("band_idx", "band_sig"))
-        .groupBy(*_BAND_KEY)
-        .agg(F.count(F.lit(1)).alias(alias))
+def _tagged(reps: DataFrame, is_new: bool, *extra) -> DataFrame:
+    """The blocking columns of `reps` (email, local_canon, domain_canon and
+    the dotless local `_dl`) tagged `_is_new`, plus the `extra` columns."""
+    return reps.select(
+        "email", "local_canon", "domain_canon",
+        dotless_local().alias("_dl"),
+        F.lit(is_new).alias("_is_new"),
+        *extra,
     )
 
 
-STATE_TABLES = (
-    "uniq", "reps", "domain_counts", "bucket_counts",
-    "local_counts", "ebucket_counts", "clusters",
-)
+def _capped_buckets(merged_reps: DataFrame, others: DataFrame, col: str) -> DataFrame:
+    """Every current rep in each LSH bucket (of array column `col`) that a
+    merged rep falls in: the merged reps plus the `others` (the state reps
+    outside the batch keys) sharing one of their buckets, one row per (rep,
+    band). Over-cap buckets are dropped by the batch chain's own
+    `_cap_buckets`; the rows are the bucket's whole union-corpus population,
+    so the count equals the batch chain's."""
+    band = F.posexplode(col).alias(*_BAND_KEY)
+    new = _tagged(merged_reps, True, band)
+    old = _tagged(others, False, band).join(
+        F.broadcast(new.select(*_BAND_KEY).distinct()), _BAND_KEY, "left_semi"
+    )
+    return _cap_buckets(new.unionByName(old), _BAND_KEY, LSH_MAX_BUCKET)
+
+
+STATE_TABLES = ("uniq", "reps", "clusters")
 
 
 def build_incremental_state(
@@ -232,17 +249,13 @@ def build_incremental_state(
     from-scratch state over a mention set with one identity removed, which
     no transcript filter can express when turns carry multiple mentions:
 
-      uniq           — distinct valid emails + canon cols + band_sigs +
-                       email_bands
-      reps           — one representative per match_key (min email, its
-                       local_canon, band_sigs, email_bands)
-      domain_counts  — rep count per domain_canon (the salting statistic the
-                       collapsed batch path derives on the fly)
-      bucket_counts  — rep count per local-LSH (band_idx, band_sig) bucket
-      local_counts   — rep count per dotless local (cross-domain channel-3
-                       block cap)
-      ebucket_counts — rep count per full-email-LSH bucket (channel-4 cap)
-      clusters       — (email, cluster_id), the collapsed-path clustering
+      uniq     — distinct valid emails + canon cols + band_sigs + email_bands
+      reps     — one representative per match_key (min email, its
+                 local_canon, band_sigs, email_bands)
+      clusters — (email, cluster_id), the collapsed-path clustering
+
+    No blocking count is stored: `fold_batch` counts each cap and salting
+    statistic over the reps slice it already reads.
 
     In prod every table is an Iceberg table bucketed by its join key; a fold
     then co-locates against state with partition-pruned scans instead of
@@ -251,8 +264,8 @@ def build_incremental_state(
 
     if mentions is None:
         mentions = with_canonical(extract_mentions(transcripts))
-    # persist the expensive subtrees: 7 state tables + the pairs chain all
-    # hang off uniq/reps, and a caller materializes each table separately —
+    # persist the expensive subtrees: the state tables and the pairs chain
+    # all hang off uniq, and a caller materializes each table separately —
     # without the persist every materialization re-runs extraction + banding
     # (measured: bootstrap 31.8 s → the extraction UDF dominating, sf0.01)
     uniq = with_minhash_bands(uniq_valid_mentions(mentions)).persist()
@@ -269,47 +282,8 @@ def build_incremental_state(
     return {
         "uniq": uniq,
         "reps": reps,
-        "domain_counts": reps.groupBy("domain_canon").agg(
-            F.count(F.lit(1)).alias("_dom_n")
-        ),
-        "bucket_counts": _band_counts(reps, "band_sigs"),
-        "local_counts": reps.groupBy(dotless_local().alias("_dl")).agg(
-            F.count(F.lit(1)).alias("_ln")
-        ),
-        "ebucket_counts": _band_counts(reps, "email_bands"),
         "clusters": clusters,
     }
-
-
-def _bucket_updates(
-    counts: DataFrame, prev_slice: DataFrame, merged_reps: DataFrame, col: str
-) -> DataFrame:
-    """Merged LSH bucket counts for every bucket a fold touches: the state
-    count minus the replaced reps' bands plus the merged reps' bands."""
-    removed = _band_counts(prev_slice, col, "_rm")
-    added = _band_counts(merged_reps, col, "_ad")
-    touched = removed.select(*_BAND_KEY).union(added.select(*_BAND_KEY)).distinct()
-    return (
-        counts.join(F.broadcast(touched), _BAND_KEY, "left_semi")
-        .join(removed, _BAND_KEY, "outer")
-        .join(added, _BAND_KEY, "outer")
-        .select(
-            "band_idx",
-            "band_sig",
-            (
-                F.coalesce(F.col("_bn"), F.lit(0))
-                - F.coalesce(F.col("_rm"), F.lit(0))
-                + F.coalesce(F.col("_ad"), F.lit(0))
-            ).alias("_bn"),
-        )
-    )
-
-
-def _upsert(table: DataFrame, updates: DataFrame, keys: list) -> DataFrame:
-    """`table` with the rows keyed in `updates` replaced by `updates`."""
-    return table.join(
-        F.broadcast(updates.select(*keys)), keys, "left_anti"
-    ).unionByName(updates)
 
 
 def fold_batch(
@@ -324,9 +298,11 @@ def fold_batch(
     """Fold one batch into `state` touching only the batch and its affected
     neighborhood — the web-scale shape of G24:
 
-      * every derived statistic (key reps, domain counts, LSH bucket counts)
-        is READ from state and min-/count-merged with the batch — never
-        re-aggregated over the corpus dim;
+      * key reps are READ from state and min-merged with the batch; every
+        blocking count (reps per domain, per LSH bucket, per dotless local)
+        is counted by the batch chain's own code over the reps slice the
+        fold reads anyway, which holds every current rep it counts — never
+        re-aggregated over the corpus dim and never kept as state;
       * scoring partners come from state.reps pruned to the batch's domains
         and touched (band, sig) buckets — broadcast filters over a scan, no
         dim shuffle (in prod the scan itself partition-prunes);
@@ -402,81 +378,28 @@ def fold_batch(
         )
     )
 
-    # --- salting statistics: touched domains only ---------------------------
-    new_key_domains = (
-        merged_reps.join(F.broadcast(prev_slice.select("match_key")),
-                         "match_key", "left_anti")
-        .groupBy("domain_canon")
-        .agg(F.count(F.lit(1)).alias("_delta"))
-    )
-    # NOTE: no broadcast hints on the outer merges — a FULL OUTER join
-    # cannot hash-broadcast either side, so the hint degrades to a
-    # BroadcastNestedLoopJoin (quadratic compares). Both sides here are
-    # touched-slice sized; sort-merge is the right plan.
-    touched_counts = (
-        state["domain_counts"]
-        .join(F.broadcast(batch_domains), "domain_canon", "left_semi")
-        .join(new_key_domains, "domain_canon", "outer")
-        .select(
-            "domain_canon",
-            (F.coalesce(F.col("_dom_n"), F.lit(0))
-             + F.coalesce(F.col("_delta"), F.lit(0))).alias("_dom_n"),
-        )
-    ).transform(_pin)
-
-    # --- partner slice: state reps in the batch's domains -------------------
-    partners = (
-        state_reps
-        .join(F.broadcast(batch_domains), "domain_canon", "left_semi")
-        .join(F.broadcast(batch_keys), "match_key", "left_anti")
-    )
-    fold_dim = (
-        partners.withColumn("_is_new", F.lit(False))
-        .unionByName(merged_reps.withColumn("_is_new", F.lit(True)))
-        .drop("match_key")
-    )
+    # --- channel 1: salted exact-domain blocks. match_key fixes the domain,
+    # so fold_dim holds every current rep of each batch domain and counts
+    # them exactly as the batch chain counts the union dim ------------------
+    outside_keys = state_reps.join(F.broadcast(batch_keys), "match_key", "left_anti")
+    partners = outside_keys.join(F.broadcast(batch_domains), "domain_canon", "left_semi")
+    fold_dim = _tagged(partners, False).unionByName(_tagged(merged_reps, True))
     blocked = with_salted_domain_block(
-        fold_dim, hot_threshold, target_block_size, sizes=touched_counts
+        fold_dim, hot_threshold, target_block_size
     ).transform(_pin)
     pairs = _restricted_pairs(
         blocked.select("block_key", "email", "local_canon", "domain_canon", "_is_new"),
         ["block_key"],
     )
 
-    # --- channel 2: bucket counts remove replaced reps' bands, add merged
-    # reps' --------------------------------------------------------------------
-    bucket_updates = _bucket_updates(
-        state["bucket_counts"], prev_slice, merged_reps, "band_sigs"
-    ).transform(_pin)
-    new_bands = merged_reps.select(
-        "email", "local_canon", "domain_canon",
-        F.lit(True).alias("_is_new"),
-        F.posexplode("band_sigs").alias("band_idx", "band_sig"),
-    )
-    partner_bands = (
-        partners.select(
-            "email", "local_canon", "domain_canon",
-            F.lit(False).alias("_is_new"),
-            F.posexplode("band_sigs").alias("band_idx", "band_sig"),
-        )
-        .join(
-            F.broadcast(new_bands.select(*_BAND_KEY).distinct()),
-            _BAND_KEY,
-            "left_semi",
-        )
-    )
-    # pinned: _restricted_pairs references this subtree three times
-    # (new-key probe + both self-join sides) and Spark has no compile-time
-    # exchange reuse across repeated non-cached refs
+    # --- channel 2: same-domain local LSH. The join on `blocked` after the
+    # cap keeps the batch domains' rows and adds their block_key. Pinned:
+    # _restricted_pairs references this subtree three times (new-key probe +
+    # both self-join sides) and Spark has no compile-time exchange reuse
+    # across repeated non-cached refs -----------------------------------------
     bounded = (
-        new_bands.unionByName(partner_bands)
-        .join(
-            F.broadcast(bucket_updates.where(F.col("_bn") <= LSH_MAX_BUCKET)),
-            _BAND_KEY,
-        )
-        .join(
-            blocked.select("email", "block_key"), "email"
-        )
+        _capped_buckets(merged_reps, outside_keys, "band_sigs")
+        .join(blocked.select("email", "block_key"), "email")
         .transform(_pin)
     )
     lsh_pairs = _restricted_pairs(
@@ -484,95 +407,23 @@ def fold_batch(
     ).dropDuplicates(["email_a", "email_b"])
     pairs = pairs.unionByName(lsh_pairs)
 
-    # --- channel 3: cross-domain exact-local. Counts merged from state (a
-    # rep's dotless local never changes — all members of a match_key share
-    # it — so the delta is purely the batch's NEW keys) ---------------------
+    # --- channel 3: cross-domain exact-local. A rep's dotless local is its
+    # match_key's, so xd_dim holds every current rep of each batch dotless
+    # local (prod: the reps table's dotless secondary partition prunes the
+    # partner scan) ------------------------------------------------------------
     batch_dls = new_uniq.select(dotless_local().alias("_dl")).distinct()
-    new_key_dls = (
-        merged_reps.join(
-            F.broadcast(prev_slice.select("match_key")), "match_key", "left_anti"
-        )
-        .groupBy(dotless_local().alias("_dl"))
-        .agg(F.count(F.lit(1)).alias("_delta"))
-    )
-    local_updates = (
-        state["local_counts"]
-        .join(F.broadcast(batch_dls), "_dl", "left_semi")
-        .join(new_key_dls, "_dl", "outer")
-        .select(
-            "_dl",
-            (
-                F.coalesce(F.col("_ln"), F.lit(0))
-                + F.coalesce(F.col("_delta"), F.lit(0))
-            ).alias("_ln"),
-        )
-    ).transform(_pin)
-    # partner slice: state reps sharing a batch dotless local (prod: the
-    # reps table's dotless secondary partition prunes this scan)
-    xd_partners = (
-        state_reps
-        .withColumn("_dl", dotless_local())
-        .join(F.broadcast(batch_dls), "_dl", "left_semi")
-        .join(F.broadcast(batch_keys), "match_key", "left_anti")
-    )
-    xd_cols = ["_dl", "email", "local_canon", "domain_canon", "_is_new"]
     xd_dim = (
-        xd_partners.withColumn("_is_new", F.lit(False)).select(*xd_cols)
-        .unionByName(
-            merged_reps.withColumn("_dl", dotless_local())
-            .withColumn("_is_new", F.lit(True))
-            .select(*xd_cols)
-        )
+        _tagged(outside_keys, False)
+        .join(F.broadcast(batch_dls), "_dl", "left_semi")
+        .unionByName(_tagged(merged_reps, True))
     )
-    xd_bounded = xd_dim.join(
-        F.broadcast(local_updates.where(F.col("_ln") <= LOCAL_MAX_BLOCK)),
-        ["_dl"],
+    xd_pairs = _restricted_pairs(
+        _cap_buckets(xd_dim, ["_dl"], LOCAL_MAX_BLOCK), ["_dl"], cross_domain=True
     )
-    xd_pairs = _restricted_pairs(xd_bounded, ["_dl"], cross_domain=True)
     pairs = pairs.unionByName(xd_pairs)
 
-    # --- channel 4: cross-domain full-email LSH; bucket counts merged
-    # exactly like the local-LSH bucket_counts --------------------------------
-    ebucket_updates = _bucket_updates(
-        state["ebucket_counts"], prev_slice, merged_reps, "email_bands"
-    ).transform(_pin)
-    e_cols = [
-        "email", "local_canon", "domain_canon", "_dl", "_is_new",
-        "band_idx", "band_sig",
-    ]
-    new_ebands = (
-        merged_reps.withColumn("_dl", dotless_local())
-        .withColumn("_is_new", F.lit(True))
-        .select(
-            "email", "local_canon", "domain_canon", "_dl", "_is_new",
-            F.posexplode("email_bands").alias("band_idx", "band_sig"),
-        )
-    )
-    partner_ebands = (
-        state_reps
-        .join(F.broadcast(batch_keys), "match_key", "left_anti")
-        .withColumn("_dl", dotless_local())
-        .withColumn("_is_new", F.lit(False))
-        .select(
-            "email", "local_canon", "domain_canon", "_dl", "_is_new",
-            F.posexplode("email_bands").alias("band_idx", "band_sig"),
-        )
-        .join(
-            F.broadcast(new_ebands.select(*_BAND_KEY).distinct()),
-            _BAND_KEY,
-            "left_semi",
-        )
-    )
-    # pinned: _restricted_pairs references this three times
-    ebounded = (
-        new_ebands.select(*e_cols)
-        .unionByName(partner_ebands.select(*e_cols))
-        .join(
-            F.broadcast(ebucket_updates.where(F.col("_bn") <= LSH_MAX_BUCKET)),
-            _BAND_KEY,
-        )
-        .transform(_pin)
-    )
+    # --- channel 4: cross-domain full-email LSH (pinned like channel 2) ---
+    ebounded = _capped_buckets(merged_reps, outside_keys, "email_bands").transform(_pin)
     e_pairs = _restricted_pairs(
         ebounded,
         _BAND_KEY,
@@ -624,22 +475,14 @@ def fold_batch(
 
     untouched = state["clusters"].join(
         F.broadcast(root_relabel.select("cluster_id")), "cluster_id", "left_anti"
-    )
+    ).select("email", "cluster_id")
     clusters_view = untouched.unionByName(delta)
 
     new_state = {
         # column-pruned: a state table read back from storage may carry
         # bookkeeping columns the fold does not maintain
         "uniq": state["uniq"].select(*new_uniq.columns).unionByName(new_uniq),
-        "reps": state_reps
-        .join(F.broadcast(batch_keys), "match_key", "left_anti")
-        .unionByName(merged_reps),
-        "domain_counts": state["domain_counts"]
-        .join(F.broadcast(batch_domains), "domain_canon", "left_anti")
-        .unionByName(touched_counts),
-        "bucket_counts": _upsert(state["bucket_counts"], bucket_updates, _BAND_KEY),
-        "local_counts": _upsert(state["local_counts"], local_updates, ["_dl"]),
-        "ebucket_counts": _upsert(state["ebucket_counts"], ebucket_updates, _BAND_KEY),
+        "reps": outside_keys.unionByName(merged_reps),
         "clusters": clusters_view,
     }
     # batch-sized per-table update frames — what a merge-on-read state store
@@ -649,10 +492,6 @@ def fold_batch(
     updates = {
         "uniq": new_uniq,
         "reps": merged_reps,
-        "domain_counts": touched_counts,
-        "bucket_counts": bucket_updates,
-        "local_counts": local_updates,
-        "ebucket_counts": ebucket_updates,
         "clusters": delta,
     }
     return {

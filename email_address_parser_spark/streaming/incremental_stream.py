@@ -47,14 +47,7 @@ from ..operators.incremental import STATE_TABLES
 
 # merge keys per state table (latest-epoch row wins per key); `uniq` is
 # append-only and absent here on purpose
-STATE_KEYS = {
-    "reps": ["match_key"],
-    "domain_counts": ["domain_canon"],
-    "bucket_counts": ["band_idx", "band_sig"],
-    "local_counts": ["_dl"],
-    "ebucket_counts": ["band_idx", "band_sig"],
-    "clusters": ["email"],
-}
+STATE_KEYS = {"reps": ["match_key"], "clusters": ["email"]}
 # stable layout key for append-only tables (no merge key to bucket by)
 STATE_BUCKET_KEYS = {"uniq": ["email"]}
 # the G26 dedup fold's state uses the same MoR layout with its own keys:
@@ -96,7 +89,7 @@ def write_state_mor(
     Two phases that must not interleave: materialize EVERY table
     (batch-sized here), then write. The tables share lazy subtrees that read
     the CURRENT state directories (e.g. the new-email anti-join against
-    state.uniq feeds reps/bucket_counts/clusters too), so writing any
+    state.uniq feeds reps and clusters too), so writing any
     directory before every table is materialized would make later tables
     re-evaluate against the already-updated state — the batch would drain
     through the anti-join and the fold would silently no-op. localCheckpoint

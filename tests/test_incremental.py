@@ -18,14 +18,14 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from email_address_parser_spark.operators.blocking import candidate_pairs
+from email_address_parser_spark.operators.blocking import LOCAL_MAX_BLOCK, candidate_pairs
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
 from email_address_parser_spark.operators.incremental import (
     build_incremental_state,
     fold_batch,
 )
 from email_address_parser_spark.operators.scoring import DEFAULT_THRESHOLD, score_pairs
-from email_address_parser_spark.pipeline import resolve
+from email_address_parser_spark.pipeline import HOT_THRESHOLD, TARGET_BLOCK, resolve
 from tests.synth import synthesize
 
 
@@ -139,25 +139,81 @@ def test_fold_batch_empty_batch_is_noop(spark, corpus_df):
     assert out["delta"].count() == 0
 
 
+def _turns(spark, emails, conv):
+    """One single-mention turn per email, each in its own conversation."""
+    rows = [
+        (f"{conv}{i}", 0, "user", f"mail {e} now", None, 0.0)
+        for i, e in enumerate(emails)
+    ]
+    return spark.createDataFrame(pd.DataFrame(rows, columns=_COLS))
+
+
 def test_fold_batch_new_key_minimum_attaches(spark):
     """A new variant that becomes its key's MINIMUM email must still join the
     key's existing component (anchor = prev key root, not the union min)."""
-    prev_t = spark.createDataFrame(
-        pd.DataFrame([("c1", 0, "user", "mail bb@d.com now", None, 0.0)], columns=_COLS)
-    )
-    new_t = spark.createDataFrame(
-        pd.DataFrame([("c2", 0, "user", "mail b.b@d.com now", None, 0.0)], columns=_COLS)
-    )
+    prev_t = _turns(spark, ["bb@d.com"], "p")
+    new_t = _turns(spark, ["b.b@d.com"], "n")
     state = build_incremental_state(spark, prev_t, hot_threshold=1 << 40)
     out = fold_batch(spark, new_t, state, hot_threshold=1 << 40)
     got = _as_set(out["clusters"])
     assert got == {("bb@d.com", "b.b@d.com"), ("b.b@d.com", "b.b@d.com")}
 
 
+def test_fold_cluster_frames_are_email_then_cluster_id(spark):
+    """Every (email, cluster_id) frame of the bootstrap and the fold has the
+    same column order, so positional consumers (`union`, column-ordered
+    compares) pair the right columns."""
+    prev_t = _turns(spark, ["bb@d.com", "cc@d.com"], "p")
+    new_t = _turns(spark, ["b.b@d.com", "dd@d.com"], "n")
+    state = build_incremental_state(spark, prev_t, hot_threshold=1 << 40)
+    out = fold_batch(spark, new_t, state, hot_threshold=1 << 40)
+    frames = {
+        "bootstrap clusters": state["clusters"],
+        "fold clusters": out["clusters"],
+        "fold state clusters": out["state"]["clusters"],
+        "delta": out["delta"],
+    }
+    for name, df in frames.items():
+        assert df.columns == ["email", "cluster_id"], name
+
+
+@pytest.mark.parametrize(
+    "n_prev, links", [(LOCAL_MAX_BLOCK - 1, True), (LOCAL_MAX_BLOCK + 1, False)]
+)
+def test_fold_at_and_over_the_local_block_cap(spark, n_prev, links):
+    """`info@` over distinct domains is one xd_local block, and no other
+    channel pairs its emails (one email per domain, one dotless local).
+    Bootstrapping LOCAL_MAX_BLOCK - 1 domains and folding one more lands the
+    block exactly at the inclusive cap, so the fold links the new email to
+    every old one; bootstrapping LOCAL_MAX_BLOCK + 1 keeps it over the cap,
+    so the fold adds no edge. Neither fold crosses the cap, so both equal
+    `resolve` over the union at the production blocking config."""
+    emails = [f"info@org{i:03d}.example" for i in range(n_prev + 1)]
+    prev_t = _turns(spark, emails[:-1], "p")
+    new_t = _turns(spark, emails[-1:], "n")
+    kw = dict(hot_threshold=HOT_THRESHOLD, target_block_size=TARGET_BLOCK)
+    state = build_incremental_state(spark, prev_t, **kw)
+    out = fold_batch(spark, new_t, state, **kw)
+    full = _full_collapsed(
+        with_canonical(extract_mentions(prev_t.unionByName(new_t))),
+        HOT_THRESHOLD,
+        target_block_size=TARGET_BLOCK,
+    )
+    assert _as_set(out["clusters"]) == _as_set(full)
+    edges = [(r["src"], r["dst"]) for r in out["edges"].collect()]
+    if links:
+        assert len(edges) == n_prev
+        assert all(a.split("@")[1] != b.split("@")[1] for a, b in edges)
+        assert len({cid for _, cid in _as_set(out["clusters"])}) == 1
+    else:
+        assert edges == []
+
+
 def test_fold_batch_chained_salted(spark, corpus_df):
     """Two successive folds (state threaded through, salting ACTIVE) equal
     the batch collapsed chain over the 3-way union — the state tables
-    (reps/domain_counts/bucket_counts) stay consistent across folds."""
+    (uniq/reps/clusters) stay consistent across folds, and the salting and
+    cap counts each fold takes over its reps slice match the union's."""
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
     b0 = corpus_df.where(h == 0)
     b1 = corpus_df.where(h == 1)
