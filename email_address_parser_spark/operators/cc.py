@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from typing import Tuple
 
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -92,7 +93,12 @@ def _local_components(edges: DataFrame) -> DataFrame:
     """Exact union-find on the collected edge set; root = component min,
     maintained by always attaching the larger root under the smaller (so the
     tree root is the minimum member by induction, and path compression keeps
-    lookups near-O(1))."""
+    lookups near-O(1)).
+
+    The labels go back as a pandas frame: under the session's Arrow setting
+    `createDataFrame` plans it as a LocalRelation, which every read scans in
+    the JVM. A list of rows would plan a pickled Python RDD instead, and
+    each of the caller's reads would start Python workers again."""
     pdf = edges.toPandas()
     parent: dict = {}
 
@@ -110,10 +116,14 @@ def _local_components(edges: DataFrame) -> DataFrame:
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    nodes = set(pdf["u"]).union(pdf["v"])
-    rows = [(n, find(n)) for n in nodes]
+    nodes = list(set(pdf["u"]).union(pdf["v"]))
+    # dtype=str: integer node ids (the dedup callers) become the same
+    # strings the schema's cast gives, after union-find ordered them as ints
+    labels = pd.DataFrame(
+        {"email": nodes, "cluster_id": [find(n) for n in nodes]}, dtype=str
+    )
     return edges.sparkSession.createDataFrame(
-        rows, "email string, cluster_id string"
+        labels, "email string, cluster_id string"
     )
 
 

@@ -27,12 +27,15 @@ state with cost proportional to |new batch| + |affected neighborhood|:
   4. score only those pairs (same Arrow-batch JW/Levenshtein kernels as the
      batch path) and threshold to edges;
   5. contract old clusters to their roots (quotient graph): every OLD edge
-     endpoint is rewritten to its prev cluster_id before the CC loop, so the
-     loop's node set is {affected roots} ∪ {edge-incident new emails} — old
-     members never enter an iteration shuffle, yet transitive merges across
-     old clusters still happen (contraction preserves connectivity, and
-     min-over-roots == min-over-members because a root IS its cluster's min
-     email). Members inherit the root's new label with one post-loop join;
+     endpoint is rewritten to its prev cluster_id before connected
+     components, so the graph's node set is {affected roots} ∪
+     {edge-incident new emails} — old members never enter it, yet
+     transitive merges across old clusters still happen (contraction
+     preserves connectivity, and min-over-roots == min-over-members because
+     a root IS its cluster's min email). The quotient graph is batch-sized,
+     so `connected_components` solves it with its local union-find (the
+     star loop stays the fallback above `cc.LOCAL_EDGE_THRESHOLD`).
+     Members inherit the root's new label with one join;
   6. emit a DELTA of assignments (changed or new emails) plus batch-sized
      per-table update frames; untouched clusters pass through unchanged.
 
@@ -115,8 +118,8 @@ def _restricted_pairs(
     cross_domain: bool = False,
     diff_local: bool = False,
 ) -> DataFrame:
-    """Self-join on `key`, keeping only pairs with >= 1 new side, each
-    unordered pair exactly once:
+    """Join the new rows of `blocked` (`_is_new`) to all of its rows on
+    `key`, keeping each unordered pair with >= 1 new side exactly once:
 
       * new<->new: emitted once by the `email_a < email_b` predicate;
       * new<->old: the new row is always the `a` side (old<->old never
@@ -125,12 +128,12 @@ def _restricted_pairs(
         scoring sees the same (email_a < email_b) orientation as the batch
         path (the feature set is symmetric, so normalization is free).
 
-    The b side is pre-restricted to key values that contain >= 1 new row
-    (a semi-join against the tiny new-side key set): blocks untouched by the
-    batch never enter the self-join shuffle."""
-    new_keys = blocked.where(F.col("_is_new")).select(*key).distinct()
-    blocked = blocked.join(new_keys, key, "left_semi")
-    a = blocked.where(F.col("_is_new")).alias("a")
+    The new side is broadcast, so the slice streams through the join with
+    no shuffle, and the inner join itself drops every block the batch does
+    not touch. The broadcast is batch-bounded like the fold's other
+    broadcasts: it holds the merged reps of the batch keys, times the band
+    count on the LSH channels."""
+    a = F.broadcast(blocked.where(F.col("_is_new"))).alias("a")
     b = blocked.alias("b")
     cond = (~F.col("b._is_new")) | (F.col("a.email") < F.col("b.email"))
     cond = channel_pair_filter(
@@ -157,41 +160,6 @@ def _restricted_pairs(
             pick("domain_canon", False).alias("domain_canon_b"),
         )
     )
-
-
-def _assign_components(rewritten: DataFrame) -> DataFrame:
-    """(src, dst) quotient edges → (email, cluster_id = component min).
-
-    Fast path: when the edge set is structurally a STAR FOREST — no node is
-    both a src and a dst, and every dst has exactly one edge — each
-    component is one src plus its dsts, so labels are a single
-    groupBy(src).min(dst) with no iterative loop. This is the overwhelmingly
-    common fold shape (new variants anchored to their key root, no cross-key
-    merges): two cheap structural probes replace ~6 CC-loop barriers. Any
-    other shape (fuzzy merges, anchor chains) falls back to the exact
-    large-star/small-star loop. The caller must hand in a deduplicated,
-    checkpointed edge set (the probes and the assignment both re-read it)."""
-    anchors_also_leaves = rewritten.alias("x").join(
-        rewritten.alias("y"), F.col("x.dst") == F.col("y.src"), "left_semi"
-    )
-    multi_anchor = (
-        rewritten.groupBy("dst").agg(F.count(F.lit(1)).alias("_n")).where(F.col("_n") > 1)
-    )
-    if anchors_also_leaves.isEmpty() and multi_anchor.isEmpty():
-        labels = (
-            rewritten.groupBy("src")
-            .agg(F.min("dst").alias("_min_dst"))
-            .select("src", F.least("src", "_min_dst").alias("_label"))
-        )
-        return (
-            labels.select(F.col("src").alias("email"), F.col("_label").alias("cluster_id"))
-            .unionByName(
-                rewritten.join(labels, "src").select(
-                    F.col("dst").alias("email"), F.col("_label").alias("cluster_id")
-                )
-            )
-        )
-    return connected_components(rewritten)
 
 
 def _rep_aggs() -> list:
@@ -306,8 +274,9 @@ def fold_batch(
       * scoring partners come from state.reps pruned to the batch's domains
         and touched (band, sig) buckets — broadcast filters over a scan, no
         dim shuffle (in prod the scan itself partition-prunes);
-      * the CC loop runs on the quotient graph (prev clusters contracted to
-        roots) with the star-forest fast path;
+      * connected components run on the quotient graph (prev clusters
+        contracted to roots), solved by the local union-find below
+        `cc.LOCAL_EDGE_THRESHOLD` edges;
       * the result is a DELTA of assignments (changed or new emails only).
         `clusters` (the full updated view) and the updated state tables are
         returned lazily; prod persists them with partition-level MERGE
@@ -394,9 +363,9 @@ def fold_batch(
 
     # --- channel 2: same-domain local LSH. The join on `blocked` after the
     # cap keeps the batch domains' rows and adds their block_key. Pinned:
-    # _restricted_pairs references this subtree three times (new-key probe +
-    # both self-join sides) and Spark has no compile-time exchange reuse
-    # across repeated non-cached refs -----------------------------------------
+    # _restricted_pairs references this subtree twice (the broadcast new
+    # side and the streamed side) and Spark has no compile-time exchange
+    # reuse across repeated non-cached refs -------------------------------------
     bounded = (
         _capped_buckets(merged_reps, outside_keys, "band_sigs")
         .join(blocked.select("email", "block_key"), "email")
@@ -404,7 +373,7 @@ def fold_batch(
     )
     lsh_pairs = _restricted_pairs(
         bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
-    ).dropDuplicates(["email_a", "email_b"])
+    )
     pairs = pairs.unionByName(lsh_pairs)
 
     # --- channel 3: cross-domain exact-local. A rep's dotless local is its
@@ -429,11 +398,13 @@ def fold_batch(
         _BAND_KEY,
         cross_domain=True,
         diff_local=True,
-    ).dropDuplicates(["email_a", "email_b"])
+    )
     pairs = pairs.unionByName(e_pairs)
 
     edges = (
-        # batch-sized pair set: skip the rebalance stage (fold floor)
+        # batch-sized pair set: skip the rebalance stage (fold floor). A
+        # pair sharing several LSH bands repeats in its channel; the
+        # duplicates score identically and match_edges keeps one
         match_edges(score_pairs(pairs, rebalance=False), threshold)
         .unionByName(star_edges)
         .transform(_pin)
@@ -453,11 +424,8 @@ def fold_batch(
             F.col("src_q").alias("src"),
             F.coalesce(F.col("_root"), F.col("dst")).alias("dst"),
         )
-        .where(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint()
     )
-    quotient_assign = _assign_components(rewritten)
+    quotient_assign = connected_components(rewritten)
 
     root_relabel = quotient_assign.select(
         F.col("email").alias("cluster_id"), F.col("cluster_id").alias("_new")

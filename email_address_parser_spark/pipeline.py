@@ -288,9 +288,7 @@ def run_pipeline(
 def cluster_mentions(mentions: DataFrame, edges: DataFrame) -> DataFrame:
     """clusters(email, cluster_id): every distinct valid email gets a cluster;
     emails with no match edge are singleton clusters (cluster_id = self)."""
-    nodes = (
-        mentions.where(F.col("valid_lax")).select("email").dropDuplicates(["email"])
-    )
+    nodes = mentions.where(F.col("valid_lax")).select("email").distinct()
     assigned = connected_components(edges)
     return (
         nodes.join(assigned, "email", "left")
@@ -325,11 +323,7 @@ def cluster_mentions_collapsed(
     tests/test_collapse_exact.py), and otherwise errs toward the rep pair's
     score."""
     if nodes is None:
-        nodes = (
-            mentions.where(F.col("valid_lax"))
-            .select("email")
-            .dropDuplicates(["email"])
-        )
+        nodes = mentions.where(F.col("valid_lax")).select("email").distinct()
     else:
         nodes = nodes.select("email")
     rep_assign = connected_components(fuzzy_edges)

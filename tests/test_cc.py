@@ -51,3 +51,18 @@ def test_local_equals_distributed_structured_shapes(spark):
 def test_empty_graph_fast_exit(spark):
     df = spark.createDataFrame([], "src string, dst string")
     assert connected_components(df).count() == 0
+
+
+def test_local_path_returns_a_local_relation(spark):
+    """Below the bound the labels come back as a LocalRelation, which every
+    read scans in the JVM — not a LogicalRDD of pickled rows, which starts
+    Python workers again on each read. Integer node ids (the dedup callers)
+    take the same path, as strings."""
+    for edges, schema in (
+        ([("a@x", "b@x"), ("b@x", "c@x")], "src string, dst string"),
+        ([(10, 9), (9, 100)], "src long, dst long"),
+    ):
+        out = connected_components(spark.createDataFrame(edges, schema))
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+    assert sorted(map(tuple, out.collect())) == [("10", "9"), ("100", "9"), ("9", "9")]

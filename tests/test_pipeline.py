@@ -157,18 +157,30 @@ def test_checkpoint_invalidated_on_config_change(spark, results):
 
 
 def test_resolve_stages_compose_with_set_operations(spark, corpus):
-    """Every frame resolve() returns survives exceptAll/intersectAll (Spark
-    4.1 raises INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on subset-dropDuplicates
-    output there), and uniq keeps exactly one row per email."""
+    """Every frame resolve() returns, and both clusterings when they derive
+    their own node set, survive exceptAll/intersectAll (Spark 4.1 raises
+    INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND on subset-dropDuplicates output
+    there), and uniq keeps exactly one row per email."""
     from email_address_parser_spark.operators.extract import (
         extract_mentions,
         with_canonical,
+    )
+    from email_address_parser_spark.pipeline import (
+        cluster_mentions,
+        cluster_mentions_collapsed,
     )
 
     mentions = with_canonical(extract_mentions(spark.createDataFrame(corpus.transcripts)))
     chain = resolve(mentions, hot_threshold=50, target_block_size=40)
     assert set(chain) == {"uniq", "stars", "dim", "pairs", "scored", "fuzzy", "clusters"}
-    for name, df in chain.items():
+    # the clusterings over the node set they derive from `mentions`
+    derived_nodes = {
+        "cluster_mentions": cluster_mentions(mentions, chain["fuzzy"]),
+        "cluster_mentions_collapsed": cluster_mentions_collapsed(
+            mentions, chain["fuzzy"], chain["stars"]
+        ),
+    }
+    for name, df in {**chain, **derived_nodes}.items():
         n = df.count()
         head = df.limit(3)
         assert df.exceptAll(head).count() == n - min(n, 3), name

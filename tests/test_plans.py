@@ -257,6 +257,47 @@ def test_minhash_udfs_run_only_inside_the_cached_dim(spark):
     chain["uniq"].unpersist()
 
 
+def test_fold_channel_join_broadcasts_the_new_side(spark):
+    """A fold channel joins its batch-sized new side, broadcast, against the
+    blocked slice: one BroadcastHashJoin built from the `_is_new` rows, no
+    SortMergeJoin, so the slice is never shuffled. The frame is RDD-backed,
+    so without the hint its size is unknown and the planner would
+    sort-merge."""
+    from email_address_parser_spark.operators.incremental import _restricted_pairs
+
+    blocked = spark.createDataFrame(
+        [
+            ("d0", "a@x.com", "a", "x.com", True),
+            ("d0", "ab@x.com", "ab", "x.com", False),
+            ("d0", "b@x.com", "b", "x.com", False),
+            ("d1", "c@y.com", "c", "y.com", False),
+        ],
+        "block_key string, email string, local_canon string, "
+        "domain_canon string, _is_new boolean",
+    )
+    df = _restricted_pairs(blocked, ["block_key"])
+    nodes = list(_nodes(_physical(df)))
+    assert not [n for n in nodes if n.nodeName() == "SortMergeJoin"]
+    joins = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
+    assert len(joins) == 1, [_describe(n) for n in joins]
+    build, stream = (
+        (joins[0].left(), joins[0].right())
+        if joins[0].buildSide().toString() == "BuildLeft"
+        else (joins[0].right(), joins[0].left())
+    )
+
+    def filters_new(side) -> bool:
+        return any(
+            n.nodeName() == "Filter" and "_is_new" in _describe(n) for n in _nodes(side)
+        )
+
+    assert filters_new(build) and not filters_new(stream), _describe(joins[0])
+    assert {(r.email_a, r.email_b) for r in df.collect()} == {
+        ("a@x.com", "ab@x.com"),
+        ("a@x.com", "b@x.com"),
+    }
+
+
 # match_edges' score_bound(): the score with JW = 1, which Catalyst folds
 # to a leading literal 0.35 (the score itself reads 0.35 * <JW>)
 _BOUND = "round((((0.35 + (0.2 * "
