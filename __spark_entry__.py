@@ -848,8 +848,9 @@ def _er_incremental_fold(spark: SparkSession, sf: str) -> DataFrame:
     """G24 batch-incremental cluster maintenance (operators/incremental.py
     `fold_batch`) at the production blocking config (`HOT_THRESHOLD`/
     `TARGET_BLOCK`, the config perfbench's `sf_fold` runs): bootstrap the
-    fold state (uniq + reps + clusters) from the ~80% split, then fold the
-    ~20% batch in. Key reps are min-merged from state, every blocking count
+    fold state from the ~80% split — `resolve`'s banded dim as the key
+    reps, and its clusters — then fold the ~20% batch in. Key reps are
+    min-merged from state and banded once each, every blocking count
     is taken over the reps slice the fold reads rather than over the corpus
     dim, and the fold's native output is a DELTA of assignments; here we
     return the full updated view so the SAME full-corpus clustering oracle

@@ -214,10 +214,10 @@ def with_minhash_bands(df: DataFrame) -> DataFrame:
                     address local_canon || '@' || domain_canon (xd_email)
 
     Both are pure functions of the email, so they are computed once per
-    distinct email and ride every table that carries it: the persisted
-    blocked dim (`blocked_dim`), and the fold state's `uniq`/`reps` and a
-    fold batch (incremental.py), where the UDFs then only ever see the
-    batch's new emails."""
+    representative and ride every table that carries it: the persisted
+    blocked dim (`blocked_dim`), which under the fold bootstrap becomes the
+    fold state's `reps`, and the fold's merged reps (incremental.py), where
+    the UDFs then only ever see the reps of the batch's keys."""
     return df.withColumn(
         "band_sigs", minhash_bands_udf(F.col("local_canon"))
     ).withColumn(
@@ -333,15 +333,15 @@ def match_key_representatives(mentions: DataFrame, uniq: DataFrame = None) -> Da
     the full path scores (dot-insensitivity is already captured by the
     dotless_eq feature), so cross-key pairs near the threshold score
     identically on both paths instead of flipping sides when dots are
-    stripped (round-1 ADVICE)."""
+    stripped (round-1 ADVICE).
+
+    → (match_key, domain_canon, email, local_canon): the grouping key stays
+    in the output, so the fold state's `reps` (keyed by match_key) is a
+    projection of the banded dim built from these rows."""
     src = uniq if uniq is not None else uniq_valid_mentions(mentions)
-    return (
-        src.groupBy("match_key", "domain_canon")
-        .agg(
-            F.min("email").alias("email"),
-            F.min_by("local_canon", "email").alias("local_canon"),
-        )
-        .select("email", "local_canon", "domain_canon")
+    return src.groupBy("match_key", "domain_canon").agg(
+        F.min("email").alias("email"),
+        F.min_by("local_canon", "email").alias("local_canon"),
     )
 
 
@@ -419,7 +419,9 @@ def blocked_dim(
     Lazy and unpersisted: `dim_channels` reads it eight times (both join
     sides of each channel), so its reader persists it, and whoever
     persists it owns the cache entry and releases it — `pipeline.resolve`
-    returns the dim it persists as its `dim` stage."""
+    returns the dim it persists as its `dim` stage. Under the fold
+    bootstrap (`incremental.build_incremental_state`) that owner is the
+    fold state: its `reps` table is a projection of this dim."""
     if collapse_exact:
         uniq = match_key_representatives(mentions, uniq=uniq)
     elif uniq is not None:

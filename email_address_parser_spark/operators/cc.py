@@ -28,6 +28,7 @@ from typing import Tuple
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 
 def _signature(edges: DataFrame) -> Tuple[int, int]:
@@ -98,7 +99,9 @@ def _local_components(edges: DataFrame) -> DataFrame:
     The labels go back as a pandas frame: under the session's Arrow setting
     `createDataFrame` plans it as a LocalRelation, which every read scans in
     the JVM. A list of rows would plan a pickled Python RDD instead, and
-    each of the caller's reads would start Python workers again."""
+    each of the caller's reads would start Python workers again. Its schema
+    takes the edges' own `u`/`v` types, so integer node ids (the dedup
+    callers) come back as the same integers the other paths return."""
     pdf = edges.toPandas()
     parent: dict = {}
 
@@ -117,14 +120,14 @@ def _local_components(edges: DataFrame) -> DataFrame:
                 ru, rv = rv, ru
             parent[rv] = ru
     nodes = list(set(pdf["u"]).union(pdf["v"]))
-    # dtype=str: integer node ids (the dedup callers) become the same
-    # strings the schema's cast gives, after union-find ordered them as ints
-    labels = pd.DataFrame(
-        {"email": nodes, "cluster_id": [find(n) for n in nodes]}, dtype=str
+    labels = pd.DataFrame({"email": nodes, "cluster_id": [find(n) for n in nodes]})
+    schema = StructType(
+        [
+            StructField("email", edges.schema["u"].dataType),
+            StructField("cluster_id", edges.schema["v"].dataType),
+        ]
     )
-    return edges.sparkSession.createDataFrame(
-        labels, "email string, cluster_id string"
-    )
+    return edges.sparkSession.createDataFrame(labels, schema)
 
 
 def connected_components(

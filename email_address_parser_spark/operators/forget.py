@@ -8,17 +8,19 @@ exact-key representatives — without rewriting O(corpus) state. The
 reference has no counterpart (it is a parser; this is the lifecycle layer
 its addresses feed).
 
-The fold state (`incremental.build_incremental_state`) is `uniq`, `reps`
-and `clusters`; it keeps no blocking counts (the fold counts them from the
-reps it reads), so removing the identity's rows from those three tables
-is the whole erasure:
+The fold state (`incremental.build_incremental_state`) is `reps` and
+`clusters`; it keeps no blocking counts (the fold counts them from the
+reps it reads), so removing the identity's rows from those two tables is
+the whole erasure:
 
   * `forget_payload` expands the target emails through `clusters` to the
     whole component (identity == connected component, so removing a whole
     component cannot affect any other component — the equivalence the
-    er_forget oracle certifies) and names the component's match keys;
-  * `forget_apply` anti-joins the doomed emails out of `uniq` and
-    `clusters` and the doomed keys out of `reps`.
+    er_forget oracle certifies);
+  * `forget_apply` anti-joins the doomed emails out of `clusters` and out
+    of `reps`. A rep's email is a member of its match-key group, and the
+    group lies in one component, so a rep's email is doomed exactly when
+    its whole key is.
 
 Everything is O(|identity|): every frame derives from the doomed set, and
 the state tables are only anti-joined against broadcast-sized frames. A
@@ -50,7 +52,7 @@ def forget_payload(
     here is broadcast-sized.
 
     Returns `doomed`, the (email, cluster_id) audit frame an erasure log
-    records, and `match_keys`, the doomed representatives' keys."""
+    records."""
     clusters = state["clusters"].select("email", "cluster_id")
     doomed_cids = (
         clusters.join(F.broadcast(targets.select("email")), "email")
@@ -62,19 +64,9 @@ def forget_payload(
     doomed = clusters.join(F.broadcast(doomed_cids), "cluster_id").select(
         "email", "cluster_id"
     )
-    # lazy pin: doomed feeds the key frame below plus the caller's audit —
-    # without it each materialization re-runs the target expansion joins
-    doomed = doomed.localCheckpoint(eager=False)
-    # emails sharing a match_key are exact-channel-connected ⇒ same
-    # component ⇒ a doomed email's whole key group is doomed, so removing
-    # the key's REP row (rather than re-electing a min) is exact
-    match_keys = (
-        state["uniq"]
-        .join(F.broadcast(doomed.select("email")), "email")
-        .select("match_key")
-        .distinct()
-    )
-    return {"doomed": doomed, "match_keys": match_keys}
+    # lazy pin: doomed feeds both state anti-joins plus the caller's audit
+    # — without it each materialization re-runs the target expansion joins
+    return {"doomed": doomed.localCheckpoint(eager=False)}
 
 
 def forget_apply(
@@ -85,9 +77,9 @@ def forget_apply(
     row-identical to a from-scratch build over the reduced corpus."""
     demails = F.broadcast(payload["doomed"].select("email"))
     out = dict(state)
-    out["uniq"] = state["uniq"].join(demails, "email", "left_anti")
     out["clusters"] = state["clusters"].join(demails, "email", "left_anti")
-    out["reps"] = state["reps"].join(
-        F.broadcast(payload["match_keys"]), "match_key", "left_anti"
-    )
+    # emails sharing a match_key are exact-channel-connected ⇒ same
+    # component ⇒ a doomed rep email's whole key group is doomed, so
+    # removing the key's REP row (rather than re-electing a min) is exact
+    out["reps"] = state["reps"].join(demails, "email", "left_anti")
     return out

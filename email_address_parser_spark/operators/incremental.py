@@ -4,15 +4,17 @@ existing clustering without reprocessing the corpus.
 At 10^12 turns, re-running the full ER chain for every new day of
 transcripts rescans the entire history to re-derive clusters that are
 99.99% unchanged. `build_incremental_state` bootstraps the fold state once
-from a corpus (the production chain `pipeline.resolve` plus the derived
-dims the fold maintains); `fold_batch` then folds ONE new batch into that
-state with cost proportional to |new batch| + |affected neighborhood|:
+from a corpus (two stages of the production chain `pipeline.resolve`:
+its banded dim and its clusters); `fold_batch` then folds ONE new batch
+into that state with cost proportional to |new batch| + |affected
+neighborhood|:
 
-  1. extract/canonicalize ONLY the new batch and anti-join it against
-     `state.uniq` — the historical corpus is never rescanned, and an email
-     already in state is never re-blocked. LSH band signatures are pure
-     functions of the email, so they ride the dim state (append-only) and
-     the signature UDFs only ever run over the batch;
+  1. extract/canonicalize ONLY the new batch and anti-join it against the
+     emails of `state.clusters` (every clustered email has a row there) —
+     the historical corpus is never rescanned, and an email already in
+     state is never re-blocked. LSH band signatures are pure functions of
+     the email, so they ride `state.reps` and the signature UDFs only ever
+     run over the merged reps of the batch's keys;
   2. min-merge the batch into the touched match-key representatives and
      anchor every new variant to its key's PREVIOUS root with an unscored
      star edge (the collapsed chain's within-key merge);
@@ -80,6 +82,7 @@ from .blocking import (
     _cap_buckets,
     channel_pair_filter,
     dotless_local,
+    match_key_representatives,
     uniq_valid_mentions,
     with_minhash_bands,
     with_salted_domain_block,
@@ -162,17 +165,6 @@ def _restricted_pairs(
     )
 
 
-def _rep_aggs() -> list:
-    """Per-match_key representative: the min email with its own
-    local_canon and band signatures (blocking.match_key_representatives)."""
-    return [
-        F.min("email").alias("email"),
-        F.min_by("local_canon", "email").alias("local_canon"),
-        F.min_by("band_sigs", "email").alias("band_sigs"),
-        F.min_by("email_bands", "email").alias("email_bands"),
-    ]
-
-
 def _tagged(reps: DataFrame, is_new: bool, *extra) -> DataFrame:
     """The blocking columns of `reps` (email, local_canon, domain_canon and
     the dotless local `_dl`) tagged `_is_new`, plus the `extra` columns."""
@@ -199,7 +191,12 @@ def _capped_buckets(merged_reps: DataFrame, others: DataFrame, col: str) -> Data
     return _cap_buckets(new.unionByName(old), _BAND_KEY, LSH_MAX_BUCKET)
 
 
-STATE_TABLES = ("uniq", "reps", "clusters")
+STATE_TABLES = ("reps", "clusters")
+# the `reps` layout: one banded representative per match_key, the column
+# order of with_minhash_bands(match_key_representatives(...))
+_REP_COLUMNS = (
+    "match_key", "domain_canon", "email", "local_canon", "band_sigs", "email_bands"
+)
 
 
 def build_incremental_state(
@@ -210,17 +207,19 @@ def build_incremental_state(
     threshold: float = DEFAULT_THRESHOLD,
     mentions: Optional[DataFrame] = None,
 ) -> Dict[str, DataFrame]:
-    """One-time bootstrap of the fold state from a corpus (the production
-    chain `pipeline.resolve` plus the derived dims `fold_batch` maintains).
-    `mentions` overrides the transcript extraction (the same seam as
-    fold_batch's `new_mentions`) — the G58 erasure tests rebuild
-    from-scratch state over a mention set with one identity removed, which
-    no transcript filter can express when turns carry multiple mentions:
+    """One-time bootstrap of the fold state from a corpus: both tables are
+    stages of the production chain `pipeline.resolve`. `mentions` overrides
+    the transcript extraction (the same seam as fold_batch's
+    `new_mentions`) — the G58 erasure tests rebuild from-scratch state over
+    a mention set with one identity removed, which no transcript filter can
+    express when turns carry multiple mentions:
 
-      uniq     — distinct valid emails + canon cols + band_sigs + email_bands
       reps     — one representative per match_key (min email, its
-                 local_canon, band_sigs, email_bands)
-      clusters — (email, cluster_id), the collapsed-path clustering
+                 local_canon, band_sigs, email_bands): resolve's persisted
+                 banded `dim`, projected, so each rep is banded once
+      clusters — (email, cluster_id), the collapsed-path clustering; its
+                 email set is the distinct valid emails, which the fold's
+                 new-email anti-join reads
 
     No blocking count is stored: `fold_batch` counts each cap and salting
     statistic over the reps slice it already reads.
@@ -232,25 +231,18 @@ def build_incremental_state(
 
     if mentions is None:
         mentions = with_canonical(extract_mentions(transcripts))
-    # persist the expensive subtrees: the state tables and the pairs chain
-    # all hang off uniq, and a caller materializes each table separately —
-    # without the persist every materialization re-runs extraction + banding
-    # (measured: bootstrap 31.8 s → the extraction UDF dominating, sf0.01)
-    uniq = with_minhash_bands(uniq_valid_mentions(mentions)).persist()
-    reps = uniq.groupBy("match_key", "domain_canon").agg(*_rep_aggs()).persist()
-    clusters = resolve(
+    chain = resolve(
         mentions,
-        uniq.select("email", "local_canon", "domain_canon", "match_key"),
         hot_threshold=hot_threshold,
         target_block_size=target_block_size,
         threshold=threshold,
-    )["clusters"].persist()  # fold_batch references clusters several times
-    # (quotient contraction, untouched passthrough, delta) — each ref would
-    # otherwise re-run the whole bootstrap clustering chain
+    )
     return {
-        "uniq": uniq,
-        "reps": reps,
-        "clusters": clusters,
+        "reps": chain["dim"].select(*_REP_COLUMNS),
+        # fold_batch references clusters several times (new-email anti-join,
+        # quotient contraction, untouched passthrough, delta) — each ref
+        # would otherwise re-run the whole bootstrap clustering chain
+        "clusters": chain["clusters"].persist(),
     }
 
 
@@ -266,11 +258,15 @@ def fold_batch(
     """Fold one batch into `state` touching only the batch and its affected
     neighborhood — the web-scale shape of G24:
 
-      * key reps are READ from state and min-merged with the batch; every
-        blocking count (reps per domain, per LSH bucket, per dotless local)
-        is counted by the batch chain's own code over the reps slice the
-        fold reads anyway, which holds every current rep it counts — never
-        re-aggregated over the corpus dim and never kept as state;
+      * new emails are the batch's distinct valid emails absent from
+        state.clusters;
+      * key reps are READ from state and min-merged with the new emails by
+        the batch chain's `match_key_representatives`, then banded, so the
+        MinHash UDFs see only the merged reps;
+      * every blocking count (reps per domain, per LSH bucket, per dotless
+        local) is counted by the batch chain's own code over the reps slice
+        the fold reads anyway, which holds every current rep it counts —
+        never re-aggregated over the corpus dim and never kept as state;
       * scoring partners come from state.reps pruned to the batch's domains
         and touched (band, sig) buckets — broadcast filters over a scan, no
         dim shuffle (in prod the scan itself partition-prunes);
@@ -292,12 +288,11 @@ def fold_batch(
     chained folds)."""
     if new_mentions is None:
         new_mentions = with_canonical(extract_mentions(new_transcripts))
-    batch_uniq = with_minhash_bands(uniq_valid_mentions(new_mentions))
-    # prod: state.uniq is bucketed by email -> co-located anti-join.
+    # prod: state.clusters is bucketed by email -> co-located anti-join.
     # every fan-out frame below is pinned (lazy localCheckpoint — see _pin
     # for the measured rationale)
-    new_uniq = batch_uniq.join(
-        state["uniq"].select("email"), "email", "left_anti"
+    new_uniq = uniq_valid_mentions(new_mentions).join(
+        state["clusters"].select("email"), "email", "left_anti"
     ).transform(_pin)
 
     batch_keys = new_uniq.select("match_key").distinct()
@@ -309,20 +304,16 @@ def fold_batch(
     # a cache write costs a full materialization pass on this
     # memory-bandwidth-bound box (measured round 4: persist() made the fold
     # ~10% SLOWER, 45-46 s -> 50-55 s best-of-3)
-    state_reps = state["reps"].select(
-        "match_key", "domain_canon", "email", "local_canon", "band_sigs", "email_bands"
-    )
+    state_reps = state["reps"].select(*_REP_COLUMNS)
     prev_slice = state_reps.join(
         F.broadcast(batch_keys), "match_key", "left_semi"
     ).transform(_pin)
-    merged_reps = (
-        prev_slice.unionByName(
-            new_uniq.select(*prev_slice.columns)
+    # banded after the min-merge: the MinHash UDFs run once per merged rep
+    merged_reps = with_minhash_bands(
+        match_key_representatives(
+            None, uniq=prev_slice.select(*new_uniq.columns).unionByName(new_uniq)
         )
-        .groupBy("match_key", "domain_canon")
-        .agg(*_rep_aggs())
-        .transform(_pin)
-    )
+    ).transform(_pin)
 
     # --- star edges: new variants anchor to the key's prev root ------------
     anchors = (
@@ -449,7 +440,6 @@ def fold_batch(
     new_state = {
         # column-pruned: a state table read back from storage may carry
         # bookkeeping columns the fold does not maintain
-        "uniq": state["uniq"].select(*new_uniq.columns).unionByName(new_uniq),
         "reps": outside_keys.unionByName(merged_reps),
         "clusters": clusters_view,
     }
@@ -458,7 +448,6 @@ def fold_batch(
     # frame carries the COMPLETE merged value for each key it touches, so
     # latest-epoch-wins resolution reconstructs new_state exactly.
     updates = {
-        "uniq": new_uniq,
         "reps": merged_reps,
         "clusters": delta,
     }

@@ -15,8 +15,8 @@ file recording the current epoch and each table's merge key.
     mode='overwrite' writes a fresh epoch-0 base instead (bootstrap).
   * `read_state` resolves LATEST-EPOCH-WINS per key lazily (update rows
     always carry the complete merged value for their key, so resolution is
-    one max_by per table). Append-only tables such as `uniq` — new emails
-    only — need no resolution at all.
+    one max_by per table). Append-only tables such as the dedup fold's
+    `bands` — new documents only — need no resolution at all.
   * `compact_state` is the Iceberg table-maintenance analog: rewrite each
     table resolved, at epoch 0, amortizing read amplification; run it every
     K folds. The `_b` bucket column gives compaction (and file skipping via
@@ -38,18 +38,15 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Dict
+from typing import Dict, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.incremental import STATE_TABLES
 
-# merge keys per state table (latest-epoch row wins per key); `uniq` is
-# append-only and absent here on purpose
+# merge keys per state table (latest-epoch row wins per key)
 STATE_KEYS = {"reps": ["match_key"], "clusters": ["email"]}
-# stable layout key for append-only tables (no merge key to bucket by)
-STATE_BUCKET_KEYS = {"uniq": ["email"]}
 # the G26 dedup fold's state uses the same MoR layout with its own keys:
 # bands/grams/meta are append-only (batch rows only), clusters merges on id
 DEDUP_STATE_KEYS = {"clusters": ["id"]}
@@ -81,22 +78,24 @@ def write_state_mor(
     tables=STATE_TABLES,
     mode: str = "append",
     merge_keys: Dict[str, list] = STATE_KEYS,
-    bucket_keys: Dict[str, list] = STATE_BUCKET_KEYS,
+    bucket_keys: Optional[Dict[str, list]] = None,
 ) -> None:
     """Append one epoch of per-table UPDATE rows (mode='overwrite' writes a
     fresh base at epoch 0 — the bootstrap / compaction path).
 
     Two phases that must not interleave: materialize EVERY table
     (batch-sized here), then write. The tables share lazy subtrees that read
-    the CURRENT state directories (e.g. the new-email anti-join against
-    state.uniq feeds reps and clusters too), so writing any
-    directory before every table is materialized would make later tables
-    re-evaluate against the already-updated state — the batch would drain
-    through the anti-join and the fold would silently no-op. localCheckpoint
-    is eager, so phase one pins all values first.
+    the CURRENT state directories: the fold's new-email anti-join reads
+    state.clusters — the very table being appended — and feeds reps and
+    clusters both, so writing any directory before every table is
+    materialized would make later tables re-evaluate against the
+    already-updated state — the batch would drain through the anti-join
+    and the fold would silently no-op. localCheckpoint is eager, so phase
+    one pins all values first.
 
     merge_keys: per-table latest-wins key (absent = append-only);
-    bucket_keys: layout key for append-only tables. The merge keys are
+    bucket_keys: layout key for append-only tables (default: none, so such
+    a table buckets by its first column). The merge keys are
     recorded in the state dir's metadata (the parquet-dir analog of Iceberg
     identifier-field metadata), so `read_state` resolves any state dir
     without being told whose keys it holds."""
@@ -109,7 +108,9 @@ def write_state_mor(
     }
     key_meta = {} if mode == "overwrite" else dict(meta.get("keys", {}))
     for name, df in materialized.items():
-        keys = merge_keys.get(name) or bucket_keys.get(name) or [df.columns[0]]
+        keys = (
+            merge_keys.get(name) or (bucket_keys or {}).get(name) or [df.columns[0]]
+        )
         key_meta[name] = merge_keys.get(name)
         out = (
             df.withColumn("_epoch", F.lit(epoch))
@@ -147,7 +148,7 @@ def _resolve_latest(
     column drop — no join, no aggregation."""
     if "_epoch" not in df.columns:
         return df
-    if name not in merge_keys:  # append-only (uniq; dedup bands/grams/meta)
+    if name not in merge_keys:  # append-only (dedup bands/grams/meta)
         return df.drop("_epoch", "_b")
     if epoch is not None and epoch <= 0:  # base only: nothing to merge
         return df.drop("_epoch", "_b")
@@ -196,7 +197,7 @@ def compact_state(
     state_dir: str,
     tables=STATE_TABLES,
     merge_keys: Dict[str, list] = None,
-    bucket_keys: Dict[str, list] = STATE_BUCKET_KEYS,
+    bucket_keys: Optional[Dict[str, list]] = None,
 ) -> None:
     """Iceberg table-maintenance analog: rewrite every table resolved, as a
     fresh epoch-0 base, bounding read amplification. Run every K folds; the

@@ -57,7 +57,8 @@ def test_local_path_returns_a_local_relation(spark):
     """Below the bound the labels come back as a LocalRelation, which every
     read scans in the JVM — not a LogicalRDD of pickled rows, which starts
     Python workers again on each read. Integer node ids (the dedup callers)
-    take the same path, as strings."""
+    take the same path and keep their type: the local path and the star
+    loop return the same long-typed rows."""
     for edges, schema in (
         ([("a@x", "b@x"), ("b@x", "c@x")], "src string, dst string"),
         ([(10, 9), (9, 100)], "src long, dst long"),
@@ -65,4 +66,9 @@ def test_local_path_returns_a_local_relation(spark):
         out = connected_components(spark.createDataFrame(edges, schema))
         plan = out._jdf.queryExecution().optimizedPlan().toString()
         assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
-    assert sorted(map(tuple, out.collect())) == [("10", "9"), ("100", "9"), ("9", "9")]
+    ints = spark.createDataFrame([(10, 9), (9, 100), (3, 4)], "src long, dst long")
+    want = [(3, 3), (4, 3), (9, 9), (10, 9), (100, 9)]
+    for kw in ({}, {"local_threshold": 0}):  # the local path, the star loop
+        out = connected_components(ints, **kw)
+        assert [f.dataType.simpleString() for f in out.schema] == ["bigint", "bigint"]
+        assert sorted(map(tuple, out.collect())) == want, kw

@@ -105,7 +105,7 @@ def test_fold_after_forget_equals_from_scratch(spark, corpus):
     assert out["clusters"].join(reappeared, "email").select(
         "email"
     ).distinct().count() == n_re
-    # ...and each reappeared email has exactly ONE uniq row: the forget
+    # ...and each reappeared email has exactly ONE clusters row: the forget
     # removed the old one, so the fold's new-email anti-join re-adds it
-    live = out["state"]["uniq"].join(reappeared.distinct(), "email")
+    live = out["state"]["clusters"].join(reappeared.distinct(), "email")
     assert live.count() == n_re

@@ -212,7 +212,7 @@ def test_fold_at_and_over_the_local_block_cap(spark, n_prev, links):
 def test_fold_batch_chained_salted(spark, corpus_df):
     """Two successive folds (state threaded through, salting ACTIVE) equal
     the batch collapsed chain over the 3-way union — the state tables
-    (uniq/reps/clusters) stay consistent across folds, and the salting and
+    (reps/clusters) stay consistent across folds, and the salting and
     cap counts each fold takes over its reps slice match the union's."""
     h = F.pmod(F.xxhash64("conv_id"), F.lit(3))
     b0 = corpus_df.where(h == 0)
@@ -245,7 +245,7 @@ def test_fold_batch_refold_is_noop(spark, corpus_df):
     """Resume safety: re-applying an already-folded batch (the crash-between-
     fold-and-checkpoint-ack restart case) must leave the clustering unchanged
     and produce an empty new-assignment surface — every batch email is
-    already in state.uniq, so the anti-join drains the batch."""
+    already in state.clusters, so the anti-join drains the batch."""
     prev_t, new_t = _split(corpus_df)
     state = build_incremental_state(spark, prev_t, hot_threshold=1 << 40)
     first = fold_batch(spark, new_t, state, hot_threshold=1 << 40)

@@ -84,7 +84,7 @@ def test_fold_append_is_batch_sized_and_resolves_exactly(spark, corpus, tmp_path
         raw = spark.read.parquet(f"{state_dir}/{t}").count()
         assert raw - base_counts[t] == update_counts[t]
     # the batch really is small relative to the corpus (non-vacuous bound)
-    assert update_counts["uniq"] < base_counts["uniq"]
+    assert update_counts["clusters"] < base_counts["clusters"]
 
     # property 2: latest-wins resolution == the fold's full view
     got = {

@@ -257,6 +257,45 @@ def test_minhash_udfs_run_only_inside_the_cached_dim(spark):
     chain["uniq"].unpersist()
 
 
+def _cached_plans(spark) -> dict:
+    """{entry: physical plan} of every entry in the session's cache manager
+    (read through reflection: the entry list is not public API)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    out = {}
+    for i in range(entries.size()):
+        relation = entries.apply(i).cachedRepresentation()
+        out[relation.toString()] = _unwrap(relation.cachedPlan())
+    return out
+
+
+def test_bootstrap_bands_each_rep_once(spark):
+    """The fold state's `reps` is a projection of `resolve`'s persisted dim,
+    so of the cache entries the bootstrap adds exactly one evaluates the
+    MinHash UDFs: the dim. A banded table of its own (e.g. a banded
+    distinct-email table the reps are grouped from) would be a second."""
+    from email_address_parser_spark.operators.incremental import (
+        build_incremental_state,
+    )
+    from email_address_parser_spark.sources.testdata import derive_transcripts
+
+    before = set(_cached_plans(spark))
+    build_incremental_state(spark, derive_transcripts(spark, SF_DIR))
+    banding = [
+        plan.toString()
+        for key, plan in _cached_plans(spark).items()
+        if key not in before
+        and any(
+            n.nodeName() == "ArrowEvalPython" and "minhash" in _describe(n)
+            for n in _nodes(plan)
+        )
+    ]
+    assert len(banding) == 1, banding
+    assert "block_key" in banding[0], banding  # the salted dim
+
+
 def test_fold_channel_join_broadcasts_the_new_side(spark):
     """A fold channel joins its batch-sized new side, broadcast, against the
     blocked slice: one BroadcastHashJoin built from the `_is_new` rows, no
