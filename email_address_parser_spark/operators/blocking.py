@@ -42,7 +42,12 @@ xd_local requires equal dotless local, xd_email different — a partition,
 proven by tests/test_blocking_channels.py + test_cross_domain_channels.py.
 
 Pair generation (F8) is a self-join on the block key with an ordered-pair
-predicate (a < b) so each unordered pair appears exactly once.
+predicate (a < b) so each unordered pair appears exactly once. A dim that
+carries `_is_new` (the incremental fold's blocking slice) is probed instead:
+each channel broadcasts its `_is_new` rows against the whole dim and keeps
+only pairs with >= 1 new side, oriented a < b — one definition of the
+channels for the batch chain and the fold. That broadcast is bounded by the
+batch, not the corpus.
 """
 
 from __future__ import annotations
@@ -379,25 +384,6 @@ def _cap_buckets(df: DataFrame, keys: list, cap: int) -> DataFrame:
     return out.where(F.col("_bn") <= cap).drop("_bn")
 
 
-def channel_pair_filter(
-    cond: Column,
-    cross_block: bool = False,
-    cross_domain: bool = False,
-    diff_local: bool = False,
-) -> Column:
-    """`cond` (a predicate over self-join sides `a`/`b`) narrowed to one
-    channel's stratum (module docstring): a different block_key (local_lsh),
-    a different domain_canon (xd_local, xd_email), a different dotless local
-    `_dl` (xd_email). Shared by the batch channels and the incremental fold."""
-    if cross_block:
-        cond = cond & (F.col("a.block_key") != F.col("b.block_key"))
-    if cross_domain:
-        cond = cond & (F.col("a.domain_canon") != F.col("b.domain_canon"))
-    if diff_local:
-        cond = cond & (F.col("a._dl") != F.col("b._dl"))
-    return cond
-
-
 def blocked_dim(
     mentions: DataFrame,
     hot_threshold: int,
@@ -440,6 +426,16 @@ def dim_channels(dim: DataFrame, dedupe: bool = True) -> Dict[str, DataFrame]:
     `xd_local`, `xd_email`. Each is (email_a, email_b, local_canon_a/b,
     domain_canon_a/b) with email_a < email_b.
 
+    A dim that carries a boolean `_is_new` (the incremental fold's slice)
+    yields only the pairs with >= 1 new side: each channel joins its
+    `_is_new` rows, broadcast, against all of its rows, so the dim streams
+    through the join unshuffled and old<->old pairs never form. The
+    broadcast is bounded by the batch: its new rows, times the band count
+    on the LSH channels. A new<->new pair is kept from its lower side, a
+    new<->old pair from its only new side, and both come out oriented
+    email_a < email_b. Every cap and salt is still counted over the whole
+    dim, so each block and bucket with a new row must be complete in it.
+
     dedupe=False skips the LSH-channel dropDuplicates shuffles; the few
     duplicated candidates (LSH multi-band collisions) score identically,
     and match_edges de-duplicates the far smaller edge set instead.
@@ -450,6 +446,8 @@ def dim_channels(dim: DataFrame, dedupe: bool = True) -> Dict[str, DataFrame]:
     O(|distinct emails|), tiny next to the pair set. Measured same-session
     pinned A/B at sf0.1 ×3 runs: old overlapping-channels plan best
     15.1 s, disjoint+persist best 7.5 s for the full score_pairs chain."""
+    probe = "_is_new" in dim.columns
+    cols = ["email", "local_canon", "domain_canon"] + (["_is_new"] if probe else [])
 
     # The self-join carries all pair columns through its exchange: measured
     # at replicated scale (x32 corpus, 1.7M distinct emails), generating
@@ -458,20 +456,40 @@ def dim_channels(dim: DataFrame, dedupe: bool = True) -> Dict[str, DataFrame]:
     # attach joins are full sort-merge shuffles of the pair set, costing
     # more than the wider payload ever did. Exchange COUNT beats exchange
     # bytes.
-    def self_join(df: DataFrame, key: list, **stratum) -> DataFrame:
+    def self_join(
+        df: DataFrame,
+        key: list,
+        cross_block: bool = False,
+        cross_domain: bool = False,
+        diff_local: bool = False,
+    ) -> DataFrame:
         a = df.alias("a")
         b = df.alias("b")
-        return (
-            a.join(b, on=key)
-            .where(channel_pair_filter(F.col("a.email") < F.col("b.email"), **stratum))
-            .select(
-                F.col("a.email").alias("email_a"),
-                F.col("b.email").alias("email_b"),
-                F.col("a.local_canon").alias("local_canon_a"),
-                F.col("b.local_canon").alias("local_canon_b"),
-                F.col("a.domain_canon").alias("domain_canon_a"),
-                F.col("b.domain_canon").alias("domain_canon_b"),
-            )
+        a_first = F.col("a.email") < F.col("b.email")
+        cond = a_first
+        if probe:
+            a = F.broadcast(df.where(F.col("_is_new"))).alias("a")
+            cond = a_first | ~F.col("b._is_new")
+        # the channel's stratum (module docstring)
+        if cross_block:
+            cond = cond & (F.col("a.block_key") != F.col("b.block_key"))
+        if cross_domain:
+            cond = cond & (F.col("a.domain_canon") != F.col("b.domain_canon"))
+        if diff_local:
+            cond = cond & (F.col("a._dl") != F.col("b._dl"))
+
+        def side(col: str, s: str) -> Column:
+            own, other = F.col(f"a.{col}"), F.col(f"b.{col}")
+            if s == "b":
+                own, other = other, own
+            return F.when(a_first, own).otherwise(other) if probe else own
+
+        return a.join(b, on=key).where(cond).select(
+            *[
+                side(col, s).alias(f"{col}_{s}")
+                for col in ("email", "local_canon", "domain_canon")
+                for s in "ab"
+            ]
         )
 
     def lsh_dedupe(pairs: DataFrame) -> DataFrame:
@@ -499,26 +517,15 @@ def dim_channels(dim: DataFrame, dedupe: bool = True) -> Dict[str, DataFrame]:
     # same canonical domain keeps the channel to hard same-domain
     # candidates (identity variants never change the domain).
     local_bands = dim.select(
-        "email",
-        "local_canon",
-        "domain_canon",
-        "block_key",
-        F.posexplode(F.col("band_sigs")).alias(*_BAND_KEY),
+        *cols, "block_key", F.posexplode(F.col("band_sigs")).alias(*_BAND_KEY)
     )
     # xd_email: signatures over the canonical assembled address, bucket
     # sizes counted over all emails in the bucket
     email_bands = dim.select(
-        "email",
-        "local_canon",
-        "domain_canon",
-        "_dl",
-        F.posexplode(F.col("email_bands")).alias(*_BAND_KEY),
+        *cols, "_dl", F.posexplode(F.col("email_bands")).alias(*_BAND_KEY)
     )
     return {
-        "block": self_join(
-            dim.select("block_key", "email", "local_canon", "domain_canon"),
-            ["block_key"],
-        ),
+        "block": self_join(dim.select("block_key", *cols), ["block_key"]),
         "local_lsh": lsh_dedupe(
             self_join(
                 _cap_buckets(local_bands, _BAND_KEY, LSH_MAX_BUCKET),
@@ -530,9 +537,7 @@ def dim_channels(dim: DataFrame, dedupe: bool = True) -> Dict[str, DataFrame]:
         # local shared by more than LOCAL_MAX_BLOCK emails is
         # non-discriminative wherever it appears
         "xd_local": self_join(
-            _cap_buckets(dim, ["_dl"], LOCAL_MAX_BLOCK).select(
-                "_dl", "email", "local_canon", "domain_canon"
-            ),
+            _cap_buckets(dim, ["_dl"], LOCAL_MAX_BLOCK).select("_dl", *cols),
             ["_dl"],
             cross_domain=True,
         ),

@@ -18,14 +18,18 @@ neighborhood|:
   2. min-merge the batch into the touched match-key representatives and
      anchor every new variant to its key's PREVIOUS root with an unscored
      star edge (the collapsed chain's within-key merge);
-  3. block only pairs touching >= 1 new representative, over the same four
-     disjoint channels as `blocking.candidate_pairs`. Partners come from
-     `state.reps` pruned to the batch's domains, LSH buckets and dotless
-     locals, so the pruned slice plus the merged reps holds every current
-     rep of each touched block: every cap and salting statistic (reps per
-     domain, per bucket, per dotless local) is counted over it by the batch
-     chain's own code (`with_salted_domain_block`, `blocking._cap_buckets`),
-     never re-aggregated over the corpus dim and never kept as state;
+  3. block only pairs touching >= 1 new representative, with the batch
+     chain's own channels: `fold_batch` builds one blocking slice (the
+     merged reps, tagged `_is_new`, plus every state rep outside the batch
+     keys that shares a domain, a dotless local or a `band_sigs`/
+     `email_bands` bucket with one of them) and hands it to
+     `union_channels(blocking.dim_channels(slice))`. The slice holds every
+     current rep of each block and bucket a merged rep falls in, so every
+     cap and salting statistic (reps per domain, per bucket, per dotless
+     local) is counted over it by the batch chain's own code, never
+     re-aggregated over the corpus dim and never kept as state; given
+     `_is_new`, `dim_channels` joins only the new rows, broadcast, against
+     the slice;
   4. score only those pairs (same Arrow-batch JW/Levenshtein kernels as the
      batch path) and threshold to edges;
   5. contract old clusters to their roots (quotient graph): every OLD edge
@@ -72,17 +76,14 @@ from __future__ import annotations
 
 from typing import Dict, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .blocking import (
-    _BAND_KEY,
-    LOCAL_MAX_BLOCK,
-    LSH_MAX_BUCKET,
-    _cap_buckets,
-    channel_pair_filter,
+    dim_channels,
     dotless_local,
     match_key_representatives,
+    union_channels,
     uniq_valid_mentions,
     with_minhash_bands,
     with_salted_domain_block,
@@ -114,81 +115,28 @@ def _pin(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=False)
 
 
-def _restricted_pairs(
-    blocked: DataFrame,
-    key: list,
-    cross_block: bool = False,
-    cross_domain: bool = False,
-    diff_local: bool = False,
-) -> DataFrame:
-    """Join the new rows of `blocked` (`_is_new`) to all of its rows on
-    `key`, keeping each unordered pair with >= 1 new side exactly once:
+def _blocking_keys() -> Column:
+    """Every blocking key of a banded rep, one string each, tagged by its
+    channel: the domain (block), the dotless local (xd_local) and each
+    (band_idx, band_sig) of `band_sigs` (local_lsh) and `email_bands`
+    (xd_email)."""
 
-      * new<->new: emitted once by the `email_a < email_b` predicate;
-      * new<->old: the new row is always the `a` side (old<->old never
-        joins), so the pair appears exactly once regardless of email order —
-        the output columns are least/greatest-normalized so downstream
-        scoring sees the same (email_a < email_b) orientation as the batch
-        path (the feature set is symmetric, so normalization is free).
-
-    The new side is broadcast, so the slice streams through the join with
-    no shuffle, and the inner join itself drops every block the batch does
-    not touch. The broadcast is batch-bounded like the fold's other
-    broadcasts: it holds the merged reps of the batch keys, times the band
-    count on the LSH channels."""
-    a = F.broadcast(blocked.where(F.col("_is_new"))).alias("a")
-    b = blocked.alias("b")
-    cond = (~F.col("b._is_new")) | (F.col("a.email") < F.col("b.email"))
-    cond = channel_pair_filter(
-        cond & (F.col("a.email") != F.col("b.email")),
-        cross_block=cross_block,
-        cross_domain=cross_domain,
-        diff_local=diff_local,
-    )
-    a_first = F.col("a.email") < F.col("b.email")
-
-    def pick(col: str, first: bool):
-        lhs, rhs = (f"a.{col}", f"b.{col}") if first else (f"b.{col}", f"a.{col}")
-        return F.when(a_first, F.col(lhs)).otherwise(F.col(rhs))
-
-    return (
-        a.join(b, on=key)
-        .where(cond)
-        .select(
-            F.least(F.col("a.email"), F.col("b.email")).alias("email_a"),
-            F.greatest(F.col("a.email"), F.col("b.email")).alias("email_b"),
-            pick("local_canon", True).alias("local_canon_a"),
-            pick("local_canon", False).alias("local_canon_b"),
-            pick("domain_canon", True).alias("domain_canon_a"),
-            pick("domain_canon", False).alias("domain_canon_b"),
+    def bands(col: str, tag: str) -> Column:
+        return F.transform(
+            col,
+            lambda sig, i: F.concat(
+                F.lit(tag), i.cast("string"), F.lit(":"), sig.cast("string")
+            ),
         )
+
+    return F.concat(
+        F.array(
+            F.concat(F.lit("d:"), F.col("domain_canon")),
+            F.concat(F.lit("l:"), dotless_local()),
+        ),
+        bands("band_sigs", "b"),
+        bands("email_bands", "e"),
     )
-
-
-def _tagged(reps: DataFrame, is_new: bool, *extra) -> DataFrame:
-    """The blocking columns of `reps` (email, local_canon, domain_canon and
-    the dotless local `_dl`) tagged `_is_new`, plus the `extra` columns."""
-    return reps.select(
-        "email", "local_canon", "domain_canon",
-        dotless_local().alias("_dl"),
-        F.lit(is_new).alias("_is_new"),
-        *extra,
-    )
-
-
-def _capped_buckets(merged_reps: DataFrame, others: DataFrame, col: str) -> DataFrame:
-    """Every current rep in each LSH bucket (of array column `col`) that a
-    merged rep falls in: the merged reps plus the `others` (the state reps
-    outside the batch keys) sharing one of their buckets, one row per (rep,
-    band). Over-cap buckets are dropped by the batch chain's own
-    `_cap_buckets`; the rows are the bucket's whole union-corpus population,
-    so the count equals the batch chain's."""
-    band = F.posexplode(col).alias(*_BAND_KEY)
-    new = _tagged(merged_reps, True, band)
-    old = _tagged(others, False, band).join(
-        F.broadcast(new.select(*_BAND_KEY).distinct()), _BAND_KEY, "left_semi"
-    )
-    return _cap_buckets(new.unionByName(old), _BAND_KEY, LSH_MAX_BUCKET)
 
 
 STATE_TABLES = ("reps", "clusters")
@@ -263,13 +211,15 @@ def fold_batch(
       * key reps are READ from state and min-merged with the new emails by
         the batch chain's `match_key_representatives`, then banded, so the
         MinHash UDFs see only the merged reps;
-      * every blocking count (reps per domain, per LSH bucket, per dotless
-        local) is counted by the batch chain's own code over the reps slice
-        the fold reads anyway, which holds every current rep it counts —
-        never re-aggregated over the corpus dim and never kept as state;
-      * scoring partners come from state.reps pruned to the batch's domains
-        and touched (band, sig) buckets — broadcast filters over a scan, no
-        dim shuffle (in prod the scan itself partition-prunes);
+      * candidate pairs are `union_channels(dim_channels(slice))` over one
+        blocking slice: the merged reps (`_is_new`) plus the state reps
+        outside the batch keys that share a domain, a dotless local or an
+        LSH bucket with one of them. It holds the whole union-corpus
+        population of every block and bucket a merged rep falls in, so the
+        batch chain's caps and salting count exactly what a full run would,
+        and only pairs with a new side are emitted (broadcast new side, no
+        slice shuffle). Finding those partners explodes the blocking keys
+        of every state rep outside the batch keys, O(|state.reps|) per fold;
       * connected components run on the quotient graph (prev clusters
         contracted to roots), solved by the local union-find below
         `cc.LOCAL_EDGE_THRESHOLD` edges;
@@ -296,10 +246,10 @@ def fold_batch(
     ).transform(_pin)
 
     batch_keys = new_uniq.select("match_key").distinct()
-    batch_domains = new_uniq.select("domain_canon").distinct()
 
     # --- affected reps: min-merge of the state slice with the batch --------
-    # NOT persisted although referenced once per channel: the reps scan is a
+    # NOT persisted although read three times (the batch keys' reps, the
+    # blocking slice's partners, the new state's reps): the reps scan is a
     # 120k-row parquet read here and a pruned co-located scan in prod, while
     # a cache write costs a full materialization pass on this
     # memory-bandwidth-bound box (measured round 4: persist() made the fold
@@ -338,59 +288,29 @@ def fold_batch(
         )
     )
 
-    # --- channel 1: salted exact-domain blocks. match_key fixes the domain,
-    # so fold_dim holds every current rep of each batch domain and counts
-    # them exactly as the batch chain counts the union dim ------------------
+    # --- the blocking slice: the merged reps (`_is_new`) and every state rep
+    # outside the batch keys that shares a blocking key with one of them.
+    # It holds every current rep of each block and bucket a merged rep falls
+    # in, so the batch chain's `dim_channels` counts each cap and salt over
+    # it exactly as over the union dim, and (given `_is_new`) emits only the
+    # pairs with a new side -----------------------------------------------------
     outside_keys = state_reps.join(F.broadcast(batch_keys), "match_key", "left_anti")
-    partners = outside_keys.join(F.broadcast(batch_domains), "domain_canon", "left_semi")
-    fold_dim = _tagged(partners, False).unionByName(_tagged(merged_reps, True))
-    blocked = with_salted_domain_block(
-        fold_dim, hot_threshold, target_block_size
-    ).transform(_pin)
-    pairs = _restricted_pairs(
-        blocked.select("block_key", "email", "local_canon", "domain_canon", "_is_new"),
-        ["block_key"],
+    # batch-bounded broadcast: 2 + N_BANDS + EMAIL_N_BANDS keys per merged rep
+    touched = merged_reps.select(F.explode(_blocking_keys()).alias("_k"))
+    partners = (
+        outside_keys.select("*", F.explode(_blocking_keys()).alias("_k"))
+        .join(F.broadcast(touched), "_k", "left_semi")
+        .drop("_k")
+        .distinct()  # a rep sharing several keys with the batch, once
     )
-
-    # --- channel 2: same-domain local LSH. The join on `blocked` after the
-    # cap keeps the batch domains' rows and adds their block_key. Pinned:
-    # _restricted_pairs references this subtree twice (the broadcast new
-    # side and the streamed side) and Spark has no compile-time exchange
-    # reuse across repeated non-cached refs -------------------------------------
-    bounded = (
-        _capped_buckets(merged_reps, outside_keys, "band_sigs")
-        .join(blocked.select("email", "block_key"), "email")
-        .transform(_pin)
-    )
-    lsh_pairs = _restricted_pairs(
-        bounded, ["band_idx", "band_sig", "domain_canon"], cross_block=True
-    )
-    pairs = pairs.unionByName(lsh_pairs)
-
-    # --- channel 3: cross-domain exact-local. A rep's dotless local is its
-    # match_key's, so xd_dim holds every current rep of each batch dotless
-    # local (prod: the reps table's dotless secondary partition prunes the
-    # partner scan) ------------------------------------------------------------
-    batch_dls = new_uniq.select(dotless_local().alias("_dl")).distinct()
-    xd_dim = (
-        _tagged(outside_keys, False)
-        .join(F.broadcast(batch_dls), "_dl", "left_semi")
-        .unionByName(_tagged(merged_reps, True))
-    )
-    xd_pairs = _restricted_pairs(
-        _cap_buckets(xd_dim, ["_dl"], LOCAL_MAX_BLOCK), ["_dl"], cross_domain=True
-    )
-    pairs = pairs.unionByName(xd_pairs)
-
-    # --- channel 4: cross-domain full-email LSH (pinned like channel 2) ---
-    ebounded = _capped_buckets(merged_reps, outside_keys, "email_bands").transform(_pin)
-    e_pairs = _restricted_pairs(
-        ebounded,
-        _BAND_KEY,
-        cross_domain=True,
-        diff_local=True,
-    )
-    pairs = pairs.unionByName(e_pairs)
+    dim = with_salted_domain_block(
+        partners.withColumn("_is_new", F.lit(False)).unionByName(
+            merged_reps.withColumn("_is_new", F.lit(True))
+        ),
+        hot_threshold,
+        target_block_size,
+    ).withColumn("_dl", dotless_local()).transform(_pin)
+    pairs = union_channels(dim_channels(dim, dedupe=False))
 
     edges = (
         # batch-sized pair set: skip the rebalance stage (fold floor). A

@@ -10,9 +10,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from email_address_parser_spark.operators.blocking import (
+    LOCAL_MAX_BLOCK,
+    LSH_MAX_BUCKET,
     _unique_mentions,
+    blocked_dim,
     blocking_channels,
     candidate_pairs,
+    dim_channels,
     minhash_bands_udf,
     with_salted_domain_block,
 )
@@ -147,3 +151,56 @@ def test_cap_buckets_drops_only_over_cap_buckets(spark):
     capped = _cap_buckets(df, ["key"], 3)
     assert capped.columns == df.columns
     assert sorted(tuple(r) for r in capped.collect()) == sorted(rows[:6])
+
+
+def test_new_side_channels_are_the_full_channels_with_a_new_side(spark):
+    """A dim carrying `_is_new` yields, per channel, exactly the rows of the
+    same dim without it that have a new side, same orientation and
+    multiplicity, with every cap counted over the whole dim. hot.example is
+    salted 4 ways, which puts jonathan/jonathon and alexander/alexandre
+    (each shares one `band_sigs` bucket) in different blocks. The
+    jonathan bucket is filled to LSH_MAX_BUCKET (kept), the alexander bucket
+    to LSH_MAX_BUCKET + 2 (dropped); the dotless block `info` holds
+    LOCAL_MAX_BLOCK emails (kept), `alexander` LOCAL_MAX_BLOCK + 1
+    (dropped). williamjones@company.com / williamjone@compnay.com share an
+    `email_bands` bucket (xd_email)."""
+    hot = ["jonathan", "jonathon", "alexander", "alexandre", "alpha", "bravo",
+           "charlie", "delta"]
+    emails = [f"{local}@hot.example" for local in hot]
+    emails += [f"jonathan@j{i:02d}.test" for i in range(LSH_MAX_BUCKET - 2)]
+    emails += [f"alexander@a{i:02d}.test" for i in range(LOCAL_MAX_BLOCK)]
+    emails += [f"info@i{i:02d}.test" for i in range(LOCAL_MAX_BLOCK)]
+    emails += ["williamjones@company.com", "williamjone@compnay.com"]
+    new = ["jonathon@hot.example", "alexandre@hot.example", "bravo@hot.example",
+           "jonathan@j00.test", "info@i00.test", "williamjone@compnay.com"]
+    mentions = spark.createDataFrame(
+        [(e, *e.split("@")) for e in emails],
+        "email string, local_canon string, domain_canon string",
+    ).withColumn("valid_lax", F.lit(True))
+    dim = (
+        blocked_dim(mentions, HOT, TGT)
+        .withColumn("_is_new", F.col("email").isin(new))
+        .localCheckpoint()
+    )
+    block = {r.email: r.block_key for r in dim.where("domain_canon = 'hot.example'").collect()}
+    for a, b in (("jonathan", "jonathon"), ("alexander", "alexandre")):
+        assert block[f"{a}@hot.example"] != block[f"{b}@hot.example"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    with_new = dim_channels(dim, dedupe=False)
+    full = dim_channels(dim.drop("_is_new"), dedupe=False)
+    has_new = F.col("email_a").isin(new) | F.col("email_b").isin(new)
+    for name, df in with_new.items():
+        got = rows(df)
+        assert got, name  # every channel is reached
+        assert got == rows(full[name].where(has_new)), name
+    # old<->old pairs exist, so a dim that ignored `_is_new` would fail above
+    assert all(full[name].where(~has_new).count() for name in ("block", "xd_local"))
+    lsh = {(r.email_a, r.email_b) for r in with_new["local_lsh"].collect()}
+    assert ("jonathan@hot.example", "jonathon@hot.example") in lsh
+    assert ("alexander@hot.example", "alexandre@hot.example") not in lsh
+    xd = {(r.email_a, r.email_b) for r in with_new["xd_local"].collect()}
+    assert ("info@i00.test", "info@i01.test") in xd
+    assert not [p for p in xd if p[0].startswith("alexander@")]

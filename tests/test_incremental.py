@@ -18,7 +18,13 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from email_address_parser_spark.operators.blocking import LOCAL_MAX_BLOCK, candidate_pairs
+from email_address_parser_spark.operators.blocking import (
+    LOCAL_MAX_BLOCK,
+    LSH_MAX_BUCKET,
+    candidate_pairs,
+    minhash_band_sigs,
+    minhash_signatures_batch,
+)
 from email_address_parser_spark.operators.extract import extract_mentions, with_canonical
 from email_address_parser_spark.operators.incremental import (
     build_incremental_state,
@@ -207,6 +213,50 @@ def test_fold_at_and_over_the_local_block_cap(spark, n_prev, links):
         assert len({cid for _, cid in _as_set(out["clusters"])}) == 1
     else:
         assert edges == []
+
+
+# hot.example holds 8 reps over the union (7 at the bootstrap), so at
+# hot_threshold=4, target_block_size=2 it is salted 4 ways both times, and
+# the salt puts `jonathan` and `jonathon` in different blocks: only local_lsh
+# can pair them. The two locals share exactly one `band_sigs` bucket (band 3).
+_HOT_LOCALS = ["jonathan", "alpha", "bravo", "charlie", "delta", "echo", "foxtrot"]
+
+
+@pytest.mark.parametrize(
+    "n_fill, links", [(LSH_MAX_BUCKET - 2, True), (LSH_MAX_BUCKET - 1, False)]
+)
+def test_fold_at_and_over_an_lsh_bucket_cap_filled_outside_the_batch(
+    spark, n_fill, links
+):
+    """The new `jonathon@hot.example` shares one local_lsh bucket with
+    `jonathan@hot.example`. The bucket's other members are `jonathan@` in
+    domains the batch does not touch, so they share neither a batch domain
+    nor the batch's dotless local `jonathon`: only the LSH arm of the fold's
+    blocking slice brings them into the bucket's cap count. With n_fill of
+    them the bucket holds LSH_MAX_BUCKET (kept, the fold links the pair) or
+    LSH_MAX_BUCKET + 1 (dropped, `jonathon` stays alone); both equal
+    `resolve` over the union."""
+    fill = [f"jonathan@zz{i:02d}.test" for i in range(n_fill)]
+    prev = [f"{local}@hot.example" for local in _HOT_LOCALS] + fill
+    new = ["jonathon@hot.example"]
+    locals_ = [e.split("@")[0] for e in prev + new]
+    bands = minhash_band_sigs(minhash_signatures_batch(locals_))
+    shared = bands[:, 3] == bands[-1, 3]
+    assert shared.sum() == n_fill + 2  # the bucket: fill, jonathan, jonathon
+    assert [b for b in range(bands.shape[1]) if b != 3 and bands[0, b] == bands[-1, b]] == []
+
+    kw = dict(hot_threshold=4, target_block_size=2, threshold=0.70)
+    prev_t, new_t = _turns(spark, prev, "p"), _turns(spark, new, "n")
+    state = build_incremental_state(spark, prev_t, **kw)
+    out = fold_batch(spark, new_t, state, **kw)
+    full = resolve(
+        with_canonical(extract_mentions(prev_t.unionByName(new_t))), **kw
+    )["clusters"]
+    got = dict(_as_set(out["clusters"]))
+    assert set(got.items()) == _as_set(full)
+    linked = got["jonathon@hot.example"] == got["jonathan@hot.example"]
+    assert linked == links
+    assert (got["jonathon@hot.example"] == "jonathon@hot.example") != links
 
 
 def test_fold_batch_chained_salted(spark, corpus_df):

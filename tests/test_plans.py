@@ -297,44 +297,53 @@ def test_bootstrap_bands_each_rep_once(spark):
 
 
 def test_fold_channel_join_broadcasts_the_new_side(spark):
-    """A fold channel joins its batch-sized new side, broadcast, against the
-    blocked slice: one BroadcastHashJoin built from the `_is_new` rows, no
-    SortMergeJoin, so the slice is never shuffled. The frame is RDD-backed,
-    so without the hint its size is unknown and the planner would
-    sort-merge."""
-    from email_address_parser_spark.operators.incremental import _restricted_pairs
+    """Over a dim that carries `_is_new` (the fold's blocking slice), each
+    channel of `dim_channels` joins its batch-sized new side, broadcast,
+    against the whole dim: one BroadcastHashJoin built from the `_is_new`
+    rows, no SortMergeJoin, so the slice is never shuffled. The frame is
+    RDD-backed, so without the hint its size is unknown and the planner
+    would sort-merge."""
+    from email_address_parser_spark.operators.blocking import dim_channels
 
-    blocked = spark.createDataFrame(
+    dim = spark.createDataFrame(
         [
-            ("d0", "a@x.com", "a", "x.com", True),
-            ("d0", "ab@x.com", "ab", "x.com", False),
-            ("d0", "b@x.com", "b", "x.com", False),
-            ("d1", "c@y.com", "c", "y.com", False),
+            ("a@x.com", "a", "x.com", "x.com#0", "a", [1, 2], [7, 8], True),
+            ("ab@x.com", "ab", "x.com", "x.com#0", "ab", [1, 3], [9, 10], False),
+            ("b@x.com", "b", "x.com", "x.com#1", "b", [1, 4], [11, 12], False),
+            ("a@y.com", "a", "y.com", "y.com", "a", [5, 6], [13, 14], False),
+            ("c@z.com", "c", "z.com", "z.com", "c", [20, 21], [7, 15], False),
         ],
-        "block_key string, email string, local_canon string, "
-        "domain_canon string, _is_new boolean",
+        "email string, local_canon string, domain_canon string, block_key string, "
+        "_dl string, band_sigs array<bigint>, email_bands array<bigint>, "
+        "_is_new boolean",
     )
-    df = _restricted_pairs(blocked, ["block_key"])
-    nodes = list(_nodes(_physical(df)))
-    assert not [n for n in nodes if n.nodeName() == "SortMergeJoin"]
-    joins = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
-    assert len(joins) == 1, [_describe(n) for n in joins]
-    build, stream = (
-        (joins[0].left(), joins[0].right())
-        if joins[0].buildSide().toString() == "BuildLeft"
-        else (joins[0].right(), joins[0].left())
-    )
+    expected = {
+        "block": {("a@x.com", "ab@x.com")},
+        # ab@x.com <-> b@x.com is a cross-block band collision of two old rows
+        "local_lsh": {("a@x.com", "b@x.com")},
+        "xd_local": {("a@x.com", "a@y.com")},
+        "xd_email": {("a@x.com", "c@z.com")},
+    }
 
     def filters_new(side) -> bool:
         return any(
             n.nodeName() == "Filter" and "_is_new" in _describe(n) for n in _nodes(side)
         )
 
-    assert filters_new(build) and not filters_new(stream), _describe(joins[0])
-    assert {(r.email_a, r.email_b) for r in df.collect()} == {
-        ("a@x.com", "ab@x.com"),
-        ("a@x.com", "b@x.com"),
-    }
+    channels = dim_channels(dim, dedupe=False)
+    assert list(channels) == list(expected)
+    for name, df in channels.items():
+        nodes = list(_nodes(_physical(df)))
+        assert not [n for n in nodes if n.nodeName() == "SortMergeJoin"], name
+        joins = [n for n in nodes if n.nodeName() == "BroadcastHashJoin"]
+        assert len(joins) == 1, (name, [_describe(n) for n in joins])
+        build, stream = (
+            (joins[0].left(), joins[0].right())
+            if joins[0].buildSide().toString() == "BuildLeft"
+            else (joins[0].right(), joins[0].left())
+        )
+        assert filters_new(build) and not filters_new(stream), (name, _describe(joins[0]))
+        assert {(r.email_a, r.email_b) for r in df.collect()} == expected[name]
 
 
 # match_edges' score_bound(): the score with JW = 1, which Catalyst folds
